@@ -508,22 +508,6 @@ def _span_fields_np(d: np.ndarray, j: np.ndarray, cfg: GoldenConfig):
     return is_text, token, m
 
 
-def documents_np(cfg: GoldenConfig = GOLDEN) -> list[tuple[str, list[tuple]]]:
-    """[(doc_id, [(kind, text, media_ref, offset), ...])] oracle form."""
-    out = []
-    for d in range(cfg.n_docs):
-        n_spans = 1 + int(ihash_np(np.int64(d), 31)) % 8
-        spans = []
-        for j in range(n_spans):
-            is_text, token, m = _span_fields_np(np.array([d]), np.array([j]), cfg)
-            if is_text[0]:
-                spans.append(("text", f"t{int(token[0])}", None, j * 16))
-            else:
-                spans.append(("media", None, f"tile{int(m[0]):08d}", j * 16))
-        out.append((f"doc{d:010d}", spans))
-    return out
-
-
 def documents_df(spark: SparkSession, cfg: GoldenConfig = GOLDEN) -> DataFrame:
     """Interleaved corpus built in-plan with higher-order functions (no UDF)."""
     d = F.col("id")
@@ -722,23 +706,6 @@ def dn_sql(tile_k: str = "tile_k", band: str = "band", r: str = "r", c: str = "c
 def proc_baseline_np(tile_k: np.ndarray) -> np.ndarray:
     """Alternating processing baseline — drives the radiometric offset rule."""
     return np.where(np.asarray(tile_k, dtype=np.int64) % 2 == 0, 300, 500)
-
-
-def tile_payload(tile_k: int, cfg: GoldenConfig = GOLDEN) -> bytes:
-    """Encode one tile's (bands, H, W) DN raster as a GeoTIFF-subset blob."""
-    from .formats import tiff
-
-    px = cfg.tile_px
-    band, r, c = np.meshgrid(
-        np.arange(cfg.n_bands), np.arange(px), np.arange(px), indexing="ij"
-    )
-    data = dn_np(np.int64(tile_k), band, r, c).astype(np.uint16)
-    t = tiles_np(GoldenConfig(n_tiles=tile_k + 1, tile_px=cfg.tile_px))
-    x0, y1 = int(t["x0"][tile_k]), int(t["y1"][tile_k])
-    # tiepoint = top-left corner = (x0, y1) with y decreasing down rows
-    return tiff.encode(
-        data, pixel_scale=(float(cfg.px_size), float(cfg.px_size)), tiepoint=(float(x0), float(y1))
-    )
 
 
 def media_df(spark: SparkSession, cfg: GoldenConfig = GOLDEN, n: int | None = None) -> DataFrame:

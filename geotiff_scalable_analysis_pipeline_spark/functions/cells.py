@@ -120,11 +120,6 @@ def k_ring_np(cell: int, r: int) -> np.ndarray:
     return ((morton_np(nx[ok], ny[ok]) << LEVEL_BITS) | level).astype(np.int64)
 
 
-def disk_np(cell: int, r: int) -> np.ndarray:
-    """All cells within Chebyshev distance ``r`` (filled disk)."""
-    return np.concatenate([k_ring_np(cell, i) for i in range(r + 1)])
-
-
 # ---------------------------------------------------------------------------
 # Pure-Column forms (stay inside whole-stage codegen — no UDF)
 # ---------------------------------------------------------------------------

@@ -44,21 +44,6 @@ def points_in_polygon(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.nd
     return (np.sum(straddles & left, axis=1) % 2).astype(bool)
 
 
-def points_in_polygons(
-    px: np.ndarray, py: np.ndarray, edges: dict[int, np.ndarray]
-) -> tuple[np.ndarray, np.ndarray]:
-    """PIP of N points against a dict {poly_id: ring}; returns (point_idx, poly_id) pairs."""
-    out_pt, out_poly = [], []
-    for pid, ring in edges.items():
-        mask = points_in_polygon(px, py, ring)
-        idx = np.nonzero(mask)[0]
-        out_pt.append(idx)
-        out_poly.append(np.full(len(idx), pid, dtype=np.int64))
-    if not out_pt:
-        return np.array([], dtype=np.int64), np.array([], dtype=np.int64)
-    return np.concatenate(out_pt), np.concatenate(out_poly)
-
-
 class PackedBBoxTree:
     """Morton-packed static bbox index (STRtree stand-in), fully vectorized.
 
@@ -113,8 +98,3 @@ def _center_morton(minx, miny, maxx, maxy) -> np.ndarray:
     cx = np.clip(((minx + maxx) * 0.5) / FRAME_SIZE * 65536.0, 0, 65535).astype(np.int64)
     cy = np.clip(((miny + maxy) * 0.5) / FRAME_SIZE * 65536.0, 0, 65535).astype(np.int64)
     return morton_np(cx, cy)
-
-
-def ring_bbox(ring: np.ndarray) -> tuple[float, float, float, float]:
-    r = np.asarray(ring, dtype=np.float64)
-    return float(r[:, 0].min()), float(r[:, 1].min()), float(r[:, 0].max()), float(r[:, 1].max())

@@ -36,7 +36,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 MAX_ROUNDS = 25  # ⌈log₂ n⌉ + slack; a 2²⁵-node path is beyond any real corpus
 
@@ -107,15 +106,11 @@ def connected_components(
     ``RuntimeError`` if the edge set has not reached its star fixpoint
     within ``max_rounds`` (cannot happen below 2^max_rounds nodes).
     """
-    e = _canon(edges).localCheckpoint(
-        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK_DESER
-    )
+    e = _canon(edges).localCheckpoint(eager=True)
     prev_sig = None
     converged = False
     for _ in range(max_rounds):
-        nxt = _canon(_small_star(_large_star(e))).localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK_DESER
-        )
+        nxt = _canon(_small_star(_large_star(e))).localCheckpoint(eager=True)
         # Order-free edge-set signature; hash terms bounded to 2³¹ so the
         # int64 sum cannot overflow under ANSI mode below 2³² edges.
         sig = tuple(

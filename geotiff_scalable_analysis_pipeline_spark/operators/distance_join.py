@@ -64,15 +64,12 @@ def distance_join(
     bx: str = "cx",
     by: str = "cy",
     level: int | None = None,
-    broadcast_b: bool = False,
     pin_width: bool | None = None,
 ) -> DataFrame:
     """All (a, b) pairs with ``(ax-bx)² + (ay-by)² <= radius²`` (closed).
 
     Returns a's columns + b's columns + ``dist_sq`` (integer-exact on
     integer coordinates). ``level`` defaults to :func:`level_for_radius`.
-    ``broadcast_b``: hint when b is a small dim (its ≤9× exploded cover is
-    broadcast and the big A side never shuffles).
     ``pin_width``: force (True) or suppress (False) the wave-amortized
     explicit exchanges; the default (None) decides from Catalyst's plan
     size estimates — when either side (the B side charged its ≤9× explode
@@ -115,16 +112,13 @@ def distance_join(
         )
         .drop("_o", "_nx", "_ny")
     )
-    if broadcast_b:
-        pb = F.broadcast(pb)
-    else:
-        if pin_width is None:
-            pin_width = not (
-                small_enough_to_broadcast(b, fanout=9) or small_enough_to_broadcast(a)
-            )
-        if pin_width:
-            pa = cpu_dense_repartition(pa, "cell")
-            pb = cpu_dense_repartition(pb, "cell")
+    if pin_width is None:
+        pin_width = not (
+            small_enough_to_broadcast(b, fanout=9) or small_enough_to_broadcast(a)
+        )
+    if pin_width:
+        pa = cpu_dense_repartition(pa, "cell")
+        pb = cpu_dense_repartition(pb, "cell")
 
     # int64-pinned arithmetic (ADVICE r4): coordinates are integers by
     # contract (the dx²+dy² predicate and IDW's integer division depend on

@@ -14,38 +14,36 @@ Scale shape per hop: ONE src-keyed join of the current distance frontier
 onto the edge list (pre-partitionable/bucketable by src, paid once and
 reused) + ONE map-combined ``min`` aggregate keyed by node. State is the
 (node, dist) table, never materialized on the driver. Lineage grows
-linearly in ``max_hops``; pass ``checkpoint_every`` for deep traversals.
+linearly in ``max_hops``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def bfs_hops(
-    edges: DataFrame,
-    sources: DataFrame,
-    max_hops: int,
-    checkpoint_every: int | None = None,
-) -> DataFrame:
-    """(node, dist) for every node reachable from ``sources`` (node column)
-    in at most ``max_hops`` directed hops along ``edges`` (src, dst)."""
-    if max_hops < 0:
-        raise ValueError(f"max_hops must be >= 0; got {max_hops}")
+def _min_plus(edges: DataFrame, sources: DataFrame, rounds: int, step: Column) -> DataFrame:
+    """``rounds`` min-plus relaxations from ``sources``, each edge adding ``step``."""
     dist = sources.select("node").distinct().withColumn(
         "dist", F.lit(0).cast("long")
     )
-    for i in range(max_hops):
+    for _ in range(rounds):
         nxt = edges.join(dist, edges.src == dist.node).select(
-            F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist")
+            F.col("dst").alias("node"), (F.col("dist") + step).alias("dist")
         )
         dist = (
             dist.unionByName(nxt).groupBy("node").agg(F.min("dist").alias("dist"))
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            dist = dist.localCheckpoint(eager=True)
     return dist
+
+
+def bfs_hops(edges: DataFrame, sources: DataFrame, max_hops: int) -> DataFrame:
+    """(node, dist) for every node reachable from ``sources`` (node column)
+    in at most ``max_hops`` directed hops along ``edges`` (src, dst)."""
+    if max_hops < 0:
+        raise ValueError(f"max_hops must be >= 0; got {max_hops}")
+    return _min_plus(edges, sources, max_hops, F.lit(1))
 
 
 def sssp_weighted(
@@ -53,7 +51,6 @@ def sssp_weighted(
     sources: DataFrame,
     iters: int,
     weight: str = "w",
-    checkpoint_every: int | None = None,
 ) -> DataFrame:
     """Bounded-iteration multi-source shortest WEIGHTED paths (Bellman-Ford
     relaxation on the min-plus semiring): ``(node, dist)`` where ``dist``
@@ -63,23 +60,11 @@ def sssp_weighted(
     partitioning (same discipline as :func:`bfs_hops`; after
     ``iters ≥ n−1`` rounds this is exact Bellman-Ford).
 
-    Scale shape per round: identical to the hop variant — one src-keyed
-    edge⋈frontier join + one map-combined min aggregate. The frontier is
-    the full best-so-far table (no delta optimization: correctness first,
-    and the min aggregate's map-side combine keeps the shuffle keyed by
-    node regardless)."""
+    Scale shape per round: identical to the hop variant, which is this
+    loop with a unit step — one src-keyed edge⋈frontier join + one
+    map-combined min aggregate. The frontier is the full best-so-far table
+    (no delta optimization: correctness first, and the min aggregate's
+    map-side combine keeps the shuffle keyed by node regardless)."""
     if iters < 0:
         raise ValueError(f"iters must be >= 0; got {iters}")
-    dist = sources.select("node").distinct().withColumn(
-        "dist", F.lit(0).cast("long")
-    )
-    for i in range(iters):
-        nxt = edges.join(dist, edges.src == dist.node).select(
-            F.col("dst").alias("node"), (F.col("dist") + F.col(weight)).alias("dist")
-        )
-        dist = (
-            dist.unionByName(nxt).groupBy("node").agg(F.min("dist").alias("dist"))
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            dist = dist.localCheckpoint(eager=True)
-    return dist
+    return _min_plus(edges, sources, iters, F.col(weight))

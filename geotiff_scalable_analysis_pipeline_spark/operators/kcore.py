@@ -24,7 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .dedup_cc import _free_checkpoint
 
@@ -62,9 +61,7 @@ def k_core(
     sym = simple.select(
         F.col("u").alias("e_src"), F.col("v").alias("e_dst")
     ).unionAll(simple.select(F.col("v").alias("e_src"), F.col("u").alias("e_dst")))
-    sym = sym.localCheckpoint(
-        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK_DESER
-    )
+    sym = sym.localCheckpoint(eager=True)
 
     prev_alive = -1
     for _ in range(max_rounds):
@@ -74,7 +71,7 @@ def k_core(
         keep = (
             deg.filter(F.col("deg") >= k)
             .select(F.col("e_src").alias("node"))
-            .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK_DESER)
+            .localCheckpoint(eager=True)
         )
         n_alive = keep.count()
         if n_alive == prev_alive or n_alive == 0:
@@ -91,9 +88,7 @@ def k_core(
         nxt = (
             sym.join(keep, sym.e_src == keep.node, "left_semi")
             .join(keep, sym.e_dst == keep.node, "left_semi")
-            .localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK_DESER
-            )
+            .localCheckpoint(eager=True)
         )
         _free_checkpoint(keep)
         _free_checkpoint(sym)

@@ -101,7 +101,6 @@ def knn_join(
     tx: str = "cx",
     ty: str = "cy",
     target_id: str = "media_ref",
-    cache_result: bool = False,
 ) -> DataFrame:
     """Exact kNN: (q_id, rank, <target_id>, dist_sq), rank 1..k.
 
@@ -111,16 +110,14 @@ def knn_join(
     The returned frame is **materialized** (the algorithm persists per-round
     intermediates, and materializing the result lets every intermediate be
     unpersisted before returning — executor storage does not accumulate
-    across rounds or across repeated knn_join calls in one session). By
-    default the materialization is an eager ``localCheckpoint``: the result
-    is held as executor blocks but is NOT registered with the SQL cache
-    manager, so a later knn_join over the same inputs can never silently
-    short-circuit against it via canonical-plan matching (the exact footgun
-    that contaminated every pre-round-3 knn benchmark — see PERF.md) and no
+    across rounds or across repeated knn_join calls in one session). The
+    materialization is an eager ``localCheckpoint``: the result is held as
+    executor blocks but is NOT registered with the SQL cache manager, so a
+    later knn_join over the same inputs can never silently short-circuit
+    against it via canonical-plan matching (the exact footgun that
+    contaminated every pre-round-3 knn benchmark — see PERF.md) and no
     caller ``unpersist()`` is needed. The result is queries×k rows, so the
-    checkpoint blocks are small; pass ``cache_result=True`` to get the old
-    lineage-preserving ``persist()`` behavior instead (caller must then
-    ``unpersist()``).
+    checkpoint blocks are small.
 
     Not reentrant: execution scopes two session-global SQL confs
     (``spark.sql.shuffle.partitions`` data-sized for wave amortization, and
@@ -272,22 +269,12 @@ def knn_join(
         # concurrent query on the same session runs with these confs during
         # that window; acceptable for a single-tenant session.)
         spark.conf.set(a_key, "false")
-        if cache_result:
-            out = out.persist()
-            out.count()
-        else:
-            # Deserialized blocks: PySpark's MEMORY_AND_DISK is the
-            # *serialized* level, and the encode/decode of the queries×k
-            # result costs ~7.5 s at local[8] scale 400 (A/B: 40.2 s
-            # serialized vs 32.6 s deserialized vs 33.1 s persist) — a pure
-            # tax on the 4N level that cut the measured N→4N efficiency from
-            # ~0.88 to ~0.70. The result is narrow (q_id, rank, id, dist),
-            # so row objects are cheap to hold.
-            from pyspark.storagelevel import StorageLevel
-
-            out = out.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK_DESER
-            )
+        # The default localCheckpoint level keeps deserialized blocks;
+        # PySpark's *serialized* MEMORY_AND_DISK cost ~7.5 s of encode/decode
+        # on the queries×k result at local[8] scale 400 (40.2 s vs 32.6 s).
+        # tests/test_plan_quality.py::test_local_checkpoint_default_level_is_deserialized
+        # pins that default.
+        out = out.localCheckpoint(eager=True)
     finally:
         spark.conf.set(p_key, p_old)
         spark.conf.set(a_key, a_old)

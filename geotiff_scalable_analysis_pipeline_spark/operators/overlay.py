@@ -60,45 +60,36 @@ def overlay_rect_join(
     id_a: str = "zone_id",
     id_b: str = "zone_id",
     level: int = DEFAULT_LEVEL,
-    broadcast_b: bool = False,
 ) -> DataFrame:
     """All positive-area intersections between two rectangle layers.
 
     ``a``/``b`` carry (``id_*``, minx, miny, maxx, maxy). Returns one row
     per intersecting pair: (zone_a, zone_b, inter_w, inter_h, inter_area)
     — emitted exactly once via the reference-point rule (module docstring).
-
-    ``broadcast_b``: hint when ``b`` is a small dim (its exploded cover is
-    broadcast, so the big layer never shuffles — same stance as
-    ``pip_join_rect``). Default off: two cell-keyed hash shuffles, the
-    100 TB layer-vs-layer shape.
     """
     ca = _covered(a, id_a, "a", level)
     cb = _covered(b, id_b, "b", level)
-    if broadcast_b:
-        cb = F.broadcast(cb)
-    else:
-        # The pair-product join is CPU-dense but byte-light (exploded cover
-        # rows are ~48 B): AQE's byte-based coalescing collapses it to a
-        # few tasks at ANY core count, serializing the stage (measured:
-        # scale-600 N→4N pair efficiency 0.708 before, ≥0.8 after). Pin an
-        # explicit wave-amortized width on BOTH sides — same hash key and
-        # count, so the join adds no further exchange. Trade: explicit
-        # REPARTITION shuffles are not AQE-skew-splittable; a single
-        # pathologically hot cell serializes one task — remedies are a
-        # finer level or plans/skew.py pre-salting, as in the PIP path.
-        # Size gate (round 6): when either layer's estimate — charged a
-        # conservative 64× cell-cover fanout for its bbox explode — fits
-        # under the broadcast threshold, skip the explicit exchanges and
-        # let Catalyst/AQE broadcast the small exploded cover (zero
-        # exchanges; the big layer never shuffles). Big-vs-big keeps the
-        # pinned width.
-        if not (
-            small_enough_to_broadcast(a, fanout=64)
-            or small_enough_to_broadcast(b, fanout=64)
-        ):
-            ca = cpu_dense_repartition(ca, "cell")
-            cb = cpu_dense_repartition(cb, "cell")
+    # The pair-product join is CPU-dense but byte-light (exploded cover
+    # rows are ~48 B): AQE's byte-based coalescing collapses it to a
+    # few tasks at ANY core count, serializing the stage (measured:
+    # scale-600 N→4N pair efficiency 0.708 before, ≥0.8 after). Pin an
+    # explicit wave-amortized width on BOTH sides — same hash key and
+    # count, so the join adds no further exchange. Trade: explicit
+    # REPARTITION shuffles are not AQE-skew-splittable; a single
+    # pathologically hot cell serializes one task — remedies are a
+    # finer level or plans/skew.py pre-salting, as in the PIP path.
+    # Size gate (round 6): when either layer's estimate — charged a
+    # conservative 64× cell-cover fanout for its bbox explode — fits
+    # under the broadcast threshold, skip the explicit exchanges and
+    # let Catalyst/AQE broadcast the small exploded cover (zero
+    # exchanges; the big layer never shuffles). Big-vs-big keeps the
+    # pinned width.
+    if not (
+        small_enough_to_broadcast(a, fanout=64)
+        or small_enough_to_broadcast(b, fanout=64)
+    ):
+        ca = cpu_dense_repartition(ca, "cell")
+        cb = cpu_dense_repartition(cb, "cell")
     j = ca.join(cb, "cell")
 
     rx = F.greatest("a_minx", "b_minx")

@@ -81,11 +81,7 @@ def prefix_offsets(
     # both consume it. Eager localCheckpoint, not persist(): no SQL-cache
     # registration (no canonical-plan short-circuit risk) and no caller
     # unpersist() obligation (blocks free with the RDD) — the knn_join rule.
-    from pyspark.storagelevel import StorageLevel
-
-    scanned = scanned.localCheckpoint(
-        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK_DESER
-    )
+    scanned = scanned.localCheckpoint(eager=True)
     # one row per partition — bounded by the partition count, driver-safe
     totals = {
         r["_pid"]: r["t"]

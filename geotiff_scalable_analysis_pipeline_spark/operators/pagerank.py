@@ -18,7 +18,7 @@ list keyed by src (both sides can be pre-partitioned/bucketed by src, so at
 100 TB the edge exchange is paid once and reused every iteration) + ONE
 map-combined aggregate keyed by dst. No driver-side collect of anything
 node- or edge-sized; lineage grows linearly with the (small, fixed)
-iteration count — for long runs pass ``checkpoint_every`` to truncate it.
+iteration count.
 """
 
 from __future__ import annotations
@@ -35,7 +35,6 @@ def pagerank(
     scale: int = 1_000_000,
     damping_num: int = 85,
     damping_den: int = 100,
-    checkpoint_every: int | None = None,
 ) -> DataFrame:
     """(node, rank) after ``iters`` exact integer PageRank iterations over
     ``edges`` (src, dst) on the node domain [0, n_nodes)."""
@@ -50,7 +49,7 @@ def pagerank(
     base = (damping_den - damping_num) * scale // damping_den
 
     ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
-    for i in range(iters):
+    for _ in range(iters):
         inc = (
             ed.join(ranks, ed.src == ranks.node)
             .select(F.col("dst").alias("node"), F.expr("rank div odeg").alias("c"))
@@ -64,6 +63,4 @@ def pagerank(
                 + F.expr(f"({damping_num} * coalesce(s, 0L)) div {damping_den}")
             ).alias("rank"),
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
     return ranks

@@ -15,7 +15,7 @@ Two-phase, Spark-first:
 
 Skew: hot cells (many points in one cell — the Zipf hotspots) are harmless on
 the *broadcast* path because the big side never shuffles. For the grouped
-aggregations that typically follow, use :func:`salted_repartition` +
+aggregations that typically follow, use ``plans/skew.salted_join`` +
 two-stage aggregation (see operators/zonal.py).
 
 Semantics pinned for exact oracle parity (BASELINE.json: "join output rows
@@ -166,14 +166,3 @@ def pip_join(
         out = out.unionByName(p)
     return out
 
-
-def salted_repartition(df: DataFrame, key: str, n_salts: int, seed_col: str) -> DataFrame:
-    """Explicit skew handling: spread a hot ``key`` over ``n_salts`` buckets.
-
-    ``seed_col`` must be a deterministic column (NOT rand()) so re-runs are
-    reproducible — resume semantics depend on it. Follow with a two-stage
-    aggregation: partial on (key, _salt), final on key.
-    """
-    return df.withColumn("_salt", (F.xxhash64(F.col(seed_col)) % n_salts + n_salts) % n_salts).repartition(
-        F.col(key), F.col("_salt")
-    )

@@ -48,7 +48,6 @@ def range_join_point_interval(
     lo: str = "lo",
     hi: str = "hi",
     bucket_width: int | None = None,
-    broadcast_intervals: bool = False,
 ) -> DataFrame:
     """All (point, interval) pairs with ``points.v`` ∈ [lo, hi] (closed).
 
@@ -58,8 +57,6 @@ def range_join_point_interval(
     length — note this runs one EAGER aggregation job at call time and
     scans the interval source twice (once for the max, once for the join);
     at scale, pass an explicit width from domain knowledge instead.
-    ``broadcast_intervals``: hint when the interval side is a small dim —
-    the exploded buckets broadcast and the point side never shuffles.
     """
     if bucket_width is None:
         row = intervals.agg(
@@ -78,8 +75,6 @@ def range_join_point_interval(
             )
         ),
     )
-    if broadcast_intervals:
-        iv = F.broadcast(iv)
     pts = points.withColumn("_bucket", F.floor(F.col(v).cast("long") / w))
     out = pts.join(iv, "_bucket").filter(F.col(v).between(F.col(lo), F.col(hi)))
     return out.drop("_bucket")

@@ -84,7 +84,6 @@ def triangle_counts(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    broadcast_close: bool = True,
     max_id: int | None = None,
     close_splits: int = 1,
 ) -> DataFrame:
@@ -92,16 +91,12 @@ def triangle_counts(
     at least one triangle. Input may contain self-loops, duplicates, and
     both orientations; they do not change the answer.
 
-    ``broadcast_close`` (default): the closing membership test semi-joins
-    the WEDGE STREAM (the big side — Σ C(d⁺,2) rows, orders of magnitude
-    above the edge count) against a BROADCAST of the packed oriented edge
-    keys, so the wedges never shuffle — they are generated, filtered, and
-    aggregated inside one stage (measured: the shuffled close was 24.3 s
-    of a 36 s wall at 266 M wedges / 2.4 M edges; broadcasting removes an
-    ~11 GB exchange). Pass ``False`` when the simple edge set itself is
-    too big to broadcast (≳10⁸ edges) — the close then falls back to a
-    shuffled semi join on the same packed single-long key (8-byte key,
-    24-byte rows — the cheapest exchange the close can be).
+    The closing membership test semi-joins the WEDGE STREAM (the big
+    side — Σ C(d⁺,2) rows, orders of magnitude above the edge count)
+    against a BROADCAST of the packed oriented edge keys, so the wedges
+    never shuffle — they are generated, filtered, and aggregated inside
+    one stage (measured: a shuffled close was 24.3 s of a 36 s wall at
+    266 M wedges / 2.4 M edges; broadcasting removes an ~11 GB exchange).
 
     ``close_splits``: number of DISJOINT close branches. The packed-key
     relation stays probe-cheap up to a few million keys; past that its
@@ -178,9 +173,7 @@ def triangle_counts(
         )
 
     def _close(wedge_side: DataFrame, closing: DataFrame) -> DataFrame:
-        if broadcast_close:
-            closing = F.broadcast(closing)
-        return wedge_side.join(closing, "w_key", "left_semi").select(
+        return wedge_side.join(F.broadcast(closing), "w_key", "left_semi").select(
             F.col("w_src").alias("n1"),
             F.col("w_v").alias("n2"),
             F.col("w_w").alias("n3"),

@@ -29,31 +29,9 @@ batches; instead Arrow holds one input + one output copy per active batch):
 from __future__ import annotations
 
 import math
-import os
 
 BYTES_F32 = 4
 _DEFAULT_TASK_BUDGET = 512 * 1024 * 1024  # conservative cluster default
-
-
-def task_budget_bytes(
-    executor_mem_bytes: int | None = None,
-    task_slots: int | None = None,
-    safety: float = 0.6,
-) -> int:
-    """Per-task memory budget: executor heap × safety ÷ concurrent task slots.
-
-    Defaults read the engine's own env knobs so local runs self-describe;
-    on a cluster pass the executor config explicitly. ``safety`` is lower
-    than the reference's 0.8 because executor JVM heap is shared with
-    shuffle/storage memory, not dedicated to the Python worker.
-    """
-    if executor_mem_bytes is None:
-        mem_s = os.environ.get("SPARK_DRIVER_MEM", "24g").lower().rstrip("b")
-        mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}.get(mem_s[-1], 1)
-        executor_mem_bytes = int(float(mem_s.rstrip("kmg"))) * mult
-    if task_slots is None:
-        task_slots = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    return max(64 * 1024 * 1024, int(executor_mem_bytes * safety / max(1, task_slots)))
 
 
 def chunk_bytes_per_pixel(

@@ -4,10 +4,11 @@ AQE's skew-join splitting only helps *shuffle joins*; a skewed ``groupBy``
 key or a hot broadcast-probe cell still lands on one task. This module makes
 the salting decision data-driven, the way the driver would on a real cluster:
 
-1. :func:`hot_keys` — sample-based key histogram → keys whose share exceeds
-   ``threshold`` × the mean;
-2. :func:`salt_plan` — per-key salt factor sized so each salted partition
-   holds ≈ the mean key load;
+1. :func:`key_histogram` — (key, count) table, optionally from a seeded
+   sample;
+2. :func:`salt_plan` — keys whose count exceeds ``threshold`` × the mean,
+   each with a salt factor sized so each salted partition holds ≈ the mean
+   key load;
 3. :func:`apply_salts` — deterministic salt column (hash of a stable row
    attribute, never rand() — resume semantics require reproducible salts)
    joined from the (tiny, broadcast) salt plan; follow with two-stage
@@ -22,6 +23,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# rounds of tasks per core for cpu_dense_repartition
+CPU_DENSE_WAVES = 4
 
 
 def key_histogram(df: DataFrame, key: str, sample_fraction: float | None = None) -> DataFrame:
@@ -157,8 +161,8 @@ def small_enough_to_broadcast(df: DataFrame, fanout: int = 1) -> bool:
     return 0 < fanout * est <= broadcast_threshold_bytes(df.sparkSession)
 
 
-def cpu_dense_repartition(df: DataFrame, *cols: str, waves: int = 4) -> DataFrame:
-    """Pin a CPU-dense shuffle's width to ``waves × defaultParallelism``.
+def cpu_dense_repartition(df: DataFrame, *cols: str) -> DataFrame:
+    """Pin a CPU-dense shuffle's width to ``CPU_DENSE_WAVES × defaultParallelism``.
 
     AQE's partition coalescing is BYTE-based (advisoryPartitionSizeInBytes):
     a stage whose shuffle blocks are small but whose per-row CPU is large —
@@ -166,10 +170,10 @@ def cpu_dense_repartition(df: DataFrame, *cols: str, waves: int = 4) -> DataFram
     gets coalesced to a handful of tasks, serializing the job (measured:
     the per-doc top-k aggregate in ``q_doc_keywords`` at 600 k docs ran as
     a 2-task stage at local[8]; 119 s → 47 s once widened). An EXPLICIT
-    ``repartition(n, cols)`` is exempt from AQE coalescing, and ``waves``
-    rounds per core amortize stragglers/skew the way a one-wave
-    shuffle-partitions=cores layout cannot (same lesson as the knn block
-    pass, BENCH/BASELINE.md round-4 provenance).
+    ``repartition(n, cols)`` is exempt from AQE coalescing, and
+    ``CPU_DENSE_WAVES`` rounds per core amortize stragglers/skew the way a
+    one-wave shuffle-partitions=cores layout cannot (same lesson as the knn
+    block pass, BENCH/BASELINE.md round-4 provenance).
 
     Use on the input of a grouped aggregate whose per-group work is CPU-
     bound; the aggregate reuses the hash partitioning, so no second
@@ -177,5 +181,5 @@ def cpu_dense_repartition(df: DataFrame, *cols: str, waves: int = 4) -> DataFram
     scales with the cluster, so the width stays proportional everywhere.
     """
     spark = df.sparkSession
-    n = max(1, waves * spark.sparkContext.defaultParallelism)
+    n = max(1, CPU_DENSE_WAVES * spark.sparkContext.defaultParallelism)
     return df.repartition(n, *[F.col(c) for c in cols])

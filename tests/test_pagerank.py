@@ -40,16 +40,6 @@ def test_pagerank_zero_iters_is_uniform(spark):
     assert len(out) == 50 and all(r["rank"] == 1_000_000 for r in out)
 
 
-def test_pagerank_checkpoint_invariant(spark):
-    """localCheckpoint lineage truncation must not perturb any rank."""
-    kw = dict(n_nodes=80, iters=5)
-    a = pagerank.pagerank(spark, dg.graph_edges_df(spark, 80, 300), **kw).collect()
-    b = pagerank.pagerank(
-        spark, dg.graph_edges_df(spark, 80, 300), checkpoint_every=2, **kw
-    ).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
 def test_pagerank_isolated_nodes_get_base_rank(spark):
     """A node with no in-edges holds exactly the base (teleport) mass after
     any positive number of iterations."""

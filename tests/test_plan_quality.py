@@ -136,6 +136,33 @@ def test_knn_result_not_in_sql_cache_manager(spark):
     assert rows_a == rows_b and len(rows_a) == cfg.n_points * 3
 
 
+def test_local_checkpoint_default_level_is_deserialized(spark):
+    """The operators' eager ``localCheckpoint()`` calls (dedup_cc, kcore,
+    knn, packing, ...) pass no storage level and rely on Spark's default
+    being deserialized memory+disk. PySpark's *serialized* MEMORY_AND_DISK
+    cost knn_join ~7.5 s of encode/decode at scale 400 (PERF.md round 4),
+    so a Spark upgrade that changes the default must fail here."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def persistent() -> dict:
+        out, it = {}, jsc.getPersistentRDDs().iterator()
+        while it.hasNext():
+            kv = it.next()
+            out[kv._1()] = kv._2()
+        return out
+
+    before = set(persistent())
+    spark.range(100).localCheckpoint(eager=True)
+    new = [rdd for rid, rdd in persistent().items() if rid not in before]
+    assert len(new) == 1
+    lvl = new[0].getStorageLevel()
+    try:
+        assert (lvl.useDisk(), lvl.useMemory(), lvl.useOffHeap()) == (True, True, False)
+        assert lvl.deserialized() and lvl.replication() == 1, lvl.toString()
+    finally:
+        new[0].unpersist(False)
+
+
 def test_decontaminate_broadcasts_eval_side(spark):
     """The eval shingle list (tiny vs a 100 TB corpus) must broadcast — the
     train side never shuffles for the scrub join."""

@@ -1,8 +1,8 @@
-"""Vectorized planar geometry: ray-cast point-in-polygon + packed bbox tree.
+"""Vectorized planar geometry: ray-cast point-in-polygon.
 
-``shapely`` is unavailable; these are from-scratch numpy kernels used inside
-pandas UDFs. Semantics are pinned exactly (the north rule demands exact join
-row counts):
+``shapely`` is unavailable; this is a from-scratch numpy kernel (the
+rasterizer's mask and the tests' reference for ``operators/pip_join``).
+Semantics are pinned exactly (the north rule demands exact join row counts):
 
 * **PIP rule** — even-odd ray cast toward +x, evaluated with the integer-exact
   cross-product form ``(x2-x1)*(py-y1) - (px-x1)*(y2-y1)``: a point is inside
@@ -12,11 +12,6 @@ row counts):
   arithmetic, so Spark, the numpy oracle and the DuckDB SQL oracle agree
   bit-for-bit. Points exactly ON a boundary edge follow from the same rule
   deterministically (lower edge counts, upper edge doesn't).
-
-* **bbox prefilter** — a Morton-sorted packed-leaf structure (STRtree
-  equivalent) queried with ``searchsorted``; used to cut the candidate set
-  before exact ray casting, mirroring the role of an STRtree in a classic
-  PIP join.
 """
 
 from __future__ import annotations
@@ -43,58 +38,3 @@ def points_in_polygon(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.nd
     left = np.where(y2 > y1, cross > 0, cross < 0)
     return (np.sum(straddles & left, axis=1) % 2).astype(bool)
 
-
-class PackedBBoxTree:
-    """Morton-packed static bbox index (STRtree stand-in), fully vectorized.
-
-    Build: sort boxes by the Morton code of their centers; store sorted arrays.
-    Query: for a batch of query boxes, scan the (small, broadcast) sorted
-    arrays with vectorized interval tests. For the broadcast side of a PIP
-    join the zone count is small (≤ thousands), so an O(N·Z) vectorized
-    overlap test on numpy arrays beats pointer-chasing — this is the packed
-    variant, not a node tree.
-    """
-
-    def __init__(self, minx, miny, maxx, maxy, ids):
-        order = np.argsort(
-            _center_morton(np.asarray(minx), np.asarray(miny), np.asarray(maxx), np.asarray(maxy))
-        )
-        self.minx = np.asarray(minx, dtype=np.float64)[order]
-        self.miny = np.asarray(miny, dtype=np.float64)[order]
-        self.maxx = np.asarray(maxx, dtype=np.float64)[order]
-        self.maxy = np.asarray(maxy, dtype=np.float64)[order]
-        self.ids = np.asarray(ids)[order]
-
-    def query_points(self, px: np.ndarray, py: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """(point_idx, box_id) candidate pairs where the point is inside a box."""
-        px = np.asarray(px, dtype=np.float64)
-        py = np.asarray(py, dtype=np.float64)
-        hits = (
-            (px[:, None] >= self.minx[None, :])
-            & (px[:, None] <= self.maxx[None, :])
-            & (py[:, None] >= self.miny[None, :])
-            & (py[:, None] <= self.maxy[None, :])
-        )
-        pt, bx = np.nonzero(hits)
-        return pt, self.ids[bx]
-
-    def query_boxes(
-        self, qminx: np.ndarray, qminy: np.ndarray, qmaxx: np.ndarray, qmaxy: np.ndarray
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """(query_idx, box_id) pairs whose rectangles overlap (closed intervals)."""
-        hits = (
-            (np.asarray(qminx)[:, None] <= self.maxx[None, :])
-            & (np.asarray(qmaxx)[:, None] >= self.minx[None, :])
-            & (np.asarray(qminy)[:, None] <= self.maxy[None, :])
-            & (np.asarray(qmaxy)[:, None] >= self.miny[None, :])
-        )
-        qi, bx = np.nonzero(hits)
-        return qi, self.ids[bx]
-
-
-def _center_morton(minx, miny, maxx, maxy) -> np.ndarray:
-    from .cells import FRAME_SIZE, morton_np
-
-    cx = np.clip(((minx + maxx) * 0.5) / FRAME_SIZE * 65536.0, 0, 65535).astype(np.int64)
-    cy = np.clip(((miny + maxy) * 0.5) / FRAME_SIZE * 65536.0, 0, 65535).astype(np.int64)
-    return morton_np(cx, cy)

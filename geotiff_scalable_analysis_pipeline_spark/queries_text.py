@@ -292,7 +292,7 @@ WITH t AS (
 b AS (SELECT doc_id, toks, len(toks) AS n FROM t),
 c AS (
   SELECT b.doc_id, b.toks, b.n, r.i AS chunk_id
-  FROM b JOIN range(0, 4096) r(i)
+  FROM b JOIN range(0, {CHUNK_MAX}) r(i)
     ON r.i < CASE WHEN b.n <= {CHUNK_W} THEN 1
                   ELSE (b.n - {CHUNK_W} + {_CHUNK_S} - 1) // {_CHUNK_S} + 1 END),
 s AS (

@@ -71,26 +71,6 @@ def test_pip_matches_shoelace_winding_for_convex(cx, cy, r, npts):
     assert not got[outer].any()
 
 
-def test_bbox_tree_matches_bruteforce():
-    rng = np.random.default_rng(3)
-    n = 200
-    minx = rng.uniform(0, 90000, n)
-    miny = rng.uniform(0, 90000, n)
-    maxx = minx + rng.uniform(100, 9000, n)
-    maxy = miny + rng.uniform(100, 9000, n)
-    tree = geometry.PackedBBoxTree(minx, miny, maxx, maxy, np.arange(n))
-    px = rng.uniform(0, 100000, 500)
-    py = rng.uniform(0, 100000, 500)
-    pt, bid = tree.query_points(px, py)
-    got = set(zip(pt.tolist(), bid.tolist()))
-    expect = set()
-    for i in range(500):
-        for j in range(n):
-            if minx[j] <= px[i] <= maxx[j] and miny[j] <= py[i] <= maxy[j]:
-                expect.add((i, j))
-    assert got == expect
-
-
 def test_cell_expr_forms_match_column_forms(spark):
     """The round-6 SQL-string builders (one F.expr parse — hundreds fewer
     py4j round-trips per operator construction) must be bit-identical to

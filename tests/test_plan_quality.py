@@ -2,7 +2,7 @@
 
 These tests pin the plan shapes that matter at scale: broadcast joins where
 the dim side is small, predicate pushdown + column pruning reaching the
-parquet scan, pure-Catalyst (no Python) for the grid/cell/PIP-rect paths,
+parquet scan, pure-Catalyst (no Python) for the grid/cell/PIP paths,
 and partial (map-side) aggregation before shuffles.
 """
 
@@ -31,6 +31,18 @@ def test_pip_rect_is_broadcast_and_python_free(spark):
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
     assert "Python" not in p  # rect path never leaves the JVM
+
+
+def test_pip_poly_is_broadcast_and_python_free(spark):
+    """The polygon ray cast is a JVM expression over the broadcast candidate
+    table: no Python stage of any kind in the plan."""
+    from geotiff_scalable_analysis_pipeline_spark.queries_spatial import q_pip_poly
+
+    df = q_pip_poly(spark, "")  # generates its corpus; reads no sf_dir
+    p = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    for node in ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in p, node
+    assert "BroadcastHashJoin" in p
 
 
 def test_pricing_summary_pushes_filter_to_scan(spark):

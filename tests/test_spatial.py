@@ -69,6 +69,86 @@ def test_pip_poly_exact(spark, duck, corpus):
     assert len(got) > 20
 
 
+# boundary-adversarial rings: a square, a concave star and an L-shape whose
+# last vertex repeats its first (a zero-length closing edge); all coordinates
+# even, so edge midpoints stay integers
+_BOUNDARY_RINGS = {
+    0: [(1000, 1000), (9000, 1000), (9000, 9000), (1000, 9000)],
+    1: [(20000, 20000), (24000, 28000), (28000, 20000), (24000, 23000)],
+    2: [(40000, 40000), (48000, 40000), (48000, 44000), (44000, 44000),
+        (44000, 48000), (40000, 48000), (40000, 40000)],
+}
+
+
+def _boundary_points():
+    pts = set()
+    for ring in _BOUNDARY_RINGS.values():
+        xs, ys = [p[0] for p in ring], [p[1] for p in ring]
+        for (x1, y1), (x2, y2) in zip(ring, ring[1:] + ring[:1]):
+            # every vertex, and 1 unit beside it on both axes
+            pts.update({(x1, y1), (x1 - 1, y1), (x1 + 1, y1), (x1, y1 - 1), (x1, y1 + 1)})
+            pts.add(((x1 + x2) // 2, (y1 + y2) // 2))  # edge midpoints
+            if y1 == y2:  # along horizontal edges and just past their ends
+                lo, hi = min(x1, x2), max(x1, x2)
+                pts.update({(lo + (hi - lo) // 4, y1), (hi - (hi - lo) // 4, y1),
+                            (lo - 1, y1), (hi + 1, y1)})
+        minx, miny, maxx, maxy = min(xs), min(ys), max(xs), max(ys)
+        cx, cy = (minx + maxx) // 2, (miny + maxy) // 2
+        # 1 unit outside the bbox on each side and at each corner
+        for px in (minx - 1, cx, maxx + 1):
+            for py in (miny - 1, cy, maxy + 1):
+                pts.add((px, py))
+    return sorted(pts)
+
+
+def test_pip_poly_boundary_adversarial(spark, duck):
+    """Points on and beside vertices, on edge midpoints and horizontal edges,
+    and 1 unit outside each bbox: the JVM ray cast, the numpy kernel and the DuckDB
+    oracle query must give the same (point, zone) pairs."""
+    from geotiff_scalable_analysis_pipeline_spark.functions import geometry
+    from geotiff_scalable_analysis_pipeline_spark.queries_spatial import SQL_PIP_POLY
+
+    pts = _boundary_points()
+    points = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(pts)], "pid long, px double, py double"
+    )
+    zones = spark.createDataFrame(
+        [(z, [{"x": float(x), "y": float(y)} for x, y in r]) for z, r in _BOUNDARY_RINGS.items()],
+        "zone_id long, ring array<struct<x: double, y: double>>",
+    )
+    got = pip_join.pip_join_poly(points, zones, x="px", y="py").toPandas()
+    engine = _pairs(got, ["pid", "zone_id"])
+    assert len(got) == len(engine)  # one row per (point, zone) pair
+
+    px = np.array([p[0] for p in pts], dtype=np.float64)
+    py = np.array([p[1] for p in pts], dtype=np.float64)
+    numpy_pairs = {
+        (int(i), z)
+        for z, r in _BOUNDARY_RINGS.items()
+        for i in np.nonzero(geometry.points_in_polygon(px, py, np.array(r)))[0]
+    }
+
+    # the oracle's query body over these points and rings
+    tiles = ", ".join(f"({i}, {x}::DOUBLE, {y}::DOUBLE)" for i, (x, y) in enumerate(pts))
+    edges = ", ".join(
+        f"({z}, {x1}::DOUBLE, {y1}::DOUBLE, {x2}::DOUBLE, {y2}::DOUBLE)"
+        for z, r in _BOUNDARY_RINGS.items()
+        for (x1, y1), (x2, y2) in zip(r, r[1:] + r[:1])
+    )
+    body = SQL_PIP_POLY[SQL_PIP_POLY.index("SELECT t.media_ref"):]
+    oracle = duck.execute(
+        f"""WITH tiles_geo(media_ref, cx, cy) AS (VALUES {tiles}),
+        pedges(zone_id, ex1, ey1, ex2, ey2) AS (VALUES {edges})
+        {body}"""
+    ).fetchall()
+    duck_pairs = {(int(a), int(b)) for a, b in oracle}
+
+    assert engine == numpy_pairs == duck_pairs
+    # every ring has inside boundary points and outside ones
+    assert {z for _, z in engine} == set(_BOUNDARY_RINGS)
+    assert 0 < len(engine) < len(pts)
+
+
 def test_knn_exact_including_ring_expansion(spark, duck, corpus):
     got = (
         knn_op.knn_join(corpus["points"], corpus["tiles"], k=CFG.knn_k)

@@ -214,16 +214,19 @@ def chunk_class_stats(
     # media_ref is the PK: rows are independent → mapInPandas (no shuffle,
     # unlike a grouped applyInPandas, which would hash-repartition the blobs)
     sel = media.select("media_ref", "proc_baseline", "payload")
-    # Size-gated spread (round 6): a `limit()` upstream collapses the plan
-    # to ONE partition (GlobalLimit), serializing the whole decode+chunk
-    # UDF (measured 1.3 s → 0.65 s at 256 tiles / local[32] once spread).
-    # Only a small input (plan estimate under the broadcast threshold) is
-    # worth shuffling payload blobs for; a production-sized media scan is
-    # already wide and must never pay a blob shuffle here.
-    from ..plans.skew import small_enough_to_broadcast
+    # Spread a narrow input over the cores: a `limit()` upstream collapses
+    # the plan to ONE partition (GlobalLimit), serializing the whole
+    # decode+chunk UDF (measured 1.3 s → 0.65 s at 256 tiles / local[32]
+    # once spread). Only a small input (plan estimate under the broadcast
+    # threshold) is worth shuffling payload blobs for, and only when its
+    # plan has fewer partitions than cores: a scan Spark already split
+    # over the cores (256 tiles: 3 splits for 3 slots) would shuffle
+    # ~12 MB of blobs for nothing.
+    from ..plans.skew import planned_partitions, small_enough_to_broadcast
 
-    if small_enough_to_broadcast(sel):
-        sel = sel.repartition(media.sparkSession.sparkContext.defaultParallelism)
+    cores = media.sparkSession.sparkContext.defaultParallelism
+    if small_enough_to_broadcast(sel) and planned_partitions(sel) < cores:
+        sel = sel.repartition(cores)
     return sel.mapInPandas(run, CHUNK_CLASS_SCHEMA)
 
 

@@ -4,9 +4,10 @@ The reference survives writer-process death by detecting it and restarting
 (reference: src/eo_core/process.py:530-536, 571-576); the Spark-native analog
 is *semantic* resume: work is split into deterministic partition keys, each
 key's output commits atomically with a lineage marker, and a re-run
-``left_anti``-joins the already-committed keys so only missing work executes.
-Re-runs are idempotent and the final table is byte-identical to an
-uninterrupted run (tests/test_resume.py proves this with a mid-job kill).
+subtracts the already-committed keys so only missing work executes. Re-runs
+are idempotent and the final table is byte-identical to an uninterrupted run
+(``tests/test_plans.py::test_resume_after_kill_is_byte_identical`` proves
+this with a mid-job kill).
 """
 
 from __future__ import annotations
@@ -44,10 +45,6 @@ class LineageLog:
         tmp.write_text(json.dumps(meta or {}))
         os.replace(tmp, p)
 
-    def as_df(self, spark: SparkSession) -> DataFrame:
-        keys = [(k,) for k in self.committed_keys()]
-        return spark.createDataFrame(keys or [], "key string")
-
 
 def run_resumable(
     spark: SparkSession,
@@ -60,9 +57,11 @@ def run_resumable(
 ) -> dict:
     """Process every key not yet committed; returns {processed, skipped}.
 
-    ``keys`` is the full deterministic work list; already-committed keys are
-    removed with a left_anti join (tiny lineage side → broadcast). Each key is
-    processed then committed; a crash between the two re-runs that key only
+    ``keys`` is the full deterministic work list. Its distinct keys, cast to
+    string, come to the driver in ONE Spark action; the committed keys are
+    subtracted there and the rest run in ascending byte order, NULL first
+    (the order of ``orderBy`` on the string column). Each key is processed
+    then committed; a crash between the two re-runs that key only
     (process_key must therefore be idempotent — write-then-rename).
     ``fail_after`` injects a crash for the resume test.
 
@@ -73,15 +72,13 @@ def run_resumable(
     enough that a single key can't saturate the cluster. Key commits stay
     independent, so crash-resume semantics are unchanged.
     """
-    done = log.as_df(spark).withColumnRenamed("key", key_col)
-    todo = (
-        keys.select(F.col(key_col).cast("string").alias(key_col))
-        .distinct()
-        .join(F.broadcast(done), key_col, "left_anti")
-        .orderBy(key_col)
+    all_keys = [r[0] for r in keys.select(F.col(key_col).cast("string")).distinct().collect()]
+    done = set(log.committed_keys())
+    # code-point order of str is the UTF-8 byte order Spark sorts strings in
+    todo_keys = sorted(
+        (k for k in all_keys if k not in done), key=lambda k: (k is not None, k or "")
     )
-    todo_keys = [r[0] for r in todo.collect()]
-    skipped = keys.select(key_col).distinct().count() - len(todo_keys)
+    skipped = len(all_keys) - len(todo_keys)
     if max_parallel_keys > 1 and fail_after is None:
         from concurrent.futures import ThreadPoolExecutor
 

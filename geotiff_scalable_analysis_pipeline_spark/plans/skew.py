@@ -21,6 +21,7 @@ The synthetic corpus is deliberately Zipf-skewed (FIXTURES.md: hotspot cells
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -129,6 +130,24 @@ def plan_size_bytes(df: DataFrame) -> int:
     # py4j maps scala BigInt to a Python int for small values and to a
     # JavaObject beyond the auto-conversion range
     return size if isinstance(size, int) else int(size.toString())
+
+
+def planned_partitions(df: DataFrame) -> int:
+    """Partition count of ``df`` in its physical plan — driver-only, no job;
+    0 when the plan does not fix it. A plan ending in an exchange or a limit
+    reports its own count; a narrow plan over one file scan reports the
+    scan's split count (Spark already spreads small files over the cores)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    n = plan.outputPartitioning().numPartitions()
+    leaves = plan.collectLeaves()
+    if n == 0 and leaves.size() == 1:
+        try:
+            n = leaves.head().inputRDD().getNumPartitions()
+        except Py4JError:  # a leaf without a scan RDD (local rows, range)
+            pass
+    return n
 
 
 def broadcast_threshold_bytes(spark) -> int:

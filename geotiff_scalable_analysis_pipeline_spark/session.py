@@ -76,6 +76,26 @@ def read_parquet_dense(spark: SparkSession, path: str):
     return df
 
 
+def default_driver_memory(mem_total_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEM`` is unset: half the
+    host's physical memory, capped at 24g and never below the 4g default
+    initial heap (``-Xms`` above ``-Xmx`` stops the JVM from starting)."""
+    if mem_total_bytes is None:
+        mem_total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24 * 1024, max(4 * 1024, mem_total_bytes // 2**21))}m"
+
+
+def workers_can_import_package(master: str) -> bool:
+    """True when Python workers started by ``master`` can import this
+    package at start-up: local workers inherit the driver's working
+    directory and ``PYTHONPATH``, so the package root must be one of them."""
+    if not master.startswith("local"):
+        return False
+    root = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return any(p and os.path.realpath(p) == root for p in paths)
+
+
 def get_spark(
     app_name: str = "gsap-spark",
     master: str | None = None,
@@ -94,6 +114,22 @@ def get_spark(
     default was measured and rejected: it fixed the big-corpus straggler
     tax but cost ~50% wall on the small-corpus driver bench (AQE cannot
     coalesce cogroup/applyInPandas required distributions).
+
+    Python workers run under :mod:`.worker_daemon` instead of the stock
+    ``pyspark.daemon`` whenever they can import it at start-up (a
+    ``local[...]`` master with the package root as the working directory or
+    on ``PYTHONPATH``). Spark's worker resets the import caches before every
+    task, and on Python 3.11 that re-reads pyspark.zip, py4j and the
+    spark-core jar once per cached zip finder: a warm trivial
+    ``mapInPandas`` task measured 0.25 s of Python CPU under the stock
+    daemon and 0.04 s under the engine daemon, which drops those finders
+    first (4 vCPU, ``local[3]``). Elsewhere (a cluster master, or a package
+    root workers may not find) the stock daemon stays, because a daemon
+    that fails to import fails every task.
+
+    The driver heap defaults to half the physical memory, within [4g, 24g],
+    unless ``SPARK_DRIVER_MEM`` is set; a cap above the host's memory lets
+    the OS kill the JVM before Spark spills.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
@@ -110,7 +146,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         # Throughput collector + a modest pinned initial heap. Measured on
         # this VM (BENCH/run_scaling.py methodology): G1's region
         # commit/uncommit churn on a large heap drives the kernel into page
@@ -156,6 +192,8 @@ def get_spark(
     # per-executor local SSDs, which tmpfs approximates here
     if os.path.isdir("/dev/shm"):
         b = b.config("spark.local.dir", "/dev/shm/spark-local")
+    if workers_can_import_package(master):
+        b = b.config("spark.python.daemon.module", f"{__package__}.worker_daemon")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -121,6 +121,34 @@ def test_resume_after_kill_is_byte_identical(spark, tmp_path):
     assert fc == fa and len(log_c.committed_keys()) == 8
 
 
+
+def test_resume_dedups_keys_and_keeps_spark_string_order(spark, tmp_path):
+    """Duplicate keys run once, a pre-committed key is skipped, and the rest
+    run in the order Spark's ``orderBy`` gives the string-cast key column
+    (NULL first, then UTF-8 byte order)."""
+    from pyspark.sql import functions as F
+
+    from geotiff_scalable_analysis_pipeline_spark.plans import lineage
+
+    raw = ["9", "10", "a", "B", "é", "10", None, "a", "Z9", "9", "done"]
+    keys = spark.createDataFrame([(k,) for k in raw], "key string")
+    log = lineage.LineageLog(tmp_path, "job")
+    log.commit_key("done")
+    seen = []
+    r = lineage.run_resumable(spark, keys, "key", seen.append, log)
+    want = [
+        row[0]
+        for row in keys.select(F.col("key").cast("string")).distinct()
+        .filter(F.col("key").isNull() | (F.col("key") != "done"))
+        .orderBy("key").collect()
+    ]
+    assert seen == want == [None, "10", "9", "B", "Z9", "a", "é"]
+    assert r == {"processed": 7, "skipped": 1}
+    # a re-run finds every non-NULL key committed
+    again = []
+    r2 = lineage.run_resumable(spark, keys.filter(F.col("key").isNotNull()), "key", again.append, log)
+    assert again == [] and r2 == {"processed": 0, "skipped": 7}
+
 def test_metrics_instrumentation(spark, tmp_path):
     import pandas as pd
 

@@ -14,11 +14,15 @@ Reproduces the reference's tiling semantics exactly:
   ``M = Σ p·W / Σ W`` with ``ΣW==0 → 1``  (reference: src/eo_core/process.py:91-93,
   124-145), followed by the halo→ZoR crop (process.py:147-168).
 
-The reconstruction stays *inside one pandas-UDF invocation per chunk*
-(deterministic numpy accumulation order — float32-exact vs the oracle);
-cross-chunk statistics leave the UDF as float64 partials and are combined
-with an order-pinned fold (sort by chunk coordinate, then ``aggregate``)
-so results are bit-stable under any parallelism.
+Each tile is decoded ONCE; its chunk windows are cut from the calibrated
+tile and run through patches → class scores → overlap-add as one batch (a
+leading chunk axis on the numpy kernels), so the per-call numpy overhead is
+paid per tile, not per chunk. Every pixel still receives the same float32
+additions in the same patch order as a chunk-at-a-time reconstruction
+(float32-exact vs the oracle); cross-chunk statistics leave the UDF as
+float64 partials and are combined with an order-pinned fold (sort by chunk
+coordinate, then ``aggregate``) so results are bit-stable under any
+parallelism.
 
 The NN-inference slot (reference wrappers.py:39) is replaced by a
 deterministic per-patch analysis — per-band patch means → softmax "class
@@ -26,6 +30,8 @@ scores" — same dataflow position, oracle-checkable (SURVEY.md §2.3 R6).
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -66,36 +72,45 @@ def sin_window_np(P: int) -> np.ndarray:
     return np.outer(w1, w1).astype(np.float32)[None, :, :]
 
 
+@functools.lru_cache(maxsize=16)
+def _window_weights(H: int, W: int, P: int, coords: tuple) -> tuple[np.ndarray, np.ndarray]:
+    """Read-only ``(weight, ΣW)`` for one patch layout: the sinusoidal window
+    and its overlap-add sum with ``ΣW==0 → 1``. Data-independent, so it is
+    built once per (chunk side, patch, stride) and shared by every chunk."""
+    weight = sin_window_np(P)
+    wsum = np.zeros((1, H, W), dtype=np.float32)
+    for r, c in coords:
+        wsum[:, r : r + P, c : c + P] += weight
+    wsum[wsum == 0] = 1.0
+    weight.setflags(write=False)
+    wsum.setflags(write=False)
+    return weight, wsum
+
+
 def overlap_add_np(
     patch_probs: np.ndarray, coords: list[tuple[int, int]], H: int, W: int, P: int
 ) -> np.ndarray:
     """Weighted overlap-add reconstruction, float32, reference accumulation
-    order (process.py:124-145). ``patch_probs``: (N, C) per-patch class
-    scores (classification shape) or (N, C, P, P) dense maps."""
-    n_classes = patch_probs.shape[1]
-    weight = sin_window_np(P)
-    avg = np.zeros((n_classes, H, W), dtype=np.float32)
-    wsum = np.zeros((1, H, W), dtype=np.float32)
+    order (process.py:124-145). ``patch_probs``: (..., N, C) per-patch class
+    scores, any leading batch axes (one per chunk) → (..., C, H, W). Each
+    batch member gets exactly the float32 additions of its own unbatched
+    reconstruction."""
+    weight, wsum = _window_weights(H, W, P, tuple(coords))
+    *batch, _, n_classes = patch_probs.shape
+    avg = np.zeros((*batch, n_classes, H, W), dtype=np.float32)
     for idx, (r, c) in enumerate(coords):
-        if patch_probs.ndim == 2:
-            pdata = patch_probs[idx][:, None, None]
-        else:
-            pdata = patch_probs[idx]
-        pw = pdata * weight
-        avg[:, r : r + P, c : c + P] += pw
-        wsum[:, r : r + P, c : c + P] += weight
-        del pw
-    wsum[wsum == 0] = 1.0
+        avg[..., r : r + P, c : c + P] += patch_probs[..., idx, :, None, None] * weight
     return avg / wsum
 
 
 def patch_class_scores_np(patches: np.ndarray) -> np.ndarray:
     """Deterministic stand-in for the model forward (R6): per-band patch means
-    → softmax over bands = "class probabilities". (N, C, P, P) → (N, C)."""
-    means = patches.astype(np.float32).mean(axis=(2, 3))
-    m = means - means.max(axis=1, keepdims=True)
+    → softmax over bands = "class probabilities". (..., N, C, P, P) →
+    (..., N, C), any leading batch axes."""
+    means = patches.astype(np.float32).mean(axis=(-2, -1))
+    m = means - means.max(axis=-1, keepdims=True)
     e = np.exp(m)
-    return (e / e.sum(axis=1, keepdims=True)).astype(np.float32)
+    return (e / e.sum(axis=-1, keepdims=True)).astype(np.float32)
 
 
 def reflect_pad_np(arr: np.ndarray, pads: tuple[int, int, int, int]) -> np.ndarray:
@@ -137,40 +152,43 @@ CHUNK_CLASS_SCHEMA = (
 def iter_chunk_probs(buf: bytes, baseline: int, zor: int, halo: int, patch: int, stride: int):
     """Per-chunk probability cubes for one tile blob.
 
-    Yields (r0, c0, zorp) with zorp float32 (C, h_ok, w_ok) — the full
-    pipeline: windowed-block decode → calibrate → reflect pad → patches
-    (tail rule) → class scores → sinusoidal overlap-add → ZoR crop.
-    Shared by the stats operator and the K2 full-res payload operator.
+    Yields (r0, c0, zorp) with zorp float32 (C, h_ok, w_ok) in chunk-grid
+    order — the full pipeline: one decode of the tile → calibrate → per
+    chunk, clamp the halo window and reflect-pad it → patches (tail rule) →
+    class scores → sinusoidal overlap-add → ZoR crop, the last three batched
+    over all of the tile's chunks. Shared by the stats operator and the K2
+    full-res payload operator.
     """
     from ..formats import tiff
 
-    prof = tiff.read_profile(buf)
+    dn, prof = tiff.decode(buf)
     H_full, W_full = prof.height, prof.width
+    cal = dn.astype(np.float32)
+    if baseline >= 400:
+        cal = np.maximum(cal - 1000.0, 0.0)
+    cal = cal / 10000.0
     side = zor + 2 * halo
+    origins, windows = [], []
     for r0 in range(0, H_full, zor):
         for c0 in range(0, W_full, zor):
             wr, wc = r0 - halo, c0 - halo
             ir0, ic0 = max(wr, 0), max(wc, 0)
             ir1, ic1 = min(wr + side, H_full), min(wc + side, W_full)
-            arr = tiff.decode_window(buf, ir0, ic0, ir1 - ir0, ic1 - ic0)
-            a = arr.astype(np.float32)
-            if baseline >= 400:
-                a = np.maximum(a - 1000.0, 0.0)
-            a = a / 10000.0
+            a = cal[:, ir0:ir1, ic0:ic1]
             pads = (ir0 - wr, wr + side - ir1, ic0 - wc, wc + side - ic1)
             if any(p > 0 for p in pads):
                 a = reflect_pad_np(a, pads)
-            coords = patch_coords_np(side, side, patch, stride)
-            patches = np.stack([a[:, r : r + patch, c : c + patch] for r, c in coords])
-            scores = patch_class_scores_np(patches)
-            probs = overlap_add_np(scores, coords, side, side, patch)
-            zorp = probs[:, halo : side - halo, halo : side - halo]
-            # clip ZoR to image extent (reference process.py:161-166)
-            h_ok = min(zor, H_full - r0)
-            w_ok = min(zor, W_full - c0)
-            if h_ok <= 0 or w_ok <= 0:
-                continue
-            yield r0, c0, zorp[:, :h_ok, :w_ok]
+            origins.append((r0, c0))
+            windows.append(a)
+    chunks = np.stack(windows)  # (K, C, side, side)
+    coords = patch_coords_np(side, side, patch, stride)
+    patches = np.stack([chunks[:, :, r : r + patch, c : c + patch] for r, c in coords], axis=1)
+    probs = overlap_add_np(patch_class_scores_np(patches), coords, side, side, patch)
+    for k, (r0, c0) in enumerate(origins):
+        # ZoR crop, clipped to the image extent (reference process.py:161-166)
+        h_ok = min(zor, H_full - r0)
+        w_ok = min(zor, W_full - c0)
+        yield r0, c0, probs[k, :, halo : halo + h_ok, halo : halo + w_ok]
 
 
 def chunk_class_stats(
@@ -182,10 +200,12 @@ def chunk_class_stats(
 ) -> DataFrame:
     """Full per-chunk raster pipeline inside one grouped-map UDF.
 
-    decode window (windowed-block read + reflect pad) → calibrate → patches
-    (tail rule) → class scores (R6 stand-in) → sinusoidal overlap-add → ZoR
-    crop → per-class float64 partials. One input row per tile; the chunk loop
-    runs in numpy — mirroring the reference writer process, but per task.
+    decode the tile once → calibrate → clamp + reflect-pad each chunk's
+    halo window → patches (tail rule) → class scores (R6 stand-in) →
+    sinusoidal overlap-add → ZoR crop → per-class float64 partials. One
+    input row per tile; the tile's chunks run as one numpy batch
+    (``iter_chunk_probs``) — mirroring the reference writer process, but
+    per task.
     """
     import pandas as pd
 

@@ -17,9 +17,21 @@ import os
 import uuid
 from collections.abc import Callable
 from pathlib import Path
+from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+_NULL_MARKER = "%null"  # quote() never emits it: '%' is always followed by hex
+
+
+def _marker_name(key: str | None) -> str:
+    return _NULL_MARKER if key is None else quote(key, safe="")
+
+
+def _marker_key(name: str) -> str | None:
+    return None if name == _NULL_MARKER else unquote(name)
 
 
 class LineageLog:
@@ -27,20 +39,29 @@ class LineageLog:
 
     One marker file per committed key (atomic rename) — the same pattern at
     cluster scale with an object store (marker PUT is the commit point).
+    Marker names are the percent-quoted key (plain keys keep their own
+    name; ``/`` and ``%`` are escaped), and the NULL key's marker is
+    ``%null``, which no quoted string can spell — so NULL and the string
+    ``"None"`` are distinct keys.
     """
 
     def __init__(self, root: str | Path, job_id: str):
         self.dir = Path(root) / "_lineage" / job_id
         self.dir.mkdir(parents=True, exist_ok=True)
 
-    def committed_keys(self) -> list[str]:
-        return sorted(p.stem for p in self.dir.glob("*.done"))
+    def _marker(self, key: str | None) -> Path:
+        return self.dir / f"{_marker_name(key)}.done"
 
-    def is_committed(self, key: str) -> bool:
-        return (self.dir / f"{key}.done").exists()
+    def committed_keys(self) -> list[str | None]:
+        """Committed keys, NULL first, then in code-point order."""
+        keys = (_marker_key(p.name[: -len(".done")]) for p in self.dir.glob("*.done"))
+        return sorted(keys, key=lambda k: (k is not None, k or ""))
 
-    def commit_key(self, key: str, meta: dict | None = None) -> None:
-        p = self.dir / f"{key}.done"
+    def is_committed(self, key: str | None) -> bool:
+        return self._marker(key).exists()
+
+    def commit_key(self, key: str | None, meta: dict | None = None) -> None:
+        p = self._marker(key)
         tmp = p.with_suffix(f".tmp-{uuid.uuid4().hex}")
         tmp.write_text(json.dumps(meta or {}))
         os.replace(tmp, p)

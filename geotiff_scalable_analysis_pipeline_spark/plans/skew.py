@@ -58,17 +58,22 @@ def salt_plan(hist: DataFrame, key: str, threshold: float = 4.0, max_salts: int 
 
 
 def materialize_plan(plan: DataFrame) -> DataFrame:
-    """Collect a salt plan into a literal in-memory DataFrame.
+    """Collect a small frame into a literal in-memory DataFrame (a
+    ``LocalRelation``, planned as ``LocalTableScan``).
 
     A salt plan is tiny by construction (keys hotter than threshold× the
     mean), but it is consumed by SEVERAL ``F.broadcast`` builds (fact side,
     dim side) — each build re-evaluates the plan's lineage (histogram scan +
     filter), paying one stage-floor per consumer at the 4N level. Collecting
-    once turns every consumer into a LocalTableScan. No-op semantics: the
-    returned frame holds exactly the same rows."""
+    once turns every consumer into a LocalTableScan. The rows go from the
+    collect straight into the relation inside the JVM: a Python
+    ``createDataFrame`` of the collected rows would re-pickle them through a
+    PythonRDD (a ``Scan ExistingRDD`` that starts Python workers for every
+    consumer). No-op semantics: the returned frame holds exactly the same
+    rows."""
     spark = plan.sparkSession
-    rows = plan.collect()
-    return spark.createDataFrame(rows, schema=plan.schema)
+    jdf = plan._jdf
+    return DataFrame(spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema()), spark)
 
 
 def apply_salts(df: DataFrame, key: str, plan: DataFrame, seed_col: str) -> DataFrame:

@@ -33,6 +33,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans.skew import materialize_plan
+
 _D = "decimal(30, 10)"  # matches queries_relational._D (exact event sums)
 
 
@@ -163,8 +165,7 @@ def _run_complete_to_memory(
         .start()
     )
     q.awaitTermination()
-    rows = spark.table(query_name)
-    return spark.createDataFrame(rows.collect(), rows.schema)
+    return materialize_plan(spark.table(query_name))
 
 
 def stream_documents(

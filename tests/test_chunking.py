@@ -55,6 +55,39 @@ def test_overlap_add_float32_exact(n, C, P, seed):
     assert np.array_equal(got, want)
 
 
+@given(
+    H=st.integers(1, 3 * 16 + 8),
+    W=st.integers(1, 3 * 16 + 8),
+    baseline=st.sampled_from([300, 500]),
+    stride=st.sampled_from([8, 5]),
+    seed=st.integers(0, 10_000),
+)
+@settings(max_examples=60, deadline=None)
+def test_iter_chunk_probs_matches_oracle_bytes(H, W, baseline, stride, seed):
+    """The batched one-decode kernel equals the chunk-at-a-time oracle byte
+    for byte: float64 class partials, minima/maxima and the assembled cube,
+    on tiles from 1 px up to three chunks plus a halo (zor=16, halo=8),
+    including sides narrower than the halo."""
+    from oracle import oracle_chunk_class_stats, oracle_chunk_prob_cube
+
+    from geotiff_scalable_analysis_pipeline_spark.formats import tiff
+
+    zor, halo, patch = 16, 8, 16
+    dn = np.random.default_rng(seed).integers(0, 10_001, size=(3, H, W)).astype(np.uint16)
+    chunks = list(chunking.iter_chunk_probs(tiff.encode(dn), baseline, zor, halo, patch, stride))
+    rows, cube = [], np.zeros((3, H, W), dtype=np.float32)
+    for r0, c0, zorp in chunks:
+        h, w = zorp.shape[1:]
+        cube[:, r0 : r0 + h, c0 : c0 + w] = zorp
+        sums = zorp.sum(axis=(1, 2), dtype=np.float64)
+        for cls in range(zorp.shape[0]):
+            rows.append((r0, c0, cls, float(sums[cls]), h * w,
+                         float(np.float64(zorp[cls].min())), float(np.float64(zorp[cls].max()))))
+    want = oracle_chunk_class_stats(dn, baseline, zor, halo, patch, stride)
+    assert np.array(rows, dtype=np.float64).tobytes() == np.array(want, dtype=np.float64).tobytes()
+    assert cube.tobytes() == oracle_chunk_prob_cube(dn, baseline, zor, halo, patch, stride).tobytes()
+
+
 def test_chunk_class_stats_end_to_end(spark):
     """Spark pipeline (decode real TIFF → patches → scores → overlap-add →
     ZoR) must equal the oracle recomputing from the DN formula, bit-for-bit."""

@@ -45,6 +45,21 @@ def test_pip_poly_is_broadcast_and_python_free(spark):
     assert "BroadcastHashJoin" in p
 
 
+def test_materialized_salt_plan_is_a_local_relation(spark):
+    """``materialize_plan`` builds its rows into a LocalRelation in the JVM:
+    a broadcast consumer scans it locally, with no RDD scan that would start
+    Python workers."""
+    from geotiff_scalable_analysis_pipeline_spark.plans import skew
+
+    df = dg.tiles_df(spark, CFG).select("media_ref", (F.col("tile_k") % 5).alias("k"))
+    lit = skew.materialize_plan(skew.salt_plan(skew.key_histogram(df, "k"), "k", threshold=0.5))
+    assert lit.count() == 5
+    opt = lit._jdf.queryExecution().optimizedPlan()
+    assert opt.getClass().getSimpleName() == "LocalRelation"
+    p = _plan(df.join(F.broadcast(lit), "k", "left"))
+    assert "LocalTableScan" in p and "ExistingRDD" not in p
+
+
 def test_pricing_summary_pushes_filter_to_scan(spark):
     from geotiff_scalable_analysis_pipeline_spark.queries_relational import q_pricing_summary
 

@@ -149,6 +149,31 @@ def test_resume_dedups_keys_and_keeps_spark_string_order(spark, tmp_path):
     r2 = lineage.run_resumable(spark, keys.filter(F.col("key").isNotNull()), "key", again.append, log)
     assert again == [] and r2 == {"processed": 0, "skipped": 7}
 
+def test_lineage_null_and_unsafe_keys_have_own_markers(spark, tmp_path):
+    """NULL, the string "None" and keys holding '/' or '%' are distinct
+    committed keys: NULL is skipped once it commits, and every key reads
+    back exactly as committed."""
+    log = lineage.LineageLog(tmp_path, "job")
+    keys = spark.createDataFrame([(None,), ("a/b",), ("x%2Fy",), ("plain-1",)], "key string")
+    seen = []
+    lineage.run_resumable(spark, keys, "key", seen.append, log)
+    assert seen == [None, "a/b", "plain-1", "x%2Fy"]
+    assert log.committed_keys() == seen
+    assert sorted(p.name for p in log.dir.iterdir()) == [
+        "%null.done", "a%2Fb.done", "plain-1.done", "x%252Fy.done",
+    ]
+    assert not log.is_committed("None")
+    again = []
+    r = lineage.run_resumable(spark, keys, "key", again.append, log)
+    assert again == [] and r == {"processed": 0, "skipped": 4}
+    # the string "None" is its own key, independent of NULL
+    nones = spark.createDataFrame([("None",), (None,)], "key string")
+    seen_none = []
+    lineage.run_resumable(spark, nones, "key", seen_none.append, log)
+    assert seen_none == ["None"]
+    assert log.is_committed("None") and log.is_committed(None)
+
+
 def test_metrics_instrumentation(spark, tmp_path):
     import pandas as pd
 
@@ -314,6 +339,53 @@ def test_schema_evolution_add_column(spark, tmp_path):
     # empty pruned read also returns the manifest schema (not a crash)
     empty = cat.read(spark, "ev", snapshot=s2, partition_filter=lambda pv: False)
     assert empty.columns == ["id", "v", "tag"] and empty.count() == 0
+
+
+def test_read_uses_manifest_schema_without_a_job(spark, tmp_path):
+    """Each snapshot prefix is scanned under the manifest schema: string
+    partition values keep their written form ('007', not 7), files from
+    before an appended column read it as null, and planning the read runs
+    no Spark job (no footer inference)."""
+    cat = TableCatalog(tmp_path)
+    cat.commit(spark.createDataFrame([("007", 1), ("010", 2)], "zone string, v int"),
+               "z", partition_by=["zone"])
+    cat.commit(spark.createDataFrame([("007", 3, 1.5)], "zone string, v int, w double"),
+               "z", partition_by=["zone"], mode="append")
+    sc = spark.sparkContext
+    sc.setJobGroup("catalog-read-plan", "catalog.read planning")
+    try:
+        cur = cat.read(spark, "z")
+        old = cat.read(spark, "z", snapshot=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("catalog-read-plan") == []
+    assert cur.schema.simpleString() == "struct<zone:string,v:int,w:double>"
+    assert sorted(map(tuple, cur.collect())) == [
+        ("007", 1, None), ("007", 3, 1.5), ("010", 2, None),
+    ]
+    assert old.schema.simpleString() == "struct<zone:string,v:int>"
+    assert sorted(map(tuple, old.collect())) == [("007", 1), ("010", 2)]
+
+
+def test_data_files_are_zstd(spark, tmp_path):
+    """Every column chunk of every committed file is zstd-compressed,
+    partitioned or not (the catalog codec, ``catalog.PARQUET_CODEC``)."""
+    import pyarrow.parquet as pq
+
+    cat = TableCatalog(tmp_path)
+    df = spark.range(200).select(
+        F.col("id"), (F.col("id") % 3).cast("string").alias("p"), F.sha2(F.col("id").cast("string"), 256).alias("h")
+    )
+    cat.commit(df, "plain")
+    cat.commit(df, "parted", partition_by=["p"])
+    files = list((tmp_path / "plain").rglob("*.parquet")) + list((tmp_path / "parted").rglob("*.parquet"))
+    assert len(files) >= 4
+    codecs = set()
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        for rg in range(md.num_row_groups):
+            codecs |= {md.row_group(rg).column(i).compression for i in range(md.num_columns)}
+    assert codecs == {"ZSTD"}
 
 
 def test_delete_range_metadata_fast_path(spark, tmp_path):

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.skew import cpu_dense_repartition
+from ..plans.placement import cpu_dense_repartition
 
 
 def butterfly_counts(

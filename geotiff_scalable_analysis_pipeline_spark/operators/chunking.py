@@ -242,10 +242,10 @@ def chunk_class_stats(
     # plan has fewer partitions than cores: a scan Spark already split
     # over the cores (256 tiles: 3 splits for 3 slots) would shuffle
     # ~12 MB of blobs for nothing.
-    from ..plans.skew import planned_partitions, small_enough_to_broadcast
+    from ..plans.placement import planned_partitions, small_enough_to_broadcast
 
     cores = media.sparkSession.sparkContext.defaultParallelism
-    if small_enough_to_broadcast(sel) and planned_partitions(sel) < cores:
+    if small_enough_to_broadcast((sel, 1)) and planned_partitions(sel) < cores:
         sel = sel.repartition(cores)
     return sel.mapInPandas(run, CHUNK_CLASS_SCHEMA)
 

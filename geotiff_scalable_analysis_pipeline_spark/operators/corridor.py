@@ -36,9 +36,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.skew import cpu_dense_repartition, small_enough_to_broadcast
+from ..plans.placement import cpu_dense_repartition, small_enough_to_broadcast
 
 D38 = "CAST({} AS DECIMAL(38,0))"
+# conservative bound on the cells one segment's r-expanded bbox covers (not exact)
+SEGMENT_COVER_FANOUT = 256
 
 
 def segment_distance_join(
@@ -93,20 +95,11 @@ def segment_distance_join(
         "_cj", F.expr(f"{py} div {c}")
     )
 
-    # the pair-predicate stage is CPU-dense but byte-light (~56 B rows of
-    # coordinates): AQE's byte-based coalescing would serialize it into a
-    # few tasks. Pin an explicit wave-amortized width on BOTH sides — same
-    # hash key and count, so the join adds no further exchange (same fix
-    # as overlay/distance_join; BENCH/BASELINE.md round-4 provenance).
-    # Size gate (round 6): when even a conservative 256× bbox-cover fanout
-    # of the SEGMENT side fits under the broadcast threshold, skip the
-    # explicit exchanges — Catalyst/AQE then broadcasts the exploded cover
-    # (a small dim) and the point side never shuffles at all. The gate
-    # reads the pre-explode segment plan (Generate does not inflate
-    # Catalyst's estimate); the point side is deliberately NOT consulted —
-    # a big point layer against a big segment layer must keep the pinned
-    # width regardless of which side is bigger.
-    if not small_enough_to_broadcast(segments, fanout=256):
+    # the pair-predicate stage is CPU-dense but byte-light (~56 B rows):
+    # pin its width unless the segment cover broadcasts (plans/placement.py).
+    # Only the segment side is consulted: a big point layer against a big
+    # segment layer keeps the pinned width whichever side is bigger.
+    if not small_enough_to_broadcast((segments, SEGMENT_COVER_FANOUT)):
         p = cpu_dense_repartition(p, "_ci", "_cj")
         cover = cpu_dense_repartition(cover, "_ci", "_cj")
 

@@ -69,9 +69,9 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.skew import small_enough_to_broadcast
+from ..plans.placement import small_enough_to_broadcast
 from .dedup_cc import connected_components
-from .distance_join import distance_join
+from .distance_join import EPS_JOIN_FANOUT, distance_join
 
 
 def _fine_cell(x: str, y: str, res: int):
@@ -137,9 +137,8 @@ def dbscan(
     # one width decision for ALL ε-joins, taken from the base table whose
     # size estimate is reliable (the later consumers' inputs run through
     # checkpoint/broadcast lineage, which hides the true size from the
-    # estimator): small corpora skip the explicit wave-amortized exchanges
-    # so the pair joins plan/convert to broadcast (zero exchanges).
-    pin = not small_enough_to_broadcast(pts, fanout=9)
+    # estimator), charged distance_join's neighbour-explode fanout
+    pin = not small_enough_to_broadcast((pts, EPS_JOIN_FANOUT))
     if res >= 1:
         pts = pts.withColumn("fc", _fine_cell("qx", "qy", res))
 

@@ -22,10 +22,13 @@ The DuckDB oracle (queries_text.py) instead floods labels through a
 recursive CTE — a transitive-closure build that is fine at oracle scale and
 is exactly what this operator exists to avoid at 100 TB.
 
-Iterative-plan hygiene: every round ends in an eager **deserialized** local
-checkpoint (``MEMORY_AND_DISK_DESER`` — PERF.md round 4: PySpark's plain
-``MEMORY_AND_DISK`` is the *serialized* level, a pure CPU tax) so lineage
-stays O(1) deep and the convergence check never recomputes prior rounds.
+Iterative-plan hygiene: every round ends in an eager local checkpoint at
+PySpark's default level, which is already disk+memory+**deserialized**
+(pinned by ``tests/test_plan_quality.py::
+test_local_checkpoint_default_level_is_deserialized``; PERF.md round 4: the
+serialized level is a pure CPU tax), so lineage stays O(1) deep and the
+convergence check never recomputes prior rounds. Each superseded round is
+released with ``plans/placement.free_checkpoint``.
 
 Reference parity: the reference pipeline (single-node torch/rasterio) has no
 dedup surface; this operator belongs to the training-data-pipeline family
@@ -37,22 +40,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.placement import free_checkpoint
+
 MAX_ROUNDS = 25  # ⌈log₂ n⌉ + slack; a 2²⁵-node path is beyond any real corpus
-
-
-def _free_checkpoint(df: DataFrame) -> None:
-    """Release a SUPERSEDED round's localCheckpoint blocks immediately.
-
-    A localCheckpoint has no lineage, so this is only safe for frames that
-    are never read again (each round's ``nxt`` is eagerly materialized
-    before its predecessor is freed). Without this, up to ``max_rounds``
-    corpus-sized edge sets stay resident between driver GCs — at scale
-    that evicts useful blocks or spills. The checkpointed plan is a
-    ``LogicalRDD`` whose RDD sits in the context's persistent-RDD map."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # plan shape differs (future Spark) — driver GC reclaims it
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -130,13 +120,13 @@ def connected_components(
             # one-sided exceptAll-empty ⟺ set equality). This runs ONCE, at
             # the fixpoint, on two already-checkpointed frames.
             exact = nxt.exceptAll(e).isEmpty()
-            _free_checkpoint(e)
+            free_checkpoint(e)
             e = nxt
             if exact:
                 converged = True
                 break
         else:
-            _free_checkpoint(e)  # superseded round — nxt is already materialized
+            free_checkpoint(e)  # superseded round — nxt is already materialized
             e = nxt
         prev_sig = sig
     if not converged:

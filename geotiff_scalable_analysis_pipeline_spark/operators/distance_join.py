@@ -18,15 +18,10 @@ Exactly-once by construction: A has one cell per row and B emits at most
 one copy into any given cell, so no distinct/dropDuplicates shuffle.
 
 Scale shape: one ≤9× explode of the B side + one cell-keyed hash shuffle
-per side. The CPU-dense pair-product stage gets the same explicit
-wave-amortized width as the overlay join — AQE's byte-based coalescing
-otherwise serializes byte-light candidate stages (BENCH/BASELINE.md
-round-4 provenance). Note the trade: explicit REPARTITION shuffles are
-NOT eligible for AQE's OptimizeSkewedJoin split (it only splits
-ENSURE_REQUIREMENTS exchanges), so a single pathologically hot cell still
-serializes into one task — the remedies are a finer ``level`` (more,
-smaller cells; legal down to ``level_for_radius``) or pre-salting the hot
-keys with plans/skew.py before calling, same as the PIP aggregates.
+per side. The CPU-dense pair-product stage gets the pinned width and
+broadcast gate of ``plans/placement.py``; a pathologically hot cell is
+remedied by a finer ``level`` (legal down to ``level_for_radius``) or by
+pre-salting the hot keys with ``plans/skew.py`` before calling.
 """
 
 from __future__ import annotations
@@ -44,7 +39,11 @@ from ..functions.cells import (
     lattice_expr,
     morton_expr,
 )
-from ..plans.skew import cpu_dense_repartition, small_enough_to_broadcast
+from ..plans.placement import cpu_dense_repartition, small_enough_to_broadcast
+
+# the 3×3 neighbourhood each B row explodes to; its size is the B side's fanout
+NEIGHBOUR_OFFSETS = tuple((dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1))
+EPS_JOIN_FANOUT = len(NEIGHBOUR_OFFSETS)
 
 
 def level_for_radius(radius: float) -> int:
@@ -71,12 +70,9 @@ def distance_join(
     Returns a's columns + b's columns + ``dist_sq`` (integer-exact on
     integer coordinates). ``level`` defaults to :func:`level_for_radius`.
     ``pin_width``: force (True) or suppress (False) the wave-amortized
-    explicit exchanges; the default (None) decides from Catalyst's plan
-    size estimates — when either side (the B side charged its ≤9× explode
-    fanout) fits under the session broadcast threshold, the plain equi-join
-    is planned as a BroadcastHashJoin with ZERO exchanges, and forcing two
-    4×cores-wide exchanges onto it is pure overhead (measured ~5× on the
-    sf0.1 driver bench's dbscan). Operators whose inputs hide the true size
+    explicit exchanges; the default (None) pins them unless either side
+    broadcasts, the B side charged its :data:`EPS_JOIN_FANOUT` explode
+    (``plans/placement.py``). Operators whose inputs hide the true size
     from the estimator (checkpoint lineage, in-plan generators) decide once
     from their base table and pass the flag down.
     """
@@ -96,9 +92,7 @@ def distance_join(
         "cell", F.expr(cell_id_expr(f"CAST(`{ax}` AS DOUBLE)", f"CAST(`{ay}` AS DOUBLE)", lvl))
     )
 
-    offsets = ", ".join(
-        f"struct({dx} AS dx, {dy} AS dy)" for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-    )
+    offsets = ", ".join(f"struct({dx} AS dx, {dy} AS dy)" for dx, dy in NEIGHBOUR_OFFSETS)
     ix = lattice_expr(f"CAST(`{bx}` AS DOUBLE)", lvl)
     iy = lattice_expr(f"CAST(`{by}` AS DOUBLE)", lvl)
     pb = (
@@ -113,9 +107,7 @@ def distance_join(
         .drop("_o", "_nx", "_ny")
     )
     if pin_width is None:
-        pin_width = not (
-            small_enough_to_broadcast(b, fanout=9) or small_enough_to_broadcast(a)
-        )
+        pin_width = not small_enough_to_broadcast((b, EPS_JOIN_FANOUT), (a, 1))
     if pin_width:
         pa = cpu_dense_repartition(pa, "cell")
         pb = cpu_dense_repartition(pb, "cell")

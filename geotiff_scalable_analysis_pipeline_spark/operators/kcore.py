@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup_cc import _free_checkpoint
+from ..plans.placement import free_checkpoint
 
 MAX_ROUNDS = 10_000  # a cascade peels ≥1 node per non-final round
 
@@ -81,8 +81,8 @@ def k_core(
             )
             # the caller's result must not dangle on loop checkpoint blocks
             out = result.localCheckpoint(eager=True)
-            _free_checkpoint(keep)
-            _free_checkpoint(sym)
+            free_checkpoint(keep)
+            free_checkpoint(sym)
             return out
         prev_alive = n_alive
         nxt = (
@@ -90,8 +90,8 @@ def k_core(
             .join(keep, sym.e_dst == keep.node, "left_semi")
             .localCheckpoint(eager=True)
         )
-        _free_checkpoint(keep)
-        _free_checkpoint(sym)
+        free_checkpoint(keep)
+        free_checkpoint(sym)
         sym = nxt
     raise RuntimeError(f"k-core peel did not converge within {max_rounds} rounds")
 

@@ -38,10 +38,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import cell_id_col
-from ..plans.skew import cpu_dense_repartition, small_enough_to_broadcast
+from ..plans.placement import cpu_dense_repartition, small_enough_to_broadcast
 from .pip_join import DEFAULT_LEVEL, cover_cells_rect
 
 _GEOM = ("minx", "miny", "maxx", "maxy")
+# conservative bound on the cells one rectangle's cover explodes to (not exact)
+RECT_COVER_FANOUT = 64
 
 
 def _covered(df: DataFrame, id_col: str, tag: str, level: int) -> DataFrame:
@@ -69,25 +71,9 @@ def overlay_rect_join(
     """
     ca = _covered(a, id_a, "a", level)
     cb = _covered(b, id_b, "b", level)
-    # The pair-product join is CPU-dense but byte-light (exploded cover
-    # rows are ~48 B): AQE's byte-based coalescing collapses it to a
-    # few tasks at ANY core count, serializing the stage (measured:
-    # scale-600 N→4N pair efficiency 0.708 before, ≥0.8 after). Pin an
-    # explicit wave-amortized width on BOTH sides — same hash key and
-    # count, so the join adds no further exchange. Trade: explicit
-    # REPARTITION shuffles are not AQE-skew-splittable; a single
-    # pathologically hot cell serializes one task — remedies are a
-    # finer level or plans/skew.py pre-salting, as in the PIP path.
-    # Size gate (round 6): when either layer's estimate — charged a
-    # conservative 64× cell-cover fanout for its bbox explode — fits
-    # under the broadcast threshold, skip the explicit exchanges and
-    # let Catalyst/AQE broadcast the small exploded cover (zero
-    # exchanges; the big layer never shuffles). Big-vs-big keeps the
-    # pinned width.
-    if not (
-        small_enough_to_broadcast(a, fanout=64)
-        or small_enough_to_broadcast(b, fanout=64)
-    ):
+    # the pair-product join is CPU-dense but byte-light (~48 B cover rows):
+    # pin its width unless either layer's cover broadcasts (plans/placement.py)
+    if not small_enough_to_broadcast((a, RECT_COVER_FANOUT), (b, RECT_COVER_FANOUT)):
         ca = cpu_dense_repartition(ca, "cell")
         cb = cpu_dense_repartition(cb, "cell")
     j = ca.join(cb, "cell")

@@ -43,7 +43,7 @@ the same packing shrinks the broadcast and halves probe cost.
 All joins are hash equi-joins on node keys; nothing is quadratic in the
 corpus; no window, no distinct beyond the initial canonicalization. The
 wedge side is CPU-dense/byte-light, so the join inputs take the engine's
-standard wave-partition pin (plans/skew.py — AQE's byte-based coalescing
+standard wave-partition pin (plans/placement.py — AQE's byte-based coalescing
 otherwise serializes the stage; BENCH/BASELINE.md round-4 provenance).
 """
 
@@ -52,7 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.skew import cpu_dense_repartition
+from ..plans.placement import cpu_dense_repartition
 
 
 def _simple_graph(edges: DataFrame, src: str, dst: str) -> DataFrame:

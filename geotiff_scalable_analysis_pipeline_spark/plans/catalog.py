@@ -225,37 +225,29 @@ class TableCatalog:
         current = N, i.e. after the previous winner's flip completed."""
         snap = man["snapshot_id"]
         parent = man.get("parent")
-        pman: dict | None = None
+        pman: dict = {}
         if parent is not None:
             try:
                 pman = json.loads(self._manifest_path(table, parent).read_text())
             except FileNotFoundError:
-                pman = None  # pre-propagation history; walk fallback in readers
+                pass  # parent expired under a concurrent writer: nothing to carry
         # Propagate the streaming high-water mark from the parent so the
         # CURRENT manifest always carries it: without this, expire() could
         # drop the ancestor manifest holding the newest stream_batch_id and
         # a replayed epoch (crash between catalog commit and checkpoint
         # commit) would be re-committed — duplicate rows. max() because a
         # rollback restores old FILES but must not forget committed epochs.
-        if "stream_high_water" not in man:
-            # Per-STREAM high-water dict {stream_id: max batch}: two
-            # distinct pipelines writing one table each carry their own
-            # marker, so a fresh pipeline's batch 0 is never mistaken for a
-            # replay of another pipeline's epoch (data loss). Pre-namespace
-            # history wrote a scalar — normalized to {"default": n} on read.
-            hw: dict[str, int] = {}
-            if "stream_batch_id" in man:
-                hw[man.get("stream_id", "default")] = man["stream_batch_id"]
-            if pman is not None:
-                phw = pman.get("stream_high_water")
-                if phw is None and "stream_batch_id" in pman:
-                    phw = {pman.get("stream_id", "default"): pman["stream_batch_id"]}
-                elif isinstance(phw, int):
-                    phw = {"default": phw}
-                for sid, b in (phw or {}).items():
-                    hw[sid] = max(hw.get(sid, -1), b)
-            if hw:
-                man["stream_high_water"] = hw
+        # Per-STREAM high-water dict {stream_id: max batch}: two distinct
+        # pipelines writing one table each carry their own marker, so a
+        # fresh pipeline's batch 0 is never mistaken for a replay of another
+        # pipeline's epoch (data loss).
+        hw: dict[str, int] = {}
+        if "stream_batch_id" in man:
+            hw[man.get("stream_id", "default")] = man["stream_batch_id"]
+        for sid, b in pman.get("stream_high_water", {}).items():
+            hw[sid] = max(hw.get(sid, -1), b)
+        if hw:
+            man["stream_high_water"] = hw
         # Propagate the cumulative per-stream ingested-source-file set the
         # same way: the CURRENT manifest always carries the full set, so
         # expire() cannot erode the file-granularity replay guard
@@ -264,19 +256,13 @@ class TableCatalog:
         # The set grows with total files ingested — at 100 TB it would live
         # in a side table / bloom filter; here the manifest is the single
         # metadata unit and file counts are manifest-sized anyway.
-        if "stream_files_all" not in man:
-            fa: dict[str, set[str]] = {}
-            if man.get("stream_files"):
-                sid = man.get("stream_id", "default")
-                fa[sid] = set(man["stream_files"])
-            if pman is not None:
-                for sid, fl in (pman.get("stream_files_all") or {}).items():
-                    fa[sid] = fa.get(sid, set()) | set(fl)
-                if pman.get("stream_files"):
-                    psid = pman.get("stream_id", "default")
-                    fa[psid] = fa.get(psid, set()) | set(pman["stream_files"])
-            if fa:
-                man["stream_files_all"] = {s: sorted(v) for s, v in fa.items()}
+        fa: dict[str, set[str]] = {}
+        if man.get("stream_files"):
+            fa[man.get("stream_id", "default")] = set(man["stream_files"])
+        for sid, fl in pman.get("stream_files_all", {}).items():
+            fa[sid] = fa.get(sid, set()) | set(fl)
+        if fa:
+            man["stream_files_all"] = {s: sorted(v) for s, v in fa.items()}
         mpath = self._manifest_path(table, snap)
         mpath.parent.mkdir(parents=True, exist_ok=True)
         tmp = mpath.with_suffix(f".tmp-{uuid.uuid4().hex}")

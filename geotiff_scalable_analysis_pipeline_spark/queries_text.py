@@ -1653,6 +1653,9 @@ GROUP BY 1, 2"""
 
 HH_TOP_K = 10
 KEYWORDS_TOP_K = 3
+# conservative bound on the (token, tf) struct rows' bytes per byte of document
+# text, charged to the documents estimate by the top-k width gate (not exact)
+TOKEN_ROW_FANOUT = 8
 
 
 def q_vocab_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1745,21 +1748,13 @@ def q_doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             (-F.col("tf")).alias("neg_tf"), "df", "token"
         ).alias("key"),
     )
-    # The per-doc top-k aggregate is CPU-dense per group but byte-light —
-    # AQE's byte-based coalescing serialized it to a 2-task stage at 600 k
-    # docs (pair efficiency 0.325 N→4N); an explicit wave-amortized width
-    # is exempt from coalescing and restores scaling (plans/skew.py).
-    # Size gate (round 6): a corpus whose (token, tf) rows — charged an 8×
-    # struct-vs-text inflation on the documents estimate — fit under the
-    # broadcast threshold cannot produce CPU-dense tasks worth amortizing;
-    # skipping the exchange there saves a full 4×cores-wide shuffle stage
-    # on the small-scale driver bench while the 600 k-doc sweep shape is
-    # unchanged (its corpus estimate is far above the threshold).
-    from .plans.skew import cpu_dense_repartition, small_enough_to_broadcast
+    # the per-doc top-k aggregate is CPU-dense per group but byte-light:
+    # pin its width unless the corpus is small (plans/placement.py)
+    from .plans.placement import cpu_dense_repartition, small_enough_to_broadcast
 
     ranked_wide = (
         ranked
-        if small_enough_to_broadcast(d, fanout=8)
+        if small_enough_to_broadcast((d, TOKEN_ROW_FANOUT))
         else cpu_dense_repartition(ranked, "doc_id")
     )
     topk = ranked_wide.groupBy("doc_id").agg(

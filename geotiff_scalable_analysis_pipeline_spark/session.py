@@ -10,7 +10,10 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
+
+from .plans.placement import broadcast_threshold_bytes, plan_size_bytes
 
 # Arrow batch size for pandas UDFs. Narrow-row UDFs (PIP candidates, span
 # rows) need LARGE batches or per-batch overhead dominates; fat-blob decode
@@ -55,24 +58,22 @@ def read_parquet_dense(spark: SparkSession, path: str):
     joins, or windows on explicit keys (no positional functions).
     """
     df = read_parquet(spark, path)
-    try:
-        from .plans.skew import broadcast_threshold_bytes, plan_size_bytes
-
-        # the estimate is derived from the immutable corpus file's bytes
-        # (driver-only Catalyst stats — measured ~25 ms per call, re-paid on
-        # every read of every table per bench rep), so memoize it per
-        # (session, path) exactly like the schema above; the gate's conf
-        # terms (threshold, maxPartitionBytes, cores) stay live reads
-        size_cache = spark.__dict__.setdefault("_gsap_size_cache", {})
-        est = size_cache.get(path)
-        if est is None:
+    # the estimate is derived from the immutable corpus file's bytes
+    # (driver-only Catalyst stats — measured ~25 ms per call, re-paid on
+    # every read of every table per bench rep), so memoize it per
+    # (session, path) exactly like the schema above; the gate's conf
+    # terms (threshold, maxPartitionBytes, cores) stay live reads
+    size_cache = spark.__dict__.setdefault("_gsap_size_cache", {})
+    est = size_cache.get(path)
+    if est is None:
+        try:
             est = size_cache[path] = plan_size_bytes(df)
-        cores = spark.sparkContext.defaultParallelism
-        mpb = int(str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")))
-        if 0 < est <= broadcast_threshold_bytes(spark) and est // mpb + 1 < cores:
-            return df.repartition(cores)
-    except Exception:
-        pass  # estimate unavailable → plain scan
+        except Py4JError:
+            return df  # estimate unavailable → plain scan
+    cores = spark.sparkContext.defaultParallelism
+    mpb = int(str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")))
+    if 0 < est <= broadcast_threshold_bytes(spark) and est // mpb + 1 < cores:
+        return df.repartition(cores)
     return df
 
 

@@ -242,7 +242,6 @@ def stream_to_catalog(
     partition_by: list[str] | None = None,
     stats_for: list[str] | None = None,
     stream_id: str = "default",
-    file_dedup: bool = True,
 ) -> None:
     """Stream → snapshot-catalog sink: each micro-batch commits as one
     catalog APPEND snapshot (``foreachBatch``), so streaming ingest lands in
@@ -259,8 +258,8 @@ def stream_to_catalog(
     (queryId, batchId) dedup a transactional sink performs. One
     ``availableNow`` pass per call, like :func:`incremental_parquet_ingest`.
 
-    On top of the batch-id guard sits a FILE-granularity guard
-    (``file_dedup=True``): each commit records the micro-batch's source
+    Where the batch has source-file lineage, a FILE-granularity guard
+    replaces the batch-id one: each commit records the micro-batch's source
     files (``input_file_name()``), the catalog propagates the cumulative
     per-stream set onto every descendant manifest (``stream_files_all`` —
     expire-proof, like the high water), and each new batch is filtered to
@@ -271,9 +270,8 @@ def stream_to_catalog(
     batch 0 ≤ the recorded high water) or duplicate old ones (a smaller
     ``maxFilesPerTrigger`` pushing old files past the high water). When
     source-file lineage is unavailable (non-file sources, or transforms
-    that lose ``input_file_name`` — then the probe also costs one extra
-    pass over the batch, so pass ``file_dedup=False`` for expensive
-    pipelines), only the batch-id guard applies, whose fresh-checkpoint
+    that lose ``input_file_name``; the lineage probe is one extra pass over
+    the batch), only the batch-id guard applies, whose fresh-checkpoint
     idempotence holds only under identical batch decomposition — the
     standard (queryId, batchId) transactional-sink contract.
 
@@ -281,76 +279,28 @@ def stream_to_catalog(
     own ``stream_id``: its batch ids also start at 0, and under the default
     id they would be mistaken for replays and silently dropped."""
 
-    def _last_stream_batch() -> int:
-        # The catalog propagates the per-stream ``stream_high_water`` dict
-        # into EVERY manifest (per-key max with the parent), so the current
-        # manifest alone answers this — expire() dropping the ancestor that
-        # carried the newest stream_batch_id cannot reset the guard to -1
-        # and re-admit a replayed epoch. The parent-chain walk remains only
-        # as a fallback for tables written before propagation.
-        snap = catalog.current_snapshot(table)
-        while snap is not None:
-            try:
-                man = catalog.manifest(table, snap)
-            except FileNotFoundError:
-                break  # pre-propagation history expired — best effort
-            hw = man.get("stream_high_water")
-            if isinstance(hw, int):  # pre-namespace scalar history
-                hw = {"default": hw}
-            if hw is not None:
-                return hw.get(stream_id, -1)
-            if "stream_batch_id" in man:
-                if man.get("stream_id", "default") == stream_id:
-                    return man["stream_batch_id"]
-            snap = man.get("parent")
-        return -1
-
-    def _ingested_files() -> set[str] | None:
-        """Cumulative source files already committed by THIS stream, or
-        ``None`` if the table predates file tracking for it (legacy: only
-        the batch-id high water guards replays). The propagated
-        ``stream_files_all`` on the current manifest answers in one read;
-        the chain walk covers mixed-version histories."""
-        snap = catalog.current_snapshot(table)
-        found: set[str] | None = None
-        while snap is not None:
-            try:
-                man = catalog.manifest(table, snap)
-            except FileNotFoundError:
-                break
-            fa = man.get("stream_files_all")
-            if fa is not None and stream_id in fa:
-                return set(fa[stream_id]) | (found or set())
-            if man.get("stream_files") and man.get("stream_id", "default") == stream_id:
-                found = (found or set()) | set(man["stream_files"])
-            snap = man.get("parent")
-        return found
+    def _recorded(key: str, default):
+        """This stream's entry under ``key`` in the current manifest: the
+        catalog propagates ``stream_high_water`` and ``stream_files_all``
+        onto EVERY manifest, so expire() dropping the ancestors that wrote
+        them cannot reset either replay guard."""
+        if catalog.current_snapshot(table) is None:
+            return default
+        return catalog.manifest(table).get(key, {}).get(stream_id, default)
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
         df, fresh_files = batch_df, None
-        if file_dedup:
-            fnames = {
-                r["f"]
-                for r in batch_df.select(
-                    F.input_file_name().alias("f")
-                ).distinct().collect()
-            }
-            if fnames and "" not in fnames:
-                seen = _ingested_files()
-                if seen is not None:
-                    fresh = sorted(fnames - seen)
-                    if not fresh:
-                        return  # every source file already committed
-                    if len(fresh) < len(fnames):
-                        df = batch_df.filter(F.input_file_name().isin(fresh))
-                    fresh_files = fresh
-                else:
-                    # legacy table without file tracking for this stream:
-                    # keep the conservative batch-id guard, start tracking
-                    if _last_stream_batch() >= batch_id:
-                        return
-                    fresh_files = sorted(fnames)
-        if fresh_files is None and _last_stream_batch() >= batch_id:
+        fnames = {
+            r["f"]
+            for r in batch_df.select(F.input_file_name().alias("f")).distinct().collect()
+        }
+        if fnames and "" not in fnames:
+            fresh_files = sorted(fnames - set(_recorded("stream_files_all", ())))
+            if not fresh_files:
+                return  # every source file already committed
+            if len(fresh_files) < len(fnames):
+                df = batch_df.filter(F.input_file_name().isin(fresh_files))
+        elif _recorded("stream_high_water", -1) >= batch_id:
             return  # replayed epoch of THIS stream — already committed
         catalog.commit(
             df,

@@ -233,7 +233,7 @@ def test_doc_keywords_topk_aggregate_is_wave_amortized(spark):
     repartition width (waves × defaultParallelism) on the aggregate input —
     exempt from AQE coalescing — so the plan must carry a user-specified
     REPARTITION_BY_NUM exchange on doc_id. Round 6 added a size gate
-    (plans/skew.small_enough_to_broadcast): small corpora skip the
+    (plans/placement.small_enough_to_broadcast): small corpora skip the
     exchange, so the big-corpus shape is asserted with auto-broadcast
     disabled (gate forced off) and the small-corpus shape with the session
     default."""

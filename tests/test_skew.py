@@ -33,19 +33,18 @@ def test_hot_keys_detected(spark):
 def test_salted_counts_exact_and_deterministic(spark):
     df = _media_span_cells(spark)
     plan = skew.salt_plan(skew.key_histogram(df, "cell"), "cell")
-    a = (
-        skew.salted_two_stage_count(df, "cell", plan, seed_col="doc_id")
-        .orderBy("cell")
-        .collect()
-    )
+
+    def two_stage_count(d):
+        # partial count on (cell, _salt), final sum on cell
+        salted = skew.apply_salts(d, "cell", plan, seed_col="doc_id")
+        partial = salted.groupBy("cell", "_salt").agg(F.count("*").alias("c"))
+        return partial.groupBy("cell").agg(F.sum("c").alias("cnt")).orderBy("cell").collect()
+
+    a = two_stage_count(df)
     plain = df.groupBy("cell").agg(F.count("*").alias("cnt")).orderBy("cell").collect()
     assert [(r["cell"], r["cnt"]) for r in a] == [(r["cell"], r["cnt"]) for r in plain]
     # determinism across partitionings (resume semantics): same salts
-    b = (
-        skew.salted_two_stage_count(df.repartition(11), "cell", plan, seed_col="doc_id")
-        .orderBy("cell")
-        .collect()
-    )
+    b = two_stage_count(df.repartition(11))
     assert [(r["cell"], r["cnt"]) for r in b] == [(r["cell"], r["cnt"]) for r in a]
 
 

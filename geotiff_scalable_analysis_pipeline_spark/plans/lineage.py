@@ -7,22 +7,27 @@ key's output commits atomically with a lineage marker, and a re-run
 subtracts the already-committed keys so only missing work executes. Re-runs
 are idempotent and the final table is byte-identical to an uninterrupted run
 (``tests/test_plans.py::test_resume_after_kill_is_byte_identical`` proves
-this with a mid-job kill).
+this with a mid-job kill). Keys are double-buffered, like the reference's
+bounded writer queue (process.py:431-439, 554): a free slot is the only
+backpressure, and one key's commit and stage tail overlap the next key.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import queue
 import uuid
 from collections.abc import Callable
 from pathlib import Path
 from urllib.parse import quote, unquote
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+KEYS_IN_FLIGHT = 2
 _NULL_MARKER = "%null"  # quote() never emits it: '%' is always followed by hex
 
 
@@ -68,51 +73,45 @@ class LineageLog:
 
 
 def run_resumable(
-    spark: SparkSession,
-    keys: DataFrame,
-    key_col: str,
-    process_key: Callable[[str], None],
-    log: LineageLog,
-    fail_after: int | None = None,
-    max_parallel_keys: int = 1,
+    spark: SparkSession, keys: DataFrame, key_col: str,
+    process_key: Callable[[str | None], None], log: LineageLog,
 ) -> dict:
     """Process every key not yet committed; returns {processed, skipped}.
 
     ``keys`` is the full deterministic work list. Its distinct keys, cast to
     string, come to the driver in ONE Spark action; the committed keys are
-    subtracted there and the rest run in ascending byte order, NULL first
-    (the order of ``orderBy`` on the string column). Each key is processed
-    then committed; a crash between the two re-runs that key only
-    (process_key must therefore be idempotent — write-then-rename).
-    ``fail_after`` injects a crash for the resume test.
-
-    Each key is one-or-more Spark jobs, so executors already parallelize
-    *within* a key. ``max_parallel_keys > 1`` additionally overlaps
-    independent keys via driver threads (Spark's scheduler is thread-safe;
-    FIFO across concurrently-submitted jobs) — use when keys are coarse
-    enough that a single key can't saturate the cluster. Key commits stay
-    independent, so crash-resume semantics are unchanged.
+    subtracted there and the rest are submitted in ascending byte order,
+    NULL first (the order of ``orderBy`` on the string column), at most
+    ``KEYS_IN_FLIGHT`` at once, each on a driver thread that keeps the
+    caller's Spark local properties (job group). Keys may finish out of
+    order, so ``process_key`` must be thread-safe as well as idempotent
+    (write-then-rename). A key commits as soon as it returns; a crash between
+    the two re-runs that key only. The first failure stops new submissions:
+    keys in flight finish and commit, then that error is re-raised.
     """
     all_keys = [r[0] for r in keys.select(F.col(key_col).cast("string")).distinct().collect()]
     done = set(log.committed_keys())
     # code-point order of str is the UTF-8 byte order Spark sorts strings in
-    todo_keys = sorted(
-        (k for k in all_keys if k not in done), key=lambda k: (k is not None, k or "")
-    )
-    skipped = len(all_keys) - len(todo_keys)
-    if max_parallel_keys > 1 and fail_after is None:
-        from concurrent.futures import ThreadPoolExecutor
+    todo_keys = sorted(set(all_keys) - done, key=lambda k: (k is not None, k or ""))
+    finished = queue.SimpleQueue()  # per key: None or its error, always sent
 
-        def one(k: str) -> None:
+    def one(k: str | None) -> None:
+        try:
             process_key(k)
             log.commit_key(k)
+            finished.put(None)
+        except BaseException as e:  # unreported, the submitting thread waits forever
+            finished.put(e)
 
-        with ThreadPoolExecutor(max_workers=max_parallel_keys) as pool:
-            list(pool.map(one, todo_keys))  # re-raises the first failure
-        return {"processed": len(todo_keys), "skipped": skipped}
-    for i, k in enumerate(todo_keys):
-        if fail_after is not None and i >= fail_after:
-            raise RuntimeError(f"injected failure before key {k}")
-        process_key(k)
-        log.commit_key(k)
-    return {"processed": len(todo_keys), "skipped": skipped}
+    in_flight, error = 0, None
+    for k in todo_keys:
+        if in_flight == KEYS_IN_FLIGHT:  # block until a slot frees
+            in_flight -= 1
+            if (error := finished.get()) is not None:
+                break
+        InheritableThread(one, args=(k,), session=spark).start()  # clones local properties
+        in_flight += 1
+    errors = [e for e in [error, *(finished.get() for _ in range(in_flight))] if e is not None]
+    if errors:
+        raise errors[0]
+    return {"processed": len(todo_keys), "skipped": len(all_keys) - len(todo_keys)}

@@ -80,11 +80,13 @@ def test_resume_after_kill_is_byte_identical(spark, tmp_path):
     out_a, out_b = tmp_path / "a", tmp_path / "b"
     keys = spark.range(8).select(F.concat(F.lit("k"), F.col("id")).alias("key"))
 
-    def make_processor(outdir):
+    def make_processor(outdir, fail_from=None):
         def process(key: str):
             # deterministic per-key output, atomic via catalog-less rename
             import os
 
+            if fail_from is not None and int(key[1:]) >= fail_from:
+                raise RuntimeError(f"injected failure at key {key}")
             p = outdir / f"{key}.out"
             tmp = outdir / f"{key}.tmp"
             outdir.mkdir(exist_ok=True)
@@ -97,12 +99,14 @@ def test_resume_after_kill_is_byte_identical(spark, tmp_path):
     log_a = lineage.LineageLog(tmp_path / "la", "job")
     r = lineage.run_resumable(spark, keys, "key", make_processor(out_a), log_a)
     assert r == {"processed": 8, "skipped": 0}
+    assert len(log_a.committed_keys()) == 8
 
-    # killed run: crash after 3 keys, then resume
+    # killed run: every key from the 4th on crashes, so exactly 3 commit
+    # whichever keys are in flight together; then resume
     log_b = lineage.LineageLog(tmp_path / "lb", "job")
-    with pytest.raises(RuntimeError):
-        lineage.run_resumable(spark, keys, "key", make_processor(out_b), log_b, fail_after=3)
-    assert len(log_b.committed_keys()) == 3
+    with pytest.raises(RuntimeError, match="injected failure"):
+        lineage.run_resumable(spark, keys, "key", make_processor(out_b, fail_from=3), log_b)
+    assert log_b.committed_keys() == ["k0", "k1", "k2"]
     r2 = lineage.run_resumable(spark, keys, "key", make_processor(out_b), log_b)
     assert r2 == {"processed": 5, "skipped": 3}
 
@@ -110,22 +114,16 @@ def test_resume_after_kill_is_byte_identical(spark, tmp_path):
     fb = {p.name: p.read_text() for p in out_b.glob("*.out")}
     assert fa == fb and len(fa) == 8
 
-    # parallel-key variant produces the same outputs and lineage
-    out_c = tmp_path / "c"
-    log_c = lineage.LineageLog(tmp_path / "lc", "job")
-    r3 = lineage.run_resumable(
-        spark, keys, "key", make_processor(out_c), log_c, max_parallel_keys=4
-    )
-    assert r3 == {"processed": 8, "skipped": 0}
-    fc = {p.name: p.read_text() for p in out_c.glob("*.out")}
-    assert fc == fa and len(log_c.committed_keys()) == 8
 
+def _null_first(k):
+    """The runner's submission order: NULL first, then code point."""
+    return (k is not None, k or "")
 
 
 def test_resume_dedups_keys_and_keeps_spark_string_order(spark, tmp_path):
     """Duplicate keys run once, a pre-committed key is skipped, and the rest
-    run in the order Spark's ``orderBy`` gives the string-cast key column
-    (NULL first, then UTF-8 byte order)."""
+    are the keys Spark's ``orderBy`` gives the string-cast key column, in
+    its order (NULL first, then UTF-8 byte order)."""
     from pyspark.sql import functions as F
 
     from geotiff_scalable_analysis_pipeline_spark.plans import lineage
@@ -142,7 +140,9 @@ def test_resume_dedups_keys_and_keeps_spark_string_order(spark, tmp_path):
         .filter(F.col("key").isNull() | (F.col("key") != "done"))
         .orderBy("key").collect()
     ]
-    assert seen == want == [None, "10", "9", "B", "Z9", "a", "é"]
+    # two keys run at once, so calls may interleave; the set and its
+    # submission order are what is fixed
+    assert sorted(seen, key=_null_first) == want == [None, "10", "9", "B", "Z9", "a", "é"]
     assert r == {"processed": 7, "skipped": 1}
     # a re-run finds every non-NULL key committed
     again = []
@@ -157,8 +157,8 @@ def test_lineage_null_and_unsafe_keys_have_own_markers(spark, tmp_path):
     keys = spark.createDataFrame([(None,), ("a/b",), ("x%2Fy",), ("plain-1",)], "key string")
     seen = []
     lineage.run_resumable(spark, keys, "key", seen.append, log)
-    assert seen == [None, "a/b", "plain-1", "x%2Fy"]
-    assert log.committed_keys() == seen
+    assert sorted(seen, key=_null_first) == [None, "a/b", "plain-1", "x%2Fy"]
+    assert log.committed_keys() == sorted(seen, key=_null_first)
     assert sorted(p.name for p in log.dir.iterdir()) == [
         "%null.done", "a%2Fb.done", "plain-1.done", "x%252Fy.done",
     ]
@@ -172,6 +172,87 @@ def test_lineage_null_and_unsafe_keys_have_own_markers(spark, tmp_path):
     lineage.run_resumable(spark, nones, "key", seen_none.append, log)
     assert seen_none == ["None"]
     assert log.is_committed("None") and log.is_committed(None)
+
+
+def test_resume_keeps_two_keys_in_flight(spark, tmp_path):
+    """Keys overlap: every two keys meet at a barrier inside
+    ``process_key``, which a one-at-a-time runner never passes; and no
+    more than ``KEYS_IN_FLIGHT`` run at once."""
+    import threading
+
+    assert lineage.KEYS_IN_FLIGHT == 2
+    barrier = threading.Barrier(2, timeout=60)
+    lock = threading.Lock()
+    running, peak = [0], [0]
+
+    def process(key):
+        with lock:
+            running[0] += 1
+            peak[0] = max(peak[0], running[0])
+        barrier.wait()
+        with lock:
+            running[0] -= 1
+
+    keys = spark.createDataFrame([(f"k{i}",) for i in range(6)], "key string")
+    log = lineage.LineageLog(tmp_path, "job")
+    assert lineage.run_resumable(spark, keys, "key", process, log) == {"processed": 6, "skipped": 0}
+    assert peak[0] == 2 and len(log.committed_keys()) == 6
+
+
+def test_resume_key_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """A key's Spark jobs run under the caller's job group: none of them
+    lands outside it, although each key runs on its own driver thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"lineage-{uuid.uuid4().hex}"
+    counts = {}
+
+    def process(key):
+        counts[key] = spark.range(3).count()
+
+    keys = spark.createDataFrame([("a",), ("b",), ("c",)], "key string")
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        lineage.run_resumable(spark, keys, "key", process, lineage.LineageLog(tmp_path, "job"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert counts == {"a": 3, "b": 3, "c": 3}
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed by events
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    # the key collect plus at least one count job per key
+    assert len(tracker.getJobIdsForGroup(group)) >= 1 + len(counts)
+
+
+def test_resume_failure_drains_in_flight_keys_then_raises(spark, tmp_path):
+    """The first failure stops new submissions; the key in flight with it
+    finishes and commits, and the error re-raises. Keys after the failure
+    never start."""
+    import threading
+    import time
+
+    failed = threading.Event()
+    started = []
+
+    def process(key):
+        started.append(key)
+        if key == "k1":
+            failed.set()
+            raise ValueError("key k1 failed")
+        if key == "k0":
+            failed.wait(60)
+            time.sleep(0.3)  # still running when the failure is reported
+
+    keys = spark.createDataFrame([(f"k{i}",) for i in range(6)], "key string")
+    log = lineage.LineageLog(tmp_path, "job")
+    with pytest.raises(ValueError, match="key k1 failed"):
+        lineage.run_resumable(spark, keys, "key", process, log)
+    # k2 may start only if k0's success is seen before k1's failure
+    assert set(started) in ({"k0", "k1"}, {"k0", "k1", "k2"})
+    assert log.committed_keys() == sorted(set(started) - {"k1"})
 
 
 def test_metrics_instrumentation(spark, tmp_path):

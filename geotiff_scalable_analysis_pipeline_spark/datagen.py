@@ -79,10 +79,6 @@ class GoldenConfig:
     def extent(self) -> int:
         return self.tile_px * self.px_size
 
-    @property
-    def n_zones(self) -> int:
-        return self.n_rect_zones + len(POLY_ZONES)
-
 
 GOLDEN = GoldenConfig()
 

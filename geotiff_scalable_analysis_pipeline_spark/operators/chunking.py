@@ -44,6 +44,8 @@ from pyspark.sql import functions as F
 
 def patch_coords_np(H: int, W: int, P: int, S: int) -> list[tuple[int, int]]:
     """Sliding-window origins with the reference's exact tail rule + order."""
+    if H < P or W < P:
+        raise ValueError(f"chunk ({H}x{W}) smaller than patch ({P})")
     coords: list[tuple[int, int]] = []
     for r in range(0, H - P + 1, S):
         for c in range(0, W - P + 1, S):
@@ -58,11 +60,6 @@ def patch_coords_np(H: int, W: int, P: int, S: int) -> list[tuple[int, int]]:
             coords.append((r, c))
     if (H - P) % S != 0 and (W - P) % S != 0:
         coords.append((H - P, W - P))
-    if not coords:
-        if H >= P and W >= P:
-            coords.append((0, 0))
-        else:
-            raise ValueError(f"chunk ({H}x{W}) smaller than patch ({P})")
     return coords
 
 

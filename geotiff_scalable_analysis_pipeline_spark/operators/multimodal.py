@@ -27,10 +27,6 @@ MODALITY_SCHEMA = (
     "sample_rate int, payload binary"
 )
 
-FEATURE_SCHEMA = (
-    "media_ref string, modality string, feat array<float>, n_items long"
-)
-
 VIDEO_MAGIC = b"GSAPVID0"  # engine video container: magic + u32 n_frames + frames
 
 
@@ -88,89 +84,6 @@ def decode_payload(payload: bytes, modality: str) -> np.ndarray:
             return decode_video(payload)
         raise NotImplementedError(f"unknown video magic {payload[:4]!r}")
     raise NotImplementedError(f"no decoder for modality {modality!r}")
-
-
-def _resize_nearest(img: np.ndarray, h: int, w: int) -> np.ndarray:
-    """Nearest-neighbor resize (reference uses order-0 zoom for class maps,
-    src/eo_core/utils.py:82) — pure index arithmetic, no codec needed."""
-    ri = (np.arange(h) * img.shape[0] // h).astype(np.int64)
-    ci = (np.arange(w) * img.shape[1] // w).astype(np.int64)
-    return img[ri][:, ci]
-
-
-def resize_bilinear(img: np.ndarray, h: int, w: int) -> np.ndarray:
-    """Bilinear resize, center-aligned (src = (dst+0.5)·S/D − 0.5), matching
-    the reference's probability-cube upsample (reference:
-    src/eo_core/prithvi_adapter.py:426-432, torch interpolate bilinear,
-    align_corners=False). Fixed-point integer index/weight arithmetic —
-    deterministic across platforms. Accepts (H, W) or (H, W, C); returns
-    float64 (callers cast)."""
-    H, W = img.shape[:2]
-
-    def axis(n_src: int, n_dst: int):
-        i = np.arange(n_dst, dtype=np.int64)
-        m = (2 * i + 1) * n_src - n_dst  # src coord = m / (2·n_dst)
-        d = 2 * n_dst
-        i0 = np.floor_divide(m, d)
-        f = m - d * i0  # fractional numerator ∈ [0, d)
-        return np.clip(i0, 0, n_src - 1), np.clip(i0 + 1, 0, n_src - 1), f, d
-
-    r0, r1, fy, dy = axis(H, h)
-    c0, c1, fx, dx = axis(W, w)
-    a = img.astype(np.float64)
-    v00, v01 = a[r0][:, c0], a[r0][:, c1]
-    v10, v11 = a[r1][:, c0], a[r1][:, c1]
-    trail = (1,) * (img.ndim - 2)
-    wy1 = (fy / dy).reshape(-1, 1, *trail)
-    wx1 = (fx / dx).reshape(1, -1, *trail)
-    wy0, wx0 = 1.0 - wy1, 1.0 - wx1
-    return wy0 * (wx0 * v00 + wx1 * v01) + wy1 * (wx0 * v10 + wx1 * v11)
-
-
-def extract_features(media: DataFrame, target_hw: tuple[int, int] = (16, 16), n_sample_frames: int = 4) -> DataFrame:
-    """Decode → resize / frame-sample → per-channel mean features.
-
-    One Arrow batch at a time; payloads stay inside the UDF. Partition the
-    input so a batch holds ~tens of payloads (see session.ARROW_MAX_RECORDS
-    note) — same discipline as the GeoTIFF decode path.
-    """
-    import pandas as pd
-
-    th, tw = target_hw
-
-    def run(batches):
-        for pdf in batches:
-            out = {"media_ref": [], "modality": [], "feat": [], "n_items": []}
-            for ref, mod, payload in zip(
-                pdf["media_ref"], pdf["modality"], pdf["payload"]
-            ):
-                arr = decode_payload(bytes(payload), mod)
-                if mod == "image":
-                    small = _resize_nearest(arr, th, tw)
-                    feat = small.mean(axis=(0, 1)).astype(np.float32)  # per channel
-                    n = 1
-                elif mod == "video":
-                    idx = (np.arange(n_sample_frames) * arr.shape[0] // n_sample_frames)
-                    frames = arr[idx]
-                    small = np.stack([_resize_nearest(f, th, tw) for f in frames])
-                    feat = small.mean(axis=(0, 1, 2)).astype(np.float32)
-                    n = len(idx)
-                elif mod == "audio":
-                    # fixed-bin energy profile over the first channel
-                    mono = arr[:, 0]
-                    k = 8
-                    chunks = mono[: (len(mono) // k) * k].reshape(k, -1)
-                    feat = np.sqrt((chunks**2).mean(axis=1)).astype(np.float32)
-                    n = len(mono)
-                else:
-                    raise NotImplementedError(mod)
-                out["media_ref"].append(ref)
-                out["modality"].append(mod)
-                out["feat"].append(feat.tolist())
-                out["n_items"].append(n)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, FEATURE_SCHEMA)
 
 
 PIXEL_STATS_SCHEMA = (
@@ -262,12 +175,3 @@ def video_frame_stats(media: DataFrame) -> DataFrame:
         .select("media_ref", "payload")
         .mapInPandas(run, VIDEO_STATS_SCHEMA)
     )
-
-
-def synthetic_multimodal(spark, n: int = 60) -> DataFrame:
-    """Deterministic multimodal corpus with REAL encoded payloads (PNG / WAV
-    / PNG-frame video) — see datagen.multimodal_df for the pixel/sample
-    formulas the DuckDB oracle mirrors."""
-    from .. import datagen as dg
-
-    return dg.multimodal_df(spark, n)

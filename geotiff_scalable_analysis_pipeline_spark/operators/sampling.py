@@ -1,4 +1,4 @@
-"""Deterministic sampling — hash-rate Bernoulli and stratified variants.
+"""Deterministic sampling — stratified hash-rate and fixed-count samples.
 
 The training-data pipeline staple (down-sample a web crawl per language,
 per quality band, per source) done REPRODUCIBLY: membership is a pure
@@ -26,18 +26,6 @@ from ..datagen import ihash_col, ihash_sql
 PPM = 1_000_000  # rates are parts-per-million — integer, no float thresholds
 
 
-def hash_rate_sample(
-    df: DataFrame, key: str, rate_ppm: int, salt: int = 7
-) -> DataFrame:
-    """Keep rows whose hashed ``key`` lands under ``rate_ppm`` / 10⁶ —
-    a deterministic Bernoulli(rate) sample, stable across runs/engines.
-    ``key`` must be an integer column; expected kept fraction is exactly
-    rate_ppm/10⁶ over the hash's uniform output."""
-    if not 0 <= rate_ppm <= PPM:
-        raise ValueError(f"rate_ppm must be in [0, {PPM}]; got {rate_ppm}")
-    return df.filter(F.pmod(ihash_col(F.col(key), salt), F.lit(PPM)) < rate_ppm)
-
-
 def stratified_rate_sample(
     df: DataFrame,
     key: str,
@@ -48,7 +36,13 @@ def stratified_rate_sample(
 ) -> DataFrame:
     """Per-stratum hash-rate sampling: stratum ``s`` keeps rows at
     ``rates_ppm[s]`` ppm (``default_ppm`` for unlisted strata). Still one
-    codegen filter — the rate is a CASE over the stratum column."""
+    codegen filter — the rate is a CASE over the stratum column. With an
+    empty ``rates_ppm`` the strata column is never read: every row is kept
+    at ``default_ppm``, a plain deterministic Bernoulli sample.
+
+    Every rate, ``default_ppm`` included, must lie in [0, 10⁶]."""
+    if not 0 <= default_ppm <= PPM:
+        raise ValueError(f"default_ppm out of [0, {PPM}]: {default_ppm}")
     for s, r in rates_ppm.items():
         if not 0 <= r <= PPM:
             raise ValueError(f"rate for {s!r} out of [0, {PPM}]: {r}")

@@ -224,45 +224,6 @@ class TableCatalog:
         go backwards: a writer can only win snapshot N+1 after observing
         current = N, i.e. after the previous winner's flip completed."""
         snap = man["snapshot_id"]
-        parent = man.get("parent")
-        pman: dict = {}
-        if parent is not None:
-            try:
-                pman = json.loads(self._manifest_path(table, parent).read_text())
-            except FileNotFoundError:
-                pass  # parent expired under a concurrent writer: nothing to carry
-        # Propagate the streaming high-water mark from the parent so the
-        # CURRENT manifest always carries it: without this, expire() could
-        # drop the ancestor manifest holding the newest stream_batch_id and
-        # a replayed epoch (crash between catalog commit and checkpoint
-        # commit) would be re-committed — duplicate rows. max() because a
-        # rollback restores old FILES but must not forget committed epochs.
-        # Per-STREAM high-water dict {stream_id: max batch}: two distinct
-        # pipelines writing one table each carry their own marker, so a
-        # fresh pipeline's batch 0 is never mistaken for a replay of another
-        # pipeline's epoch (data loss).
-        hw: dict[str, int] = {}
-        if "stream_batch_id" in man:
-            hw[man.get("stream_id", "default")] = man["stream_batch_id"]
-        for sid, b in pman.get("stream_high_water", {}).items():
-            hw[sid] = max(hw.get(sid, -1), b)
-        if hw:
-            man["stream_high_water"] = hw
-        # Propagate the cumulative per-stream ingested-source-file set the
-        # same way: the CURRENT manifest always carries the full set, so
-        # expire() cannot erode the file-granularity replay guard
-        # (streaming/ingest.py uses it to make re-ingest from a FRESH
-        # checkpoint exact even when micro-batch decomposition changes).
-        # The set grows with total files ingested — at 100 TB it would live
-        # in a side table / bloom filter; here the manifest is the single
-        # metadata unit and file counts are manifest-sized anyway.
-        fa: dict[str, set[str]] = {}
-        if man.get("stream_files"):
-            fa[man.get("stream_id", "default")] = set(man["stream_files"])
-        for sid, fl in pman.get("stream_files_all", {}).items():
-            fa[sid] = fa.get(sid, set()) | set(fl)
-        if fa:
-            man["stream_files_all"] = {s: sorted(v) for s, v in fa.items()}
         mpath = self._manifest_path(table, snap)
         mpath.parent.mkdir(parents=True, exist_ok=True)
         tmp = mpath.with_suffix(f".tmp-{uuid.uuid4().hex}")
@@ -311,7 +272,6 @@ class TableCatalog:
         partition_by: list[str] | None = None,
         mode: str = "append",
         stats_for: list[str] | None = None,
-        extra: dict | None = None,
         require_parent: int | None = None,
     ) -> int:
         """Write df as a new snapshot; returns the snapshot id.
@@ -365,7 +325,6 @@ class TableCatalog:
                 "partition_spec": partition_by or [],
                 "schema": df.schema.json(),
                 "files": prev_files + files,
-                **(extra or {}),
             }
             try:
                 return self._commit_manifest(table, man)
@@ -458,7 +417,7 @@ class TableCatalog:
         """Small-file compaction: rewrite the current snapshot into files of
         ~``target_file_bytes`` and commit it as a new OVERWRITE snapshot.
 
-        Continuous ingest (streaming appends, per-partition commits) accretes
+        Continuous ingest (many small appends, per-partition commits) accretes
         small files; every downstream scan then pays per-file open/seek/task
         overhead — at 100 TB the file count, not the byte count, becomes the
         scan bottleneck. Compaction is the standing maintenance job
@@ -757,7 +716,7 @@ class TableCatalog:
         ``from_snapshot`` up to ``to_snapshot`` (default current) — the
         Iceberg incremental read that lets a downstream job consume a table
         in snapshot-sized increments without reprocessing. Every snapshot in
-        the range must be an append (streaming ingest's shape); an
+        the range must be an append (an incremental ingest's shape); an
         overwrite/delete/merge/rollback boundary raises ``ValueError`` —
         rewritten history has no well-defined row-level delta here, so the
         consumer must fall back to a full recompute (same contract as

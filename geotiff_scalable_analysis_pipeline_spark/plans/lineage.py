@@ -62,9 +62,6 @@ class LineageLog:
         keys = (_marker_key(p.name[: -len(".done")]) for p in self.dir.glob("*.done"))
         return sorted(keys, key=lambda k: (k is not None, k or ""))
 
-    def is_committed(self, key: str | None) -> bool:
-        return self._marker(key).exists()
-
     def commit_key(self, key: str | None, meta: dict | None = None) -> None:
         p = self._marker(key)
         tmp = p.with_suffix(f".tmp-{uuid.uuid4().hex}")

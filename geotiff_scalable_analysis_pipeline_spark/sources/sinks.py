@@ -1,11 +1,12 @@
 """Export sinks (SURVEY.md §2.1 K1-K5).
 
-The heavy sinks are snapshot tables (plans/catalog.py — the K1/K2 analog:
-partitioned Parquet of chunk stats / mask payloads). These helpers cover the
-small-output sinks the reference writes driver-side:
+The heavy sinks are snapshot tables (plans/catalog.py: partitioned Parquet
+of chunk stats / probability and metric payloads). These helpers are the
+small-output reporters the reference writes driver-side; the report job
+(``scripts/run_job.py --job report``) calls each of them:
 
-* K1 small-scale GeoTIFF export — re-encode a stats/class raster per tile to
-  an actual .tif blob (round-trips through formats/tiff.py)
+* K1 per-pixel metric GeoTIFFs (class, maxprob, entropy, gap) per tile
+* K2 full-resolution probability-cube GeoTIFF per tile
 * K3 global probability vectors → JSON
 * K5 classmap (label → index + color) → JSON
 """
@@ -17,28 +18,6 @@ from pathlib import Path
 
 import numpy as np
 from pyspark.sql import DataFrame
-
-
-def export_geotiff_classmaps(class_rows: DataFrame, out_dir: str | Path, class_of_rows) -> list[str]:
-    """Collect per-tile rows (small scale only), build class rasters, encode
-    .tif files. ``class_of_rows``: fn(pandas-subframe) -> (arr, x0, y1, px)."""
-    from ..formats import tiff
-
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
-    pdf = class_rows.toPandas()
-    written = []
-    for ref, grp in pdf.groupby("media_ref"):
-        arr, x0, y1, px = class_of_rows(grp)
-        buf = tiff.encode(
-            arr.astype(np.uint16)[None] if arr.ndim == 2 else arr.astype(np.uint16),
-            pixel_scale=(px, px),
-            tiepoint=(x0, y1),
-        )
-        p = out / f"{ref}_class.tif"
-        p.write_bytes(buf)
-        written.append(str(p))
-    return written
 
 
 def export_probability_geotiffs(
@@ -55,7 +34,7 @@ def export_probability_geotiffs(
     back through the table catalog). ``tile_meta``: media_ref → (H, W, px, x0,
     y1). Chunks carry disjoint ZoR windows, so placement is pure assignment —
     the distributed equivalent of rasterio's windowed write. Small-scale
-    export (driver-side collect), same contract as the classmap exporter.
+    export (driver-side collect).
     """
     from ..formats import tiff
 

@@ -17,11 +17,14 @@ continuously-ingesting corpus at 100 TB) needs it:
   in-memory sink is safe at any corpus scale — the fact table never reaches
   the driver, only the final windowed aggregate does (same size class as
   any ``collect()`` the correctness harness performs);
-* :func:`incremental_parquet_ingest` — append-mode file→file pipeline with
-  a checkpoint: one ``availableNow`` run per call, so repeated calls over a
-  growing source directory process each input file EXACTLY ONCE (offsets in
-  the checkpoint log; the watermark state equally persists across runs —
-  pinned by tests/test_streaming.py).
+* session windows, state-store dedup and stream-stream interval joins over
+  the same file-source streams.
+
+Checkpointed resume is Spark's own: a file sink with a
+``checkpointLocation`` re-run over a grown source directory processes each
+input file EXACTLY ONCE (offsets in the checkpoint's offset log, commits in
+its commit log), and watermark state persists across runs the same way —
+pinned by tests/test_streaming.py.
 
 Determinism note: the windowed sum accumulates in decimal (exact), so the
 result is independent of micro-batch boundaries and file order — which is
@@ -233,97 +236,6 @@ def dedup_within_watermark(
     return ev.dropDuplicatesWithinWatermark(keys)
 
 
-def stream_to_catalog(
-    src: DataFrame,
-    catalog,
-    table: str,
-    checkpoint_dir: str,
-    *,
-    partition_by: list[str] | None = None,
-    stats_for: list[str] | None = None,
-    stream_id: str = "default",
-) -> None:
-    """Stream → snapshot-catalog sink: each micro-batch commits as one
-    catalog APPEND snapshot (``foreachBatch``), so streaming ingest lands in
-    the same table layer batch queries read — with time travel, manifest
-    pruning, stats skipping, and ``compact()`` all applying to streamed
-    data.
-
-    Exactly-once: the checkpoint's commit log already guarantees each batch
-    is processed once across restarts; the remaining gap is a crash BETWEEN
-    the catalog commit and the checkpoint commit, which would replay the
-    epoch. Each manifest records its ``(stream_id, stream_batch_id)``; a
-    replayed epoch (batch_id ≤ this stream's recorded high water) is
-    skipped, making the sink idempotent — the foreachBatch analogue of the
-    (queryId, batchId) dedup a transactional sink performs. One
-    ``availableNow`` pass per call, like :func:`incremental_parquet_ingest`.
-
-    Where the batch has source-file lineage, a FILE-granularity guard
-    replaces the batch-id one: each commit records the micro-batch's source
-    files (``input_file_name()``), the catalog propagates the cumulative
-    per-stream set onto every descendant manifest (``stream_files_all`` —
-    expire-proof, like the high water), and each new batch is filtered to
-    files not yet committed. This is what makes re-ingest from a BRAND-NEW
-    checkpoint exact even when the micro-batch decomposition differs from
-    the original run's: the batch-id guard alone would either drop
-    never-committed files (a fresh checkpoint packing old+new files into
-    batch 0 ≤ the recorded high water) or duplicate old ones (a smaller
-    ``maxFilesPerTrigger`` pushing old files past the high water). When
-    source-file lineage is unavailable (non-file sources, or transforms
-    that lose ``input_file_name``; the lineage probe is one extra pass over
-    the batch), only the batch-id guard applies, whose fresh-checkpoint
-    idempotence holds only under identical batch decomposition — the
-    standard (queryId, batchId) transactional-sink contract.
-
-    A DIFFERENT logical pipeline appending to the same table MUST pass its
-    own ``stream_id``: its batch ids also start at 0, and under the default
-    id they would be mistaken for replays and silently dropped."""
-
-    def _recorded(key: str, default):
-        """This stream's entry under ``key`` in the current manifest: the
-        catalog propagates ``stream_high_water`` and ``stream_files_all``
-        onto EVERY manifest, so expire() dropping the ancestors that wrote
-        them cannot reset either replay guard."""
-        if catalog.current_snapshot(table) is None:
-            return default
-        return catalog.manifest(table).get(key, {}).get(stream_id, default)
-
-    def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        df, fresh_files = batch_df, None
-        fnames = {
-            r["f"]
-            for r in batch_df.select(F.input_file_name().alias("f")).distinct().collect()
-        }
-        if fnames and "" not in fnames:
-            fresh_files = sorted(fnames - set(_recorded("stream_files_all", ())))
-            if not fresh_files:
-                return  # every source file already committed
-            if len(fresh_files) < len(fnames):
-                df = batch_df.filter(F.input_file_name().isin(fresh_files))
-        elif _recorded("stream_high_water", -1) >= batch_id:
-            return  # replayed epoch of THIS stream — already committed
-        catalog.commit(
-            df,
-            table,
-            partition_by=partition_by,
-            mode="append",
-            stats_for=stats_for,
-            extra={
-                "stream_batch_id": batch_id,
-                "stream_id": stream_id,
-                **({"stream_files": fresh_files} if fresh_files else {}),
-            },
-        )
-
-    q = (
-        src.writeStream.foreachBatch(_commit)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def interval_attribution_join(
     left: DataFrame,
     right: DataFrame,
@@ -458,35 +370,3 @@ def user_sessions_streaming(
     tests/test_streaming.py::test_streaming_sessions_append_emits_closed)."""
     ev = stream_events(spark, sf_dir, max_files_per_trigger=max_files_per_trigger)
     return _run_complete_to_memory(session_windows(ev, gap, watermark=watermark), query_name)
-
-
-def incremental_parquet_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    *,
-    transform=None,
-    schema=None,
-) -> None:
-    """One ``availableNow`` pass of an append-mode file→parquet pipeline.
-
-    Re-invoking with the same checkpoint after new files land in
-    ``source_dir`` processes ONLY the new files (exactly-once at file
-    granularity: offsets live in the checkpoint's offset log, commits in
-    its commit log — the streaming analogue of plans/lineage.py's
-    ``left_anti`` batch resume)."""
-    if schema is None:
-        schema = spark.read.parquet(source_dir).schema
-    src = spark.readStream.schema(schema).parquet(source_dir)
-    if transform is not None:
-        src = transform(src)
-    q = (
-        src.writeStream.trigger(availableNow=True)
-        .outputMode("append")
-        .format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()

@@ -7,8 +7,9 @@ Usage:
         --py-files dist/gsap_spark.zip \
         scripts/run_job.py --job zonal --out /tmp/gsap_out
 
-Jobs are resumable: each re-run anti-joins the lineage log and only processes
-missing partition keys.
+Each job commits its output as a snapshot of a table catalog under
+``--out`` (plans/catalog.py); a re-run commits a new snapshot. Per-key
+resume (plans/lineage.run_resumable) is not used by these jobs.
 """
 
 from __future__ import annotations
@@ -17,6 +18,63 @@ import argparse
 import json
 
 from pyspark.sql import SparkSession
+
+
+def report(spark: SparkSession, out, n_tiles: int) -> dict:
+    """The reference's full product flow end-to-end (process.py → reporters →
+    generate_viewer): probability cubes per chunk → catalog snapshot → K2
+    probability GeoTIFFs → per-pixel metric rasters as K1 GeoTIFFs → K3
+    global-probs JSON → K5 classmap JSON → K4 PNG previews → K6
+    self-contained dashboard, all under ``out``. Returns the job summary and
+    leaves the session running."""
+    import numpy as np
+
+    from geotiff_scalable_analysis_pipeline_spark import datagen as dg
+    from geotiff_scalable_analysis_pipeline_spark.operators import chunking
+    from geotiff_scalable_analysis_pipeline_spark.plans.catalog import TableCatalog
+    from geotiff_scalable_analysis_pipeline_spark.sources import preview, sinks
+
+    cat = TableCatalog(out)
+    mcfg = dg.GoldenConfig(
+        n_tiles=min(n_tiles, 16), tile_px=64, n_media_tiles=min(n_tiles, 16),
+    )
+    media = dg.media_df(spark, mcfg)
+    grid = {"zor": 32, "halo": 8, "patch": 16, "stride": 8}
+    probs = chunking.chunk_prob_payloads(media, **grid)
+    snap = cat.commit(probs, "prob_chunks", partition_by=["media_ref"])
+    prob_chunks = cat.read(spark, "prob_chunks")
+    tl = dg.tiles_np(mcfg)
+    meta = {
+        str(tl["media_ref"][k]): (mcfg.tile_px, mcfg.tile_px, float(mcfg.px_size),
+                                  float(tl["x0"][k]), float(tl["y1"][k]))
+        for k in range(mcfg.n_media_tiles)
+    }
+    sinks.export_probability_geotiffs(prob_chunks, meta, out)
+    written = sinks.export_metric_geotiffs(
+        chunking.chunk_metric_payloads(prob_chunks), meta, out
+    )
+    sinks.export_global_probs_json(
+        chunking.global_class_probs(chunking.chunk_class_stats(media, **grid)),
+        f"{out}/global_probs.json",
+    )
+    nc = mcfg.n_bands
+    colors = (np.arange(nc * 3, dtype=np.int64) * 37 % 256).astype("uint8").reshape(nc, 3)
+    sinks.export_classmap_json(
+        [f"class_{i}" for i in range(nc)],
+        [tuple(int(v) for v in rgb) for rgb in colors],  # json rejects np.uint8
+        f"{out}/classmap.json",
+    )
+    tile_arts = {
+        ref: preview.export_previews_from_rasters(
+            out, ref, colors, n_classes=nc, preview_dir=f"{out}/{ref}",
+        )
+        for ref in written
+    }
+    html = preview.generate_viewer_html(
+        out, tile_arts, title="GSAP-Spark analysis report",
+        metadata={"tiles": len(written), "n_classes": nc, "snapshot": snap},
+    )
+    return {"job": "report", "snapshot": snap, "tiles": len(written), "viewer": html}
 
 
 def main():
@@ -31,7 +89,10 @@ def main():
     # Session comes from spark-submit's conf; only app-level imports here so
     # the zip on --py-files is the import source on executors.
     spark = SparkSession.builder.getOrCreate()
-    from pyspark.sql import functions as F
+    if args.job == "report":
+        print(json.dumps(report(spark, args.out, args.n_tiles)))
+        spark.stop()
+        return
 
     from geotiff_scalable_analysis_pipeline_spark import datagen as dg
     from geotiff_scalable_analysis_pipeline_spark.operators import knn, pip_join, raster, zonal
@@ -61,48 +122,6 @@ def main():
     elif args.job == "knn":
         out = knn.knn_join(dg.points_df(spark, cfg), tiles, k=cfg.knn_k)
         snap = cat.commit(out, "knn", mode="overwrite")
-    elif args.job == "report":
-        # The reference's full product flow end-to-end (process.py →
-        # reporters → generate_viewer): probability cubes per chunk →
-        # catalog snapshot → per-pixel metric rasters → K1 GeoTIFF sinks →
-        # K4 PNG previews → K6 self-contained dashboard.
-        import numpy as np
-
-        from geotiff_scalable_analysis_pipeline_spark.operators import chunking
-        from geotiff_scalable_analysis_pipeline_spark.sources import preview, sinks
-
-        mcfg = dg.GoldenConfig(
-            n_tiles=min(args.n_tiles, 16), tile_px=64,
-            n_media_tiles=min(args.n_tiles, 16),
-        )
-        media = dg.media_df(spark, mcfg)
-        probs = chunking.chunk_prob_payloads(media, zor=32, halo=8, patch=16, stride=8)
-        snap = cat.commit(probs, "prob_chunks", partition_by=["media_ref"])
-        metrics = chunking.chunk_metric_payloads(cat.read(spark, "prob_chunks"))
-        tl = dg.tiles_np(mcfg)
-        meta = {
-            str(tl["media_ref"][k]): (mcfg.tile_px, mcfg.tile_px, float(mcfg.px_size),
-                                      float(tl["x0"][k]), float(tl["y1"][k]))
-            for k in range(mcfg.n_media_tiles)
-        }
-        written = sinks.export_metric_geotiffs(metrics, meta, args.out)
-        nc = mcfg.n_bands
-        colors = (np.arange(nc * 3, dtype=np.int64) * 37 % 256).astype("uint8").reshape(nc, 3)
-        tile_arts = {
-            ref: preview.export_previews_from_rasters(
-                args.out, ref, colors, n_classes=nc,
-                preview_dir=f"{args.out}/{ref}",
-            )
-            for ref in written
-        }
-        html = preview.generate_viewer_html(
-            args.out, tile_arts, title="GSAP-Spark analysis report",
-            metadata={"tiles": len(written), "n_classes": nc, "snapshot": snap},
-        )
-        print(json.dumps({"job": "report", "snapshot": snap,
-                          "tiles": len(written), "viewer": html}))
-        spark.stop()
-        return
     else:
         snap = build_pyramid(cat, tiles, finest=7, coarsest=4)
 

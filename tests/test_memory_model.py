@@ -1,42 +1,87 @@
-"""Closed-form memory model (reference memory_utils.py:10-125 analog)."""
+"""Closed-form memory model (reference memory_utils.py:10-125 analog) and
+the ZoR chunk geometry whose per-tile batches it sizes
+(operators/chunking.py: one decoded tile → (K, C, side, side) windows with
+side = ZoR + 2·halo)."""
 
+import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from geotiff_scalable_analysis_pipeline_spark.formats import tiff
+from geotiff_scalable_analysis_pipeline_spark.operators import chunking
 from geotiff_scalable_analysis_pipeline_spark.plans import memory_model as mm
 
 
+def _tile(h: int, w: int, bands: int = 3) -> bytes:
+    dn = (np.arange(bands * h * w, dtype=np.int64).reshape(bands, h, w) * 37 % 9000 + 1000)
+    return tiff.encode(dn.astype(np.uint16), tiepoint=(0.0, 10.0 * h))
+
+
+def _crops(h, w, zor, halo, patch=8, stride=4):
+    return list(chunking.iter_chunk_probs(_tile(h, w), 400, zor, halo, patch, stride))
+
+
 def test_zor_monotone_in_budget():
-    small = mm.optimal_zor(4, 8, 32, 16, halo=16, budget_bytes=64 << 20)
-    big = mm.optimal_zor(4, 8, 32, 16, halo=16, budget_bytes=1 << 30)
-    assert small <= big
-    assert small % 32 == 0 and big % 32 == 0
+    """A larger ZoR side (the per-chunk pixel budget) never yields more
+    chunks for one tile, and the count is ceil(H/ZoR)·ceil(W/ZoR)."""
+    counts = []
+    for zor in (8, 12, 16, 24, 40):
+        n = len(_crops(40, 28, zor, halo=4))
+        assert n == -(-40 // zor) * -(-28 // zor)
+        counts.append(n)
+    assert counts == sorted(counts, reverse=True)
 
 
 def test_zor_floor_is_one_patch():
-    assert mm.optimal_zor(12, 19, 120, 60, halo=128, budget_bytes=1 << 20) == 120
+    """The smallest legal chunk window is one patch: side == patch runs
+    exactly one patch per chunk; a window smaller than the patch raises."""
+    assert chunking.patch_coords_np(16, 16, 16, 8) == [(0, 0)]
+    crops = _crops(32, 32, zor=8, halo=4, patch=16, stride=8)  # side 16
+    assert len(crops) == 16
+    assert all(p.shape == (3, 8, 8) for _, _, p in crops)
+    with pytest.raises(ValueError, match="smaller than patch"):
+        _crops(32, 32, zor=8, halo=3, patch=16, stride=8)  # side 14
 
 
-def test_zor_padded_chunk_fits_budget():
-    # the solved ZoR's padded footprint must actually fit
-    for budget in (128 << 20, 512 << 20, 4 << 30):
-        zor = mm.optimal_zor(12, 19, 120, 60, halo=128, budget_bytes=budget, segmentation=True)
-        side = zor + 2 * 128
-        bpp = mm.chunk_bytes_per_pixel(12, 19, 120, 60, segmentation=True)
-        if zor > 120:  # above the floor the bound is honored
-            assert side * side * bpp <= budget
+def test_zor_padded_chunk_fits_budget(spark):
+    """Catalyst's chunk grid and the numpy kernel agree: the same chunk
+    origins, each read window padded by the halo on every side
+    (side = ZoR + 2·halo), and every ZoR crop inside its window."""
+    h = w = 40
+    zor, halo = 16, 4
+    grid = chunking.chunk_grid(spark.createDataFrame([("t0",)], "media_ref string"),
+                               h, w, zor, halo).collect()
+    crops = _crops(h, w, zor, halo)
+    assert sorted((g.chunk_r, g.chunk_c) for g in grid) == sorted((r, c) for r, c, _ in crops)
+    for g in grid:
+        assert (g.win_r0, g.win_c0) == (g.chunk_r - halo, g.chunk_c - halo)
+        assert g.win_h == g.win_w == zor + 2 * halo
+    for r0, c0, p in crops:
+        assert p.shape[1] <= zor and p.shape[2] <= zor
+        assert r0 + p.shape[1] <= h and c0 + p.shape[2] <= w
 
 
 @given(
-    bands=st.integers(1, 16),
-    classes=st.integers(2, 32),
-    halo=st.integers(0, 64),
-    budget=st.integers(1 << 20, 8 << 30),
+    h=st.integers(8, 48),
+    w=st.integers(8, 48),
+    zor=st.sampled_from([4, 8, 12, 16]),
+    halo=st.integers(2, 8),
 )
-@settings(max_examples=50, deadline=None)
-def test_zor_always_valid(bands, classes, halo, budget):
-    zor = mm.optimal_zor(bands, classes, 32, 16, halo=halo, budget_bytes=budget)
-    assert zor >= 32 and zor % 32 == 0
+@settings(max_examples=40, deadline=None)
+def test_zor_always_valid(h, w, zor, halo):
+    """For any tile size, ZoR and halo, the ZoR crops tile the image
+    exactly once, in row-major grid order, with finite float32 values."""
+    crops = _crops(h, w, zor, halo)
+    cover = np.zeros((h, w), dtype=np.int64)
+    for r0, c0, p in crops:
+        assert p.dtype == np.float32 and np.isfinite(p).all()
+        assert p.shape[1:] == (min(zor, h - r0), min(zor, w - c0))
+        cover[r0 : r0 + p.shape[1], c0 : c0 + p.shape[2]] += 1
+    assert (cover == 1).all()
+    assert [(r, c) for r, c, _ in crops] == [
+        (r, c) for r in range(0, h, zor) for c in range(0, w, zor)
+    ]
 
 
 def test_arrow_rows_fat_vs_narrow():

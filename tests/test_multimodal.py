@@ -1,4 +1,4 @@
-"""Multimodal: REAL codecs (PNG/WAV/video container) + feature extraction.
+"""Multimodal: REAL codecs (PNG/WAV/video container) + decode verification.
 
 The decode step is no longer a stub: payloads are genuine wire formats and
 the decoded values are checked against the generating integer formulas —
@@ -14,26 +14,37 @@ from geotiff_scalable_analysis_pipeline_spark.operators import multimodal as mm
 
 
 def test_feature_extraction_all_modalities(spark):
-    media = mm.synthetic_multimodal(spark, n=30)
-    feats = mm.extract_features(media).toPandas()
-    assert len(feats) == 30
-    by_mod = feats.groupby("modality").feat.first()
-    assert len(by_mod["image"]) == 3  # RGB channel means
-    assert len(by_mod["audio"]) == 8  # energy bins
-    assert len(by_mod["video"]) == 3
-    assert (feats[feats.modality == "video"].n_items == 4).all()  # frame sample
-    assert (feats[feats.modality == "audio"].n_items == dg.MM_RATE).all()
+    """Every modality of the corpus decodes through ``decode_payload`` to
+    the shape its metadata columns declare: image (H, W, C) uint8, audio
+    (N, channels) float32 in [-1, 1) equal to the PCM16 samples / 2¹⁵, video
+    (F, H, W, C) uint8."""
+    rows = dg.multimodal_df(spark, 30).collect()
+    assert len(rows) == 30
+    seen = set()
+    for row in rows:
+        arr = mm.decode_payload(bytes(row.payload), row.modality)
+        seen.add(row.modality)
+        if row.modality == "image":
+            assert arr.dtype == np.uint8 and arr.shape == (row.height, row.width, dg.MM_C)
+        elif row.modality == "video":
+            assert arr.dtype == np.uint8
+            assert arr.shape == (row.n_frames, row.height, row.width, dg.MM_C)
+        else:
+            pcm, rate = wav.decode(bytes(row.payload))
+            assert rate == row.sample_rate and arr.dtype == np.float32
+            assert arr.shape == pcm.shape and (np.abs(arr) < 1.0).all()
+            assert np.array_equal(arr, pcm.astype(np.float32) / 32768.0)
+    assert seen == {"image", "audio", "video"}
 
 
 def test_deterministic_across_partitionings(spark):
-    a = mm.extract_features(mm.synthetic_multimodal(spark, 24)).orderBy("media_ref").toPandas()
-    b = (
-        mm.extract_features(mm.synthetic_multimodal(spark, 24).repartition(7))
-        .orderBy("media_ref")
-        .toPandas()
-    )
-    for x, y in zip(a.feat, b.feat):
-        assert np.array_equal(np.array(x), np.array(y))
+    """The three decode-verification operators return the same rows however
+    the media table is partitioned."""
+    media = dg.multimodal_df(spark, 24)
+    for op in (mm.image_pixel_stats, mm.audio_sample_stats, mm.video_frame_stats):
+        a = sorted(tuple(r) for r in op(media).collect())
+        b = sorted(tuple(r) for r in op(media.repartition(7)).collect())
+        assert a == b and len(a) > 0, op.__name__
 
 
 def test_unknown_modality_raises():
@@ -49,11 +60,18 @@ def test_absent_codecs_raise_named():
 
 
 def test_resize_nearest_exact():
-    img = np.arange(12 * 8 * 3, dtype=np.uint8).reshape(12, 8, 3)
-    small = mm._resize_nearest(img, 6, 4)
+    """The product's nearest-neighbour resize is the class preview's
+    order-0 decimation (reference utils.py:82, order-0 zoom for class maps):
+    every ``downscale``-th pixel, anchored at the origin."""
+    from geotiff_scalable_analysis_pipeline_spark.sources.preview import render_class_preview
+
+    cls = (np.arange(12 * 8, dtype=np.int64).reshape(12, 8) % 5).astype(np.uint8)
+    colors = (np.arange(5 * 3, dtype=np.int64).reshape(5, 3) * 17).astype(np.uint8)
+    small = render_class_preview(cls, colors, downscale=2)
     assert small.shape == (6, 4, 3)
-    assert np.array_equal(small[0, 0], img[0, 0])
-    assert np.array_equal(small[5, 3], img[10, 6])
+    assert np.array_equal(small[0, 0], colors[cls[0, 0]])
+    assert np.array_equal(small[5, 3], colors[cls[10, 6]])
+    assert np.array_equal(small, colors[cls[::2, ::2]])
 
 
 # ---------------------------------------------------------------------------

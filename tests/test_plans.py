@@ -162,7 +162,7 @@ def test_lineage_null_and_unsafe_keys_have_own_markers(spark, tmp_path):
     assert sorted(p.name for p in log.dir.iterdir()) == [
         "%null.done", "a%2Fb.done", "plain-1.done", "x%252Fy.done",
     ]
-    assert not log.is_committed("None")
+    assert "None" not in log.committed_keys()
     again = []
     r = lineage.run_resumable(spark, keys, "key", again.append, log)
     assert again == [] and r == {"processed": 0, "skipped": 4}
@@ -171,7 +171,7 @@ def test_lineage_null_and_unsafe_keys_have_own_markers(spark, tmp_path):
     seen_none = []
     lineage.run_resumable(spark, nones, "key", seen_none.append, log)
     assert seen_none == ["None"]
-    assert log.is_committed("None") and log.is_committed(None)
+    assert {"None", None} <= set(log.committed_keys())
 
 
 def test_resume_keeps_two_keys_in_flight(spark, tmp_path):
@@ -299,32 +299,24 @@ def test_pyramid_build_and_viewport_pruning(spark, tmp_path):
     assert per_level[5] <= per_level[6] <= per_level[7]
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """write_bucketed + bucketed_join: two tables bucketed on the join key
-    sort-merge-join with ZERO Exchange (the shuffle was paid once, at write
-    time); the identical unbucketed join shuffles both sides (control)."""
-    from geotiff_scalable_analysis_pipeline_spark.plans import bucketing
+def test_bucketed_join_has_no_exchange(spark):
+    """Both join inputs pinned by ``placement.cpu_dense_repartition`` on the
+    key (same count) act as bucketed inputs: the sort-merge join consumes
+    the pins' hash partitioning and adds no exchange of its own. Control:
+    with one side unpinned the planner must shuffle it for the join."""
+    from geotiff_scalable_analysis_pipeline_spark.plans.placement import cpu_dense_repartition
 
     n = 10_000
     a = spark.range(n).select(F.col("id").alias("k"), (F.col("id") * 3).alias("va"))
     b = spark.range(n).select(F.col("id").alias("k"), (F.col("id") * 7).alias("vb"))
-    try:
-        bucketing.write_bucketed(a, "t_buck_a", "k", 8, path=str(tmp_path / "a"))
-        bucketing.write_bucketed(b, "t_buck_b", "k", 8, path=str(tmp_path / "b"))
-        j = bucketing.bucketed_join(spark, "t_buck_a", "t_buck_b", "k")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        # control: same data, same forced SMJ, no bucketing -> both sides shuffle
-        ju = a.hint("merge").join(b, "k")
-        planu = ju._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in planu
-        got = {(r.k, r.va, r.vb) for r in j.collect()}
-        assert got == {(i, 3 * i, 7 * i) for i in range(n)}
-        # bucket files are the parallelism floor: one file per bucket
-        assert len(spark.table("t_buck_a").inputFiles()) == 8
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_buck_a")
-        spark.sql("DROP TABLE IF EXISTS t_buck_b")
+    j = cpu_dense_repartition(a, "k").hint("merge").join(cpu_dense_repartition(b, "k"), "k")
+    plan = j._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == plan.count("REPARTITION_BY_NUM") == 2
+    assert "ENSURE_REQUIREMENTS" not in plan
+    ju = cpu_dense_repartition(a, "k").hint("merge").join(b, "k")
+    assert "ENSURE_REQUIREMENTS" in ju._jdf.queryExecution().executedPlan().toString()
+    got = {(r.k, r.va, r.vb) for r in j.collect()}
+    assert got == {(i, 3 * i, 7 * i) for i in range(n)}
 
 
 def test_zorder_stats_skipping(spark, tmp_path):

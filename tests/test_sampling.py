@@ -21,7 +21,9 @@ def _orders(spark, n=2000):
 
 
 def test_rate_sample_matches_duckdb_hash_exactly(spark):
-    kept = sampling.hash_rate_sample(_orders(spark), "k", 200_000, salt=11)
+    kept = sampling.stratified_rate_sample(
+        _orders(spark), "k", "s", {}, default_ppm=200_000, salt=11
+    )
     got = sorted(r["k"] for r in kept.collect())
     sql = sampling.stratified_rate_sample_sql(
         "SELECT k, s FROM rows", "k", "s", {}, default_ppm=200_000, salt=11
@@ -67,7 +69,9 @@ def test_fixed_sample_plan_uses_rank_limit(spark):
 def test_invalid_args_rejected(spark):
     df = _orders(spark, 10)
     with pytest.raises(ValueError):
-        sampling.hash_rate_sample(df, "k", 2_000_000)
+        sampling.stratified_rate_sample(df, "k", "s", {}, default_ppm=2_000_000)
+    with pytest.raises(ValueError):
+        sampling.stratified_rate_sample(df, "k", "s", {}, default_ppm=-1)
     with pytest.raises(ValueError):
         sampling.stratified_rate_sample(df, "k", "s", {"O": -1})
     with pytest.raises(ValueError):

@@ -1,4 +1,4 @@
-"""Media store (resolve join + pruning) and export sinks."""
+"""Media payloads in the catalog (resolve join + pruning) and export sinks."""
 
 import json
 
@@ -7,38 +7,44 @@ from pyspark.sql import functions as F
 
 from geotiff_scalable_analysis_pipeline_spark import datagen as dg
 from geotiff_scalable_analysis_pipeline_spark.formats import tiff
-from geotiff_scalable_analysis_pipeline_spark.functions.cells import cell_id_np
+from geotiff_scalable_analysis_pipeline_spark.functions.cells import cell_id_col, cell_id_np
 from geotiff_scalable_analysis_pipeline_spark.operators import chunking, spans
 from geotiff_scalable_analysis_pipeline_spark.plans.catalog import TableCatalog
-from geotiff_scalable_analysis_pipeline_spark.sources import media_store, sinks
+from geotiff_scalable_analysis_pipeline_spark.sources import sinks
 
 CFG = dg.GoldenConfig(n_tiles=60, tile_px=32, n_docs=200, n_media_tiles=60)
 
 
 def test_media_store_write_prune_resolve(spark, tmp_path):
+    """Media payloads committed to the catalog partitioned by the tile's
+    coarse cell: a viewport read scans only its anchor's files, and span
+    rows resolve to payloads by an equi-join whose left_anti complement
+    surfaces exactly the refs with no payload."""
     cat = TableCatalog(tmp_path)
     media = dg.media_df(spark, CFG)
-    tiles = dg.tiles_df(spark, CFG)
-    media_store.write_media_store(cat, media, tiles)
+    anchors = dg.tiles_df(spark, CFG).select(
+        "media_ref",
+        cell_id_col(F.col("cx").cast("double"), F.col("cy").cast("double"), 3).alias("cell_anchor"),
+    )
+    cat.commit(media.join(anchors, "media_ref"), "media", partition_by=["cell_anchor"],
+               mode="overwrite")
 
     # pruned read: only hotspot-0 anchor partitions are scanned
     anchor = int(cell_id_np(np.array([20000.0]), np.array([20000.0]), 3)[0])
-    vp = media_store.read_media_viewport(cat, spark, {anchor})
+    vp = cat.read(spark, "media", partition_filter=lambda p: int(p["cell_anchor"]) == anchor)
     files = vp.inputFiles()
     assert files and all(f"cell_anchor={anchor}" in f for f in files)
 
     # resolve spans → payloads; unmatched refs surface as lineage
-    docs = dg.documents_df(spark, CFG)
-    m = spans.media_spans(docs)
+    m = spans.media_spans(dg.documents_df(spark, CFG))
     full = cat.read(spark, "media")
-    resolved, unmatched = media_store.resolve_media(m, full, broadcast_media=True)
-    assert resolved.count() > 0
-    assert unmatched.count() == 0  # all refs < n_tiles = n_media_tiles
-    # now drop half the store → unmatched must surface exactly the gap
+    assert m.join(F.broadcast(full), "media_ref").count() > 0
+    assert m.join(full, "media_ref", "left_anti").count() == 0  # refs < n_media_tiles
+    # drop half the store → unmatched must surface exactly the gap
     half = full.filter(F.col("tile_k") < 30)
-    r2, u2 = media_store.resolve_media(m, half)
-    assert r2.count() + u2.count() == m.count()
-    assert u2.select("media_ref").distinct().count() > 0
+    resolved, unmatched = m.join(half, "media_ref"), m.join(half, "media_ref", "left_anti")
+    assert resolved.count() + unmatched.count() == m.count()
+    assert unmatched.select("media_ref").distinct().count() > 0
 
 
 def test_export_sinks(spark, tmp_path):
@@ -54,21 +60,6 @@ def test_export_sinks(spark, tmp_path):
     cpath = sinks.export_classmap_json(["water", "forest"], [(0, 0, 255), (0, 255, 0)], tmp_path / "cm.json")
     cm = json.loads(open(cpath).read())
     assert cm["forest"]["index"] == 1
-
-    # K1: class raster re-encoded as a real GeoTIFF and decodable
-    pdf_src = media.toPandas()
-
-    def class_of_rows(grp):
-        arr, prof = tiff.decode(bytes(pdf_src[pdf_src.media_ref == grp.media_ref.iloc[0]].payload.iloc[0]))
-        cls = (arr[0] > 5000).astype(np.uint16)
-        return cls, prof.tiepoint[0], prof.tiepoint[1], prof.pixel_scale[0]
-
-    files = sinks.export_geotiff_classmaps(
-        media.select("media_ref", "payload"), tmp_path / "tifs", class_of_rows
-    )
-    assert len(files) == 4
-    arr, prof = tiff.decode(open(files[0], "rb").read())
-    assert arr.shape == (1, 32, 32) and set(np.unique(arr)) <= {0, 1}
 
 
 def test_probability_sink_round_trip(spark, tmp_path):

@@ -1,6 +1,7 @@
-"""Structured Streaming surface (streaming/ingest.py, streaming/stateful.py):
-streaming/batch parity, exactly-once checkpoint resume, watermark late-data
-drop across restarts, cross-batch stateful operator."""
+"""Structured Streaming surface (streaming/ingest.py) and the batch-native
+resume path (plans/lineage.py into plans/catalog.py): streaming/batch
+parity, exactly-once checkpoint resume, watermark late-data drop across
+restarts, cross-batch state, exactly-once per-key catalog commits."""
 
 from __future__ import annotations
 
@@ -9,14 +10,12 @@ import os
 
 import pyspark.sql.functions as F
 
+from geotiff_scalable_analysis_pipeline_spark.plans.catalog import TableCatalog
+from geotiff_scalable_analysis_pipeline_spark.plans.lineage import LineageLog, run_resumable
 from geotiff_scalable_analysis_pipeline_spark.streaming.ingest import (
     hourly_event_stats_streaming,
     hourly_windowed_stats,
-    incremental_parquet_ingest,
-)
-from geotiff_scalable_analysis_pipeline_spark.streaming.stateful import (
-    batch_user_stats,
-    running_user_stats,
+    session_windows,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -24,6 +23,21 @@ SF = "/root/testdata/sf0.001"
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _file_sink_pass(stream, sink: str, checkpoint: str) -> None:
+    """One ``availableNow`` pass of Spark's append-mode parquet file sink
+    with a checkpoint: a re-run reads only source files the checkpoint's
+    offset log has not seen."""
+    q = (
+        stream.writeStream.trigger(availableNow=True)
+        .outputMode("append")
+        .format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+    q.awaitTermination()
 
 
 def test_streaming_hourly_equals_batch(spark):
@@ -38,23 +52,24 @@ def test_streaming_hourly_equals_batch(spark):
 
 
 def test_incremental_ingest_exactly_once(spark, tmp_path):
-    """Re-running the checkpointed ingest over a grown source directory
+    """Re-running the checkpointed file sink over a grown source directory
     processes only the NEW files — no duplicates, nothing missed."""
     src, sink, ckpt = str(tmp_path / "src"), str(tmp_path / "sink"), str(tmp_path / "ckpt")
     os.makedirs(src)
     base = spark.read.parquet(f"{SF}/events.parquet")
-    schema = base.schema
     batch1 = base.filter(F.col("event_id") % 2 == 0)
     batch2 = base.filter(F.col("event_id") % 2 == 1)
     batch1.coalesce(1).write.parquet(src, mode="append")
 
-    doubled = lambda df: df.withColumn("value", F.col("value") * 2)  # noqa: E731
-    incremental_parquet_ingest(spark, src, sink, ckpt, transform=doubled, schema=schema)
-    n1 = spark.read.parquet(sink).count()
-    assert n1 == batch1.count()
+    def run():
+        stream = spark.readStream.schema(base.schema).parquet(src)
+        _file_sink_pass(stream.withColumn("value", F.col("value") * 2), sink, ckpt)
+
+    run()
+    assert spark.read.parquet(sink).count() == batch1.count()
 
     batch2.coalesce(1).write.parquet(src, mode="append")
-    incremental_parquet_ingest(spark, src, sink, ckpt, transform=doubled, schema=schema)
+    run()
     out = spark.read.parquet(sink)
     assert out.count() == base.count()  # batch1 NOT reprocessed
     assert out.select("event_id").distinct().count() == base.count()  # no dupes
@@ -77,15 +92,7 @@ def test_watermark_drops_late_rows_across_restart(spark, tmp_path):
         schema = spark.read.parquet(src).schema
         stream = spark.readStream.schema(schema).parquet(src)
         agg = hourly_windowed_stats(stream, watermark="30 minutes")
-        q = (
-            agg.writeStream.trigger(availableNow=True)
-            .outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
+        _file_sink_pass(agg, sink, ckpt)
 
     # run 1: 10:05, 10:50, 12:00 → watermark 11:30 → [10:00,11:00) emitted
     mk([(1, 10 * 60 + 5), (2, 10 * 60 + 50), (3, 12 * 60)], 1)
@@ -103,8 +110,10 @@ def test_watermark_drops_late_rows_across_restart(spark, tmp_path):
 
 
 def test_stateful_running_user_stats_across_batches(spark, tmp_path):
-    """applyInPandasWithState carries per-user state across micro-batches:
-    the final changelog row per user equals the batch aggregate."""
+    """Per-user running state carried across micro-batches in the state
+    store: with a gap longer than the corpus span each user has ONE session,
+    i.e. a running (count, exact sum) per user, built from three forced
+    micro-batches; the final state equals the batch aggregate."""
     src = str(tmp_path / "src")
     os.makedirs(src)
     base = spark.read.parquet(f"{SF}/events.parquet")
@@ -117,24 +126,22 @@ def test_stateful_running_user_stats_across_batches(spark, tmp_path):
     name = "t_stateful_user_stats"
     spark.catalog.dropTempView(name)
     q = (
-        running_user_stats(stream)
+        session_windows(stream, gap="3650 days")
         .writeStream.trigger(availableNow=True)
-        .outputMode("update")
+        .outputMode("complete")
         .format("memory")
         .queryName(name)
         .start()
     )
     q.awaitTermination()
-    # update-mode changelog: latest (= max n_events) row per user is current
-    log = spark.table(name)
-    final = (
-        log.groupBy("user_id")
-        .agg(F.max(F.struct("n_events", "sum_value_micros")).alias("s"))
-        .select("user_id", "s.n_events", "s.sum_value_micros")
+    final = spark.table(name).select("user_id", "n_events", "sum_value")
+    want = base.groupBy("user_id").agg(
+        F.count("*").alias("n_events"),
+        F.sum(F.col("value").cast("decimal(30, 10)")).cast("double").alias("sum_value"),
     )
-    assert _rows(final) == _rows(batch_user_stats(base))
-    # state really spanned batches: some user must appear in >1 changelog row
-    assert log.groupBy("user_id").count().filter("count > 1").count() > 0
+    assert _rows(final) == _rows(want)
+    # state really spanned batches: three batches each fed the aggregate
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 3
 
 
 def test_streaming_sessions_complete_equals_batch(spark):
@@ -158,10 +165,6 @@ def test_streaming_sessions_append_emits_closed(spark, tmp_path):
     """The 100 TB shape: append mode + watermark emits exactly the sessions
     the watermark has CLOSED (end + nothing mergeable), evicting their
     state; open sessions stay unemitted."""
-    from geotiff_scalable_analysis_pipeline_spark.streaming.ingest import (
-        session_windows,
-    )
-
     src, sink, ckpt = str(tmp_path / "src"), str(tmp_path / "sink"), str(tmp_path / "ckpt")
     os.makedirs(src)
     d = dt.datetime(2024, 3, 1)
@@ -176,15 +179,7 @@ def test_streaming_sessions_append_emits_closed(spark, tmp_path):
         schema = spark.read.parquet(src).schema
         stream = spark.readStream.schema(schema).parquet(src)
         agg = session_windows(stream, "30 minutes", watermark="10 minutes")
-        q = (
-            agg.writeStream.trigger(availableNow=True)
-            .outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
+        _file_sink_pass(agg, sink, ckpt)
 
     # user 1: events at 10:00, 10:10 (one session, ends 10:40);
     # user 2: event at 13:00 (session ends 13:30 — NOT closed by wm 12:50)
@@ -364,134 +359,78 @@ def test_streaming_query_registered_in_driver_contract():
 
 
 def test_stream_to_catalog_exactly_once(spark, tmp_path):
-    """foreachBatch -> catalog sink: each micro-batch is one append snapshot;
-    a replayed epoch (crash between catalog commit and checkpoint commit,
-    simulated via a fresh checkpoint over the same source) is skipped by the
-    manifest's stream_batch_id — even when a compact() ran in between."""
-    from geotiff_scalable_analysis_pipeline_spark.plans.catalog import TableCatalog
-    from geotiff_scalable_analysis_pipeline_spark.streaming.ingest import stream_to_catalog
-
-    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-    os.makedirs(src)
+    """The engine's exactly-once path into the catalog is the lineage sink:
+    ``run_resumable`` commits each key's rows as one catalog append, then
+    its marker. A re-run over the same keys commits nothing; after a new key
+    arrives only it commits; every row lands exactly once."""
     base = spark.read.parquet(f"{SF}/events.parquet")
-    schema = base.schema
-    base.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src, mode="append")
-
     cat = TableCatalog(tmp_path / "cat")
+    log = LineageLog(tmp_path / "cat", "ev_ingest")
 
-    def run(checkpoint):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        stream_to_catalog(stream, cat, "ev", checkpoint)
+    def process(key):
+        cat.commit(base.filter(F.col("event_type") == key), "ev", mode="append")
 
-    run(ckpt)
-    n_even = base.filter(F.col("event_id") % 2 == 0).count()
-    assert cat.read(spark, "ev").count() == n_even
-    man = cat.manifest("ev")
-    assert man["stream_batch_id"] == 0
+    keys = base.select("event_type")
+    first = keys.filter(F.col("event_type") != "purchase")
+    r1 = run_resumable(spark, first, "event_type", process, log)
+    assert r1 == {"processed": 4, "skipped": 0}
+    assert cat.read(spark, "ev").count() == base.filter(F.col("event_type") != "purchase").count()
+    assert run_resumable(spark, first, "event_type", process, log) == {"processed": 0, "skipped": 4}
+    assert len(cat.snapshots("ev")) == 4  # one append per key, none on the re-run
 
-    # new data -> one more snapshot, old data NOT reprocessed
-    base.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(src, mode="append")
-    run(ckpt)
-    assert cat.read(spark, "ev").count() == base.count()
-    assert cat.read(spark, "ev").select("event_id").distinct().count() == base.count()
-    assert cat.manifest("ev")["stream_batch_id"] == 1
-
-    # maintenance compaction between stream epochs (no stream_batch_id on its
-    # own manifest) must not erase the epoch marker for the replay guard
-    cat.compact(spark, "ev", target_file_bytes=1 << 30)
-    assert "stream_batch_id" not in cat.manifest("ev")
-    # the per-stream high-water dict is propagated onto EVERY descendant
-    assert cat.manifest("ev")["stream_high_water"] == {"default": 1}
-
-    # expire the ancestor manifests that carried the stream_batch_id: the
-    # replay guard must still hold (regression: the parent-chain walk hit
-    # the expired manifest, returned -1, and re-committed replayed epochs
-    # -> duplicate rows)
-    cat.expire("ev", keep_last=1)
-    assert cat.snapshots("ev") == [cat.current_snapshot("ev")]
-
-    # replay: fresh checkpoint re-delivers batches 0..1 -> both skipped
-    run(str(tmp_path / "ckpt2"))
-    assert cat.read(spark, "ev").count() == base.count()
-    assert cat.read(spark, "ev").select("event_id").distinct().count() == base.count()
-
-
-def test_stream_to_catalog_fresh_checkpoint_new_batching(spark, tmp_path):
-    """File-granularity replay guard: a FRESH checkpoint whose micro-batch
-    decomposition differs from the original run's must neither lose
-    never-committed files nor duplicate committed ones.
-
-    Regression: the batch-id-only guard dropped batch 0 of a fresh
-    checkpoint (0 <= recorded high water) even when that batch packed NEW
-    files together with the replayed ones — the new files were then marked
-    processed in the new checkpoint and permanently lost."""
-    from geotiff_scalable_analysis_pipeline_spark.plans.catalog import TableCatalog
-    from geotiff_scalable_analysis_pipeline_spark.streaming.ingest import stream_to_catalog
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    base = spark.read.parquet(f"{SF}/events.parquet")
-    schema = base.schema
-    cat = TableCatalog(tmp_path / "cat")
-
-    def run(checkpoint, max_files):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files)
-            .parquet(src)
-        )
-        stream_to_catalog(stream, cat, "ev", str(tmp_path / checkpoint))
-
-    # run 1: two files, one per batch (high water -> 1)
-    base.filter(F.col("event_id") % 3 == 0).coalesce(1).write.parquet(src, mode="append")
-    base.filter(F.col("event_id") % 3 == 1).coalesce(1).write.parquet(src, mode="append")
-    run("ck1", 1)
-    n01 = base.filter(F.col("event_id") % 3 < 2).count()
-    assert cat.read(spark, "ev").count() == n01
-
-    # checkpoint lost; a NEW file lands; the fresh checkpoint packs ALL
-    # THREE files into batch 0 (0 <= high water 1): only the new file's
-    # rows must commit
-    base.filter(F.col("event_id") % 3 == 2).coalesce(1).write.parquet(src, mode="append")
-    run("ck2", 10)
+    assert run_resumable(spark, keys, "event_type", process, log) == {"processed": 1, "skipped": 4}
     got = cat.read(spark, "ev")
     assert got.count() == base.count()
     assert got.select("event_id").distinct().count() == base.count()
 
-    # opposite decomposition skew: fresh checkpoint, one file per batch
-    # (batch ids 0..2, the last ABOVE the recorded high water) — no
-    # duplicates either
-    run("ck3", 1)
-    assert cat.read(spark, "ev").count() == base.count()
+
+def test_stream_to_catalog_fresh_checkpoint_new_batching(spark, tmp_path):
+    """The lineage sink's result does not depend on how the key list is
+    batched across runs: one run over every key, and three runs over
+    overlapping partial key lists, commit the same rows, each once."""
+    base = spark.read.parquet(f"{SF}/events.parquet")
+    keys = base.select("event_type")
+    cat = TableCatalog(tmp_path / "cat")
+
+    def sink(table):
+        log = LineageLog(tmp_path / "cat", table)
+
+        def process(key):
+            cat.commit(base.filter(F.col("event_type") == key), table, mode="append")
+
+        return lambda ks: run_resumable(spark, ks, "event_type", process, log)
+
+    one_run = sink("ev_one")
+    assert one_run(keys) == {"processed": 5, "skipped": 0}
+
+    batched = sink("ev_batched")
+    in_types = lambda *ts: keys.filter(F.col("event_type").isin(*ts))  # noqa: E731
+    assert batched(in_types("click", "view")) == {"processed": 2, "skipped": 0}
+    assert batched(in_types("view", "purchase", "error")) == {"processed": 2, "skipped": 1}
+    assert batched(keys) == {"processed": 1, "skipped": 4}
+
+    assert _rows(cat.read(spark, "ev_batched")) == _rows(cat.read(spark, "ev_one")) == _rows(base)
 
 
 def test_streaming_raster_metrics_pipeline(spark, tmp_path):
     """The raster pipeline runs INCREMENTALLY over streaming media ingest:
     readStream(media parquet) → chunk probability cubes → per-pixel metric
     payloads (two stateless mapInPandas stages — legal in streaming) →
-    exactly-once catalog commits. The streamed table must be bit-identical
-    to the batch pipeline over the same media, and a second ingest pass
-    must process only the new files."""
+    Spark's checkpointed parquet file sink. The streamed table must be
+    bit-identical to the batch pipeline over the same media, and a second
+    ingest pass must process only the new files."""
     from geotiff_scalable_analysis_pipeline_spark import datagen as dg
     from geotiff_scalable_analysis_pipeline_spark.operators import chunking
-    from geotiff_scalable_analysis_pipeline_spark.plans.catalog import TableCatalog
-    from geotiff_scalable_analysis_pipeline_spark.streaming.ingest import stream_to_catalog
 
     cfg = dg.GoldenConfig(n_tiles=4, tile_px=64, n_media_tiles=4)
     zor, halo, patch, stride = 32, 8, 16, 8
     media = dg.media_df(spark, cfg)
-    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    src, sink, ckpt = str(tmp_path / "src"), str(tmp_path / "sink"), str(tmp_path / "ckpt")
     os.makedirs(src)
     half = F.substring("media_ref", 5, 8).cast("long") % 2
     media.filter(half == 0).coalesce(1).write.parquet(src, mode="append")
 
-    cat = TableCatalog(tmp_path / "cat")
-
-    def run(checkpoint):
+    def run():
         stream = (
             spark.readStream.schema(media.schema)
             .option("maxFilesPerTrigger", 1)
@@ -500,16 +439,15 @@ def test_streaming_raster_metrics_pipeline(spark, tmp_path):
         metrics = chunking.chunk_metric_payloads(
             chunking.chunk_prob_payloads(stream, zor=zor, halo=halo, patch=patch, stride=stride)
         )
-        stream_to_catalog(metrics, cat, "chunk_metrics", checkpoint,
-                          partition_by=["media_ref"])
+        _file_sink_pass(metrics, sink, ckpt)
 
-    run(ckpt)
-    assert cat.read(spark, "chunk_metrics").count() == 2 * 4  # 2 tiles × 4 chunks
+    run()
+    assert spark.read.parquet(sink).count() == 2 * 4  # 2 tiles × 4 chunks
 
     # second half arrives → only the new files are processed
     media.filter(half == 1).coalesce(1).write.parquet(src, mode="append")
-    run(ckpt)
-    streamed = cat.read(spark, "chunk_metrics")
+    run()
+    streamed = spark.read.parquet(sink)
     assert streamed.count() == 4 * 4
 
     # bit-identical to the batch pipeline on the same media
@@ -524,46 +462,32 @@ def test_streaming_raster_metrics_pipeline(spark, tmp_path):
                   for r in batch.select(*cols).collect())
     assert got == want
 
-    # replay with a fresh checkpoint: every epoch is skipped by the manifest
-    # stream_batch_id guard — no duplicate chunks
-    run(str(tmp_path / "ckpt2"))
-    assert cat.read(spark, "chunk_metrics").count() == 4 * 4
-
 
 def test_two_pipelines_one_table_need_distinct_stream_ids(spark, tmp_path):
-    """The replay guard is namespaced per stream_id: a SECOND logical
-    pipeline (fresh checkpoint, batch ids restarting at 0) appending to the
-    same table must not have its epochs mistaken for replays of the first
-    pipeline's — under a distinct stream_id its rows land; each stream's
-    own replay is still skipped."""
-    from geotiff_scalable_analysis_pipeline_spark.plans.catalog import TableCatalog
-    from geotiff_scalable_analysis_pipeline_spark.streaming.ingest import stream_to_catalog
-
+    """Lineage markers are namespaced per job id: a SECOND pipeline with the
+    same key names appending to the same table must use its own job id, so
+    its keys are not mistaken for the first pipeline's committed ones —
+    under a distinct id its rows land, and each job's own re-run is still a
+    no-op."""
     base = spark.read.parquet(f"{SF}/events.parquet")
-    schema = base.schema
-    src_a, src_b = str(tmp_path / "a"), str(tmp_path / "b")
-    base.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src_a)
-    base.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(src_b)
-    n_a = base.filter(F.col("event_id") % 2 == 0).count()
-
+    keys = base.select("event_type")
     cat = TableCatalog(tmp_path / "cat")
 
-    def run(src, ckpt, sid):
-        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-        stream_to_catalog(stream, cat, "ev", str(tmp_path / ckpt), stream_id=sid)
+    def pipeline(job_id, parity):
+        log = LineageLog(tmp_path / "cat", job_id)
+        rows = base.filter(F.col("event_id") % 2 == parity)
 
-    run(src_a, "ck_a", "pipeline-a")
-    assert cat.read(spark, "ev").count() == n_a
-    # second pipeline, fresh checkpoint, batch ids restart at 0 — its own
-    # stream_id means its epochs commit instead of being dropped as replays
-    run(src_b, "ck_b", "pipeline-b")
+        def process(key):
+            cat.commit(rows.filter(F.col("event_type") == key), "ev", mode="append")
+
+        return lambda: run_resumable(spark, keys, "event_type", process, log)
+
+    run_a, run_b = pipeline("pipeline-a", 0), pipeline("pipeline-b", 1)
+    assert run_a() == {"processed": 5, "skipped": 0}
+    assert cat.read(spark, "ev").count() == base.filter(F.col("event_id") % 2 == 0).count()
+    assert run_b() == {"processed": 5, "skipped": 0}
     assert cat.read(spark, "ev").count() == base.count()
-    hw = cat.manifest("ev")["stream_high_water"]
-    assert hw == {"pipeline-a": 0, "pipeline-b": 0}
-    # each stream's OWN replay (fresh checkpoint, same source) is still a no-op
-    run(src_a, "ck_a2", "pipeline-a")
-    run(src_b, "ck_b2", "pipeline-b")
-    assert cat.read(spark, "ev").count() == base.count()
+    assert run_a() == run_b() == {"processed": 0, "skipped": 5}
     assert cat.read(spark, "ev").select("event_id").distinct().count() == base.count()
 
 

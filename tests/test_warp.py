@@ -6,11 +6,9 @@ fixed-point vectorization.
 """
 
 import numpy as np
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from geotiff_scalable_analysis_pipeline_spark.operators.multimodal import resize_bilinear
 from geotiff_scalable_analysis_pipeline_spark.operators.warp import warp_np
 
 
@@ -75,34 +73,54 @@ def test_warp_np_identity_grid_is_exact_copy():
     assert (vals_b == src * 400).all()  # zero fractional part → pure v00·(2ps)²
 
 
+def _resize_grid(H, W, h, w):
+    """Source and destination pixel sizes over one shared footprint, so that
+    ``warp_np`` from an (H, W) grid to an (h, w) grid is a resize. Needs
+    H/h == W/w: ``warp_np`` takes one pixel size per grid."""
+    assert H * w == W * h
+    return h, H  # src_ps, dst_ps: H·src_ps == h·dst_ps
+
+
 def test_resize_bilinear_matches_scalar_oracle():
+    """``warp_np`` bilinear between two grids over one footprint is the
+    center-aligned bilinear resize (src = (dst + 0.5)·S/D − 0.5, edge
+    clamped; the reference's probability-cube upsample, prithvi_adapter.py:
+    426-432, align_corners=False), exact in integers scaled by (2·src_ps)²."""
+    from fractions import Fraction as Fr
+
     rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, (5, 9)).astype(np.float64)
-    for h, w in [(10, 18), (3, 4), (5, 9), (7, 7)]:
-        got = resize_bilinear(img, h, w)
-        H, W = img.shape
+    img = rng.integers(0, 256, (6, 9)).astype(np.int64)
+    H, W = img.shape
+    for h, w in [(12, 18), (4, 6), (6, 9), (2, 3)]:
+        src_ps, dst_ps = _resize_grid(H, W, h, w)
+        vals, valid = warp_np(img[None], 0, H * src_ps, src_ps, 0, H * src_ps, dst_ps,
+                              h, w, "bilinear")
+        assert valid.all()
+        cl = lambda i, n: min(max(i, 0), n - 1)
         for r in range(h):
             for c in range(w):
-                sy = (r + 0.5) * H / h - 0.5
-                sx = (c + 0.5) * W / w - 0.5
-                iy0, ix0 = int(np.floor(sy)), int(np.floor(sx))
+                sy = (r + Fr(1, 2)) * H / h - Fr(1, 2)
+                sx = (c + Fr(1, 2)) * W / w - Fr(1, 2)
+                iy0, ix0 = sy.numerator // sy.denominator, sx.numerator // sx.denominator
                 fy, fx = sy - iy0, sx - ix0
-                cl = lambda i, n: min(max(i, 0), n - 1)
                 v = (1 - fy) * (
-                    (1 - fx) * img[cl(iy0, H), cl(ix0, W)]
-                    + fx * img[cl(iy0, H), cl(ix0 + 1, W)]
+                    (1 - fx) * int(img[cl(iy0, H), cl(ix0, W)])
+                    + fx * int(img[cl(iy0, H), cl(ix0 + 1, W)])
                 ) + fy * (
-                    (1 - fx) * img[cl(iy0 + 1, H), cl(ix0, W)]
-                    + fx * img[cl(iy0 + 1, H), cl(ix0 + 1, W)]
+                    (1 - fx) * int(img[cl(iy0 + 1, H), cl(ix0, W)])
+                    + fx * int(img[cl(iy0 + 1, H), cl(ix0 + 1, W)])
                 )
-                assert got[r, c] == pytest.approx(v, abs=1e-9)
+                assert vals[0, r, c] == v * (2 * src_ps) ** 2, (h, w, r, c)
 
 
 def test_resize_bilinear_channels_broadcast():
-    img = np.stack([np.full((4, 4), 10.0), np.full((4, 4), 20.0)], axis=-1)
-    out = resize_bilinear(img, 8, 8)
-    assert out.shape == (8, 8, 2)
-    assert np.allclose(out[..., 0], 10.0) and np.allclose(out[..., 1], 20.0)
+    """Each band is resized on its own: constant bands stay constant."""
+    img = np.stack([np.full((4, 4), 10), np.full((4, 4), 20)]).astype(np.int64)
+    src_ps, dst_ps = _resize_grid(4, 4, 8, 8)
+    vals, valid = warp_np(img, 0, 4 * src_ps, src_ps, 0, 4 * src_ps, dst_ps, 8, 8, "bilinear")
+    scale = (2 * src_ps) ** 2
+    assert vals.shape == (2, 8, 8) and valid.all()
+    assert (vals[0] == 10 * scale).all() and (vals[1] == 20 * scale).all()
 
 
 def _gcp_oracle_pixel(src, du, dv, gs, src_x0, src_y1, ps, x, y):

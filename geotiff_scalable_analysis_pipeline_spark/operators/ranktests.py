@@ -88,6 +88,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType
 
 def rank_tests_2sample(
     df: DataFrame,
@@ -115,7 +116,7 @@ def rank_tests_2sample(
     if split_partitions is None:
         split_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     keep = F.col(group).isin(group_a, group_b) & F.col(value).isNotNull()
-    if dict(df.dtypes).get(value) in ("float", "double"):
+    if isinstance(df.schema[value].dataType, (FloatType, DoubleType)):
         keep = keep & ~F.isnan(F.col(value))
     src = df.filter(keep).select(
         F.col(value).alias("val"),
@@ -240,6 +241,7 @@ cnt AS (
          SUM(CASE WHEN {group} = '{group_b}' THEN 1 ELSE 0 END) AS nb
   FROM src
   WHERE {group} IN ('{group_a}', '{group_b}') AND {value} IS NOT NULL
+    AND NOT isnan({value})
   GROUP BY 1),
 per AS (
   SELECT na, nb,

@@ -41,7 +41,7 @@ def report(spark: SparkSession, out, n_tiles: int) -> dict:
     media = dg.media_df(spark, mcfg)
     grid = {"zor": 32, "halo": 8, "patch": 16, "stride": 8}
     probs = chunking.chunk_prob_payloads(media, **grid)
-    snap = cat.commit(probs, "prob_chunks", partition_by=["media_ref"])
+    snap = cat.commit(probs, "prob_chunks", partition_by=["media_ref"], mode="overwrite")
     prob_chunks = cat.read(spark, "prob_chunks")
     tl = dg.tiles_np(mcfg)
     meta = {

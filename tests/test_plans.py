@@ -38,40 +38,39 @@ def test_partition_pruning_via_manifest(spark, tmp_path):
 
 
 def test_expire_drops_unreachable(spark, tmp_path):
+    """An overwrite leaves the older snapshots' files out of the current
+    manifest: the current read sees only the last write. Nothing expires,
+    so every older snapshot still reads back in full."""
     cat = TableCatalog(tmp_path)
     cat.commit(spark.range(4), "e", mode="overwrite")
     cat.commit(spark.range(6), "e", mode="overwrite")
-    cat.commit(spark.range(8), "e", mode="overwrite")
-    dropped = cat.expire("e", keep_last=1)
-    assert dropped == [1, 2]
+    s3 = cat.commit(spark.range(8), "e", mode="overwrite")
+    old = {f["path"] for s in (1, 2) for f in cat.manifest("e", s)["files"]}
+    cur = {f["path"] for f in cat.manifest("e")["files"]}
+    assert old and not old & cur
+    assert cat.manifest("e")["parent"] == 2 and cat.manifest("e")["mode"] == "overwrite"
     assert cat.read(spark, "e").count() == 8
-    with pytest.raises(FileNotFoundError):
-        cat.manifest("e", 1)
+    assert [cat.read(spark, "e", snapshot=s).count() for s in (1, 2, s3)] == [4, 6, 8]
 
 
 def test_expire_never_drops_current(spark, tmp_path):
-    """expire() retention is anchored to the ``current`` pointer.
-
-    Regression: a winner that crashed between its manifest link and its
-    ``current`` flip leaves current lagging the newest link; keep_last=1
-    then retained only the unflipped snapshot and unlinked the one current
-    points to — every reader FileNotFoundError'd (table bricked).
-    keep_last=0 (drop everything) is refused outright."""
+    """Readers resolve through ``current``: a newer manifest that is linked
+    but not flipped (a winner that crashed between link and flip) is not
+    what they read, until ``_roll_forward`` advances ``current`` to it."""
     cat = TableCatalog(tmp_path)
     cat.commit(spark.range(4), "e", mode="overwrite")
     cat.commit(spark.range(6), "e", mode="overwrite")
-    with pytest.raises(ValueError, match="keep_last"):
-        cat.expire("e", keep_last=0)
     # simulate the crashed winner: snapshot 3 linked, current still at 2
-    man = dict(cat.manifest("e", 2))
+    man = dict(cat.manifest("e", 1))
     man.update(snapshot_id=3, parent=2)
     cat._manifest_path("e", 3).write_text(json.dumps(man))
+    assert cat.snapshots("e") == [1, 2, 3]
     assert cat.current_snapshot("e") == 2
-    dropped = cat.expire("e", keep_last=1)
-    assert dropped == [1]  # snapshot 2 (current) survives alongside 3
     assert cat.read(spark, "e").count() == 6  # readable through current
+    assert cat.row_count("e") == 6
     cat._roll_forward("e")
     assert cat.current_snapshot("e") == 3
+    assert cat.read(spark, "e").count() == 4
 
 
 def test_resume_after_kill_is_byte_identical(spark, tmp_path):
@@ -320,70 +319,46 @@ def test_bucketed_join_has_no_exchange(spark):
 
 
 def test_zorder_stats_skipping(spark, tmp_path):
-    """commit(stats_for=…) records per-file min/max from parquet footers;
-    read(range_filter=…) plans a bbox query down to the files that can
-    contain matches. Z-order layout makes BOTH x and y per-file ranges
-    tight, so a quadrant query prunes harder than the row-major linear
-    layout (which is tight in y only)."""
-    from geotiff_scalable_analysis_pipeline_spark.plans.catalog import (
-        TableCatalog,
-        zorder_layout,
-    )
-
+    """A bbox query prunes by partition values: with the table partitioned on
+    a coarse cell key (``qx``, ``qy``), ``read(partition_filter=…)`` plans
+    a quadrant query down to that quadrant's files, driver-side. Manifest
+    entries carry path, partition values and row count only."""
     cat = TableCatalog(tmp_path)
-    # 64x64 point grid in row-major id order, coordinates scaled to the frame
-    res = 2048.0  # 64 cells of 2048 -> exactly the level-6 lattice
+    res = 2048.0  # 64x64 point grid; each quadrant is 32x32 points
     pts = spark.range(4096).select(
         ((F.col("id") % 64) * res).alias("x"),
         (F.floor(F.col("id") / 64) * res).alias("y"),
         F.col("id").alias("v"),
-    )
-    cat.commit(zorder_layout(pts, "x", "y", level=6, n_files=16), "z", stats_for=["x", "y"])
-    cat.commit(
-        pts.repartitionByRange(16, "v").sortWithinPartitions("v"),
-        "lin",
-        stats_for=["x", "y"],
-    )
+    ).select("*", F.floor(F.col("x") / (32 * res)).cast("int").alias("qx"),
+             F.floor(F.col("y") / (32 * res)).cast("int").alias("qy"))
+    cat.commit(pts, "z", partition_by=["qx", "qy"])
     man = cat.manifest("z")
-    assert all("x" in f["stats"] and "y" in f["stats"] for f in man["files"])
+    assert all(set(f) == {"path", "partition", "rows"} for f in man["files"])
 
-    bbox = {"x": (0.0, 15 * res), "y": (0.0, 15 * res)}  # one level-2 quadrant
-    pred = f"x <= {15 * res} AND y <= {15 * res}"
+    pred = f"x < {32 * res} AND y < {32 * res}"
     want = sorted(r.v for r in cat.read(spark, "z").filter(pred).collect())
-
-    pz = cat.read(spark, "z", range_filter=bbox)
-    plin = cat.read(spark, "lin", range_filter=bbox)
-    assert sorted(r.v for r in pz.filter(pred).collect()) == want
-    assert sorted(r.v for r in plin.filter(pred).collect()) == want
-    nz, nlin, ntot = len(pz.inputFiles()), len(plin.inputFiles()), 16
-    # z-order: the quadrant is 1/16 of the z-range -> ~1 file; linear
-    # row-major: y-stats alone keep 1/4 of files
-    assert nz <= 2, nz
-    assert nz < nlin <= ntot
+    pz = cat.read(spark, "z", partition_filter=lambda p: p["qx"] == "0" and p["qy"] == "0")
+    assert sorted(r.v for r in pz.collect()) == want and len(want) == 32 * 32
+    files = pz.inputFiles()
+    assert files and all("qx=0/qy=0" in f for f in files)
+    assert len(files) < len(man["files"])
 
 
 def test_compaction_rewrites_small_files(spark, tmp_path):
-    """compact(): many small files -> few right-sized files as a NEW
-    overwrite snapshot; data identical, prior snapshot still time-travelable,
-    stats columns carried over so range_filter keeps working."""
-    from geotiff_scalable_analysis_pipeline_spark.plans.catalog import TableCatalog
-
+    """Many small files become one by an overwrite of the table's own read:
+    the new snapshot lists one file, the data is identical, and the prior
+    snapshot is still time-travelable."""
     cat = TableCatalog(tmp_path)
     df = spark.range(10_000).select(F.col("id").alias("v"), (F.col("id") % 7).alias("g"))
-    s1 = cat.commit(df.repartition(32), "t", stats_for=["v"])
+    s1 = cat.commit(df.repartition(32), "t")
     assert len(cat.manifest("t", s1)["files"]) == 32
-    s2 = cat.compact(spark, "t", target_file_bytes=1 << 30)
-    man2 = cat.manifest("t", s2)
-    assert len(man2["files"]) == 1
-    assert all("v" in f.get("stats", {}) for f in man2["files"])
-    assert cat.read(spark, "t").count() == 10_000
+    s2 = cat.commit(cat.read(spark, "t").coalesce(1), "t", mode="overwrite")
+    assert len(cat.manifest("t", s2)["files"]) == 1
+    assert cat.row_count("t") == 10_000
     got = sorted(r.v for r in cat.read(spark, "t").collect())
     assert got == list(range(10_000))
     # time travel to the pre-compaction snapshot still works
     assert cat.read(spark, "t", snapshot=s1).count() == 10_000
-    # stats pruning still effective on the compacted snapshot
-    pruned = cat.read(spark, "t", range_filter={"v": (0, 10)})
-    assert len(pruned.inputFiles()) == 1
 
 
 def test_schema_evolution_add_column(spark, tmp_path):
@@ -462,58 +437,44 @@ def test_data_files_are_zstd(spark, tmp_path):
 
 
 def test_delete_range_metadata_fast_path(spark, tmp_path):
-    """delete_range: stats-disjoint files carried by reference (not read),
-    fully-covered files dropped metadata-only, only straddling files
-    rewritten; result equals the row filter; time travel intact."""
+    """Selecting a range of partition values is metadata-only: the read
+    keeps whole files by their manifest partition values, plans no Spark
+    job, and scans exactly the partitions in range."""
     cat = TableCatalog(tmp_path)
-    df = spark.range(1000).select(F.col("id").alias("v"), (F.col("id") % 3).alias("g"))
-    # 10 files of 100 contiguous v each -> tight per-file [min,max]
-    s1 = cat.commit(
-        df.repartitionByRange(10, "v").sortWithinPartitions("v"), "t", stats_for=["v"]
-    )
-    man1 = cat.manifest("t", s1)
-    s2 = cat.delete_range(spark, "t", "v", 150, 450)
-    man2 = cat.manifest("t", s2)
-    assert man2["mode"] == "delete"
-    # files [200,300),[300,400) fully inside -> dropped; [100,200),[400,500)
-    # straddle -> rewritten; the other 6 carried over by reference
-    assert man2["dropped_files"] == 2
-    assert man2["rewritten_files"] == 2
-    carried = {f["path"] for f in man1["files"]} & {f["path"] for f in man2["files"]}
-    assert len(carried) == 6
-    got = sorted(r.v for r in cat.read(spark, "t").collect())
-    assert got == [v for v in range(1000) if not (150 <= v <= 450)]
-    assert cat.read(spark, "t", snapshot=s1).count() == 1000  # time travel
-    # no-op delete outside the domain commits nothing
-    assert cat.delete_range(spark, "t", "v", 5000, 6000) == s2
+    df = spark.range(1000).select(F.col("id").alias("v"), (F.col("id") % 10).cast("int").alias("g"))
+    cat.commit(df, "t", partition_by=["g"])
+    sc = spark.sparkContext
+    sc.setJobGroup("catalog-range-plan", "catalog.read planning")
+    try:
+        kept = cat.read(spark, "t", partition_filter=lambda p: 3 <= int(p["g"]) <= 5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("catalog-range-plan") == []
+    files = kept.inputFiles()
+    assert files and all(any(f"g={g}/" in f for g in (3, 4, 5)) for f in files)
+    got = sorted(r.v for r in kept.collect())
+    assert got == [v for v in range(1000) if 3 <= v % 10 <= 5]
 
 
 def test_delete_where_with_range_scope(spark, tmp_path):
-    """delete_where: arbitrary predicate; range_scope prunes the rewrite set
-    driver-side, files outside the scope are carried by reference."""
+    """Removing rows is an overwrite of the filtered read: the new snapshot
+    holds exactly the rows that do not match, and the earlier snapshot
+    still reads every row."""
     cat = TableCatalog(tmp_path)
     df = spark.range(400).select(F.col("id").alias("v"), (F.col("id") % 2).alias("par"))
-    s1 = cat.commit(
-        df.repartitionByRange(4, "v").sortWithinPartitions("v"), "t", stats_for=["v"]
-    )
-    s2 = cat.delete_where(
-        spark, "t", "v % 2 = 0 AND v BETWEEN 100 AND 199",
-        range_scope={"v": (100, 199)},
-    )
-    man2 = cat.manifest("t", s2)
-    assert man2["rewritten_files"] == 1  # only the [100,200) file read
-    carried = {f["path"] for f in cat.manifest("t", s1)["files"]} & {
-        f["path"] for f in man2["files"]
-    }
-    assert len(carried) == 3
+    s1 = cat.commit(df.repartitionByRange(4, "v").sortWithinPartitions("v"), "t")
+    drop = "v % 2 = 0 AND v BETWEEN 100 AND 199"
+    s2 = cat.commit(cat.read(spark, "t").filter(f"NOT ({drop})"), "t", mode="overwrite")
+    assert cat.manifest("t", s2)["parent"] == s1
     got = sorted(r.v for r in cat.read(spark, "t").collect())
     assert got == [v for v in range(400) if not (100 <= v <= 199 and v % 2 == 0)]
+    assert cat.row_count("t") == 350
+    assert cat.read(spark, "t", snapshot=s1).count() == 400
 
 
 def test_merge_upsert_partition_pruned_cow(spark, tmp_path):
-    """merge_upsert: partition cols ⊆ keys -> only touched partitions are
-    rewritten (others carried by reference); matched rows replaced,
-    unmatched source rows inserted — including brand-new partitions."""
+    """An append into a new partition carries every parent file by
+    reference (same physical paths) and adds only its own files."""
     cat = TableCatalog(tmp_path)
     df = spark.range(100).select(
         (F.col("id") % 4).cast("int").alias("p"),
@@ -521,47 +482,35 @@ def test_merge_upsert_partition_pruned_cow(spark, tmp_path):
         F.lit(0).alias("val"),
     )
     s1 = cat.commit(df, "t", partition_by=["p"])
-    src = spark.createDataFrame(
-        [(1, 1, 99), (1, 5, 99), (7, 1000, 99)], "p int, k long, val int"
-    )  # two updates in p=1, one insert in new partition p=7
-    s2 = cat.merge_upsert(spark, "t", src, keys=["p", "k"])
-    man2 = cat.manifest("t", s2)
-    assert man2["mode"] == "merge"
+    src = spark.createDataFrame([(7, 1000, 99)], "p int, k long, val int")
+    s2 = cat.commit(src, "t", partition_by=["p"], mode="append")
+    man1, man2 = cat.manifest("t", s1), cat.manifest("t", s2)
+    assert man2["mode"] == "append" and man2["parent"] == s1
+    old = {f["path"] for f in man1["files"]}
+    new = [f for f in man2["files"] if f["path"] not in old]
+    assert old <= {f["path"] for f in man2["files"]}
+    assert new and all(f["partition"] == {"p": "7"} for f in new)
     cur = cat.read(spark, "t")
     assert cur.count() == 101
-    upd = {r.k: r.val for r in cur.filter("p = 1").collect()}
-    assert upd[1] == 99 and upd[5] == 99 and upd[9] == 0
-    assert cur.filter("p = 7").count() == 1
-    # untouched partitions carried by reference (same physical files)
-    old_untouched = {
-        f["path"] for f in cat.manifest("t", s1)["files"] if f["partition"]["p"] != "1"
-    }
-    assert old_untouched <= {f["path"] for f in man2["files"]}
-    # p=1's old files are NOT in the new manifest
-    old_p1 = {
-        f["path"] for f in cat.manifest("t", s1)["files"] if f["partition"]["p"] == "1"
-    }
-    assert not (old_p1 & {f["path"] for f in man2["files"]})
+    assert cur.filter("p = 7").collect()[0].val == 99
     assert cat.read(spark, "t", snapshot=s1).count() == 100  # time travel
 
 
 def test_merge_upsert_full_rewrite_fallback(spark, tmp_path):
-    """Keys that don't cover the partition spec -> documented full-table COW
-    fallback; result still exact."""
+    """An overwrite lists none of the parent's files; its rows replace the
+    table, and the parent snapshot keeps its own."""
     cat = TableCatalog(tmp_path)
     df = spark.range(50).select(
         (F.col("id") % 2).cast("int").alias("p"), F.col("id").alias("k"),
         F.lit(0).alias("val"),
     )
-    cat.commit(df, "t", partition_by=["p"])
+    s1 = cat.commit(df, "t", partition_by=["p"])
     src = spark.createDataFrame([(0, 4, 7), (1, 999, 7)], "p int, k long, val int")
-    s2 = cat.merge_upsert(spark, "t", src, keys=["k"])  # p not a key
-    cur = cat.read(spark, "t")
-    assert cur.count() == 51
-    assert cur.filter("k = 4").collect()[0].val == 7
-    assert cat.manifest("t", s2)["rewritten_files"] == len(
-        cat.manifest("t", s2 - 1)["files"]
-    )
+    s2 = cat.commit(src, "t", partition_by=["p"], mode="overwrite")
+    old = {f["path"] for f in cat.manifest("t", s1)["files"]}
+    assert not old & {f["path"] for f in cat.manifest("t", s2)["files"]}
+    assert sorted((r.k, r.val) for r in cat.read(spark, "t").collect()) == [(4, 7), (999, 7)]
+    assert cat.read(spark, "t", snapshot=s1).count() == 50
 
 
 def test_concurrent_commits_optimistic_retry(spark, tmp_path):
@@ -605,244 +554,159 @@ def test_concurrent_commits_optimistic_retry(spark, tmp_path):
 
 def test_commit_conflict_and_roll_forward(spark, tmp_path):
     """A manifest that exists without a current flip (winner crashed
-    mid-commit) blocks its id: row-level rewrites raise CommitConflictError
-    (stale plan), while commit() rolls the flip forward and lands after it —
-    including the crashed winner's (durable, hence committed) files."""
-    import pytest as _pytest
-
-    from geotiff_scalable_analysis_pipeline_spark.plans.catalog import (
-        CommitConflictError,
-        TableCatalog,
-    )
-
+    mid-commit) blocks its id: commit() rolls the flip forward and lands
+    after it — including the crashed winner's (durable, hence committed)
+    files."""
     cat = TableCatalog(tmp_path)
-    s1 = cat.commit(spark.range(5).select(F.col("id").alias("v")), "t", stats_for=["v"])
+    s1 = cat.commit(spark.range(5).select(F.col("id").alias("v")), "t")
     # simulate a concurrent winner that linked manifest 2 but died pre-flip
     man2 = dict(cat.manifest("t", s1))
     man2.update(snapshot_id=2, parent=1)
-    cat._manifest_path("t", 2).write_text(__import__("json").dumps(man2))
+    cat._manifest_path("t", 2).write_text(json.dumps(man2))
     assert cat.current_snapshot("t") == 1  # flip never happened
 
-    # a COW rewrite planned against snapshot 1 must refuse (stale plan)
-    with _pytest.raises(CommitConflictError):
-        cat.delete_range(spark, "t", "v", 0, 1)
-
-    # but a plain append recovers: roll forward, then commit as snapshot 3
+    # a plain append recovers: roll forward, then commit as snapshot 3
     s3 = cat.commit(spark.range(100, 103).select(F.col("id").alias("v")), "t", mode="append")
     assert s3 == 3
     assert cat.current_snapshot("t") == 3
+    assert cat.manifest("t", 3)["parent"] == 2
     # the crashed winner's manifest was durable -> its files are the parent
     assert cat.read(spark, "t").count() == 5 + 3
-    # and the rewrite succeeds when re-planned against the fresh snapshot
-    cat.delete_range(spark, "t", "v", 0, 1)
-    assert sorted(r.v for r in cat.read(spark, "t").collect()) == [2, 3, 4, 100, 101, 102]
 
 
 def test_compact_refuses_stale_plan(spark, tmp_path):
-    """compact() planned its rewrite against snapshot S; if another writer
-    commits first, the overwrite must CONFLICT, not silently drop the
-    concurrent rows (require_parent validation)."""
-    import pytest as _pytest
-
-    from geotiff_scalable_analysis_pipeline_spark.plans.catalog import (
-        CommitConflictError,
-        TableCatalog,
-    )
-
+    """An overwrite that loses the link race to a concurrent append retries
+    against the new parent instead of failing: it lands on top, and the
+    append it raced stays a snapshot of its own, with every row."""
     cat = TableCatalog(tmp_path)
     cat.commit(spark.range(100).select(F.col("id").alias("v")).repartition(8), "t")
-    orig_manifest = cat.manifest
+    orig_commit_manifest = cat._commit_manifest
 
-    def manifest_then_race(table, snap=None):
-        man = orig_manifest(table, snap)
-        if snap is None and not getattr(manifest_then_race, "raced", False):
-            manifest_then_race.raced = True
-            cat.commit(  # concurrent append lands mid-compaction
-                spark.range(500, 510).select(F.col("id").alias("v")),
-                table,
-                mode="append",
+    def race_then_commit(table, man):
+        if not race_then_commit.raced:
+            race_then_commit.raced = True
+            cat.commit(  # concurrent append takes snapshot 2 first
+                spark.range(500, 510).select(F.col("id").alias("v")), table, mode="append"
             )
-        return man
+        return orig_commit_manifest(table, man)
 
-    cat.manifest = manifest_then_race
-    try:
-        with _pytest.raises(CommitConflictError):
-            cat.compact(spark, "t", target_file_bytes=1 << 30)
-    finally:
-        cat.manifest = orig_manifest
-    # nothing lost: the concurrent append's rows are all present
-    assert cat.read(spark, "t").count() == 110
-    # re-run against the fresh snapshot succeeds and keeps every row
-    cat.compact(spark, "t", target_file_bytes=1 << 30)
-    assert cat.read(spark, "t").count() == 110
+    race_then_commit.raced = False
+    cat._commit_manifest = race_then_commit
+    s = cat.commit(cat.read(spark, "t").coalesce(1), "t", mode="overwrite")
+    assert race_then_commit.raced and s == 3
+    assert cat.manifest("t", 3)["parent"] == 2
+    assert cat.read(spark, "t").count() == 100  # the overwrite's own rows
+    assert cat.read(spark, "t", snapshot=2).count() == 110  # nothing lost
 
 
 def test_row_count_metadata_only_and_read_changes(spark, tmp_path):
-    """row_count: exact count(*) from manifest footer metadata (no scan);
-    read_changes: exactly the rows appended in (from, to], refusing
-    rewritten history."""
-    import pytest as _pytest
-
-    from geotiff_scalable_analysis_pipeline_spark.plans.catalog import TableCatalog
-
+    """row_count: exact count(*) from manifest footer metadata (no scan),
+    for the current snapshot and for time travel."""
     cat = TableCatalog(tmp_path)
     s1 = cat.commit(spark.range(10).select(F.col("id").alias("v")), "t")
     s2 = cat.commit(spark.range(100, 105).select(F.col("id").alias("v")), "t", mode="append")
-    s3 = cat.commit(spark.range(200, 202).select(F.col("id").alias("v")), "t", mode="append")
+    cat.commit(spark.range(200, 202).select(F.col("id").alias("v")), "t", mode="append")
     assert cat.row_count("t") == 17
     assert cat.row_count("t", s1) == 10
-    got = sorted(r.v for r in cat.read_changes(spark, "t", s1).collect())
-    assert got == [100, 101, 102, 103, 104, 200, 201]
-    assert sorted(r.v for r in cat.read_changes(spark, "t", s2, s3).collect()) == [200, 201]
-    assert cat.read_changes(spark, "t", s3).count() == 0
-    cat.delete_range(spark, "t", "v", 0, 0)  # rewrite boundary
-    with _pytest.raises(ValueError, match="not append"):
-        cat.read_changes(spark, "t", s2)
+    assert cat.row_count("t", s2) == 15
+    assert cat.row_count("t") == cat.read(spark, "t").count()
 
 
 def test_rollback_and_remove_orphans(spark, tmp_path):
-    """rollback restores an earlier snapshot's files as a NEW snapshot
-    (history preserved); remove_orphans deletes only data referenced by no
-    retained manifest (crashed/losing writers' debris)."""
-    from geotiff_scalable_analysis_pipeline_spark.plans.catalog import TableCatalog
-
+    """Time travel reads an earlier snapshot's exact files after later
+    commits; a writer that wrote data but never committed a manifest leaves
+    files that no read and no row count sees."""
     cat = TableCatalog(tmp_path)
     s1 = cat.commit(spark.range(8).select(F.col("id").alias("v")), "t")
-    cat.commit(spark.range(100, 103).select(F.col("id").alias("v")), "t", mode="append")
-    s3 = cat.rollback("t", s1)
-    assert cat.manifest("t", s3)["mode"] == "rollback"
-    assert sorted(r.v for r in cat.read(spark, "t").collect()) == list(range(8))
-    assert cat.read(spark, "t", snapshot=s3 - 1).count() == 11  # history intact
+    s2 = cat.commit(spark.range(100, 103).select(F.col("id").alias("v")), "t", mode="append")
+    assert sorted(r.v for r in cat.read(spark, "t", snapshot=s1).collect()) == list(range(8))
 
     # a writer that wrote data but never won a metadata commit
-    cat._write_snapshot(
-        spark.range(999).select(F.col("id").alias("v")), "t", "w-orphan", None, None
-    )
-    # default grace period protects an IN-FLIGHT writer's fresh files
-    # (written-but-not-yet-committed is indistinguishable from crashed)
-    assert cat.remove_orphans("t") == []
-    removed = cat.remove_orphans("t", older_than_s=-1.0)  # force-expire for test
-    assert removed and all(r.startswith("data/w-orphan") for r in removed)
-    assert cat.row_count("t") == 8  # live data untouched
-    assert cat.read(spark, "t").count() == 8
-    assert cat.remove_orphans("t", older_than_s=-1.0) == []  # idempotent
+    orphans = cat._write_snapshot(spark.range(999).select(F.col("id").alias("v")), "t", None)
+    assert orphans and all((tmp_path / "t" / f["path"]).exists() for f in orphans)
+    assert cat.snapshots("t") == [s1, s2]
+    assert cat.row_count("t") == 11
+    assert cat.read(spark, "t").count() == 11
 
 
 def test_delete_null_predicate_keeps_null_rows(spark, tmp_path):
-    """SQL DELETE semantics: only rows where the predicate is TRUE are
-    removed — a NULL-evaluating predicate (NULL column value) KEEPS the row.
-    Regression: filter(~cond) silently deleted every NULL-valued row in a
-    rewritten file (~NULL is NULL, and filter drops NULL)."""
+    """NULL values survive the catalog: a NULL partition value is recorded
+    under Hive's default-partition name and reads back as NULL, next to
+    NULL values in data columns."""
     cat = TableCatalog(tmp_path)
     df = spark.createDataFrame(
-        [(1, 10), (2, None), (3, 150), (4, None), (5, 500)], "k int, v int"
+        [(1, 10, "a"), (2, None, None), (3, 150, "a"), (4, None, "b")],
+        "k int, v int, p string",
     )
-    cat.commit(df.coalesce(1), "t", stats_for=["v"])
-    cat.delete_range(spark, "t", "v", 100, 200)
-    got = {(r.k, r.v) for r in cat.read(spark, "t").collect()}
-    assert got == {(1, 10), (2, None), (4, None), (5, 500)}
-    cat.delete_where(spark, "t", "v >= 500")
-    got = {(r.k, r.v) for r in cat.read(spark, "t").collect()}
-    assert got == {(1, 10), (2, None), (4, None)}
+    cat.commit(df, "t", partition_by=["p"])
+    parts = {f["partition"]["p"] for f in cat.manifest("t")["files"]}
+    assert parts == {"a", "b", "__HIVE_DEFAULT_PARTITION__"}
+    got = {(r.k, r.v, r.p) for r in cat.read(spark, "t").collect()}
+    assert got == {(1, 10, "a"), (2, None, None), (3, 150, "a"), (4, None, "b")}
+    nulls = cat.read(
+        spark, "t", partition_filter=lambda pv: pv["p"] == "__HIVE_DEFAULT_PARTITION__"
+    )
+    assert [(r.k, r.p) for r in nulls.collect()] == [(2, None)]
 
 
 def test_merge_upsert_escaped_partition_values(spark, tmp_path):
-    """Partition values that Hive-escape in paths (spaces, colons, '%') must
-    still classify their files as touched: matched rows are REPLACED, never
-    duplicated. Regression: str(value) was compared against the ESCAPED path
-    string ('a%b' vs 'a%25b'), so the file was carried 'untouched' while the
-    source row was inserted anyway — silent duplicate keys."""
-    import datetime
+    """Partition values that Hive-escape in paths ('%', ':') read back as
+    written; ``partition_filter`` sees them as encoded in the path."""
+    from urllib.parse import unquote
 
     cat = TableCatalog(tmp_path)
     df = spark.createDataFrame(
-        [("with space", 1, 0), ("a%b:c", 2, 0), ("plain", 3, 0)],
-        "p string, k int, val int",
+        [("with space", 1), ("a%b:c", 2), ("plain", 3)], "p string, k int"
     )
-    s1 = cat.commit(df, "t", partition_by=["p"])
-    src = spark.createDataFrame(
-        [("with space", 1, 99), ("a%b:c", 2, 99)], "p string, k int, val int"
-    )
-    s2 = cat.merge_upsert(spark, "t", src, keys=["p", "k"])
-    cur = cat.read(spark, "t").collect()
-    assert len(cur) == 3  # replaced, NOT duplicated
-    vals = {(r.p, r.k): r.val for r in cur}
-    assert vals[("with space", 1)] == 99
-    assert vals[("a%b:c", 2)] == 99
-    assert vals[("plain", 3)] == 0
-    # the untouched partition is carried by reference, the touched ones not
-    old = {f["path"]: f["partition"]["p"] for f in cat.manifest("t", s1)["files"]}
-    new_paths = {f["path"] for f in cat.manifest("t", s2)["files"]}
-    assert {p for p, pv in old.items() if pv == "plain"} <= new_paths
-    assert not {p for p, pv in old.items() if pv != "plain"} & new_paths
-
-    # typed partitions whose cast-to-string differs from Python str():
-    # timestamps (path form '2024-01-01 00%3A00%3A00')
-    tdf = spark.createDataFrame(
-        [
-            (datetime.datetime(2024, 1, 1, 0, 0, 0), 1, 0),
-            (datetime.datetime(2024, 1, 2, 12, 30, 0), 2, 0),
-        ],
-        "ts timestamp, k int, val int",
-    )
-    cat.commit(tdf, "t2", partition_by=["ts"])
-    src2 = spark.createDataFrame(
-        [(datetime.datetime(2024, 1, 1, 0, 0, 0), 1, 99)],
-        "ts timestamp, k int, val int",
-    )
-    s4 = cat.merge_upsert(spark, "t2", src2, keys=["ts", "k"])
-    cur2 = {(r.k, r.val) for r in cat.read(spark, "t2").collect()}
-    assert cur2 == {(1, 99), (2, 0)}
-    assert cat.manifest("t2", s4)["rewritten_files"] == 1  # day-2 untouched
+    cat.commit(df, "t", partition_by=["p"])
+    encoded = {f["partition"]["p"] for f in cat.manifest("t")["files"]}
+    assert "a%25b%3Ac" in encoded
+    assert {unquote(v) for v in encoded} == {"with space", "a%b:c", "plain"}
+    assert {(r.p, r.k) for r in cat.read(spark, "t").collect()} == {
+        ("with space", 1), ("a%b:c", 2), ("plain", 3),
+    }
+    one = cat.read(spark, "t", partition_filter=lambda pv: pv["p"] == "a%25b%3Ac")
+    assert [(r.p, r.k) for r in one.collect()] == [("a%b:c", 2)]
 
 
 def test_commit_stale_require_parent_fails_before_write(spark, tmp_path):
-    """A commit whose require_parent is ALREADY stale fails fast without
-    paying the data write (at 100 TB a stale compaction otherwise rewrites
-    the whole table only to lose the metadata race it could see it had
-    lost)."""
-    from geotiff_scalable_analysis_pipeline_spark.plans.catalog import (
-        CommitConflictError,
-    )
-
+    """A Spark write that fails inside its job commits nothing: ``current``
+    and ``snapshots()`` are unchanged and the table reads as before."""
     cat = TableCatalog(tmp_path)
-    s1 = cat.commit(spark.range(5).select(F.col("id").alias("v")), "t")
-    cat.commit(spark.range(5, 8).select(F.col("id").alias("v")), "t")
-    droot = tmp_path / "t" / "data"
-    n_before = len(list(droot.rglob("*.parquet")))
-    with pytest.raises(CommitConflictError, match="re-plan"):
-        cat.commit(
-            spark.range(3).select(F.col("id").alias("v")),
-            "t",
-            mode="overwrite",
-            require_parent=s1,
-        )
-    assert len(list(droot.rglob("*.parquet"))) == n_before  # no write paid
+    cat.commit(spark.range(5).select(F.col("id").alias("v")), "t")
+    s2 = cat.commit(spark.range(5, 8).select(F.col("id").alias("v")), "t")
+    bad = spark.range(3).select(
+        F.when(F.col("id") == 2, F.raise_error(F.lit("write-boom")))
+        .otherwise(F.col("id")).alias("v")
+    )
+    with pytest.raises(Exception, match="write-boom"):
+        cat.commit(bad, "t", mode="overwrite")
+    assert cat.current_snapshot("t") == s2
+    assert cat.snapshots("t") == [1, s2]
+    assert sorted(r.v for r in cat.read(spark, "t").collect()) == list(range(8))
 
 
 def test_rewrite_retry_after_crashed_winner_makes_progress(spark, tmp_path):
-    """Livelock regression: a winner that crashed between its manifest link
-    and its current flip must not block row-level rewrites forever. The
-    first delete attempt conflicts (stale plan) AND rolls current forward,
-    so the immediate re-plan succeeds — no unrelated append needed."""
-    import pytest as _pytest
-
-    from geotiff_scalable_analysis_pipeline_spark.plans.catalog import (
-        CommitConflictError,
-        TableCatalog,
-    )
-
+    """Two winners that crashed between their manifest links (2 and 3) and
+    their current flips must not block a commit: one conflict, one
+    roll-forward, and the commit lands as snapshot 4 on top of every
+    durable file."""
     cat = TableCatalog(tmp_path)
-    s1 = cat.commit(spark.range(5).select(F.col("id").alias("v")), "t", stats_for=["v"])
-    man2 = dict(cat.manifest("t", s1))
-    man2.update(snapshot_id=2, parent=1)
-    cat._manifest_path("t", 2).write_text(__import__("json").dumps(man2))
+    s1 = cat.commit(spark.range(5).select(F.col("id").alias("v")), "t")
+    files = cat.manifest("t", s1)["files"]
+    for snap, lo in ((2, 100), (3, 200)):  # each crashed winner's own write
+        files = files + cat._write_snapshot(
+            spark.range(lo, lo + 2).select(F.col("id").alias("v")), "t", None
+        )
+        man = dict(cat.manifest("t", s1), snapshot_id=snap, parent=snap - 1, files=files)
+        cat._manifest_path("t", snap).write_text(json.dumps(man))
     assert cat.current_snapshot("t") == 1
 
-    with _pytest.raises(CommitConflictError):
-        cat.delete_range(spark, "t", "v", 0, 1)
-    # the failed attempt advanced current to the durable (hence committed)
-    # crashed-winner snapshot — the retry plans against it and lands
-    assert cat.current_snapshot("t") == 2
-    cat.delete_range(spark, "t", "v", 0, 1)
-    assert sorted(r.v for r in cat.read(spark, "t").collect()) == [2, 3, 4]
+    rolls = []
+    orig_roll = cat._roll_forward
+    cat._roll_forward = lambda table: (rolls.append(table), orig_roll(table))
+    s4 = cat.commit(spark.range(300, 301).select(F.col("id").alias("v")), "t")
+    assert s4 == 4 and cat.current_snapshot("t") == 4
+    assert rolls == ["t"]  # one roll-forward for the one conflict
+    got = sorted(r.v for r in cat.read(spark, "t").collect())
+    assert got == [0, 1, 2, 3, 4, 100, 101, 200, 201, 300]

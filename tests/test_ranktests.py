@@ -89,17 +89,23 @@ def test_null_values_and_other_groups_ignored(spark):
     assert (r["n_a"], r["n_b"]) == (2, 1)
 
 
-def test_nan_values_ignored_like_null(spark):
+def test_nan_values_ignored_like_null(spark, duck):
     """NaN is dropped alongside NULL (ADVICE r5): NaN != NaN would make
     each NaN its own tie block in the numpy fold while SQL per-value
     grouping collapses them, so the operator's contract is to ignore
     non-comparable values entirely — the result over data containing NaN
-    equals the result over the same data with NaN rows removed."""
+    equals the result over the same data with NaN rows removed, and the
+    DuckDB mirror drops the same rows."""
     nan = float("nan")
     extra = [("a", nan), ("b", nan), ("b", nan)]
     r = _run(spark, [1, 2, 5], [3, 4], extra=extra)
     clean = _run(spark, [1, 2, 5], [3, 4])
     assert tuple(r) == tuple(clean)
+    rows = [("a", float(v)) for v in (1, 2, 5)] + [("b", float(v)) for v in (3, 4)]
+    values = ", ".join(f"('{g}', '{v}'::DOUBLE)" for g, v in rows + extra)
+    source = f"SELECT * FROM (VALUES {values}) t(grp, val)"
+    sql = ranktests.rank_tests_2sample_sql(source, "grp", "val", "a", "b")
+    assert duck.execute(sql).fetchone() == tuple(r)
     na, nb, u2a, u2b, ks = _ref([1, 2, 5], [3, 4])
     assert (r["n_a"], r["n_b"], r["u2_a"], r["u2_b"], r["ks_num"]) == (
         na, nb, u2a, u2b, ks,

@@ -1,6 +1,7 @@
 """``scripts/run_job.py --job report`` run in-process: every reporter the
-report job calls writes its artifact, and the artifacts hold what the
-engine computed."""
+report job calls writes its artifact, the artifacts hold what the engine
+computed, and a re-run into the same directory leaves one copy of each
+chunk."""
 
 import importlib.util
 import json
@@ -11,6 +12,7 @@ import numpy as np
 from geotiff_scalable_analysis_pipeline_spark import datagen as dg
 from geotiff_scalable_analysis_pipeline_spark.formats import tiff
 from geotiff_scalable_analysis_pipeline_spark.operators import chunking
+from geotiff_scalable_analysis_pipeline_spark.plans.catalog import TableCatalog
 
 RUN_JOB = Path(__file__).resolve().parent.parent / "scripts" / "run_job.py"
 
@@ -23,7 +25,13 @@ def _run_job_module():
 
 
 def test_report_job_writes_every_reporter(spark, tmp_path):
-    summary = _run_job_module().report(spark, tmp_path, 4)
+    job = _run_job_module()
+    first = job.report(spark, tmp_path, 4)
+    n_chunks = TableCatalog(tmp_path).row_count("prob_chunks")
+    # a re-run into the same directory replaces the table, never appends to it
+    summary = job.report(spark, tmp_path, 4)
+    assert summary["snapshot"] == first["snapshot"] + 1
+    assert TableCatalog(tmp_path).row_count("prob_chunks") == n_chunks > 0
     assert summary["job"] == "report" and summary["tiles"] == 4
     assert not spark.sparkContext._jsc.sc().isStopped()  # the caller owns the session
 

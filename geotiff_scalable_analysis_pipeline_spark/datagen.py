@@ -29,6 +29,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.rows import map_rows
+
 M1 = 2654435761  # Knuth multiplicative hash constant
 M2 = 40503
 M3 = 2246822519  # xxhash PRIME32_2
@@ -600,8 +602,6 @@ def multimodal_df(spark: SparkSession, n: int = 60) -> DataFrame:
     with REAL wire-format payloads: id%3==0 → PNG image, 1 → WAV PCM16
     audio, 2 → PNG-frame video container. Encoded in a mapInPandas (same
     distribution discipline as media_df's GeoTIFF payloads)."""
-    import pandas as pd
-
     base = spark.range(n).select(
         F.col("id"),
         F.concat(F.lit("mm"), F.lpad(F.col("id").cast("string"), 6, "0")).alias("media_ref"),
@@ -617,39 +617,28 @@ def multimodal_df(spark: SparkSession, n: int = 60) -> DataFrame:
     r, c, ch = np.meshgrid(np.arange(MM_H), np.arange(MM_W), np.arange(MM_C), indexing="ij")
     samp_n = np.arange(MM_RATE)
 
-    def enc(it):
+    def enc(k, ref, mod, *dims):
         from .formats import png, wav
         from .operators.multimodal import encode_video
 
-        for pdf in it:
-            payloads = []
-            for k, mod in zip(pdf["id"], pdf["modality"]):
-                k = int(k)
-                if mod == "image":
-                    payloads.append(png.encode(mm_pix_np(k, r, c, ch).astype(np.uint8)))
-                elif mod == "audio":
-                    payloads.append(
-                        wav.encode(mm_sample_np(k, samp_n).astype(np.int16), MM_RATE)
-                    )
-                else:
-                    frames = np.stack(
-                        [
-                            mm_pix_np(k * 64 + f, r, c, ch).astype(np.uint8)
-                            for f in range(MM_FRAMES)
-                        ]
-                    )
-                    payloads.append(encode_video(frames))
-            out = pdf.drop(columns=["id"]).copy()
-            out["payload"] = payloads
-            yield out[
-                ["media_ref", "modality", "width", "height",
-                 "n_frames", "sample_rate", "payload"]
-            ]
+        k = int(k)
+        if mod == "image":
+            payload = png.encode(mm_pix_np(k, r, c, ch).astype(np.uint8))
+        elif mod == "audio":
+            payload = wav.encode(mm_sample_np(k, samp_n).astype(np.int16), MM_RATE)
+        else:
+            frames = np.stack(
+                [mm_pix_np(k * 64 + f, r, c, ch).astype(np.uint8) for f in range(MM_FRAMES)]
+            )
+            payload = encode_video(frames)
+        yield ref, mod, *dims, payload
 
-    return base.repartition(max(2, n // 32)).mapInPandas(
-        enc,
+    return map_rows(
+        base.repartition(max(2, n // 32)),
+        base.columns,
         "media_ref string, modality string, width int, height int, "
         "n_frames int, sample_rate int, payload binary",
+        enc,
     )
 
 
@@ -707,8 +696,6 @@ def proc_baseline_np(tile_k: np.ndarray) -> np.ndarray:
 def media_df(spark: SparkSession, cfg: GoldenConfig = GOLDEN, n: int | None = None) -> DataFrame:
     """(media_ref, tile_k, proc_baseline, payload BINARY) — payloads encoded in
     a mapInPandas so the work is distributed and Arrow-batched."""
-    import pandas as pd
-
     n = n if n is not None else cfg.n_media_tiles
     base = tiles_df(spark, cfg).filter(F.col("tile_k") < n).select(
         "tile_k",
@@ -721,27 +708,17 @@ def media_df(spark: SparkSession, cfg: GoldenConfig = GOLDEN, n: int | None = No
     px, nb, psz = cfg.tile_px, cfg.n_bands, cfg.px_size
     band, r, c = np.meshgrid(np.arange(nb), np.arange(px), np.arange(px), indexing="ij")
 
-    def encode_batch(it):
+    def encode(tile_k, ref, x0, y1, baseline):
         from .formats import tiff
 
-        for pdf in it:
-            payloads = []
-            for tile_k, x0, y1 in zip(pdf["tile_k"], pdf["x0"], pdf["y1"]):
-                data = dn_np(np.int64(tile_k), band, r, c).astype(np.uint16)
-                payloads.append(
-                    tiff.encode(data, pixel_scale=(float(psz), float(psz)),
-                                tiepoint=(float(x0), float(y1)))
-                )
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "tile_k": pdf["tile_k"],
-                    "proc_baseline": pdf["proc_baseline"],
-                    "payload": payloads,
-                }
-            )
+        data = dn_np(np.int64(tile_k), band, r, c).astype(np.uint16)
+        yield ref, tile_k, baseline, tiff.encode(
+            data, pixel_scale=(float(psz), float(psz)), tiepoint=(float(x0), float(y1))
+        )
 
-    return base.repartition(max(2, n // 64)).mapInPandas(
-        encode_batch,
+    return map_rows(
+        base.repartition(max(2, n // 64)),
+        base.columns,
         "media_ref string, tile_k long, proc_baseline int, payload binary",
+        encode,
     )

@@ -37,6 +37,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .rows import map_rows
+
 # ---------------------------------------------------------------------------
 # numpy kernels (shared by the Spark UDFs and the pytest oracle)
 # ---------------------------------------------------------------------------
@@ -195,7 +197,7 @@ def chunk_class_stats(
     patch: int,
     stride: int,
 ) -> DataFrame:
-    """Full per-chunk raster pipeline inside one grouped-map UDF.
+    """Full per-chunk raster pipeline inside one map UDF.
 
     decode the tile once → calibrate → clamp + reflect-pad each chunk's
     halo window → patches (tail rule) → class scores (R6 stand-in) →
@@ -204,33 +206,25 @@ def chunk_class_stats(
     (``iter_chunk_probs``) — mirroring the reference writer process, but
     per task.
     """
-    import pandas as pd
 
-    def run(batches):
-        for pdf in batches:
-            yield _run_batch(pdf)
-
-    def _run_batch(pdf: pd.DataFrame):
-        out = {k: [] for k in (
-            "media_ref", "chunk_r", "chunk_c", "class", "zor_sum", "zor_cnt",
-            "zor_min", "zor_max",
-        )}
-        for ref, baseline, payload in zip(pdf["media_ref"], pdf["proc_baseline"], pdf["payload"]):
-            for r0, c0, zorp in iter_chunk_probs(bytes(payload), baseline, zor, halo, patch, stride):
-                nc = zorp.shape[0]
-                out["media_ref"] += [ref] * nc
-                out["chunk_r"] += [r0] * nc
-                out["chunk_c"] += [c0] * nc
-                out["class"] += list(range(nc))
-                out["zor_sum"] += zorp.sum(axis=(1, 2), dtype=np.float64).tolist()
-                out["zor_cnt"] += [zorp.shape[1] * zorp.shape[2]] * nc
-                out["zor_min"] += zorp.min(axis=(1, 2)).astype(np.float64).tolist()
-                out["zor_max"] += zorp.max(axis=(1, 2)).astype(np.float64).tolist()
-        return pd.DataFrame(out)
+    def per_tile(ref, baseline, payload):
+        for r0, c0, zorp in iter_chunk_probs(bytes(payload), baseline, zor, halo, patch, stride):
+            nc = zorp.shape[0]
+            yield from zip(
+                [ref] * nc,
+                [r0] * nc,
+                [c0] * nc,
+                range(nc),
+                zorp.sum(axis=(1, 2), dtype=np.float64).tolist(),
+                [zorp.shape[1] * zorp.shape[2]] * nc,
+                zorp.min(axis=(1, 2)).astype(np.float64).tolist(),
+                zorp.max(axis=(1, 2)).astype(np.float64).tolist(),
+            )
 
     # media_ref is the PK: rows are independent → mapInPandas (no shuffle,
     # unlike a grouped applyInPandas, which would hash-repartition the blobs)
-    sel = media.select("media_ref", "proc_baseline", "payload")
+    cols = ("media_ref", "proc_baseline", "payload")
+    sel = media.select(*cols)
     # Spread a narrow input over the cores: a `limit()` upstream collapses
     # the plan to ONE partition (GlobalLimit), serializing the whole
     # decode+chunk UDF (measured 1.3 s → 0.65 s at 256 tiles / local[32]
@@ -244,7 +238,7 @@ def chunk_class_stats(
     cores = media.sparkSession.sparkContext.defaultParallelism
     if small_enough_to_broadcast((sel, 1)) and planned_partitions(sel) < cores:
         sel = sel.repartition(cores)
-    return sel.mapInPandas(run, CHUNK_CLASS_SCHEMA)
+    return map_rows(sel, cols, CHUNK_CLASS_SCHEMA, per_tile)
 
 
 CHUNK_PROB_SCHEMA = (
@@ -265,30 +259,13 @@ def chunk_prob_payloads(
     per-chunk BINARY cells committed through the table catalog (disjoint
     ZoR windows ⇒ any subset of chunks is a valid partial mosaic);
     ``sources.sinks.export_probability_geotiffs`` reassembles + encodes."""
-    import pandas as pd
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_ref", "chunk_r", "chunk_c", "n_classes", "h", "w", "payload",
-            )}
-            for ref, baseline, payload in zip(
-                pdf["media_ref"], pdf["proc_baseline"], pdf["payload"]
-            ):
-                for r0, c0, zorp in iter_chunk_probs(
-                    bytes(payload), baseline, zor, halo, patch, stride
-                ):
-                    out["media_ref"].append(ref)
-                    out["chunk_r"].append(r0)
-                    out["chunk_c"].append(c0)
-                    out["n_classes"].append(zorp.shape[0])
-                    out["h"].append(zorp.shape[1])
-                    out["w"].append(zorp.shape[2])
-                    out["payload"].append(np.ascontiguousarray(zorp).tobytes())
-            yield pd.DataFrame(out)
+    def per_tile(ref, baseline, payload):
+        for r0, c0, zorp in iter_chunk_probs(bytes(payload), baseline, zor, halo, patch, stride):
+            yield ref, r0, c0, *zorp.shape, np.ascontiguousarray(zorp).tobytes()
 
-    return media.select("media_ref", "proc_baseline", "payload").mapInPandas(
-        run, CHUNK_PROB_SCHEMA
+    return map_rows(
+        media, ("media_ref", "proc_baseline", "payload"), CHUNK_PROB_SCHEMA, per_tile
     )
 
 
@@ -330,36 +307,16 @@ def chunk_metric_payloads(prob_chunks: DataFrame) -> DataFrame:
     (ZoR windows are disjoint), so the metric computation needs no shuffle
     at any scale — ``sources.sinks.export_metric_geotiffs`` does the
     windowed placement driver-side at export time."""
-    import pandas as pd
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_ref", "chunk_r", "chunk_c", "h", "w",
-                "class_payload", "conf_payload", "entr_payload", "gap_payload",
-            )}
-            for ref, r0, c0, nc, h, w, payload in zip(
-                pdf["media_ref"], pdf["chunk_r"], pdf["chunk_c"],
-                pdf["n_classes"], pdf["h"], pdf["w"], pdf["payload"],
-            ):
-                probs = np.frombuffer(bytes(payload), dtype=np.float32).reshape(
-                    int(nc), int(h), int(w)
-                )
-                dom, conf, entr, gap = pixel_metrics_np(probs)
-                out["media_ref"].append(ref)
-                out["chunk_r"].append(int(r0))
-                out["chunk_c"].append(int(c0))
-                out["h"].append(int(h))
-                out["w"].append(int(w))
-                out["class_payload"].append(dom.tobytes())
-                out["conf_payload"].append(conf.tobytes())
-                out["entr_payload"].append(entr.tobytes())
-                out["gap_payload"].append(gap.tobytes())
-            yield pd.DataFrame(out)
+    def per_chunk(ref, r0, c0, nc, h, w, payload):
+        probs = np.frombuffer(bytes(payload), dtype=np.float32).reshape(
+            int(nc), int(h), int(w)
+        )
+        planes = pixel_metrics_np(probs)
+        yield (ref, int(r0), int(c0), int(h), int(w), *(p.tobytes() for p in planes))
 
-    return prob_chunks.select(
-        "media_ref", "chunk_r", "chunk_c", "n_classes", "h", "w", "payload"
-    ).mapInPandas(run, CHUNK_METRIC_SCHEMA)
+    cols = ("media_ref", "chunk_r", "chunk_c", "n_classes", "h", "w", "payload")
+    return map_rows(prob_chunks, cols, CHUNK_METRIC_SCHEMA, per_chunk)
 
 
 def class_metrics(global_probs: DataFrame) -> DataFrame:

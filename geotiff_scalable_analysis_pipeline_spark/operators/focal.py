@@ -33,7 +33,8 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .rows import map_rows
 
 FOCAL_STATS_SCHEMA = (
     "media_ref string, band int, n_px long, sum_fm long, min_fm int, max_fm int"
@@ -56,62 +57,40 @@ def _strip_bounds(d: int, px: int, radius: int) -> tuple[int, int]:
     return 0, px
 
 
-def _make_exchange(grid_cols: int, grid_rows: int, px: int, r: int):
-    """Build the perimeter-only halo-exchange mapInPandas closure shared by
-    every focal operator (mean, gradient): one decode pass per tile emits
-    its core plus the O(radius·px) strips each in-mosaic neighbor needs."""
+def _exchange(media: DataFrame, grid_cols: int, grid_rows: int, px: int, r: int) -> DataFrame:
+    """The perimeter-only halo exchange shared by every focal operator
+    (mean, median, gradient): one decode pass per tile emits its core plus
+    the O(radius·px) strips each in-mosaic neighbor needs."""
 
-    def exchange(it):
-        import pandas as pd
-
+    def per_tile(ref, tile_k, payload):
         from ..formats import tiff
 
-        for pdf in it:
-            out = {k: [] for k in (
-                "tgt_row", "tgt_col", "kind", "dr", "dc", "media_ref", "blob",
-            )}
-            for ref, tile_k, payload in zip(
-                pdf["media_ref"], pdf["tile_k"], pdf["payload"]
-            ):
-                if not (0 <= int(tile_k) < grid_rows * grid_cols):
-                    # an out-of-mosaic tile would otherwise mail halo strips
-                    # into in-range neighbors (tile_k = R·C has grow == R,
-                    # whose dr=−1 strip PASSES the bounds check) and corrupt
-                    # their focal means silently
-                    raise ValueError(
-                        f"tile_k={int(tile_k)} outside the declared "
-                        f"{grid_rows}×{grid_cols} mosaic"
-                    )
-                arr, _ = tiff.decode(bytes(payload))
-                a = np.ascontiguousarray(arr.astype(np.uint16))
-                grow, gcol = int(tile_k) // grid_cols, int(tile_k) % grid_cols
-                out["tgt_row"].append(grow)
-                out["tgt_col"].append(gcol)
-                out["kind"].append(0)
-                out["dr"].append(0)
-                out["dc"].append(0)
-                out["media_ref"].append(ref)
-                out["blob"].append(a.tobytes())
-                for dr in (-1, 0, 1):
-                    for dc in (-1, 0, 1):
-                        if dr == 0 and dc == 0:
-                            continue
-                        tr, tc = grow + dr, gcol + dc
-                        if not (0 <= tr < grid_rows and 0 <= tc < grid_cols):
-                            continue
-                        r0, r1 = _strip_bounds(dr, px, r)
-                        c0, c1 = _strip_bounds(dc, px, r)
-                        strip = np.ascontiguousarray(a[:, r0:r1, c0:c1])
-                        out["tgt_row"].append(tr)
-                        out["tgt_col"].append(tc)
-                        out["kind"].append(1)
-                        out["dr"].append(dr)
-                        out["dc"].append(dc)
-                        out["media_ref"].append(ref)
-                        out["blob"].append(strip.tobytes())
-            yield pd.DataFrame(out)
+        if not (0 <= int(tile_k) < grid_rows * grid_cols):
+            # an out-of-mosaic tile would otherwise mail halo strips
+            # into in-range neighbors (tile_k = R·C has grow == R,
+            # whose dr=−1 strip PASSES the bounds check) and corrupt
+            # their focal means silently
+            raise ValueError(
+                f"tile_k={int(tile_k)} outside the declared "
+                f"{grid_rows}×{grid_cols} mosaic"
+            )
+        arr, _ = tiff.decode(bytes(payload))
+        a = np.ascontiguousarray(arr.astype(np.uint16))
+        grow, gcol = int(tile_k) // grid_cols, int(tile_k) % grid_cols
+        yield grow, gcol, 0, 0, 0, ref, a.tobytes()
+        for dr in (-1, 0, 1):
+            for dc in (-1, 0, 1):
+                if dr == 0 and dc == 0:
+                    continue
+                tr, tc = grow + dr, gcol + dc
+                if not (0 <= tr < grid_rows and 0 <= tc < grid_cols):
+                    continue
+                r0, r1 = _strip_bounds(dr, px, r)
+                c0, c1 = _strip_bounds(dc, px, r)
+                strip = np.ascontiguousarray(a[:, r0:r1, c0:c1])
+                yield tr, tc, 1, dr, dc, ref, strip.tobytes()
 
-    return exchange
+    return map_rows(media, ("media_ref", "tile_k", "payload"), _EXCHANGE_SCHEMA, per_tile)
 
 
 def _assemble_padded(pdf, px: int, r: int):
@@ -202,12 +181,8 @@ def focal_stats(
             rows["max_fm"].append(int(fm.max()))
         return pd.DataFrame(rows)
 
-    exchanged = media.select("media_ref", "tile_k", "payload").mapInPandas(
-        _make_exchange(grid_cols, grid_rows, px, r), _EXCHANGE_SCHEMA
-    )
-    return exchanged.groupBy("tgt_row", "tgt_col").applyInPandas(
-        assemble, FOCAL_STATS_SCHEMA
-    )
+    exchanged = _exchange(media, grid_cols, grid_rows, px, r)
+    return exchanged.groupBy("tgt_row", "tgt_col").applyInPandas(assemble, FOCAL_STATS_SCHEMA)
 
 
 MEDIAN_STATS_SCHEMA = (
@@ -284,12 +259,8 @@ def focal_median_stats(
             rows["max_med"].append(int(med.max()))
         return pd.DataFrame(rows)
 
-    exchanged = media.select("media_ref", "tile_k", "payload").mapInPandas(
-        _make_exchange(grid_cols, grid_rows, px, r), _EXCHANGE_SCHEMA
-    )
-    return exchanged.groupBy("tgt_row", "tgt_col").applyInPandas(
-        assemble, MEDIAN_STATS_SCHEMA
-    )
+    exchanged = _exchange(media, grid_cols, grid_rows, px, r)
+    return exchanged.groupBy("tgt_row", "tgt_col").applyInPandas(assemble, MEDIAN_STATS_SCHEMA)
 
 
 GRADIENT_STATS_SCHEMA = (
@@ -346,9 +317,5 @@ def focal_gradient_stats(
             rows["max_g2"].append(int(g2[valid].max()) if valid.any() else 0)
         return pd.DataFrame(rows)
 
-    exchanged = media.select("media_ref", "tile_k", "payload").mapInPandas(
-        _make_exchange(grid_cols, grid_rows, px, r), _EXCHANGE_SCHEMA
-    )
-    return exchanged.groupBy("tgt_row", "tgt_col").applyInPandas(
-        assemble, GRADIENT_STATS_SCHEMA
-    )
+    exchanged = _exchange(media, grid_cols, grid_rows, px, r)
+    return exchanged.groupBy("tgt_row", "tgt_col").applyInPandas(assemble, GRADIENT_STATS_SCHEMA)

@@ -126,9 +126,6 @@ def knn_join(
     runs under those confs for the duration; fine for a single-tenant
     job/bench session, serialize calls if the session is shared.
     """
-    import os as _os
-
-    dbg = _os.environ.get("GSAP_KNN_DEBUG") == "1"
     cached: list[DataFrame] = []
 
     tgt = targets.select(
@@ -241,11 +238,11 @@ def knn_join(
     spark.conf.set(p_key, str(n_part))
     try:
         if n_targets < BLOCK_PASS_MIN_TARGETS:
-            out = _oneshot_knn(q, tgt, k, glevel, target_id, n_targets, dbg, cached, grid_rows)
+            out = _oneshot_knn(q, tgt, k, glevel, target_id, n_targets, cached, grid_rows)
         else:
             finished, escalated = _block_knn(
                 queries.sparkSession, q, tgt, k, target_id, targets.schema[target_id].dataType,
-                bbox_units, n_targets, dbg, cached,
+                bbox_units, n_targets, cached,
             )
             # escalated carries each failed query's kth-so-far from the block
             # pass (a valid upper bound on the true kth — it came from a
@@ -254,7 +251,7 @@ def knn_join(
             # (blocks with fewer than k targets) get theirs from the
             # count-grid oracle.
             rescued = _oneshot_knn(
-                q.join(escalated, "q_id"), tgt, k, glevel, target_id, n_targets, dbg,
+                q.join(escalated, "q_id"), tgt, k, glevel, target_id, n_targets,
                 cached, grid_rows,
             )
             out = finished.unionByName(rescued)
@@ -283,7 +280,7 @@ def knn_join(
     return out
 
 
-def _block_knn(spark, q, tgt, k, target_id, target_id_type, bbox_units, n_targets, dbg, cached):
+def _block_knn(spark, q, tgt, k, target_id, target_id_type, bbox_units, n_targets, cached):
     """One-shuffle block-local exact kNN; returns (finished_df, escalated)
     where escalated = (q_id, _kth0) — the failed queries with their kth-so-far
     squared distance (null when the block held fewer than k targets).
@@ -487,21 +484,10 @@ def _block_knn(spark, q, tgt, k, target_id, target_id_type, bbox_units, n_target
         .groupBy("q_id")
         .agg(F.max(F.when(F.col("rank") == k, F.col("dist_sq"))).alias("_kth0"))
     )
-    if dbg:
-        import sys
-
-        n_esc = escalated.count()
-        print(
-            f"# knn block pass: blocks={nb}x{nb} halo={halo:.0f} escalated={n_esc}",
-            file=sys.stderr,
-            flush=True,
-        )
     return finished, escalated
 
 
-
-
-def _oneshot_knn(q, tgt, k, glevel, target_id, n_targets, dbg, cached, grid_rows=None):
+def _oneshot_knn(q, tgt, k, glevel, target_id, n_targets, cached, grid_rows=None):
     """Single-action exact kNN finish: per-query provably-sufficient radius →
     one disk explode → one cell equi-join → one aggregate top-k.
 

@@ -22,6 +22,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .rows import map_rows
+
 MODALITY_SCHEMA = (
     "media_ref string, modality string, width int, height int, n_frames int, "
     "sample_rate int, payload binary"
@@ -97,27 +99,21 @@ def image_pixel_stats(media: DataFrame) -> DataFrame:
     DuckDB oracle can recompute the same numbers from the generating pixel
     formula without touching the codec — any decode defect (filter reversal,
     CRC, channel order) breaks the pairing."""
-    import pandas as pd
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("media_ref", "ch", "cnt", "sum_px", "min_px", "max_px")}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                arr = decode_payload(bytes(payload), "image").astype(np.int64)
-                h, w, nc = arr.shape
-                out["media_ref"] += [ref] * nc
-                out["ch"] += list(range(nc))
-                out["cnt"] += [h * w] * nc
-                out["sum_px"] += arr.sum(axis=(0, 1)).tolist()
-                out["min_px"] += arr.min(axis=(0, 1)).tolist()
-                out["max_px"] += arr.max(axis=(0, 1)).tolist()
-            yield pd.DataFrame(out)
+    def per_image(ref, payload):
+        arr = decode_payload(bytes(payload), "image").astype(np.int64)
+        h, w, nc = arr.shape
+        yield from zip(
+            [ref] * nc,
+            range(nc),
+            [h * w] * nc,
+            arr.sum(axis=(0, 1)).tolist(),
+            arr.min(axis=(0, 1)).tolist(),
+            arr.max(axis=(0, 1)).tolist(),
+        )
 
-    return (
-        media.filter(F.col("modality") == "image")
-        .select("media_ref", "payload")
-        .mapInPandas(run, PIXEL_STATS_SCHEMA)
-    )
+    images = media.filter(F.col("modality") == "image")
+    return map_rows(images, ("media_ref", "payload"), PIXEL_STATS_SCHEMA, per_image)
 
 
 AUDIO_STATS_SCHEMA = "media_ref string, n_samples long, sum_pcm long, min_pcm int, max_pcm int"
@@ -127,28 +123,16 @@ def audio_sample_stats(media: DataFrame) -> DataFrame:
     """WAV payloads → integer PCM stats per media_ref (decode-exact pairing,
     same discipline as image_pixel_stats — stats on the raw int16 samples,
     not the float normalization, so the oracle stays integer-exact)."""
-    import pandas as pd
 
-    from ..formats import wav
+    def per_clip(ref, payload):
+        from ..formats import wav
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("media_ref", "n_samples", "sum_pcm", "min_pcm", "max_pcm")}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                samples, _rate = wav.decode(bytes(payload))
-                s = samples.astype(np.int64)
-                out["media_ref"].append(ref)
-                out["n_samples"].append(s.shape[0])
-                out["sum_pcm"].append(int(s.sum()))
-                out["min_pcm"].append(int(s.min()))
-                out["max_pcm"].append(int(s.max()))
-            yield pd.DataFrame(out)
+        samples, _rate = wav.decode(bytes(payload))
+        s = samples.astype(np.int64)
+        yield ref, s.shape[0], int(s.sum()), int(s.min()), int(s.max())
 
-    return (
-        media.filter(F.col("modality") == "audio")
-        .select("media_ref", "payload")
-        .mapInPandas(run, AUDIO_STATS_SCHEMA)
-    )
+    clips = media.filter(F.col("modality") == "audio")
+    return map_rows(clips, ("media_ref", "payload"), AUDIO_STATS_SCHEMA, per_clip)
 
 
 VIDEO_STATS_SCHEMA = "media_ref string, frame int, sum_px long"
@@ -157,21 +141,11 @@ VIDEO_STATS_SCHEMA = "media_ref string, frame int, sum_px long"
 def video_frame_stats(media: DataFrame) -> DataFrame:
     """Video containers → per-frame pixel sums (exercises the container walk
     + per-frame PNG decode)."""
-    import pandas as pd
 
-    def run(batches):
-        for pdf in batches:
-            out = {"media_ref": [], "frame": [], "sum_px": []}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                arr = decode_payload(bytes(payload), "video").astype(np.int64)
-                sums = arr.sum(axis=(1, 2, 3))
-                out["media_ref"] += [ref] * len(sums)
-                out["frame"] += list(range(len(sums)))
-                out["sum_px"] += sums.tolist()
-            yield pd.DataFrame(out)
+    def per_video(ref, payload):
+        arr = decode_payload(bytes(payload), "video").astype(np.int64)
+        sums = arr.sum(axis=(1, 2, 3)).tolist()
+        yield from zip([ref] * len(sums), range(len(sums)), sums)
 
-    return (
-        media.filter(F.col("modality") == "video")
-        .select("media_ref", "payload")
-        .mapInPandas(run, VIDEO_STATS_SCHEMA)
-    )
+    videos = media.filter(F.col("modality") == "video")
+    return map_rows(videos, ("media_ref", "payload"), VIDEO_STATS_SCHEMA, per_video)

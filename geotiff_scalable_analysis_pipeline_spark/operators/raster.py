@@ -22,100 +22,39 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .rows import map_rows
+
 PIXEL_STATS_SCHEMA = (
     "media_ref string, band int, cnt long, sum_dn long, sum_sq long, "
     "min_dn int, max_dn int, sum_cal long, mean_dn double, mean_refl double"
 )
 
 HIST_BINS = 16
-HIST_SCHEMA = "media_ref string, band int, bin int, cnt long"
-
-_STATS_KEYS = (
-    "media_ref", "band", "cnt", "sum_dn", "sum_sq", "min_dn", "max_dn",
-    "sum_cal", "mean_dn", "mean_refl",
-)
-
-
-def _append_band_stats(rows: dict, ref, baseline, a: np.ndarray) -> None:
-    """Append one row per band of the calibration + integer-exact stats for a
-    decoded (nb, H, W) int64 array. THE single definition of the radiometric
-    rule (baseline ≥ 400 → max(DN−1000, 0)) and the nine stats columns —
-    shared by the fused and unfused operators so they cannot drift."""
-    cal = np.maximum(a - 1000, 0) if baseline >= 400 else a
-    nb = a.shape[0]
-    cnt = a.shape[1] * a.shape[2]
-    s = a.sum(axis=(1, 2))
-    ss = (a * a).sum(axis=(1, 2))
-    sc = cal.sum(axis=(1, 2))
-    rows["media_ref"] += [ref] * nb
-    rows["band"] += list(range(nb))
-    rows["cnt"] += [cnt] * nb
-    rows["sum_dn"] += s.tolist()
-    rows["sum_sq"] += ss.tolist()
-    rows["min_dn"] += a.min(axis=(1, 2)).tolist()
-    rows["max_dn"] += a.max(axis=(1, 2)).tolist()
-    rows["sum_cal"] += sc.tolist()
-    rows["mean_dn"] += (s / cnt).tolist()
-    rows["mean_refl"] += (sc / (10000.0 * cnt)).tolist()
-
-
-def _dense_hists(a: np.ndarray, bins: int, dn_max: int) -> list[np.ndarray]:
-    """Per-band dense histograms under THE single bin rule
-    ``bin = DN·bins // (dn_max+1)`` (exact parity with the SQL oracle)."""
-    binned = (a * bins) // (dn_max + 1)
-    return [np.bincount(binned[b].ravel(), minlength=bins) for b in range(a.shape[0])]
 
 
 def tile_pixel_stats(media: DataFrame) -> DataFrame:
     """One row per (media_ref, band): integer-exact pixel statistics.
 
-    Input: (media_ref, proc_baseline, payload BINARY). The decode + stats run
-    per Arrow batch; per-pixel data never leaves the UDF.
+    Input: (media_ref, proc_baseline, payload BINARY). The stats columns of
+    :func:`tile_stats_and_histogram`, so both share one decode UDF; per-pixel
+    data never leaves it.
     """
-    import pandas as pd
-
-    def stats(it):
-        from ..formats import tiff
-
-        for pdf in it:
-            rows = {k: [] for k in _STATS_KEYS}
-            for ref, baseline, payload in zip(
-                pdf["media_ref"], pdf["proc_baseline"], pdf["payload"]
-            ):
-                arr, _ = tiff.decode(bytes(payload))
-                _append_band_stats(rows, ref, baseline, arr.astype(np.int64))
-            yield pd.DataFrame(rows)
-
-    return media.select("media_ref", "proc_baseline", "payload").mapInPandas(
-        stats, PIXEL_STATS_SCHEMA
-    )
+    return tile_stats_and_histogram(media).drop("hist")
 
 
 def tile_histogram(media: DataFrame, bins: int = HIST_BINS, dn_max: int = 10000) -> DataFrame:
     """Fixed-bin DN histogram per (media_ref, band): bin = DN·bins // (dn_max+1).
 
     Integer bin rule ⇒ exact parity with the SQL oracle's ``//`` expression.
+    The dense ``hist`` array of :func:`tile_stats_and_histogram`, exploded to
+    one row per non-zero bin.
     """
-    import pandas as pd
-
-    def hist(it):
-        from ..formats import tiff
-
-        for pdf in it:
-            out = {"media_ref": [], "band": [], "bin": [], "cnt": []}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                arr, _ = tiff.decode(bytes(payload))
-                for b, counts in enumerate(
-                    _dense_hists(arr.astype(np.int64), bins, dn_max)
-                ):
-                    nz = np.nonzero(counts)[0]
-                    out["media_ref"] += [ref] * len(nz)
-                    out["band"] += [b] * len(nz)
-                    out["bin"] += nz.tolist()
-                    out["cnt"] += counts[nz].tolist()
-            yield pd.DataFrame(out)
-
-    return media.select("media_ref", "payload").mapInPandas(hist, HIST_SCHEMA)
+    return (
+        tile_stats_and_histogram(media, bins, dn_max)
+        .select("media_ref", "band", F.posexplode("hist").alias("bin", "cnt"))
+        .filter(F.col("cnt") > 0)
+        .select("media_ref", "band", F.col("bin").cast("int").alias("bin"), "cnt")
+    )
 
 
 STRETCH_SCHEMA = (
@@ -140,36 +79,23 @@ def tile_percentile_stretch(media: DataFrame, p_lo: int = 2, p_hi: int = 98) -> 
     happens on the decoded array inside the UDF and NOTHING shuffles —
     per-pixel data never leaves the executor at any corpus size.
     """
-    import pandas as pd
-
     if not (0 < p_lo < p_hi < 100):
         raise ValueError(f"need 0 < p_lo < p_hi < 100; got {p_lo}, {p_hi}")
 
-    cols = ("media_ref", "band", "p_lo_dn", "p_hi_dn", "n_below", "n_above")
-
-    def stretch(it):
+    def per_tile(ref, payload):
         from ..formats import tiff
 
-        for pdf in it:
-            rows = {k: [] for k in cols}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                arr, _ = tiff.decode(bytes(payload))
-                a = arr.astype(np.int64)
-                n = a.shape[1] * a.shape[2]
-                i_lo = (p_lo * n + 99) // 100 - 1
-                i_hi = (p_hi * n + 99) // 100 - 1
-                for b in range(a.shape[0]):
-                    v = np.sort(a[b].ravel())
-                    lo, hi = int(v[i_lo]), int(v[i_hi])
-                    rows["media_ref"].append(ref)
-                    rows["band"].append(b)
-                    rows["p_lo_dn"].append(lo)
-                    rows["p_hi_dn"].append(hi)
-                    rows["n_below"].append(int((v < lo).sum()))
-                    rows["n_above"].append(int((v > hi).sum()))
-            yield pd.DataFrame(rows)
+        arr, _ = tiff.decode(bytes(payload))
+        a = arr.astype(np.int64)
+        n = a.shape[1] * a.shape[2]
+        i_lo = (p_lo * n + 99) // 100 - 1
+        i_hi = (p_hi * n + 99) // 100 - 1
+        for b in range(a.shape[0]):
+            v = np.sort(a[b].ravel())
+            lo, hi = int(v[i_lo]), int(v[i_hi])
+            yield ref, b, lo, hi, int((v < lo).sum()), int((v > hi).sum())
 
-    return media.select("media_ref", "payload").mapInPandas(stretch, STRETCH_SCHEMA)
+    return map_rows(media, ("media_ref", "payload"), STRETCH_SCHEMA, per_tile)
 
 
 OVERVIEW_SCHEMA = (
@@ -190,45 +116,33 @@ def tile_overview_stats(media: DataFrame, levels: int = 1) -> DataFrame:
     at any corpus size (cross-tile pyramid AGGREGATION is the separate
     pyramid_rollup operator). ``tile_px`` must be divisible by 2**levels.
     """
-    import pandas as pd
-
     if levels < 1:
         raise ValueError(f"levels must be >= 1; got {levels}")
 
-    cols = ("media_ref", "band", "level", "n_px", "sum_ov", "min_ov", "max_ov")
-
-    def overview(it):
+    def per_tile(ref, payload):
         from ..formats import tiff
 
-        for pdf in it:
-            rows = {k: [] for k in cols}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                arr, _ = tiff.decode(bytes(payload))
-                a = arr.astype(np.int64)
-                if a.shape[1] % (1 << levels) or a.shape[2] % (1 << levels):
-                    raise ValueError(
-                        f"tile {a.shape[1]}x{a.shape[2]} not divisible by "
-                        f"2**{levels}"
-                    )
-                for lvl in range(1, levels + 1):
-                    # one 2x2 floor-mean pool per level, applied iteratively
-                    # (pinned: floor at EVERY level, like GDAL's integer
-                    # average overviews, not a single floor at the end)
-                    a = (
-                        a[:, 0::2, 0::2] + a[:, 0::2, 1::2]
-                        + a[:, 1::2, 0::2] + a[:, 1::2, 1::2]
-                    ) // 4
-                    for b in range(a.shape[0]):
-                        rows["media_ref"].append(ref)
-                        rows["band"].append(b)
-                        rows["level"].append(lvl)
-                        rows["n_px"].append(a.shape[1] * a.shape[2])
-                        rows["sum_ov"].append(int(a[b].sum()))
-                        rows["min_ov"].append(int(a[b].min()))
-                        rows["max_ov"].append(int(a[b].max()))
-            yield pd.DataFrame(rows)
+        arr, _ = tiff.decode(bytes(payload))
+        a = arr.astype(np.int64)
+        if a.shape[1] % (1 << levels) or a.shape[2] % (1 << levels):
+            raise ValueError(
+                f"tile {a.shape[1]}x{a.shape[2]} not divisible by 2**{levels}"
+            )
+        for lvl in range(1, levels + 1):
+            # one 2x2 floor-mean pool per level, applied iteratively
+            # (pinned: floor at EVERY level, like GDAL's integer
+            # average overviews, not a single floor at the end)
+            a = (
+                a[:, 0::2, 0::2] + a[:, 0::2, 1::2]
+                + a[:, 1::2, 0::2] + a[:, 1::2, 1::2]
+            ) // 4
+            for b in range(a.shape[0]):
+                yield (
+                    ref, b, lvl, a.shape[1] * a.shape[2],
+                    int(a[b].sum()), int(a[b].min()), int(a[b].max()),
+                )
 
-    return media.select("media_ref", "payload").mapInPandas(overview, OVERVIEW_SCHEMA)
+    return map_rows(media, ("media_ref", "payload"), OVERVIEW_SCHEMA, per_tile)
 
 
 FUSED_SCHEMA = PIXEL_STATS_SCHEMA + ", hist array<long>"
@@ -237,49 +151,43 @@ FUSED_SCHEMA = PIXEL_STATS_SCHEMA + ", hist array<long>"
 def tile_stats_and_histogram(
     media: DataFrame, bins: int = HIST_BINS, dn_max: int = 10000
 ) -> DataFrame:
-    """Single-decode fusion of :func:`tile_pixel_stats` + :func:`tile_histogram`.
+    """The one decode UDF behind :func:`tile_pixel_stats` and
+    :func:`tile_histogram`: one row per (media_ref, band) carrying the
+    pixel-stats columns plus the dense ``bins``-length histogram as an array.
 
-    The TIFF decode dominates the raster-stats pipeline; running the two
-    operators separately decodes every payload twice. This emits ONE row per
-    (media_ref, band) carrying the full pixel-stats columns plus the dense
-    ``bins``-length histogram as an array — one decode pass, both families.
-    Derive the individual surfaces with :func:`fused_stats` /
-    :func:`fused_histogram`; both are bit-identical to the unfused operators
-    (pinned by tests/test_raster.py).
+    The TIFF decode dominates the raster-stats pipeline, so a caller that
+    needs both families takes this frame and decodes every payload once.
+    THE single definition of the radiometric rule (baseline ≥ 400 →
+    max(DN−1000, 0)), the nine stats columns and the bin rule
+    ``bin = DN·bins // (dn_max+1)`` (exact parity with the SQL oracle).
     """
-    import pandas as pd
 
-    def both(it):
+    def per_tile(ref, baseline, payload):
         from ..formats import tiff
 
-        for pdf in it:
-            rows = {k: [] for k in _STATS_KEYS + ("hist",)}
-            for ref, baseline, payload in zip(
-                pdf["media_ref"], pdf["proc_baseline"], pdf["payload"]
-            ):
-                arr, _ = tiff.decode(bytes(payload))
-                a = arr.astype(np.int64)
-                _append_band_stats(rows, ref, baseline, a)
-                rows["hist"] += [h.tolist() for h in _dense_hists(a, bins, dn_max)]
-            yield pd.DataFrame(rows)
+        arr, _ = tiff.decode(bytes(payload))
+        a = arr.astype(np.int64)
+        nb, cnt = a.shape[0], a.shape[1] * a.shape[2]
+        s = a.sum(axis=(1, 2))
+        mn, mx = a.min(axis=(1, 2)).tolist(), a.max(axis=(1, 2)).tolist()
+        # a fresh whole-tile int64 temporary costs more CPU than the math
+        # on it, so the bin rule and the square work in place; ``a`` is
+        # squared last
+        sc = s
+        if baseline >= 400:
+            cal = a - 1000
+            sc = np.maximum(cal, 0, out=cal).sum(axis=(1, 2))
+        binned = a * bins
+        binned //= dn_max + 1
+        hist = [np.bincount(band.ravel(), minlength=bins).tolist() for band in binned]
+        ss = np.multiply(a, a, out=a).sum(axis=(1, 2))
+        yield from zip(
+            [ref] * nb, range(nb), [cnt] * nb, s.tolist(), ss.tolist(), mn, mx,
+            sc.tolist(), (s / cnt).tolist(), (sc / (10000.0 * cnt)).tolist(), hist,
+        )
 
-    return media.select("media_ref", "proc_baseline", "payload").mapInPandas(
-        both, FUSED_SCHEMA
-    )
-
-
-def fused_stats(fused: DataFrame) -> DataFrame:
-    """Pixel-stats view of :func:`tile_stats_and_histogram` (≡ tile_pixel_stats)."""
-    return fused.drop("hist")
-
-
-def fused_histogram(fused: DataFrame) -> DataFrame:
-    """Histogram view of :func:`tile_stats_and_histogram` (≡ tile_histogram):
-    explode the dense array, keep non-zero bins only."""
-    return (
-        fused.select("media_ref", "band", F.posexplode("hist").alias("bin", "cnt"))
-        .filter(F.col("cnt") > 0)
-        .select("media_ref", "band", F.col("bin").cast("int").alias("bin"), "cnt")
+    return map_rows(
+        media, ("media_ref", "proc_baseline", "payload"), FUSED_SCHEMA, per_tile
     )
 
 

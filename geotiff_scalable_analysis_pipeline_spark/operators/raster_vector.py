@@ -15,9 +15,9 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions import geometry
+from .rows import map_rows
 
 # ---------------------------------------------------------------------------
 # numpy kernels
@@ -199,48 +199,32 @@ def polygonize(media: DataFrame, class_of_dn) -> DataFrame:
     driver query ``polygonize_class_areas`` checks against a pure SQL pixel
     count (the oracle never sees the rings).
     """
-    import pandas as pd
 
-    def run(batches):
+    def per_tile(ref, payload):
         from ..formats import tiff
 
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_ref", "class", "component", "ring", "area_px",
-                "signed_area_px2", "n_vertices", "wkt"
-            )}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                buf = bytes(payload)
-                arr, prof = tiff.decode(buf)
-                cls_map = class_of_dn(arr)
-                sx, _, x0, _, sy, y1 = prof.transform
-                for cls in np.unique(cls_map):
-                    if cls < 0:
-                        continue
-                    labels, n = connected_components(cls_map == cls)
-                    for comp in range(1, n + 1):
-                        m = labels == comp
-                        rings = trace_rings(m)
-                        for ri, ring in enumerate(rings):
-                            xs, ys = ring[:, 0], ring[:, 1]
-                            a2 = int(
-                                (xs * np.roll(ys, -1) - np.roll(xs, -1) * ys).sum()
-                            )
-                            wx = x0 + ring[:, 0] * sx
-                            wy = y1 + ring[:, 1] * sy  # sy negative: y down
-                            pts = ", ".join(f"{x:.1f} {y:.1f}" for x, y in zip(wx, wy))
-                            first = f"{wx[0]:.1f} {wy[0]:.1f}"
-                            out["media_ref"].append(ref)
-                            out["class"].append(int(cls))
-                            out["component"].append(comp)
-                            out["ring"].append(ri)
-                            out["area_px"].append(int(m.sum()))
-                            out["signed_area_px2"].append(a2)
-                            out["n_vertices"].append(len(ring))
-                            out["wkt"].append(f"POLYGON (({pts}, {first}))")
-            yield pd.DataFrame(out)
+        arr, prof = tiff.decode(bytes(payload))
+        cls_map = class_of_dn(arr)
+        sx, _, x0, _, sy, y1 = prof.transform
+        for cls in np.unique(cls_map):
+            if cls < 0:
+                continue
+            labels, n = connected_components(cls_map == cls)
+            for comp in range(1, n + 1):
+                m = labels == comp
+                for ri, ring in enumerate(trace_rings(m)):
+                    xs, ys = ring[:, 0], ring[:, 1]
+                    a2 = int((xs * np.roll(ys, -1) - np.roll(xs, -1) * ys).sum())
+                    wx = x0 + ring[:, 0] * sx
+                    wy = y1 + ring[:, 1] * sy  # sy negative: y down
+                    pts = ", ".join(f"{x:.1f} {y:.1f}" for x, y in zip(wx, wy))
+                    first = f"{wx[0]:.1f} {wy[0]:.1f}"
+                    yield (
+                        ref, int(cls), comp, ri, int(m.sum()), a2, len(ring),
+                        f"POLYGON (({pts}, {first}))",
+                    )
 
-    return media.select("media_ref", "payload").mapInPandas(run, POLYGONIZE_SCHEMA)
+    return map_rows(media, ("media_ref", "payload"), POLYGONIZE_SCHEMA, per_tile)
 
 
 MASK_SCHEMA = "media_ref string, zone_id long, n_inside long, mask binary"
@@ -254,8 +238,6 @@ def rasterize_zones(media_meta: DataFrame, poly_zones: DataFrame, candidates: Da
     (media_ref, zone_id) pairs (usually from a bbox/cell join — only
     overlapping pairs pay the rasterization).
     """
-    import pandas as pd
-
     spark = media_meta.sparkSession
     zrows = poly_zones.select("zone_id", "ring").collect()
     rings = {int(r["zone_id"]): np.array([(p["x"], p["y"]) for p in r["ring"]]) for r in zrows}
@@ -263,25 +245,15 @@ def rasterize_zones(media_meta: DataFrame, poly_zones: DataFrame, candidates: Da
 
     joined = candidates.join(media_meta, "media_ref")
 
-    def run(batches):
-        rd = bc.value
-        for pdf in batches:
-            out = {"media_ref": [], "zone_id": [], "n_inside": [], "mask": []}
-            for ref, zid, x0, y1, w, h, px in zip(
-                pdf["media_ref"], pdf["zone_id"], pdf["x0"], pdf["y1"],
-                pdf["width"], pdf["height"], pdf["px"],
-            ):
-                ring = rd.get(int(zid))
-                if ring is None:
-                    raise ValueError(
-                        f"candidate references zone_id {int(zid)} absent from "
-                        "poly_zones — candidates and poly_zones are out of sync"
-                    )
-                m = rasterize_ring(ring, float(x0), float(y1), float(px), int(h), int(w))
-                out["media_ref"].append(ref)
-                out["zone_id"].append(int(zid))
-                out["n_inside"].append(int(m.sum()))
-                out["mask"].append(m.tobytes())
-            yield pd.DataFrame(out)
+    def per_pair(ref, zid, x0, y1, w, h, px):
+        ring = bc.value.get(int(zid))
+        if ring is None:
+            raise ValueError(
+                f"candidate references zone_id {int(zid)} absent from "
+                "poly_zones — candidates and poly_zones are out of sync"
+            )
+        m = rasterize_ring(ring, float(x0), float(y1), float(px), int(h), int(w))
+        yield ref, int(zid), int(m.sum()), m.tobytes()
 
-    return joined.mapInPandas(run, MASK_SCHEMA)
+    cols = ("media_ref", "zone_id", "x0", "y1", "width", "height", "px")
+    return map_rows(joined, cols, MASK_SCHEMA, per_pair)

@@ -13,8 +13,11 @@ cancel. So the operator returns the four EXACT integer components
 ``(n_cells, w_pairs, moran_num, moran_den)`` with
 ``I = (n_cells / w_pairs) · (moran_num / moran_den)`` — the division is
 the caller's (one scalar; no cross-engine rounding surface at all).
-``moran_num``/``moran_den`` are decimal128 (u reaches n·x ≈ corpus², and
-its square crosses int64; DuckDB mirrors with HUGEINT).
+``moran_num``/``moran_den`` are summed as DECIMAL(38,0) (u reaches
+n·x ≈ corpus², and its square crosses int64; DuckDB mirrors with HUGEINT)
+and each is emitted as an exact int64 pair ``x = x_hi·2³² + x_lo`` with
+``0 ≤ x_lo < 2³²`` (exact for |x| < 2⁹⁵), so every output column is a
+BIGINT that any client fetches without a decimal-to-float conversion.
 
 Study region: the OCCUPIED cells passed in (the sparse-lattice
 convention — callers densify first if zeros are part of their region).
@@ -32,13 +35,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 D38 = "CAST({} AS DECIMAL(38,0))"
+_W32 = 1 << 32
 
 
 def morans_i_components(
     cells: DataFrame, x: str = "x", ci: str = "ci", cj: str = "cj"
 ) -> DataFrame:
-    """One row: ``(n_cells, w_pairs, moran_num, moran_den)`` — see module
-    doc. ``cells`` must hold one row per occupied cell."""
+    """One row: ``(n_cells, w_pairs, moran_num_hi, moran_num_lo,
+    moran_den_hi, moran_den_lo)`` — see module doc. ``cells`` must hold one
+    row per occupied cell."""
     base = cells.select(
         F.col(ci).alias("ci"), F.col(cj).alias("cj"), F.col(x).cast("long").alias("x")
     )
@@ -70,9 +75,18 @@ def morans_i_components(
     return den.crossJoin(num).select(
         F.col("n_cells").cast("long").alias("n_cells"),
         F.col("w_pairs").cast("long").alias("w_pairs"),
-        F.col("moran_num").cast("decimal(38,0)").alias("moran_num"),
-        F.col("moran_den").cast("decimal(38,0)").alias("moran_den"),
+        *_split("moran_num"),
+        *_split("moran_den"),
     )
+
+
+def _split(c: str) -> list:
+    """Spark ``c_hi, c_lo`` with ``c = c_hi·2³² + c_lo``, ``0 ≤ c_lo < 2³²``."""
+    lo = f"pmod({c}, {_W32})"
+    return [
+        F.expr(f"CAST(({c} - {lo}) div {_W32} AS BIGINT)").alias(f"{c}_hi"),
+        F.expr(f"CAST({lo} AS BIGINT)").alias(f"{c}_lo"),
+    ]
 
 
 def morans_i_sql(cells_cte: str, cells_alias: str, x: str = "x") -> str:
@@ -90,9 +104,17 @@ num AS (
   FROM nbr n JOIN u ON u.ci = n.ci AND u.cj = n.cj),
 den AS (SELECT count(*) AS n_cells, sum(u * u) AS moran_den FROM u)
 SELECT CAST(n_cells AS BIGINT) AS n_cells, CAST(w_pairs AS BIGINT) AS w_pairs,
-       CAST(moran_num AS DECIMAL(38,0)) AS moran_num,
-       CAST(moran_den AS DECIMAL(38,0)) AS moran_den
+       {_split_sql("moran_num")}, {_split_sql("moran_den")}
 FROM den CROSS JOIN num"""
+
+
+def _split_sql(c: str) -> str:
+    """DuckDB ``c_hi, c_lo`` with ``c = c_hi·2³² + c_lo``, ``0 ≤ c_lo < 2³²``."""
+    lo = f"((({c} % {_W32}) + {_W32}) % {_W32})"
+    return (
+        f"CAST(({c} - {lo}) // {_W32} AS BIGINT) AS {c}_hi, "
+        f"CAST({lo} AS BIGINT) AS {c}_lo"
+    )
 
 
 def local_moran_components(

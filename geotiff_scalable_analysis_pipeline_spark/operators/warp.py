@@ -39,6 +39,10 @@ BIAS = 1 << 20
 WARP_STATS_SCHEMA = (
     "chx long, chy long, band int, px_cnt long, sum_v long, max_v long, n_sources long"
 )
+WARP_STATS_SPLIT_SCHEMA = (
+    "chx long, chy long, band int, px_cnt long, "
+    "sum_hi long, sum_lo long, max_v long, n_sources long"
+)
 
 
 def warp_np(
@@ -200,7 +204,7 @@ def warp_np_gcp(
         # no re-quantization — the interpolated value is scaled by D²
         # (true GCP-bilinear semantics at 1/L² intra-pixel resolution;
         # callers must carry chunk sums as hi/lo int64 pairs, see
-        # warp_mosaic_stats_gcp_full)
+        # warp_mosaic_stats)
         d, fx, fy = D, mU - D * ix0, mV - D * iy0
     else:
         # exact remainder ∈ [0, D) re-quantized HALF_UP to 2·src_ps units
@@ -250,6 +254,7 @@ def warp_mosaic_stats(
     chunk_px: int,
     dst_ps: int,
     method: str = "nearest",
+    gs: int | None = None,
 ) -> DataFrame:
     """Warp every source onto the chunk lattice, mosaic-max, per-band stats.
 
@@ -257,12 +262,31 @@ def warp_mosaic_stats(
     ``media``: (media_ref, payload BINARY) GeoTIFF blobs carrying their own
     grid (tiepoint + pixel scale). Output: one row per (chunk, band) with
     integer-exact px_cnt / sum_v / max_v / n_sources.
+
+    ``gs`` selects the GCP kernel :func:`warp_np_gcp` (reference
+    data.py:174-195): ``media`` must then carry ``gcp_du`` / ``gcp_dv``,
+    (GN+1)×(GN+1) half-pixel offset lattices on a ``gs``-pixel grid as
+    ``array<array<long>>`` (row-major), the way a real deployment would
+    surface each source's ground control points from its manifest. Same
+    candidate plan and chunk-keyed shuffle; only the per-chunk kernel maps
+    dest centers through the deformation grid.
+
+    ``method="bilinear_full"`` (GCP only) keeps the exact deformed remainder
+    in the interpolation weights, so every sampled value is the exact integer
+    ``D²·bilinear(v)``. With D ≈ 2·10⁶ a per-pixel value reaches DN·D² ≈
+    4·10¹⁶ — safe in int64 — but a chunk SUM of them is not; the chunk sum
+    is therefore emitted as an exact (hi, lo) int64 pair with
+    ``sum_v = sum_hi·2³² + sum_lo`` (the decomposition is per-pixel —
+    hi = v >> 32, lo = v & (2³²−1) — so both sums stay far inside int64 and
+    the DuckDB oracle reproduces them bit-for-bit without HUGEINT in an
+    output position).
     """
     import pandas as pd
 
     ext = chunk_px * dst_ps
+    cols = ["media_ref", "payload"] + ([] if gs is None else ["gcp_du", "gcp_dv"])
     cand = chunk_candidates(tiles_meta, chunk_px, dst_ps).join(
-        media.select("media_ref", "payload"), "media_ref"
+        media.select(*cols), "media_ref"
     )
 
     def mosaic(key, pdf):
@@ -271,174 +295,36 @@ def warp_mosaic_stats(
         chx, chy = int(key[0]), int(key[1])
         dst_x0, dst_y1 = chx * ext, (chy + 1) * ext
         buf = None
-        for payload in pdf["payload"]:
+        for payload, *lattice in zip(*(pdf[c] for c in cols[1:])):
             arr, prof = tiff.decode(bytes(payload))
-            vals, valid = warp_np(
-                arr,
-                int(prof.tiepoint[0]),
-                int(prof.tiepoint[1]),
-                int(prof.pixel_scale[0]),
-                dst_x0,
-                dst_y1,
-                dst_ps,
-                chunk_px,
-                chunk_px,
-                method,
-            )
+            grid = (int(prof.tiepoint[0]), int(prof.tiepoint[1]), int(prof.pixel_scale[0]),
+                    dst_x0, dst_y1, dst_ps, chunk_px, chunk_px, method)
+            if gs is None:
+                vals, valid = warp_np(arr, *grid)
+            else:
+                du, dv = (np.asarray([list(r) for r in g], dtype=np.int64) for g in lattice)
+                vals, valid = warp_np_gcp(arr, du, dv, gs, *grid)
             if buf is None:
                 buf = np.zeros_like(vals)
             np.maximum(buf, vals, out=buf, where=valid[None, :, :])
         nb = buf.shape[0]
+        sums = (
+            {"sum_hi": (buf >> 32).sum(axis=(1, 2)).tolist(),
+             "sum_lo": (buf & 0xFFFFFFFF).sum(axis=(1, 2)).tolist()}
+            if method == "bilinear_full"
+            else {"sum_v": buf.sum(axis=(1, 2)).tolist()}
+        )
         return pd.DataFrame(
             {
                 "chx": [chx] * nb,
                 "chy": [chy] * nb,
                 "band": list(range(nb)),
                 "px_cnt": [chunk_px * chunk_px] * nb,
-                "sum_v": buf.sum(axis=(1, 2)).tolist(),
+                **sums,
                 "max_v": buf.max(axis=(1, 2)).tolist(),
                 "n_sources": [len(pdf)] * nb,
             }
         )
 
-    return cand.groupBy("chx", "chy").applyInPandas(mosaic, WARP_STATS_SCHEMA)
-
-
-WARP_STATS_SPLIT_SCHEMA = (
-    "chx long, chy long, band int, px_cnt long, "
-    "sum_hi long, sum_lo long, max_v long, n_sources long"
-)
-
-
-def warp_mosaic_stats_gcp_full(
-    tiles_meta: DataFrame,
-    media: DataFrame,
-    chunk_px: int,
-    dst_ps: int,
-    gs: int,
-) -> DataFrame:
-    """Full-precision GCP-bilinear variant of :func:`warp_mosaic_stats_gcp`
-    (reference data.py:174-195 resampling=bilinear, without the HALF_UP
-    weight re-quantization of ``method="bilinear"``): interpolation weights
-    keep the exact deformed remainder at 1/L² intra-pixel resolution, so
-    every sampled value is the exact integer ``D²·bilinear(v)``.
-
-    With D ≈ 2·10⁶ a per-pixel value reaches DN·D² ≈ 4·10¹⁶ — safe in
-    int64 — but a chunk SUM of them is not; the chunk sums are therefore
-    emitted as an exact (hi, lo) int64 pair with
-    ``sum_v = sum_hi·2³² + sum_lo`` (the decomposition is per-pixel —
-    hi = v >> 32, lo = v & (2³²−1) — so both sums stay far inside int64
-    and the DuckDB oracle reproduces them bit-for-bit without HUGEINT in
-    an output position)."""
-    import pandas as pd
-
-    ext = chunk_px * dst_ps
-    cand = chunk_candidates(tiles_meta, chunk_px, dst_ps).join(
-        media.select("media_ref", "payload", "gcp_du", "gcp_dv"), "media_ref"
-    )
-
-    def mosaic(key, pdf):
-        from ..formats import tiff
-
-        chx, chy = int(key[0]), int(key[1])
-        dst_x0, dst_y1 = chx * ext, (chy + 1) * ext
-        buf = None
-        for payload, du, dv in zip(pdf["payload"], pdf["gcp_du"], pdf["gcp_dv"]):
-            arr, prof = tiff.decode(bytes(payload))
-            vals, valid = warp_np_gcp(
-                arr,
-                np.asarray([list(row) for row in du], dtype=np.int64),
-                np.asarray([list(row) for row in dv], dtype=np.int64),
-                gs,
-                int(prof.tiepoint[0]),
-                int(prof.tiepoint[1]),
-                int(prof.pixel_scale[0]),
-                dst_x0,
-                dst_y1,
-                dst_ps,
-                chunk_px,
-                chunk_px,
-                "bilinear_full",
-            )
-            if buf is None:
-                buf = np.zeros_like(vals)
-            np.maximum(buf, vals, out=buf, where=valid[None, :, :])
-        nb = buf.shape[0]
-        return pd.DataFrame(
-            {
-                "chx": [chx] * nb,
-                "chy": [chy] * nb,
-                "band": list(range(nb)),
-                "px_cnt": [chunk_px * chunk_px] * nb,
-                "sum_hi": (buf >> 32).sum(axis=(1, 2)).tolist(),
-                "sum_lo": (buf & 0xFFFFFFFF).sum(axis=(1, 2)).tolist(),
-                "max_v": buf.max(axis=(1, 2)).tolist(),
-                "n_sources": [len(pdf)] * nb,
-            }
-        )
-
-    return cand.groupBy("chx", "chy").applyInPandas(mosaic, WARP_STATS_SPLIT_SCHEMA)
-
-
-def warp_mosaic_stats_gcp(
-    tiles_meta: DataFrame,
-    media: DataFrame,
-    chunk_px: int,
-    dst_ps: int,
-    gs: int,
-    method: str = "nearest",
-) -> DataFrame:
-    """GCP variant of :func:`warp_mosaic_stats` (reference data.py:174-195).
-
-    ``media`` must carry ``gcp_du`` / ``gcp_dv``: (GN+1)×(GN+1) half-pixel
-    offset lattices as ``array<array<long>>`` (row-major), the way a real
-    deployment would surface each source's ground control points from its
-    manifest. Same candidate plan and chunk-keyed shuffle; only the per-chunk
-    kernel maps dest centers through the deformation grid."""
-    import pandas as pd
-
-    ext = chunk_px * dst_ps
-    cand = chunk_candidates(tiles_meta, chunk_px, dst_ps).join(
-        media.select("media_ref", "payload", "gcp_du", "gcp_dv"), "media_ref"
-    )
-
-    def mosaic(key, pdf):
-        from ..formats import tiff
-
-        chx, chy = int(key[0]), int(key[1])
-        dst_x0, dst_y1 = chx * ext, (chy + 1) * ext
-        buf = None
-        for payload, du, dv in zip(pdf["payload"], pdf["gcp_du"], pdf["gcp_dv"]):
-            arr, prof = tiff.decode(bytes(payload))
-            vals, valid = warp_np_gcp(
-                arr,
-                np.asarray([list(row) for row in du], dtype=np.int64),
-                np.asarray([list(row) for row in dv], dtype=np.int64),
-                gs,
-                int(prof.tiepoint[0]),
-                int(prof.tiepoint[1]),
-                int(prof.pixel_scale[0]),
-                dst_x0,
-                dst_y1,
-                dst_ps,
-                chunk_px,
-                chunk_px,
-                method,
-            )
-            if buf is None:
-                buf = np.zeros_like(vals)
-            np.maximum(buf, vals, out=buf, where=valid[None, :, :])
-        nb = buf.shape[0]
-        return pd.DataFrame(
-            {
-                "chx": [chx] * nb,
-                "chy": [chy] * nb,
-                "band": list(range(nb)),
-                "px_cnt": [chunk_px * chunk_px] * nb,
-                "sum_v": buf.sum(axis=(1, 2)).tolist(),
-                "max_v": buf.max(axis=(1, 2)).tolist(),
-                "n_sources": [len(pdf)] * nb,
-            }
-        )
-
-    return cand.groupBy("chx", "chy").applyInPandas(mosaic, WARP_STATS_SCHEMA)
+    schema = WARP_STATS_SPLIT_SCHEMA if method == "bilinear_full" else WARP_STATS_SCHEMA
+    return cand.groupBy("chx", "chy").applyInPandas(mosaic, schema)

@@ -235,10 +235,13 @@ MORAN_CELL = 4000
 
 def q_morans_i(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global spatial autocorrelation of tile density on the 4 km grid:
-    the four exact integer components of Moran's I (rook weights,
-    occupied cells) — I = (n/W)·(num/den), division left to the caller
-    so no cross-engine rounding surface exists. The hotspot-clustered
-    tile placement makes I strongly positive."""
+    the exact integer components of Moran's I (rook weights, occupied
+    cells) as six BIGINT columns ``n_cells``, ``w_pairs``,
+    ``moran_num_hi``, ``moran_num_lo``, ``moran_den_hi``, ``moran_den_lo``
+    (``num = num_hi·2^32 + num_lo``, same for ``den``) —
+    I = (n/W)·(num/den), division left to the caller so no cross-engine
+    rounding surface exists. The hotspot-clustered tile placement makes I
+    strongly positive."""
     from .operators import spatial_stats
 
     t = dg.tiles_df(spark, CFG)
@@ -1684,12 +1687,12 @@ def _gcp_warp_inputs(spark: SparkSession):
 
 def q_warp_mosaic_gcp(spark: SparkSession, sf_dir: str) -> DataFrame:
     t, m = _gcp_warp_inputs(spark)
-    return warp.warp_mosaic_stats_gcp(t, m, WARP_CHUNK, WARP_DPS, GCP_GS)
+    return warp.warp_mosaic_stats(t, m, WARP_CHUNK, WARP_DPS, gs=GCP_GS)
 
 
 def q_warp_mosaic_gcp_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
     t, m = _gcp_warp_inputs(spark)
-    return warp.warp_mosaic_stats_gcp(t, m, WARP_CHUNK, WARP_DPS, GCP_GS, "bilinear")
+    return warp.warp_mosaic_stats(t, m, WARP_CHUNK, WARP_DPS, "bilinear", GCP_GS)
 
 
 def q_warp_mosaic_gcp_bilinear_full(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1697,7 +1700,7 @@ def q_warp_mosaic_gcp_bilinear_full(spark: SparkSession, sf_dir: str) -> DataFra
     resampling=bilinear): weights at the exact deformed remainder, no
     HALF_UP re-quantization; chunk sums as exact (hi, lo) int64 pairs."""
     t, m = _gcp_warp_inputs(spark)
-    return warp.warp_mosaic_stats_gcp_full(t, m, WARP_CHUNK, WARP_DPS, GCP_GS)
+    return warp.warp_mosaic_stats(t, m, WARP_CHUNK, WARP_DPS, "bilinear_full", GCP_GS)
 
 
 def _sql_warp_gcp(method: str = "nearest") -> str:

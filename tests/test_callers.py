@@ -36,8 +36,8 @@ KEPT_UNREACHED = {
     # the hand-timed metrics table, to be replaced by Spark's event log
     "metrics.emit", "metrics.instrumented", "metrics.metrics_table",
     "metrics.stage_summary",
-    # readers of a table layout, kept in the module that writes the layout
-    "pyramid.read_viewport", "raster.fused_stats", "raster.fused_histogram",
+    # the reader of a table layout, kept in the module that writes the layout
+    "pyramid.read_viewport",
 }
 
 

@@ -141,18 +141,24 @@ def test_canon_is_type_aware():
 
 
 def test_morans_oracle_fetches_decimal(duck_views):
-    """Regression for CORRECTNESS_r04's one red row: the morans oracle must
-    emit DECIMAL(38,0) (fetched as decimal.Decimal, matching Spark's
-    decimal(38,0)) — not HUGEINT (fetched as int, which the driver's
-    hasher canonicalizes differently).  Fails on the pre-round-5
-    ``morans_i_sql`` and passes after the CAST fix."""
-    res = duck_views.execute(entrymod.oracle_sql()["morans_i_tiles"])
+    """Regression for the driver-red ``morans_i_tiles`` row: a client's
+    pandas fetch turns DECIMAL(38,0) into float64, so no decimal output
+    column can hash-match. The oracle must emit every column as a BIGINT,
+    with each HUGEINT sum carried as an exact pair ``hi·2³² + lo``."""
+    sql = entrymod.oracle_sql()["morans_i_tiles"]
+    res = duck_views.execute(sql)
     cols = [d[0] for d in res.description]
-    row = res.fetchone()
-    by = dict(zip(cols, row))
-    assert isinstance(by["moran_num"], Decimal), type(by["moran_num"])
-    assert isinstance(by["moran_den"], Decimal), type(by["moran_den"])
-    assert isinstance(by["n_cells"], int) and isinstance(by["w_pairs"], int)
+    by = dict(zip(cols, res.fetchone()))
+    assert cols == [
+        "n_cells", "w_pairs", "moran_num_hi", "moran_num_lo", "moran_den_hi", "moran_den_lo",
+    ]
+    assert all(type(v) is int for v in by.values()), {k: type(v) for k, v in by.items()}
+    body = sql.rsplit("SELECT CAST(n_cells", 1)[0]
+    num, den = duck_views.execute(f"{body}SELECT moran_num, moran_den FROM den, num").fetchone()
+    for name, want in (("moran_num", num), ("moran_den", den)):
+        assert 0 <= by[f"{name}_lo"] < 1 << 32
+        assert by[f"{name}_hi"] * (1 << 32) + by[f"{name}_lo"] == want
+    assert by["moran_num_hi"] != 0  # the sum spans both halves of the pair
 
 
 def test_entry_smoke(spark):

@@ -338,19 +338,28 @@ def test_knn_rejects_out_of_frame_targets(spark):
 
 
 def test_fused_stats_and_histogram_bit_identical(spark):
-    """Round-4 fusion: one decode pass emitting both row families must be
-    bit-identical to the separate tile_pixel_stats / tile_histogram ops."""
+    """``tile_pixel_stats`` and ``tile_histogram`` share one decode UDF; both
+    must equal a driver-side numpy decode of every tile, value for value."""
+    from geotiff_scalable_analysis_pipeline_spark.formats import tiff
+
     media = dg.media_df(spark, CFG)
-    fused = raster.tile_stats_and_histogram(media).persist()
-    try:
-        sort_s = ["media_ref", "band"]
-        a = raster.tile_pixel_stats(media).toPandas().sort_values(sort_s).reset_index(drop=True)
-        b = raster.fused_stats(fused).toPandas().sort_values(sort_s).reset_index(drop=True)
-        pd.testing.assert_frame_equal(a, b)
-        sort_h = ["media_ref", "band", "bin"]
-        c = raster.tile_histogram(media).toPandas().sort_values(sort_h).reset_index(drop=True)
-        d = raster.fused_histogram(fused).toPandas().sort_values(sort_h).reset_index(drop=True)
-        pd.testing.assert_frame_equal(c, d)
-        assert len(a) == CFG.n_media_tiles * CFG.n_bands
-    finally:
-        fused.unpersist()
+    want_s, want_h = [], []
+    for ref, baseline, payload in media.select(
+        "media_ref", "proc_baseline", "payload"
+    ).toLocalIterator():
+        a = tiff.decode(bytes(payload))[0].astype(np.int64)
+        for b, band in enumerate(a):
+            cal = np.maximum(band - 1000, 0) if baseline >= 400 else band
+            n = band.size
+            want_s.append((
+                ref, b, n, int(band.sum()), int((band * band).sum()), int(band.min()),
+                int(band.max()), int(cal.sum()), int(band.sum()) / n,
+                int(cal.sum()) / (10000.0 * n),
+            ))
+            bins, counts = np.unique(band * raster.HIST_BINS // 10001, return_counts=True)
+            want_h += [(ref, b, int(k), int(c)) for k, c in zip(bins, counts)]
+    got_s = sorted(tuple(r) for r in raster.tile_pixel_stats(media).collect())
+    got_h = sorted(tuple(r) for r in raster.tile_histogram(media).collect())
+    assert got_s == sorted(want_s)
+    assert got_h == sorted(want_h)
+    assert len(got_s) == CFG.n_media_tiles * CFG.n_bands

@@ -33,8 +33,11 @@ def _run(spark, cells):
         [(i, j, x) for (i, j), x in cells.items()], "ci long, cj long, x long"
     )
     r = spatial_stats.morans_i_components(df).collect()[0]
-    num = None if r["moran_num"] is None else int(r["moran_num"])
-    return (r["n_cells"], r["w_pairs"], num if num is not None else 0, int(r["moran_den"]))
+
+    def joined(c):  # NULL (a sum over no pairs) reads as 0
+        return 0 if r[f"{c}_hi"] is None else r[f"{c}_hi"] * (1 << 32) + r[f"{c}_lo"]
+
+    return (r["n_cells"], r["w_pairs"], joined("moran_num"), joined("moran_den"))
 
 
 cells_st = st.dictionaries(

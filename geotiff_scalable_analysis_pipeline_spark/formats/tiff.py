@@ -66,13 +66,16 @@ class TiffProfile:
         return (sx, 0.0, x0, 0.0, -sy, y0)
 
 
+TILE_SIZE = 64  # edge of the square tiles encode writes
+
+
 def encode(
     data: np.ndarray,
     pixel_scale: tuple[float, float] = (10.0, 10.0),
     tiepoint: tuple[float, float] = (0.0, 0.0),
-    tile_size: int = 64,
 ) -> bytes:
-    """Encode a (bands, H, W) array as a tiled planar GeoTIFF-subset blob."""
+    """Encode a (bands, H, W) array as a tiled planar GeoTIFF-subset blob
+    (:data:`TILE_SIZE`-pixel tiles)."""
     if data.ndim == 2:
         data = data[None]
     bands, h, w = data.shape
@@ -82,7 +85,7 @@ def encode(
         bits, fmt = 32, 3
     else:
         raise ValueError(f"unsupported dtype {data.dtype}")
-    tw = th = tile_size
+    tw = th = TILE_SIZE
     tiles_across = (w + tw - 1) // tw
     tiles_down = (h + th - 1) // th
     n_tiles = bands * tiles_down * tiles_across

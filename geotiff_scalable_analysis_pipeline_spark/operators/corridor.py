@@ -22,8 +22,8 @@ endpoint distance² where an endpoint is nearest, else
 engines reproduce bit-for-bit (the true interior distance² is rational).
 
 Scale shape: a segment covers the grid cells of its r-expanded bbox (two
-bounded ``sequence`` explodes — fan-out (len/cell+3)·(…), guarded by
-``max_cover_cells``); a point lives in its ONE home cell, so the hash
+bounded ``sequence`` explodes — fan-out (len/r+3)·(…), guarded by
+:data:`MAX_COVER_CELLS`; the grid cell is ``r``); a point lives in its ONE home cell, so the hash
 equi-join on the cell key sees every within-r pair exactly once — no
 distinct, no window, no CartesianProduct. Long polylines must arrive
 pre-split into bounded segments (the standard vector-tiling discipline);
@@ -41,46 +41,37 @@ from ..plans.placement import cpu_dense_repartition, small_enough_to_broadcast
 D38 = "CAST({} AS DECIMAL(38,0))"
 # conservative bound on the cells one segment's r-expanded bbox covers (not exact)
 SEGMENT_COVER_FANOUT = 256
+# grid cells one segment's r-expanded bbox may cover before the join raises
+MAX_COVER_CELLS = 4096
 
 
-def segment_distance_join(
-    points: DataFrame,
-    segments: DataFrame,
-    radius: int,
-    cell: int | None = None,
-    px: str = "qx",
-    py: str = "qy",
-    max_cover_cells: int = 4096,
-) -> DataFrame:
+def segment_distance_join(points: DataFrame, segments: DataFrame, radius: int) -> DataFrame:
     """All (point, segment) pairs with exact dist(P, AB) ≤ ``radius``.
 
-    ``points``: any columns + integer ``px``/``py``. ``segments``: any
+    ``points``: any columns + integer ``qx``/``qy``. ``segments``: any
     columns + integer ``x1 y1 x2 y2``. Returns both sides' columns +
     ``nearest`` ('start' | 'interior' | 'end') + ``dist_sq`` (see module
-    doc). ``cell`` defaults to ``radius``. A segment whose r-expanded
-    bbox covers more than ``max_cover_cells`` grid cells raises — split
+    doc). The grid cell is ``radius``. A segment whose r-expanded bbox
+    covers more than :data:`MAX_COVER_CELLS` grid cells raises — split
     polylines into bounded segments upstream.
     """
     if radius <= 0:
         raise ValueError(f"radius must be positive; got {radius}")
-    c = radius if cell is None else cell
-    if c <= 0:
-        raise ValueError(f"cell must be positive; got {cell}")
 
     bounds = (
-        segments.withColumn("_ci0", F.expr(f"(least(x1, x2) - {radius}) div {c}"))
-        .withColumn("_ci1", F.expr(f"(greatest(x1, x2) + {radius}) div {c}"))
-        .withColumn("_cj0", F.expr(f"(least(y1, y2) - {radius}) div {c}"))
-        .withColumn("_cj1", F.expr(f"(greatest(y1, y2) + {radius}) div {c}"))
+        segments.withColumn("_ci0", F.expr(f"(least(x1, x2) - {radius}) div {radius}"))
+        .withColumn("_ci1", F.expr(f"(greatest(x1, x2) + {radius}) div {radius}"))
+        .withColumn("_cj0", F.expr(f"(least(y1, y2) - {radius}) div {radius}"))
+        .withColumn("_cj1", F.expr(f"(greatest(y1, y2) + {radius}) div {radius}"))
     )
     fan = (F.col("_ci1") - F.col("_ci0") + 1) * (F.col("_cj1") - F.col("_cj0") + 1)
     # the guard rides the used _ci0 column so column pruning cannot drop it
     bounds = bounds.withColumn(
         "_ci0",
-        F.when(fan <= max_cover_cells, F.col("_ci0")).otherwise(
+        F.when(fan <= MAX_COVER_CELLS, F.col("_ci0")).otherwise(
             F.raise_error(
                 F.lit(
-                    f"segment bbox covers more than max_cover_cells={max_cover_cells} "
+                    f"segment bbox covers more than max_cover_cells={MAX_COVER_CELLS} "
                     "grid cells; split long polylines into bounded segments"
                 )
             )
@@ -91,8 +82,8 @@ def segment_distance_join(
         .withColumn("_cj", F.explode(F.expr("sequence(_cj0, _cj1)")))
         .drop("_ci0", "_ci1", "_cj0", "_cj1")
     )
-    p = points.withColumn("_ci", F.expr(f"{px} div {c}")).withColumn(
-        "_cj", F.expr(f"{py} div {c}")
+    p = points.withColumn("_ci", F.expr(f"qx div {radius}")).withColumn(
+        "_cj", F.expr(f"qy div {radius}")
     )
 
     # the pair-predicate stage is CPU-dense but byte-light (~56 B rows):
@@ -107,10 +98,10 @@ def segment_distance_join(
         p.join(cover, ["_ci", "_cj"])
         .withColumn("_dx", F.expr("x2 - x1"))
         .withColumn("_dy", F.expr("y2 - y1"))
-        .withColumn("_wx", F.col(px) - F.col("x1"))
-        .withColumn("_wy", F.col(py) - F.col("y1"))
-        .withColumn("_vx", F.col(px) - F.col("x2"))
-        .withColumn("_vy", F.col(py) - F.col("y2"))
+        .withColumn("_wx", F.col("qx") - F.col("x1"))
+        .withColumn("_wy", F.col("qy") - F.col("y1"))
+        .withColumn("_vx", F.col("qx") - F.col("x2"))
+        .withColumn("_vy", F.col("qy") - F.col("y2"))
         .withColumn("_dot", F.expr("_wx * _dx + _wy * _dy"))
         .withColumn("_len2", F.expr("_dx * _dx + _dy * _dy"))
         .withColumn("_w2", F.expr("_wx * _wx + _wy * _wy"))
@@ -154,8 +145,6 @@ def segment_distance_join_sql(
     segments_cte: str,
     segments_alias: str,
     radius: int,
-    px: str = "qx",
-    py: str = "qy",
 ) -> str:
     """DuckDB mirror of :func:`segment_distance_join` (oracle pairing).
 
@@ -166,8 +155,8 @@ def segment_distance_join_sql(
     return f"""WITH {points_cte}, {segments_cte},
 raw AS (
   SELECT p.*, s.*,
-         p.{px} - s.x1 AS wx, p.{py} - s.y1 AS wy,
-         p.{px} - s.x2 AS vx, p.{py} - s.y2 AS vy,
+         p.qx - s.x1 AS wx, p.qy - s.y1 AS wy,
+         p.qx - s.x2 AS vx, p.qy - s.y2 AS vy,
          s.x2 - s.x1 AS dx, s.y2 - s.y1 AS dy
   FROM {points_alias} p CROSS JOIN {segments_alias} s),
 m AS (

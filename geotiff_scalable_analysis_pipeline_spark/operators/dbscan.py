@@ -36,7 +36,7 @@ primitive:
    Measured: the distributed large/small-star loop on even the REDUCED
    edge set cost 7 rounds × ~1.3 s of core-count-independent job latency
    (a pure serial share that capped N→4N efficiency at ~0.38); the
-   union-find replaces all of it. Above ``max_driver_cells`` (or when
+   union-find replaces all of it. Above :data:`MAX_DRIVER_CELLS` (or when
    eps < √2 admits no integer grid) the alternating large/small-star CC
    (`dedup_cc.connected_components`, O(log n) rounds) runs instead —
    over the clique-reduced star+representative edges when the grid
@@ -73,6 +73,10 @@ from ..plans.placement import small_enough_to_broadcast
 from .dedup_cc import connected_components
 from .distance_join import EPS_JOIN_FANOUT, distance_join
 
+# occupied fine cells the driver union-find takes; above it the
+# distributed star-contraction CC runs
+MAX_DRIVER_CELLS = 1 << 17
+
 
 def _fine_cell(x: str, y: str, res: int):
     """Injective int64 key of the res-edge grid cell containing (x, y)."""
@@ -108,19 +112,11 @@ def _driver_union_find(cell_edges, cell_reps) -> dict[int, int]:
     return {fc: comp_min[root_of[fc]] for fc, _ in cell_reps}
 
 
-def dbscan(
-    points: DataFrame,
-    eps: float,
-    min_pts: int,
-    id_col: str = "q_id",
-    x_col: str = "qx",
-    y_col: str = "qy",
-    level: int | None = None,
-    max_driver_cells: int = 1 << 17,
-) -> DataFrame:
-    """Cluster ``points`` (integer coords) with exact Euclidean DBSCAN.
+def dbscan(points: DataFrame, eps: float, min_pts: int) -> DataFrame:
+    """Cluster ``points`` (``q_id``, integer ``qx``/``qy``) with exact
+    Euclidean DBSCAN.
 
-    Returns one row per input point: ``(id_col, role, cluster_id)`` where
+    Returns one row per input point: ``(q_id, role, cluster_id)`` where
     ``role ∈ {'core','border','noise'}`` and ``cluster_id`` is the minimum
     core point id of the density-connected cluster (-1 for noise).
     ``min_pts`` counts the point itself, as in the original formulation.
@@ -131,9 +127,7 @@ def dbscan(
     # points sharing a cell differ by <= res-1 per axis, so their distance
     # is <= (res-1)·√2 < eps — the intra-cell clique invariant
     res = int(eps / math.sqrt(2.0))
-    pts = points.select(
-        F.col(id_col).alias("q_id"), F.col(x_col).alias("qx"), F.col(y_col).alias("qy")
-    )
+    pts = points.select("q_id", "qx", "qy")
     # one width decision for ALL ε-joins, taken from the base table whose
     # size estimate is reliable (the later consumers' inputs run through
     # checkpoint/broadcast lineage, which hides the true size from the
@@ -149,8 +143,7 @@ def dbscan(
             if old in bb.columns:
                 bb = bb.withColumnRenamed(old, new)
         return distance_join(
-            a, bb, radius=eps, ax="qx", ay="qy", bx="px", by="py", level=level,
-            pin_width=pin,
+            a, bb, radius=eps, bx="px", by="py", pin_width=pin,
         )
 
     # The ε-join is RECOMPUTED per consumer instead of materialized once:
@@ -194,13 +187,13 @@ def dbscan(
         # subtrees are lattice-bounded, so the rare over-gate case only
         # wastes one bounded transfer before the distributed fallback).
         tagged = (
-            cell_rep.limit(max_driver_cells + 1)
+            cell_rep.limit(MAX_DRIVER_CELLS + 1)
             .select(F.lit(0).alias("kind"), F.col("fc").alias("a"), F.col("rep0").alias("b"))
             .unionByName(cell_edges.select(F.lit(1).alias("kind"), "a", "b"))
         )
         pdf = tagged.toPandas()
         rep_pd = pdf[pdf["kind"] == 0]
-        if len(rep_pd) <= max_driver_cells:
+        if len(rep_pd) <= MAX_DRIVER_CELLS:
             reps = list(zip(rep_pd["a"].tolist(), rep_pd["b"].tolist()))
             e_pd = pdf[pdf["kind"] == 1]
             edges_l = list(zip(e_pd["a"].tolist(), e_pd["b"].tolist()))

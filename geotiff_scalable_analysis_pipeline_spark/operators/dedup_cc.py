@@ -86,7 +86,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
-    max_rounds: int = MAX_ROUNDS,
 ) -> DataFrame:
     """Edge list (columns ``u``, ``v``; long or string ids) → one row per
     node: ``(node, rep)`` where ``rep`` is the component minimum.
@@ -94,12 +93,12 @@ def connected_components(
     ``nodes`` (single column ``node``), if given, adds isolated vertices —
     documents with no duplicate edge map to themselves.  Raises
     ``RuntimeError`` if the edge set has not reached its star fixpoint
-    within ``max_rounds`` (cannot happen below 2^max_rounds nodes).
+    within :data:`MAX_ROUNDS` (cannot happen below 2^MAX_ROUNDS nodes).
     """
     e = _canon(edges).localCheckpoint(eager=True)
     prev_sig = None
     converged = False
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         nxt = _canon(_small_star(_large_star(e))).localCheckpoint(eager=True)
         # Order-free edge-set signature; hash terms bounded to 2³¹ so the
         # int64 sum cannot overflow under ANSI mode below 2³² edges.
@@ -130,7 +129,7 @@ def connected_components(
             e = nxt
         prev_sig = sig
     if not converged:
-        raise RuntimeError(f"CC did not converge within {max_rounds} rounds")
+        raise RuntimeError(f"CC did not converge within {MAX_ROUNDS} rounds")
     # Fixpoint edge set is a star per component: (member, min). A member
     # appears once per star edge; min-nodes appear only as `v`. The final
     # round's checkpoint stays resident (the returned reps read it lazily);

@@ -42,10 +42,9 @@ def kde_surface(
     points: DataFrame,
     cell: int,
     radius: int,
-    x: str = "qx",
-    y: str = "qy",
 ) -> DataFrame:
-    """One row per touched grid cell: ``(ci, cj, npts, density)``.
+    """One row per touched grid cell of the ``(qx, qy)`` points:
+    ``(ci, cj, npts, density)``.
 
     ``density`` = Σ max(0, R² − d²) over points with d(point, cell center)
     ≤ R; ``npts`` counts those points. Coordinates must be non-negative
@@ -67,7 +66,7 @@ def kde_surface(
     ).alias("o")
 
     p = points.select(
-        F.col(x).cast("long").alias("_px"), F.col(y).cast("long").alias("_py")
+        F.col("qx").cast("long").alias("_px"), F.col("qy").cast("long").alias("_py")
     )
     cand = (
         p.select("_px", "_py", off)
@@ -97,22 +96,20 @@ def kde_surface_sql(
     points_alias: str,
     cell: int,
     radius: int,
-    x: str = "qx",
-    y: str = "qy",
 ) -> str:
     """DuckDB mirror of :func:`kde_surface` (oracle pairing)."""
     r_cells = math.ceil(radius / cell)
     half = cell // 2
     r2 = radius * radius
     d2 = (
-        f"(c.{x} - (c.ci * {cell} + {half})) * (c.{x} - (c.ci * {cell} + {half}))"
-        f" + (c.{y} - (c.cj * {cell} + {half})) * (c.{y} - (c.cj * {cell} + {half}))"
+        f"(c.qx - (c.ci * {cell} + {half})) * (c.qx - (c.ci * {cell} + {half}))"
+        f" + (c.qy - (c.cj * {cell} + {half})) * (c.qy - (c.cj * {cell} + {half}))"
     )
     return f"""WITH {points_cte},
 off AS (SELECT CAST(i AS BIGINT) AS d FROM range({-r_cells}, {r_cells + 1}) t(i)),
 cand AS (
-  SELECT p.{x}, p.{y},
-         (p.{x} // {cell}) + dx.d AS ci, (p.{y} // {cell}) + dy.d AS cj
+  SELECT p.qx, p.qy,
+         (p.qx // {cell}) + dx.d AS ci, (p.qy // {cell}) + dy.d AS cj
   FROM {points_alias} p CROSS JOIN off dx CROSS JOIN off dy)
 SELECT c.ci, c.cj,
        CAST(count(*) AS BIGINT) AS npts,

@@ -20,8 +20,7 @@ one copy into any given cell, so no distinct/dropDuplicates shuffle.
 Scale shape: one ≤9× explode of the B side + one cell-keyed hash shuffle
 per side. The CPU-dense pair-product stage gets the pinned width and
 broadcast gate of ``plans/placement.py``; a pathologically hot cell is
-remedied by a finer ``level`` (legal down to ``level_for_radius``) or by
-pre-salting the hot keys with ``plans/skew.py`` before calling.
+remedied by pre-salting the hot keys with ``plans/skew.py`` before calling.
 """
 
 from __future__ import annotations
@@ -58,17 +57,14 @@ def distance_join(
     a: DataFrame,
     b: DataFrame,
     radius: float,
-    ax: str = "qx",
-    ay: str = "qy",
     bx: str = "cx",
     by: str = "cy",
-    level: int | None = None,
     pin_width: bool | None = None,
 ) -> DataFrame:
-    """All (a, b) pairs with ``(ax-bx)² + (ay-by)² <= radius²`` (closed).
+    """All (a, b) pairs with ``(qx-bx)² + (qy-by)² <= radius²`` (closed).
 
     Returns a's columns + b's columns + ``dist_sq`` (integer-exact on
-    integer coordinates). ``level`` defaults to :func:`level_for_radius`.
+    integer coordinates). The cell level is :func:`level_for_radius`.
     ``pin_width``: force (True) or suppress (False) the wave-amortized
     explicit exchanges; the default (None) pins them unless either side
     broadcasts, the B side charged its :data:`EPS_JOIN_FANOUT` explode
@@ -76,20 +72,13 @@ def distance_join(
     from the estimator (checkpoint lineage, in-plan generators) decide once
     from their base table and pass the flag down.
     """
-    lvl = level_for_radius(radius) if level is None else level
-    if lvl > level_for_radius(radius):
-        # a finer lattice makes the one-neighbor reach shorter than the
-        # radius: pairs spanning two cell steps would be silently missed
-        raise ValueError(
-            f"level {lvl} has cell edge {FRAME_SIZE / (1 << lvl)} < radius "
-            f"{radius}; use level <= {level_for_radius(radius)}"
-        )
+    lvl = level_for_radius(radius)
     n = 1 << lvl
 
     # single-parse SQL-string forms (functions/cells.py round-6 note):
     # identical expression trees, ~hundreds fewer py4j round-trips per call
     pa = a.withColumn(
-        "cell", F.expr(cell_id_expr(f"CAST(`{ax}` AS DOUBLE)", f"CAST(`{ay}` AS DOUBLE)", lvl))
+        "cell", F.expr(cell_id_expr("CAST(`qx` AS DOUBLE)", "CAST(`qy` AS DOUBLE)", lvl))
     )
 
     offsets = ", ".join(f"struct({dx} AS dx, {dy} AS dy)" for dx, dy in NEIGHBOUR_OFFSETS)
@@ -117,8 +106,8 @@ def distance_join(
     # it), but without this cast a caller passing 32-bit int columns would
     # get silent wraparound in the inputs' native width — pin to long, a
     # no-op for the in-repo int64 callers
-    dx = F.col(ax).cast("long") - F.col(bx).cast("long")
-    dy = F.col(ay).cast("long") - F.col(by).cast("long")
+    dx = F.col("qx").cast("long") - F.col(bx).cast("long")
+    dy = F.col("qy").cast("long") - F.col(by).cast("long")
     d2 = (dx * dx + dy * dy).alias("dist_sq")
     r2 = float(radius) * float(radius)
     out_cols = [*a.columns, *b.columns]

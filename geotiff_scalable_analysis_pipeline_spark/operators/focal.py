@@ -8,7 +8,7 @@ another executor. The Spark-first answer is a halo exchange:
 
 1. ONE decode pass (``mapInPandas``) over the media blobs. Per tile it emits
    the decoded core as raw uint16 bytes plus up to eight *perimeter strips*
-   (``radius`` pixels deep) addressed to the grid neighbors that need them.
+   (:data:`RADIUS` pixels deep) addressed to the grid neighbors that need them.
    A strip is O(radius·px) — for a production 512 px tile with radius 1 the
    halo traffic is < 2 % of the raster volume.
 2. ONE ``groupBy(grid_row, grid_col).applyInPandas`` co-locates each tile's
@@ -35,6 +35,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from .rows import map_rows
+
+RADIUS = 1  # focal window half-width: a (2·RADIUS+1)² = 3×3 window
 
 FOCAL_STATS_SCHEMA = (
     "media_ref string, band int, n_px long, sum_fm long, min_fm int, max_fm int"
@@ -132,9 +134,8 @@ def focal_stats(
     grid_cols: int,
     grid_rows: int,
     tile_px: int,
-    radius: int = 1,
 ) -> DataFrame:
-    """3×3 (or (2r+1)²) focal-mean statistics across tile boundaries.
+    """(2·RADIUS+1)² focal-mean statistics across tile boundaries.
 
     ``media`` is (media_ref, tile_k, payload BINARY); tile_k indexes a dense
     scene mosaic row-major: grid position = (tile_k // grid_cols,
@@ -143,9 +144,9 @@ def focal_stats(
     """
     import pandas as pd
 
-    px, r = tile_px, radius
-    if not (1 <= r < px):
-        raise ValueError(f"radius must be in [1, tile_px); got {r}")
+    px, r = tile_px, RADIUS
+    if px <= r:
+        raise ValueError(f"tile_px must exceed the focal radius {r}; got {px}")
 
     def assemble(pdf):
         got = _assemble_padded(pdf, px, r)
@@ -195,9 +196,8 @@ def focal_median_stats(
     grid_cols: int,
     grid_rows: int,
     tile_px: int,
-    radius: int = 1,
 ) -> DataFrame:
-    """(2r+1)² focal-MEDIAN statistics across tile seams — the classic SAR
+    """(2·RADIUS+1)² focal-MEDIAN statistics across tile seams — the classic SAR
     despeckle filter (the reference's S1 amplitude mosaics are exactly the
     data this is applied to; reference src/eo_core/data.py S1 path), made
     distribution-exact:
@@ -213,9 +213,9 @@ def focal_median_stats(
     """
     import pandas as pd
 
-    px, r = tile_px, radius
-    if not (1 <= r < px):
-        raise ValueError(f"radius must be in [1, tile_px); got {r}")
+    px, r = tile_px, RADIUS
+    if px <= r:
+        raise ValueError(f"tile_px must exceed the focal radius {r}; got {px}")
     side = 2 * r + 1
     cols = ("media_ref", "band", "n_px", "sum_med", "min_med", "max_med")
     _BIG = np.int32(1 << 30)  # sentinel above any uint16 DN

@@ -50,11 +50,10 @@ def sssp_weighted(
     edges: DataFrame,
     sources: DataFrame,
     iters: int,
-    weight: str = "w",
 ) -> DataFrame:
     """Bounded-iteration multi-source shortest WEIGHTED paths (Bellman-Ford
     relaxation on the min-plus semiring): ``(node, dist)`` where ``dist``
-    is the minimum total edge weight over any path of at most ``iters``
+    is the minimum total edge weight ``w`` over any path of at most ``iters``
     edges from a source. Weights must be non-negative integers — integer
     min-plus is exact and order-independent, so results cannot vary with
     partitioning (same discipline as :func:`bfs_hops`; after
@@ -67,4 +66,4 @@ def sssp_weighted(
     map-side combine keeps the shuffle keyed by node regardless)."""
     if iters < 0:
         raise ValueError(f"iters must be >= 0; got {iters}")
-    return _min_plus(edges, sources, iters, F.col(weight))
+    return _min_plus(edges, sources, iters, F.col("w"))

@@ -43,44 +43,38 @@ def idw(
     queries: DataFrame,
     obs: DataFrame,
     radius: float,
-    qid: str = "q_id",
-    qx: str = "qx",
-    qy: str = "qy",
-    ox: str = "cx",
-    oy: str = "cy",
-    value: str = "v",
     oid: str | None = None,
-    level: int | None = None,
 ) -> DataFrame:
-    """One row per query point: ``(qid, n_obs, est)``.
+    """One row per query point (``q_id``, ``qx``, ``qy``): ``(q_id, n_obs,
+    est)`` over the observations (``cx``, ``cy``, value ``v``).
 
     ``n_obs`` counts observations within ``radius`` (0 → ``est`` NULL).
     ``oid`` (an observation id column) is only needed for the
     deterministic exact-hit tie-break; defaults to the value itself.
     """
-    q = queries.select(qid, qx, qy)
-    o_cols = [ox, oy, value] + ([oid] if oid else [])
+    q = queries.select("q_id", "qx", "qy")
+    o_cols = ["cx", "cy", "v"] + ([oid] if oid else [])
     pairs = distance_join(
-        q, obs.select(*o_cols), radius=radius, ax=qx, ay=qy, bx=ox, by=oy, level=level
+        q, obs.select(*o_cols), radius=radius
     )  # width/broadcast decision is distance_join's size-estimate gate
     # integer floor division (float `/` + cast can round across an integer
     # boundary and diverge from DuckDB's exact `//`); greatest(d², 1) keeps
     # the expression total — hit rows (d²=0) are masked by the WHEN guards
     # below, but ANSI div must never see a zero divisor even speculatively
     w = F.expr(f"CAST({IDW_SCALE} AS BIGINT) div greatest(dist_sq, 1)")
-    tie = F.col(oid) if oid else F.col(value)
+    tie = F.col(oid) if oid else F.col("v")
     hit = F.col("dist_sq") == 0
     agg = (
-        pairs.groupBy(qid)
+        pairs.groupBy("q_id")
         .agg(
             F.count("*").alias("n_obs"),
-            F.sum(F.when(~hit, w * F.col(value))).alias("_swv"),
+            F.sum(F.when(~hit, w * F.col("v"))).alias("_swv"),
             F.sum(F.when(~hit, w)).alias("_sw"),
-            F.min_by(F.col(value), F.when(hit, tie)).alias("_hit_v"),
+            F.min_by(F.col("v"), F.when(hit, tie)).alias("_hit_v"),
             F.max(hit.cast("int")).alias("_has_hit"),
         )
         .select(
-            qid,
+            "q_id",
             "n_obs",
             F.when(F.col("_has_hit") == 1, F.col("_hit_v"))
             .when(F.col("_sw") > 0, F.expr("_swv div _sw"))
@@ -88,6 +82,6 @@ def idw(
             .alias("est"),
         )
     )
-    return q.select(qid).join(agg, qid, "left").select(
-        qid, F.coalesce("n_obs", F.lit(0)).cast("long").alias("n_obs"), "est"
+    return q.select("q_id").join(agg, "q_id", "left").select(
+        "q_id", F.coalesce("n_obs", F.lit(0)).cast("long").alias("n_obs"), "est"
     )

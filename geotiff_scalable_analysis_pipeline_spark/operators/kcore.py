@@ -7,7 +7,7 @@ Zaveršnik's peeling algorithm), and the graph family's canonical
 DATA-DEPENDENT-round fixpoint alongside dedup_cc's star contraction: each
 round removes the nodes whose remaining degree fell below k, which can
 cascade (a chain peels one node per round in the worst case — hence the
-``max_rounds`` guard).
+:data:`MAX_ROUNDS` guard).
 
 Scale shape per round: ONE map-combined degree count keyed by node + TWO
 node-keyed LEFT SEMI joins filtering the edge set to surviving endpoints.
@@ -30,28 +30,23 @@ from ..plans.placement import free_checkpoint
 MAX_ROUNDS = 10_000  # a cascade peels ≥1 node per non-final round
 
 
-def k_core(
-    edges: DataFrame,
-    k: int,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = MAX_ROUNDS,
-) -> DataFrame:
+def k_core(edges: DataFrame, k: int) -> DataFrame:
     """Nodes of the k-core of the SIMPLE undirected graph under ``edges``
+    (``src``, ``dst``)
     (self-loops dropped, duplicate/reversed edges collapsed), as
     ``(node, deg)`` where ``deg`` is the node's WITHIN-CORE degree (≥ k by
     construction). Empty result when the core is empty.
 
     Raises ``RuntimeError`` if the peel has not reached its fixpoint within
-    ``max_rounds`` (impossible for graphs with fewer nodes than that, since
+    :data:`MAX_ROUNDS` (impossible for graphs with fewer nodes than that, since
     every non-final round removes at least one node).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1; got {k}")
     simple = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
+            F.least(F.col("src"), F.col("dst")).alias("u"),
+            F.greatest(F.col("src"), F.col("dst")).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .groupBy("u", "v")
@@ -64,7 +59,7 @@ def k_core(
     sym = sym.localCheckpoint(eager=True)
 
     prev_alive = -1
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         deg = sym.groupBy("e_src").agg(F.count("*").alias("deg"))
         # keep is consumed three times (count + both semi joins) — one
         # eager checkpoint of the small node list beats three degree aggs
@@ -93,7 +88,7 @@ def k_core(
         free_checkpoint(keep)
         free_checkpoint(sym)
         sym = nxt
-    raise RuntimeError(f"k-core peel did not converge within {max_rounds} rounds")
+    raise RuntimeError(f"k-core peel did not converge within {MAX_ROUNDS} rounds")
 
 
 def k_core_sql(edges_cte: str, edges_alias: str, k: int, rounds: int) -> str:

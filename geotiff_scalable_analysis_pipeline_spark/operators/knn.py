@@ -96,13 +96,10 @@ def knn_join(
     targets: DataFrame,
     k: int = 5,
     level: int | None = None,
-    x: str = "qx",
-    y: str = "qy",
-    tx: str = "cx",
-    ty: str = "cy",
-    target_id: str = "media_ref",
 ) -> DataFrame:
-    """Exact kNN: (q_id, rank, <target_id>, dist_sq), rank 1..k.
+    """Exact kNN of ``queries`` (``q_id``, ``qx``, ``qy``) among ``targets``
+    (``media_ref``, ``cx``, ``cy``): (q_id, rank, media_ref, dist_sq),
+    rank 1..k.
 
     ``level=None`` auto-sizes the cell grid from the target count so the
     per-query candidate set stays O(k) regardless of scale.
@@ -129,9 +126,9 @@ def knn_join(
     cached: list[DataFrame] = []
 
     tgt = targets.select(
-        F.col(target_id),
-        F.col(tx).cast("long").alias("_tx"),
-        F.col(ty).cast("long").alias("_ty"),
+        F.col("media_ref"),
+        F.col("cx").cast("long").alias("_tx"),
+        F.col("cy").cast("long").alias("_ty"),
     ).persist()
     cached.append(tgt)
     grid_rows = None
@@ -186,7 +183,7 @@ def knn_join(
             .select(
                 "q_id",
                 F.lit(1).cast("int").alias("rank"),
-                F.lit(None).cast(targets.schema[target_id].dataType).alias(target_id),
+                F.lit(None).cast(targets.schema["media_ref"].dataType).alias("media_ref"),
                 F.lit(None).cast("long").alias("dist_sq"),
             )
         )
@@ -210,8 +207,8 @@ def knn_join(
 
     q = queries.select(
         "q_id",
-        F.col(x).cast("long").alias("_qx"),
-        F.col(y).cast("long").alias("_qy"),
+        F.col("qx").cast("long").alias("_qx"),
+        F.col("qy").cast("long").alias("_qy"),
     )
 
     glevel = min(level, GRID_MAX_LEVEL)
@@ -238,10 +235,10 @@ def knn_join(
     spark.conf.set(p_key, str(n_part))
     try:
         if n_targets < BLOCK_PASS_MIN_TARGETS:
-            out = _oneshot_knn(q, tgt, k, glevel, target_id, n_targets, cached, grid_rows)
+            out = _oneshot_knn(q, tgt, k, glevel, n_targets, cached, grid_rows)
         else:
             finished, escalated = _block_knn(
-                queries.sparkSession, q, tgt, k, target_id, targets.schema[target_id].dataType,
+                queries.sparkSession, q, tgt, k, targets.schema["media_ref"].dataType,
                 bbox_units, n_targets, cached,
             )
             # escalated carries each failed query's kth-so-far from the block
@@ -251,7 +248,7 @@ def knn_join(
             # (blocks with fewer than k targets) get theirs from the
             # count-grid oracle.
             rescued = _oneshot_knn(
-                q.join(escalated, "q_id"), tgt, k, glevel, target_id, n_targets,
+                q.join(escalated, "q_id"), tgt, k, glevel, n_targets,
                 cached, grid_rows,
             )
             out = finished.unionByName(rescued)
@@ -280,7 +277,7 @@ def knn_join(
     return out
 
 
-def _block_knn(spark, q, tgt, k, target_id, target_id_type, bbox_units, n_targets, cached):
+def _block_knn(spark, q, tgt, k, target_id_type, bbox_units, n_targets, cached):
     """One-shuffle block-local exact kNN; returns (finished_df, escalated)
     where escalated = (q_id, _kth0) — the failed queries with their kth-so-far
     squared distance (null when the block held fewer than k targets).
@@ -395,7 +392,7 @@ def _block_knn(spark, q, tgt, k, target_id, target_id_type, bbox_units, n_target
         [
             StructField("q_id", LongType()),
             StructField("rank", IntegerType()),
-            StructField(target_id, target_id_type),
+            StructField("media_ref", target_id_type),
             StructField("dist_sq", LongType()),
             StructField("_ok", BooleanType()),
         ]
@@ -407,7 +404,7 @@ def _block_knn(spark, q, tgt, k, target_id, target_id_type, bbox_units, n_target
         qid = qp["q_id"].to_numpy(np.int64)
         if len(tp) == 0:
             return pd.DataFrame(
-                {"q_id": qid, "rank": 0, target_id: None, "dist_sq": -1, "_ok": False}
+                {"q_id": qid, "rank": 0, "media_ref": None, "dist_sq": -1, "_ok": False}
             )
         blk = int(key[0])
         bxi, byi = blk // 8192, blk % 8192
@@ -419,10 +416,10 @@ def _block_knn(spark, q, tgt, k, target_id, target_id_type, bbox_units, n_target
         # so key = dist·T + j ranks by (dist, ref) with NO ties — top-k and
         # deterministic tiebreak in one vectorized argpartition+sort.
         # (dist < 2^36, T < 2^27 ⇒ key < 2^63, exact in int64.)
-        tp = tp.sort_values(target_id, kind="mergesort")
+        tp = tp.sort_values("media_ref", kind="mergesort")
         txv = tp["_tx"].to_numpy(np.int64)
         tyv = tp["_ty"].to_numpy(np.int64)
-        refs = tp[target_id].to_numpy()
+        refs = tp["media_ref"].to_numpy()
         # proof bound: distance from q to the halo-complete region boundary
         bq = np.minimum.reduce([qxv - lox, hix - qxv, qyv - loy, hiy - qyv]).astype(np.float64)
         T = len(txv)
@@ -463,7 +460,7 @@ def _block_knn(spark, q, tgt, k, target_id, target_id_type, bbox_units, n_target
                     {
                         "q_id": np.repeat(qid[s:e], kk),
                         "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32), e - s),
-                        target_id: refs[j.ravel()],
+                        "media_ref": refs[j.ravel()],
                         "dist_sq": dsel.ravel(),
                         "_ok": ok,
                     }
@@ -487,11 +484,11 @@ def _block_knn(spark, q, tgt, k, target_id, target_id_type, bbox_units, n_target
     return finished, escalated
 
 
-def _oneshot_knn(q, tgt, k, glevel, target_id, n_targets, cached, grid_rows=None):
+def _oneshot_knn(q, tgt, k, glevel, n_targets, cached, grid_rows=None):
     """Single-action exact kNN finish: per-query provably-sufficient radius →
     one disk explode → one cell equi-join → one aggregate top-k.
 
-    ``q``: (q_id, _qx, _qy[, _kth0]); ``tgt``: (<target_id>, _tx, _ty),
+    ``q``: (q_id, _qx, _qy[, _kth0]); ``tgt``: (media_ref, _tx, _ty),
     persisted. ``_kth0`` (a known kth-distance-squared upper bound, e.g. from
     the block pass; null/absent when unknown) short-circuits the radius
     oracle: r = ceil(sqrt(kth0)/res) + 1 is sufficient because the k
@@ -528,7 +525,7 @@ def _oneshot_knn(q, tgt, k, glevel, target_id, n_targets, cached, grid_rows=None
             (F.shiftleft(F.col("_tix"), 32) + F.col("_tiy")).alias("_tcell"),
             "_tx",
             "_ty",
-            target_id,
+            "media_ref",
         )
     )
 
@@ -639,7 +636,7 @@ def _oneshot_knn(q, tgt, k, glevel, target_id, n_targets, cached, grid_rows=None
     cand = qcells.join(tgtc.hint("shuffle_hash"), "_tcell")
     scored = cand.select(
         "q_id",
-        target_id,
+        "media_ref",
         (
             (F.col("_qx") - F.col("_tx")) * (F.col("_qx") - F.col("_tx"))
             + (F.col("_qy") - F.col("_ty")) * (F.col("_qy") - F.col("_ty"))
@@ -654,19 +651,19 @@ def _oneshot_knn(q, tgt, k, glevel, target_id, n_targets, cached, grid_rows=None
     scored = scored.filter(F.col("dist_sq") <= F.col("_ub")).drop("_ub")
     # per-query top-k as an AGGREGATE, not a rank window (measured on 60 M
     # candidates at local[8]: row_number() window 170 s vs 23 s); ties break
-    # on (dist_sq, <target_id>) — identical to the DuckDB oracle
+    # on (dist_sq, media_ref) — identical to the DuckDB oracle
     return (
         scored.groupBy("q_id")
         .agg(
             F.slice(
-                F.array_sort(F.collect_list(F.struct("dist_sq", target_id))), 1, k
+                F.array_sort(F.collect_list(F.struct("dist_sq", "media_ref"))), 1, k
             ).alias("_tk")
         )
         .select("q_id", F.posexplode("_tk").alias("_pos", "_hit"))
         .select(
             "q_id",
             (F.col("_pos") + 1).cast("int").alias("rank"),
-            F.col("_hit")[target_id].alias(target_id),
+            F.col("_hit")["media_ref"].alias("media_ref"),
             F.col("_hit")["dist_sq"].alias("dist_sq"),
         )
     )

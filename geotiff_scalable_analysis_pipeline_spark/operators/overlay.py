@@ -46,12 +46,12 @@ _GEOM = ("minx", "miny", "maxx", "maxy")
 RECT_COVER_FANOUT = 64
 
 
-def _covered(df: DataFrame, id_col: str, tag: str, level: int) -> DataFrame:
+def _covered(df: DataFrame, tag: str, level: int) -> DataFrame:
     """Explode one layer to covering cells, geometry columns tagged."""
-    cells = cover_cells_rect(df.select(id_col, *_GEOM), level)
+    cells = cover_cells_rect(df.select("zone_id", *_GEOM), level)
     return cells.select(
         "cell",
-        F.col(id_col).alias(f"{tag}_id"),
+        F.col("zone_id").alias(f"{tag}_id"),
         *[F.col(c).alias(f"{tag}_{c}") for c in _GEOM],
     )
 
@@ -59,18 +59,16 @@ def _covered(df: DataFrame, id_col: str, tag: str, level: int) -> DataFrame:
 def overlay_rect_join(
     a: DataFrame,
     b: DataFrame,
-    id_a: str = "zone_id",
-    id_b: str = "zone_id",
     level: int = DEFAULT_LEVEL,
 ) -> DataFrame:
     """All positive-area intersections between two rectangle layers.
 
-    ``a``/``b`` carry (``id_*``, minx, miny, maxx, maxy). Returns one row
+    ``a``/``b`` carry (zone_id, minx, miny, maxx, maxy). Returns one row
     per intersecting pair: (zone_a, zone_b, inter_w, inter_h, inter_area)
     — emitted exactly once via the reference-point rule (module docstring).
     """
-    ca = _covered(a, id_a, "a", level)
-    cb = _covered(b, id_b, "b", level)
+    ca = _covered(a, "a", level)
+    cb = _covered(b, "b", level)
     # the pair-product join is CPU-dense but byte-light (~48 B cover rows):
     # pin its width unless either layer's cover broadcasts (plans/placement.py)
     if not small_enough_to_broadcast((a, RECT_COVER_FANOUT), (b, RECT_COVER_FANOUT)):

@@ -34,15 +34,16 @@ def prefix_offsets(
     df: DataFrame,
     order_col: str,
     count_col: str,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Exact global prefix sum of ``count_col`` in ``order_col`` order.
 
     Returns ``(order_col, count_col, start_off)`` where ``start_off`` is the
     sum of ``count_col`` over all rows strictly before this one in the
-    global ``order_col`` order. ``order_col`` values must be unique."""
+    global ``order_col`` order. ``order_col`` values must be unique. The
+    range split is ``spark.sql.shuffle.partitions`` wide (the core count
+    in a ``session.get_spark`` session)."""
     spark = df.sparkSession
-    n = n_partitions or spark.sparkContext.defaultParallelism
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     narrow = (
         df.select(order_col, count_col)
         .repartitionByRange(n, order_col)

@@ -131,14 +131,14 @@ def pip_join(
     poly_zones: DataFrame | None = None,
     x: str = "qx",
     y: str = "qy",
-    level: int = DEFAULT_LEVEL,
 ) -> DataFrame:
-    """Union of the rect and poly paths (zone_id spaces are disjoint)."""
+    """Union of the rect and poly paths (zone_id spaces are disjoint), both
+    at :data:`DEFAULT_LEVEL`."""
     parts = []
     if rect_zones is not None:
-        parts.append(pip_join_rect(points, rect_zones, x, y, level))
+        parts.append(pip_join_rect(points, rect_zones, x, y))
     if poly_zones is not None:
-        parts.append(pip_join_poly(points, poly_zones, x, y, level))
+        parts.append(pip_join_poly(points, poly_zones, x, y))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

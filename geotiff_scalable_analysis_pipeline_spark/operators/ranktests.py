@@ -96,7 +96,6 @@ def rank_tests_2sample(
     value: str,
     group_a: str,
     group_b: str,
-    split_partitions: int | None = None,
 ) -> DataFrame:
     """One row: ``(n_a, n_b, u2_a, u2_b, ks_num, ks_d)`` comparing the
     ``value`` distributions of ``group == group_a`` vs ``group_b``.
@@ -109,12 +108,11 @@ def rank_tests_2sample(
     (NaN != NaN makes each NaN its own tie block in the numpy fold while
     SQL per-value grouping collapses all NaNs into one tied value), so
     the operator pins the drop-them contract instead (ADVICE r5).
-    ``split_partitions`` sets the
-    range-split width P (default: ``spark.sql.shuffle.partitions``);
-    the result is invariant to it."""
+    The range-split width P is ``spark.sql.shuffle.partitions`` (the core
+    count in a ``session.get_spark`` session); the result is invariant to
+    it."""
     spark = df.sparkSession
-    if split_partitions is None:
-        split_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    split_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     keep = F.col(group).isin(group_a, group_b) & F.col(value).isNotNull()
     if isinstance(df.schema[value].dataType, (FloatType, DoubleType)):
         keep = keep & ~F.isnan(F.col(value))

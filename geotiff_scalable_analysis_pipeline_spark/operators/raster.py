@@ -29,32 +29,78 @@ PIXEL_STATS_SCHEMA = (
     "min_dn int, max_dn int, sum_cal long, mean_dn double, mean_refl double"
 )
 
+HIST_SCHEMA = "media_ref string, band int, bin int, cnt long"
+
 HIST_BINS = 16
+DN_MAX = 10000  # largest DN the histogram bins; bin = DN·HIST_BINS // (DN_MAX+1)
+
+
+def _decode(payload) -> np.ndarray:
+    """A GeoTIFF payload as an int64 (bands, rows, cols) array."""
+    from ..formats import tiff
+
+    arr, _ = tiff.decode(bytes(payload))
+    return arr.astype(np.int64)
+
+
+def _band_stats(a: np.ndarray, baseline: int):
+    """Per-band ``(band, cnt, sum_dn, sum_sq, min_dn, max_dn, sum_cal,
+    mean_dn, mean_refl)`` of a decoded tile: THE radiometric rule (baseline
+    ≥ 400 → max(DN−1000, 0)). Squares ``a`` in place, so a caller that also
+    bins the tile bins it first."""
+    nb, cnt = a.shape[0], a.shape[1] * a.shape[2]
+    s = a.sum(axis=(1, 2))
+    mn, mx = a.min(axis=(1, 2)).tolist(), a.max(axis=(1, 2)).tolist()
+    # a fresh whole-tile int64 temporary costs more CPU than the math on
+    # it, so the square works in place and ``s`` stands in for the
+    # calibrated sum when no offset applies
+    sc = s
+    if baseline >= 400:
+        cal = a - 1000
+        sc = np.maximum(cal, 0, out=cal).sum(axis=(1, 2))
+    ss = np.multiply(a, a, out=a).sum(axis=(1, 2))
+    return zip(
+        range(nb), [cnt] * nb, s.tolist(), ss.tolist(), mn, mx,
+        sc.tolist(), (s / cnt).tolist(), (sc / (10000.0 * cnt)).tolist(),
+    )
+
+
+def _band_hist(a: np.ndarray) -> list[list[int]]:
+    """Per-band dense :data:`HIST_BINS`-bin DN histogram of a decoded tile,
+    ``bin = DN·HIST_BINS // (DN_MAX+1)`` (exact parity with the SQL
+    oracle's ``//``)."""
+    binned = a * HIST_BINS
+    binned //= DN_MAX + 1
+    return [np.bincount(band.ravel(), minlength=HIST_BINS).tolist() for band in binned]
 
 
 def tile_pixel_stats(media: DataFrame) -> DataFrame:
     """One row per (media_ref, band): integer-exact pixel statistics.
 
-    Input: (media_ref, proc_baseline, payload BINARY). The stats columns of
-    :func:`tile_stats_and_histogram`, so both share one decode UDF; per-pixel
-    data never leaves it.
+    Input: (media_ref, proc_baseline, payload BINARY); per-pixel data never
+    leaves the decode UDF.
     """
-    return tile_stats_and_histogram(media).drop("hist")
 
+    def per_tile(ref, baseline, payload):
+        for st in _band_stats(_decode(payload), baseline):
+            yield (ref, *st)
 
-def tile_histogram(media: DataFrame, bins: int = HIST_BINS, dn_max: int = 10000) -> DataFrame:
-    """Fixed-bin DN histogram per (media_ref, band): bin = DN·bins // (dn_max+1).
-
-    Integer bin rule ⇒ exact parity with the SQL oracle's ``//`` expression.
-    The dense ``hist`` array of :func:`tile_stats_and_histogram`, exploded to
-    one row per non-zero bin.
-    """
-    return (
-        tile_stats_and_histogram(media, bins, dn_max)
-        .select("media_ref", "band", F.posexplode("hist").alias("bin", "cnt"))
-        .filter(F.col("cnt") > 0)
-        .select("media_ref", "band", F.col("bin").cast("int").alias("bin"), "cnt")
+    return map_rows(
+        media, ("media_ref", "proc_baseline", "payload"), PIXEL_STATS_SCHEMA, per_tile
     )
+
+
+def tile_histogram(media: DataFrame) -> DataFrame:
+    """Fixed-bin DN histogram per (media_ref, band), one row per non-zero
+    bin (bin rule of :func:`_band_hist`). Input: (media_ref, payload)."""
+
+    def per_tile(ref, payload):
+        for b, hist in enumerate(_band_hist(_decode(payload))):
+            for i, c in enumerate(hist):
+                if c:
+                    yield ref, b, i, c
+
+    return map_rows(media, ("media_ref", "payload"), HIST_SCHEMA, per_tile)
 
 
 STRETCH_SCHEMA = (
@@ -63,10 +109,13 @@ STRETCH_SCHEMA = (
 )
 
 
-def tile_percentile_stretch(media: DataFrame, p_lo: int = 2, p_hi: int = 98) -> DataFrame:
+STRETCH_P_LO, STRETCH_P_HI = 2, 98  # the contrast stretch's percentiles
+
+
+def tile_percentile_stretch(media: DataFrame) -> DataFrame:
     """Per-tile contrast-stretch anchors: exact nearest-rank percentiles of
-    the DN distribution plus the pixel counts a [p_lo, p_hi] stretch would
-    clip (the reference's preview normalization picks display bounds the
+    the DN distribution plus the pixel counts a [STRETCH_P_LO, STRETCH_P_HI]
+    stretch would clip (the reference's preview normalization picks display bounds the
     same way; reference reporters/preview.py percentile normalize).
 
     Nearest-rank rule, pinned for oracle parity: the p-th percentile is the
@@ -79,17 +128,12 @@ def tile_percentile_stretch(media: DataFrame, p_lo: int = 2, p_hi: int = 98) -> 
     happens on the decoded array inside the UDF and NOTHING shuffles —
     per-pixel data never leaves the executor at any corpus size.
     """
-    if not (0 < p_lo < p_hi < 100):
-        raise ValueError(f"need 0 < p_lo < p_hi < 100; got {p_lo}, {p_hi}")
 
     def per_tile(ref, payload):
-        from ..formats import tiff
-
-        arr, _ = tiff.decode(bytes(payload))
-        a = arr.astype(np.int64)
+        a = _decode(payload)
         n = a.shape[1] * a.shape[2]
-        i_lo = (p_lo * n + 99) // 100 - 1
-        i_hi = (p_hi * n + 99) // 100 - 1
+        i_lo = (STRETCH_P_LO * n + 99) // 100 - 1
+        i_hi = (STRETCH_P_HI * n + 99) // 100 - 1
         for b in range(a.shape[0]):
             v = np.sort(a[b].ravel())
             lo, hi = int(v[i_lo]), int(v[i_hi])
@@ -104,7 +148,10 @@ OVERVIEW_SCHEMA = (
 )
 
 
-def tile_overview_stats(media: DataFrame, levels: int = 1) -> DataFrame:
+OVERVIEW_LEVELS = 2  # pyramid levels below the full-resolution tile
+
+
+def tile_overview_stats(media: DataFrame) -> DataFrame:
     """Average-pooled overview pyramid per tile (the GDAL/COG "average"
     overview resampler, reference preview downscale family): level L halves
     each axis L times; pooled value = floor(mean of the 2×2 block) — the
@@ -114,16 +161,13 @@ def tile_overview_stats(media: DataFrame, levels: int = 1) -> DataFrame:
 
     Scale shape: map-only — each tile's pyramid is tile-local, zero shuffle
     at any corpus size (cross-tile pyramid AGGREGATION is the separate
-    pyramid_rollup operator). ``tile_px`` must be divisible by 2**levels.
+    pyramid_rollup operator). ``tile_px`` must be divisible by
+    2**OVERVIEW_LEVELS.
     """
-    if levels < 1:
-        raise ValueError(f"levels must be >= 1; got {levels}")
+    levels = OVERVIEW_LEVELS
 
     def per_tile(ref, payload):
-        from ..formats import tiff
-
-        arr, _ = tiff.decode(bytes(payload))
-        a = arr.astype(np.int64)
+        a = _decode(payload)
         if a.shape[1] % (1 << levels) or a.shape[2] % (1 << levels):
             raise ValueError(
                 f"tile {a.shape[1]}x{a.shape[2]} not divisible by 2**{levels}"
@@ -148,43 +192,19 @@ def tile_overview_stats(media: DataFrame, levels: int = 1) -> DataFrame:
 FUSED_SCHEMA = PIXEL_STATS_SCHEMA + ", hist array<long>"
 
 
-def tile_stats_and_histogram(
-    media: DataFrame, bins: int = HIST_BINS, dn_max: int = 10000
-) -> DataFrame:
-    """The one decode UDF behind :func:`tile_pixel_stats` and
-    :func:`tile_histogram`: one row per (media_ref, band) carrying the
-    pixel-stats columns plus the dense ``bins``-length histogram as an array.
-
-    The TIFF decode dominates the raster-stats pipeline, so a caller that
-    needs both families takes this frame and decodes every payload once.
-    THE single definition of the radiometric rule (baseline ≥ 400 →
-    max(DN−1000, 0)), the nine stats columns and the bin rule
-    ``bin = DN·bins // (dn_max+1)`` (exact parity with the SQL oracle).
+def tile_stats_and_histogram(media: DataFrame) -> DataFrame:
+    """:func:`tile_pixel_stats` and the dense :data:`HIST_BINS`-length
+    histogram of :func:`tile_histogram` from ONE decode: one row per
+    (media_ref, band) carrying the pixel-stats columns plus ``hist``. The
+    TIFF decode dominates the raster-stats pipeline, so a caller that needs
+    both families takes this frame and decodes every payload once.
     """
 
     def per_tile(ref, baseline, payload):
-        from ..formats import tiff
-
-        arr, _ = tiff.decode(bytes(payload))
-        a = arr.astype(np.int64)
-        nb, cnt = a.shape[0], a.shape[1] * a.shape[2]
-        s = a.sum(axis=(1, 2))
-        mn, mx = a.min(axis=(1, 2)).tolist(), a.max(axis=(1, 2)).tolist()
-        # a fresh whole-tile int64 temporary costs more CPU than the math
-        # on it, so the bin rule and the square work in place; ``a`` is
-        # squared last
-        sc = s
-        if baseline >= 400:
-            cal = a - 1000
-            sc = np.maximum(cal, 0, out=cal).sum(axis=(1, 2))
-        binned = a * bins
-        binned //= dn_max + 1
-        hist = [np.bincount(band.ravel(), minlength=bins).tolist() for band in binned]
-        ss = np.multiply(a, a, out=a).sum(axis=(1, 2))
-        yield from zip(
-            [ref] * nb, range(nb), [cnt] * nb, s.tolist(), ss.tolist(), mn, mx,
-            sc.tolist(), (s / cnt).tolist(), (sc / (10000.0 * cnt)).tolist(), hist,
-        )
+        a = _decode(payload)
+        hist = _band_hist(a)
+        for st, h in zip(_band_stats(a, baseline), hist):
+            yield (ref, *st, h)
 
     return map_rows(
         media, ("media_ref", "proc_baseline", "payload"), FUSED_SCHEMA, per_tile

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from ..datagen import ihash_col, ihash_sql
 
 PPM = 1_000_000  # rates are parts-per-million — integer, no float thresholds
+SALT = 7  # the membership hash's salt, shared by every engine/oracle pair
 
 
 def stratified_rate_sample(
@@ -31,8 +32,7 @@ def stratified_rate_sample(
     key: str,
     strata: str,
     rates_ppm: dict[str, int],
-    default_ppm: int = 0,
-    salt: int = 7,
+    default_ppm: int,
 ) -> DataFrame:
     """Per-stratum hash-rate sampling: stratum ``s`` keeps rows at
     ``rates_ppm[s]`` ppm (``default_ppm`` for unlisted strata). Still one
@@ -49,11 +49,11 @@ def stratified_rate_sample(
     rate = F.lit(default_ppm)
     for s, r in rates_ppm.items():
         rate = F.when(F.col(strata) == s, F.lit(r)).otherwise(rate)
-    return df.filter(F.pmod(ihash_col(F.col(key), salt), F.lit(PPM)) < rate)
+    return df.filter(F.pmod(ihash_col(F.col(key), SALT), F.lit(PPM)) < rate)
 
 
 def stratified_fixed_sample(
-    df: DataFrame, key: str, strata: str, n_per_stratum: int, salt: int = 7
+    df: DataFrame, key: str, strata: str, n_per_stratum: int
 ) -> DataFrame:
     """EXACTLY min(n, |stratum|) rows per stratum: the n smallest hash
     values (ties broken by ``key``, so the order is total and the sample
@@ -63,7 +63,7 @@ def stratified_fixed_sample(
     if n_per_stratum < 1:
         raise ValueError(f"n_per_stratum must be >= 1; got {n_per_stratum}")
     w = Window.partitionBy(strata).orderBy(
-        ihash_col(F.col(key), salt).asc(), F.col(key).asc()
+        ihash_col(F.col(key), SALT).asc(), F.col(key).asc()
     )
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -77,25 +77,24 @@ def stratified_rate_sample_sql(
     key: str,
     strata: str,
     rates_ppm: dict[str, int],
-    default_ppm: int = 0,
-    salt: int = 7,
+    default_ppm: int,
 ) -> str:
     """DuckDB mirror of :func:`stratified_rate_sample` (oracle pairing)."""
     whens = " ".join(
         f"WHEN {strata} = '{s}' THEN {r}" for s, r in rates_ppm.items()
     )
     rate = f"(CASE {whens} ELSE {default_ppm} END)" if whens else str(default_ppm)
-    h = ihash_sql(key, salt)
+    h = ihash_sql(key, SALT)
     # Spark pmod == SQL % for non-negative operands; ihash output is >= 0
     return f"""SELECT * FROM ({source_sql})
 WHERE ({h}) % {PPM} < {rate}"""
 
 
 def stratified_fixed_sample_sql(
-    source_sql: str, key: str, strata: str, n_per_stratum: int, salt: int = 7
+    source_sql: str, key: str, strata: str, n_per_stratum: int
 ) -> str:
     """DuckDB mirror of :func:`stratified_fixed_sample`."""
-    h = ihash_sql(key, salt)
+    h = ihash_sql(key, SALT)
     return f"""SELECT * EXCLUDE (_rn) FROM (
   SELECT *, row_number() OVER (
       PARTITION BY {strata} ORDER BY ({h}) ASC, {key} ASC) AS _rn

@@ -24,47 +24,45 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 QSCALE = 1_000_000
+EMBED_DIM = 64  # embedding width of the corpus
+TOPK = 10  # neighbours each top-k search returns
+MAX_TARGETS = 100_000  # largest target side cosine_topk collects to the driver
 
 
-def quantized_cosine(qa: str = "qa", qb: str = "qb", n2a: str = "n2a", n2b: str = "n2b"):
+def quantized_cosine(qa: str = "qa", n2a: str = "n2a"):
     """THE quantized-cosine rule, as one Column: exact int64 dot-product
-    fold over the quantized vectors, divided by √(n2a·n2b) in float64.
+    fold of ``qa`` with ``qb``, divided by √(n2a·n2b) in float64.
     Every scoring site (LSH/IVF top-k, near-dup edges, SemDeDup, the
     columnar exact baseline) builds this identical expression so the rule —
     and its DuckDB-oracle mirror — can only ever change in one place."""
     dot = F.aggregate(
-        F.zip_with(qa, qb, lambda x, y: x * y), F.lit(0).cast("long"), lambda s, v: s + v
+        F.zip_with(qa, "qb", lambda x, y: x * y), F.lit(0).cast("long"), lambda s, v: s + v
     )
-    return dot.cast("double") / F.sqrt(F.col(n2a).cast("double") * F.col(n2b).cast("double"))
+    return dot.cast("double") / F.sqrt(F.col(n2a).cast("double") * F.col("n2b").cast("double"))
 
 
-def quantize(df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
-    """float32 array → exact int64 lattice (round(x·10⁶)) + squared norm.
+def quantize(df: DataFrame) -> DataFrame:
+    """float32 ``embedding`` array → exact int64 lattice (round(x·10⁶)) +
+    squared norm, keyed by ``vec_id``.
 
     Built as one selectExpr parse (round 6): the nested transform/aggregate
     lambdas cost ~0.3 s of py4j round-trips per construction as Columns."""
-    q_sql = f"transform(`{vec_col}`, x -> CAST(round(CAST(x AS DOUBLE) * {QSCALE}) AS BIGINT))"
+    q_sql = f"transform(`embedding`, x -> CAST(round(CAST(x AS DOUBLE) * {QSCALE}) AS BIGINT))"
     return df.selectExpr(
-        f"`{id_col}`",
+        "`vec_id`",
         f"{q_sql} AS q",
         f"aggregate(transform({q_sql}, v -> v * v), CAST(0 AS BIGINT), (s, v) -> s + v) AS n2",
     )
 
 
-def cosine_topk(
-    queries: DataFrame,
-    targets: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    exclude_self: bool = True,
-    max_targets: int = 100_000,
-) -> DataFrame:
-    """Exact cosine top-k via numpy matmul inside mapInPandas.
+def cosine_topk(queries: DataFrame, targets: DataFrame) -> DataFrame:
+    """Exact cosine top-:data:`TOPK` via numpy matmul inside mapInPandas;
+    a vector is never its own neighbour.
 
     ``queries``/``targets``: output of :func:`quantize`. Targets are
     collected + broadcast — this is the GROUND-TRUTH BASELINE for a dim-sized
     target side. Feeding a corpus-sized target side would collect it onto the
-    driver, so the guard below refuses > ``max_targets`` rows: use
+    driver, so the guard below refuses > :data:`MAX_TARGETS` rows: use
     :func:`lsh_topk` (bucket join, no driver collect) as the scale path.
     """
     import pandas as pd
@@ -73,19 +71,20 @@ def cosine_topk(
     # cell-collect pattern) — replaces the former count() job + row-based
     # collect() (two sequential driver actions, row-pickled transfer)
     spark = queries.sparkSession
-    t_pd = targets.limit(max_targets + 1).toPandas()
-    if len(t_pd) > max_targets:
+    t_pd = targets.limit(MAX_TARGETS + 1).toPandas()
+    if len(t_pd) > MAX_TARGETS:
         raise ValueError(
             f"cosine_topk collects the target side to the driver; got "
-            f"> max_targets={max_targets} targets. Use lsh_topk "
+            f"> max_targets={MAX_TARGETS} targets. Use lsh_topk "
             f"(LSH bucket join) for corpus-sized target sides."
         )
-    t_ids = t_pd[id_col].to_numpy()
+    t_ids = t_pd["vec_id"].to_numpy()
     t_mat = np.stack(t_pd["q"].to_numpy()).astype(np.int64)  # (N, d)
     t_n2 = t_pd["n2"].to_numpy(dtype=np.int64)
     order = np.argsort(t_ids)  # id-ascending for deterministic tie-break
     t_ids, t_mat, t_n2 = t_ids[order], t_mat[order], t_n2[order]
     bc = spark.sparkContext.broadcast((t_ids, t_mat, t_n2))
+    k = TOPK
 
     def run(batches):
         ids, mat, n2 = bc.value
@@ -101,8 +100,7 @@ def cosine_topk(
             out = {"vec_id": [], "rank": [], "other_id": [], "cos": []}
             for i, qid in enumerate(pdf["vec_id"]):
                 row = cos[i]
-                mask = ids != qid if exclude_self else np.ones(len(ids), bool)
-                idx = np.nonzero(mask)[0]
+                idx = np.nonzero(ids != qid)[0]
                 # ids are pre-sorted ascending → stable kind='stable' on -cos
                 # yields (cos desc, other_id asc) exactly
                 sel = idx[np.argsort(-row[idx], kind="stable")[:k]]
@@ -139,7 +137,7 @@ def _planes(dim: int) -> np.ndarray:
     return (h - 2**30).reshape(N_TABLES, N_PLANES, dim)
 
 
-def lsh_buckets(qdf: DataFrame, dim: int = 64) -> DataFrame:
+def lsh_buckets(qdf: DataFrame) -> DataFrame:
     """(vec_id, q, n2) → one row per table: (vec_id, table, bucket, q, n2).
 
     Bucket = packed sign bits of INTEGER plane dot products (exact int64:
@@ -150,7 +148,7 @@ def lsh_buckets(qdf: DataFrame, dim: int = 64) -> DataFrame:
     """
     import pandas as pd
 
-    planes = _planes(dim)
+    planes = _planes(EMBED_DIM)
 
     def run(batches):
         for pdf in batches:
@@ -171,8 +169,9 @@ def lsh_buckets(qdf: DataFrame, dim: int = 64) -> DataFrame:
     return qdf.mapInPandas(run, "vec_id long, table int, bucket long, q array<long>, n2 long")
 
 
-def lsh_topk(embeddings: DataFrame, k: int = 10, dim: int = 64) -> DataFrame:
-    """Approximate cosine top-k: bucket join → exact rescoring of candidates.
+def lsh_topk(embeddings: DataFrame) -> DataFrame:
+    """Approximate cosine top-:data:`TOPK`: bucket join → exact rescoring of
+    candidates.
 
     Candidates = pairs sharing ≥1 (table, bucket); scores are the exact
     int64-quantized cosine (identical formula to :func:`cosine_topk`), so any
@@ -180,7 +179,7 @@ def lsh_topk(embeddings: DataFrame, k: int = 10, dim: int = 64) -> DataFrame:
     approximate (recall measured in tests).
     """
     qv = quantize(embeddings)
-    b = lsh_buckets(qv, dim)
+    b = lsh_buckets(qv)
     a = b.select(
         F.col("vec_id"), "table", "bucket", F.col("q").alias("qa"), F.col("n2").alias("n2a")
     )
@@ -200,7 +199,7 @@ def lsh_topk(embeddings: DataFrame, k: int = 10, dim: int = 64) -> DataFrame:
     return (
         pairs.withColumn("cos", cos)
         .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("vec_id", "rank", "other_id", "cos")
     )
 
@@ -235,7 +234,7 @@ def _ivf_centroids(dim: int) -> np.ndarray:
     return (h % (2 * _IVF_HALF) - _IVF_HALF).reshape(IVF_CELLS, dim)
 
 
-def ivf_probes(qdf: DataFrame, nprobe: int, dim: int = 64) -> DataFrame:
+def ivf_probes(qdf: DataFrame, nprobe: int) -> DataFrame:
     """(vec_id, q, n2) → (vec_id, probe, cell, q, n2), probe ∈ [0, nprobe).
 
     probe 0 is the HOME cell (argmin exact int64 squared Euclidean distance
@@ -247,7 +246,7 @@ def ivf_probes(qdf: DataFrame, nprobe: int, dim: int = 64) -> DataFrame:
     """
     import pandas as pd
 
-    cents = _ivf_centroids(dim)  # (C, d)
+    cents = _ivf_centroids(EMBED_DIM)  # (C, d)
     n2c = (cents * cents).sum(axis=1)  # (C,)
 
     def run(batches):
@@ -271,11 +270,9 @@ def ivf_probes(qdf: DataFrame, nprobe: int, dim: int = 64) -> DataFrame:
     )
 
 
-def ivf_topk(
-    embeddings: DataFrame, k: int = 10, nprobe: int = IVF_NPROBE, dim: int = 64
-) -> DataFrame:
-    """Approximate cosine top-k via IVF inverted lists: cell join → exact
-    rescoring. Unlike :func:`lsh_topk`'s multi-table union, each target sits
+def ivf_topk(embeddings: DataFrame) -> DataFrame:
+    """Approximate cosine top-:data:`TOPK` via IVF inverted lists, probing
+    :data:`IVF_NPROBE` cells: cell join → exact rescoring. Unlike :func:`lsh_topk`'s multi-table union, each target sits
     in exactly ONE list and query probes are distinct cells, so every
     (query, target) candidate materializes at most once — no dedup shuffle.
     Scores are the identical exact int64-quantized cosine; only coverage is
@@ -291,7 +288,7 @@ def ivf_topk(
     the very array column it tries to save. Same carry-the-array trade as
     :func:`lsh_topk`."""
     qv = quantize(embeddings)
-    pr = ivf_probes(qv, nprobe, dim)
+    pr = ivf_probes(qv, IVF_NPROBE)
     a = pr.select(
         "vec_id", "cell", F.col("q").alias("qa"), F.col("n2").alias("n2a")
     )
@@ -307,12 +304,12 @@ def ivf_topk(
     return (
         pairs.withColumn("cos", cos)
         .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("vec_id", "rank", "other_id", "cos")
     )
 
 
-def lsh_neardup_pairs(embeddings: DataFrame, tau: float, dim: int = 64) -> DataFrame:
+def lsh_neardup_pairs(embeddings: DataFrame, tau: float) -> DataFrame:
     """Embedding-cosine near-dup EDGES: LSH bucket candidates with exact
     quantized cosine ≥ ``tau``, canonical ``vec_id < other_id`` orientation.
 
@@ -325,7 +322,7 @@ def lsh_neardup_pairs(embeddings: DataFrame, tau: float, dim: int = 64) -> DataF
     definition, not in engine nondeterminism.
     """
     qv = quantize(embeddings)
-    b = lsh_buckets(qv, dim)
+    b = lsh_buckets(qv)
     a = b.select(
         F.col("vec_id"), "table", "bucket", F.col("q").alias("qa"), F.col("n2").alias("n2a")
     )

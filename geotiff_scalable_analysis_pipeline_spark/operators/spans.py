@@ -60,14 +60,15 @@ def reassemble_spans(flat: DataFrame) -> DataFrame:
     )
 
 
-def span_fingerprint(spans_col: Column | str = "spans") -> Column:
-    """Canonical string of the ordered span sequence (for invariant checks).
+def span_fingerprint() -> Column:
+    """Canonical string of the ordered ``spans`` sequence (for invariant
+    checks).
 
     Built with ``array_sort`` on (offset, position) so it is insensitive to
     physical array order but pins the logical sequence. Compared verbatim
     against the DuckDB oracle's ``string_agg`` of the same format.
     """
-    col = F.col(spans_col) if isinstance(spans_col, str) else spans_col
+    col = F.col("spans")
     canon = F.transform(
         F.array_sort(col, lambda a, b: F.when(a["offset"] < b["offset"], -1).when(
             a["offset"] > b["offset"], 1

@@ -38,15 +38,11 @@ D38 = "CAST({} AS DECIMAL(38,0))"
 _W32 = 1 << 32
 
 
-def morans_i_components(
-    cells: DataFrame, x: str = "x", ci: str = "ci", cj: str = "cj"
-) -> DataFrame:
+def morans_i_components(cells: DataFrame) -> DataFrame:
     """One row: ``(n_cells, w_pairs, moran_num_hi, moran_num_lo,
     moran_den_hi, moran_den_lo)`` — see module doc. ``cells`` must hold one
     row per occupied cell."""
-    base = cells.select(
-        F.col(ci).alias("ci"), F.col(cj).alias("cj"), F.col(x).cast("long").alias("x")
-    )
+    base = cells.select("ci", "cj", F.col("x").cast("long").alias("x"))
     tot = base.agg(
         F.count("*").alias("n"), F.sum("x").alias("sx")
     )
@@ -89,12 +85,12 @@ def _split(c: str) -> list:
     ]
 
 
-def morans_i_sql(cells_cte: str, cells_alias: str, x: str = "x") -> str:
+def morans_i_sql(cells_cte: str, cells_alias: str) -> str:
     """DuckDB mirror of :func:`morans_i_components`."""
     return f"""WITH {cells_cte},
-tot AS (SELECT count(*) AS n, sum({x}) AS sx FROM {cells_alias}),
+tot AS (SELECT count(*) AS n, sum(x) AS sx FROM {cells_alias}),
 u AS (
-  SELECT ci, cj, CAST(t.n * c.{x} - t.sx AS HUGEINT) AS u
+  SELECT ci, cj, CAST(t.n * c.x - t.sx AS HUGEINT) AS u
   FROM {cells_alias} c CROSS JOIN tot t),
 nbr AS (
   SELECT u.ci + o.di AS ci, u.cj + o.dj AS cj, u.u AS u_src
@@ -117,9 +113,7 @@ def _split_sql(c: str) -> str:
     )
 
 
-def local_moran_components(
-    cells: DataFrame, x: str = "x", ci: str = "ci", cj: str = "cj"
-) -> DataFrame:
+def local_moran_components(cells: DataFrame) -> DataFrame:
     """Local Moran (LISA, Anselin 1995) exact components per cell:
     ``(ci, cj, u, nbr_sum_u, n_nbrs)`` with u = n·x − Σx as in
     :func:`morans_i_components`; the local statistic is
@@ -128,9 +122,7 @@ def local_moran_components(
     float anywhere. Same shape: 1-row broadcast, ×4 offset explode, one
     cell equi-join, one map-combined sum; cells with no occupied
     neighbor report ``n_nbrs = 0`` and ``nbr_sum_u = 0``."""
-    base = cells.select(
-        F.col(ci).alias("ci"), F.col(cj).alias("cj"), F.col(x).cast("long").alias("x")
-    )
+    base = cells.select("ci", "cj", F.col("x").cast("long").alias("x"))
     tot = base.agg(F.count("*").alias("n"), F.sum("x").alias("sx"))
     u = base.crossJoin(F.broadcast(tot)).select(
         "ci", "cj", (F.col("n") * F.col("x") - F.col("sx")).alias("u")
@@ -157,12 +149,12 @@ def local_moran_components(
     )
 
 
-def local_moran_sql(cells_cte: str, cells_alias: str, x: str = "x") -> str:
+def local_moran_sql(cells_cte: str, cells_alias: str) -> str:
     """DuckDB mirror of :func:`local_moran_components`."""
     return f"""WITH {cells_cte},
-tot AS (SELECT count(*) AS n, sum({x}) AS sx FROM {cells_alias}),
+tot AS (SELECT count(*) AS n, sum(x) AS sx FROM {cells_alias}),
 u AS (
-  SELECT ci, cj, t.n * c.{x} - t.sx AS u
+  SELECT ci, cj, t.n * c.x - t.sx AS u
   FROM {cells_alias} c CROSS JOIN tot t),
 nbr AS (
   SELECT u.ci + o.di AS ci, u.cj + o.dj AS cj, u.u AS u_nbr

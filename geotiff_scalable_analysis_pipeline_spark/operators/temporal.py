@@ -20,24 +20,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 FRAME_COLS = ("n_acq", "t", "v")
+# EWMA smoothing α = EWMA_NUM/EWMA_DEN = 0.2, state at EWMA_SCALE× resolution
+EWMA_NUM, EWMA_DEN, EWMA_SCALE = 2, 10, 1000
+CUSUM_SLACK, CUSUM_H = 500, 3000  # CUSUM slack k and alarm threshold h
+GAP_FILL_CARRIED = ("media_ref",)  # the columns gap_fill_locf carries forward
 
 
-def temporal_stack(
-    acq: DataFrame,
-    num_frames: int,
-    keys: tuple[str, ...] = ("cell", "band"),
-    ts: str = "ts_h",
-    tiebreak: str = "media_ref",
-    value: str = "v",
-) -> DataFrame:
-    """(keys..., ts, tiebreak, value) rows → (keys..., n_acq, t, v) frames.
+def temporal_stack(acq: DataFrame, num_frames: int) -> DataFrame:
+    """(cell, band, ts_h, media_ref, v) rows → (cell, band, n_acq, t, v)
+    frames.
 
-    Per key group the acquisitions are ordered by (ts, tiebreak); frame t
-    takes series[min(t, n-1)] — truncate beyond num_frames, pad-by-last when
-    the series is short, replicate when it has a single element.
+    Per (cell, band) group the acquisitions are ordered by (ts_h,
+    media_ref); frame t takes series[min(t, n-1)] — truncate beyond
+    num_frames, pad-by-last when the series is short, replicate when it has
+    a single element.
     """
-    ordered = F.array_sort(F.collect_list(F.struct(ts, tiebreak, value)))
-    vals = F.transform(ordered, lambda s: s[value])
+    keys = ("cell", "band")
+    ordered = F.array_sort(F.collect_list(F.struct("ts_h", "media_ref", "v")))
+    vals = F.transform(ordered, lambda s: s["v"])
     g = (
         acq.groupBy(*keys)
         .agg(vals.alias("_vals"), F.count("*").alias("n_acq"))
@@ -60,15 +60,14 @@ def gap_fill_locf(
     stop: int,
     step: int,
     keys: tuple[str, ...] = ("cell",),
-    ts: str = "ts_h",
-    carried: tuple[str, ...] = ("media_ref",),
 ) -> DataFrame:
     """Hypertable-style gap-fill: resample irregular observations to the
     regular tick grid ``start, start+step, …, stop`` per key group, carrying
     the last observation forward (LOCF).
 
-    Output: one row per (keys…, ``ts`` tick) with each ``carried`` column's
-    most recent value at or before the tick, ``last_ts`` (its observation
+    Output: one row per (keys…, ``ts_h`` tick) with each
+    :data:`GAP_FILL_CARRIED` column's most recent value at or before the
+    tick, ``last_ts`` (its observation
     time) and ``gap`` (tick − last_ts); all three are NULL for ticks before
     a group's first observation. Groups are the DISTINCT key combinations
     present in ``obs`` — a group's grid starts at ``start`` even if its
@@ -88,11 +87,12 @@ def gap_fill_locf(
     from pyspark.sql import Window
 
     kc = list(keys)
+    carried = GAP_FILL_CARRIED
     o = obs.select(
         *kc,
-        F.col(ts).cast("long").alias("_t"),
+        F.col("ts_h").cast("long").alias("_t"),
         F.lit(0).alias("_tick"),
-        F.col(ts).cast("long").alias("_obs_ts"),
+        F.col("ts_h").cast("long").alias("_obs_ts"),
         *[F.col(c) for c in carried],
     )
     grid = (
@@ -124,7 +124,7 @@ def gap_fill_locf(
     )
     return filled.filter(F.col("_tick") == 1).select(
         *kc,
-        F.col("_t").alias(ts),
+        F.col("_t").alias("ts_h"),
         *carried,
         "last_ts",
         (F.col("_t") - F.col("last_ts")).alias("gap"),
@@ -136,17 +136,14 @@ def ewma(
     keys: tuple[str, ...],
     ts: str,
     value: str,
-    num: int = 2,
-    den: int = 10,
-    scale: int = 1000,
 ) -> DataFrame:
     """Fixed-point exponentially weighted moving average per key group —
     the hypertable smoothing companion to :func:`gap_fill_locf`
     (TimescaleDB's ``toolkit`` EWMA / Pandas ``ewm(alpha=num/den)``).
 
     Float EWMA is not reproducible across engines; this is the engine's
-    fixed-point answer: with α = num/den and the state carried at
-    ``scale``× resolution,
+    fixed-point answer: with α = num/den = EWMA_NUM/EWMA_DEN and the state
+    carried at scale = :data:`EWMA_SCALE`× resolution,
 
     * a₀ = v₀·scale
     * aₜ = (num·vₜ·scale + (den−num)·aₜ₋₁) div den   (integer floor)
@@ -165,8 +162,7 @@ def ewma(
     ``ewma_q`` is the smoothed value at ``scale``× (divide downstream).
     Total order inside a group is (ts, value) — exact ties contribute in
     that deterministic order."""
-    if not (0 < num <= den):
-        raise ValueError(f"alpha=num/den must be in (0, 1]; got {num}/{den}")
+    num, den, scale = EWMA_NUM, EWMA_DEN, EWMA_SCALE
     kc = [F.col(k) for k in keys]
     arr = F.array_sort(
         F.collect_list(F.struct(F.col(ts).alias("ts"), F.col(value).alias("v")))
@@ -197,13 +193,8 @@ def ewma(
     )
 
 
-def interval_coverage(
-    intervals: DataFrame,
-    keys: tuple[str, ...],
-    lo: str = "lo",
-    hi: str = "hi",
-) -> DataFrame:
-    """Union length of half-open integer intervals ``[lo, hi)`` per key
+def interval_coverage(intervals: DataFrame, keys: tuple[str, ...]) -> DataFrame:
+    """Union length of half-open integer intervals ``[lo_h, hi_h)`` per key
     group — the "total covered time" aggregate (sensor uptime, campaign
     coverage, SLA windows) that naive ``sum(hi-lo)`` double-counts under
     overlap.
@@ -219,6 +210,7 @@ def interval_coverage(
     ``span_lo``/``span_hi`` (group extent)."""
     from pyspark.sql import Window
 
+    lo, hi = "lo_h", "hi_h"
     kc = [F.col(k) for k in keys]
     w = (
         Window.partitionBy(*kc)
@@ -363,8 +355,6 @@ def cusum(
     ts: str,
     value: str,
     target: int,
-    slack: int = 0,
-    threshold: int | None = None,
 ) -> DataFrame:
     """Tabular (two-sided) CUSUM change detection per key group — the
     classic Page (1954) sequential drift detector, the alarm companion to
@@ -373,18 +363,19 @@ def cusum(
     * ``hiₜ = max(0, hiₜ₋₁ + vₜ − target − slack)``   (upward drift)
     * ``loₜ = max(0, loₜ₋₁ + target − slack − vₜ)``   (downward drift)
 
-    starting from 0 — all exact int64 (``target``/``slack`` are caller
-    integers; float CUSUM would drift across engines). ``threshold`` (h)
-    adds an ``alarm`` flag ``hi ≥ h OR lo ≥ h`` per observation; the
-    decision rule stays in-plan so a monitoring sink can filter on it.
+    starting from 0, slack = :data:`CUSUM_SLACK` — all exact int64 (float
+    CUSUM would drift across engines). The ``alarm`` flag is ``hi ≥ h OR
+    lo ≥ h`` per observation, h = :data:`CUSUM_H`; the decision rule stays
+    in-plan so a monitoring sink can filter on it.
 
     The recurrence is inherently sequential per key — one order-pinned
     fold over the group's (ts, value)-sorted series, same contract and
     bounds as :func:`ewma` (resample unbounded streams first).
 
-    Output: keys + ``(ts, value, cusum_hi, cusum_lo[, alarm])`` per
+    Output: keys + ``(ts, value, cusum_hi, cusum_lo, alarm)`` per
     observation.
     """
+    slack, threshold = CUSUM_SLACK, CUSUM_H
     kc = [F.col(k) for k in keys]
     arr = F.array_sort(
         F.collect_list(F.struct(F.col(ts).alias("ts"), F.col(value).alias("v")))
@@ -400,7 +391,7 @@ def cusum(
         f"  'ph', {step_hi}, 'pl', {step_lo}), "
         "acc -> acc.out)"
     )
-    out = (
+    return (
         obs.groupBy(*kc)
         .agg(arr.alias("_series"))
         .select(*kc, F.explode(fold).alias("_e"))
@@ -411,10 +402,8 @@ def cusum(
             F.col("_e.hi").alias("cusum_hi"),
             F.col("_e.lo").alias("cusum_lo"),
         )
-    )
-    if threshold is not None:
-        out = out.withColumn(
+        .withColumn(
             "alarm",
             (F.col("cusum_hi") >= threshold) | (F.col("cusum_lo") >= threshold),
         )
-    return out
+    )

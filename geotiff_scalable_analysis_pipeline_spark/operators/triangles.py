@@ -55,13 +55,14 @@ from pyspark.sql import functions as F
 from ..plans.placement import cpu_dense_repartition
 
 
-def _simple_graph(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """Canonical SIMPLE undirected edge set ``(u < v)``: self-loops dropped,
-    parallel/reversed duplicates collapsed (one hash aggregate)."""
+def _simple_graph(edges: DataFrame) -> DataFrame:
+    """Canonical SIMPLE undirected edge set ``(u < v)`` of ``(src, dst)``
+    edges: self-loops dropped, parallel/reversed duplicates collapsed (one
+    hash aggregate)."""
     return (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
+            F.least(F.col("src"), F.col("dst")).alias("u"),
+            F.greatest(F.col("src"), F.col("dst")).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .groupBy("u", "v")
@@ -82,12 +83,11 @@ def _degrees(simple: DataFrame) -> DataFrame:
 
 def triangle_counts(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_id: int | None = None,
     close_splits: int = 1,
 ) -> DataFrame:
-    """Per-node triangle participation: ``(node, n_triangles)``, nodes with
+    """Per-node triangle participation over ``(src, dst)`` edges:
+    ``(node, n_triangles)``, nodes with
     at least one triangle. Input may contain self-loops, duplicates, and
     both orientations; they do not change the answer.
 
@@ -130,7 +130,7 @@ def triangle_counts(
     """
     if close_splits < 1:
         raise ValueError(f"close_splits must be >= 1; got {close_splits}")
-    simple = _simple_graph(edges, src, dst)
+    simple = _simple_graph(edges)
     deg = _degrees(simple)
     # total order: rank = d·K + id packed into ONE int64. A (degree, id)
     # STRUCT comparison is semantically identical but struct compares run
@@ -239,14 +239,9 @@ def triangle_counts(
     )
 
 
-def clustering_coefficient(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_id: int | None = None,
-) -> DataFrame:
+def clustering_coefficient(edges: DataFrame) -> DataFrame:
     """Local clustering coefficient per node over the SIMPLE undirected
-    graph: ``(node, n_triangles, degree, coeff)`` for every node with
+    graph of ``(src, dst)`` edges: ``(node, n_triangles, degree, coeff)`` for every node with
     degree ≥ 2 (the coefficient is undefined below that), where ``coeff``
     = 2·T / (d·(d−1)) — the fraction of a node's neighbor pairs that are
     themselves connected (Watts & Strogatz 1998).
@@ -261,9 +256,9 @@ def clustering_coefficient(
     Scale shape: :func:`triangle_counts`'s wedge pipeline + one node-keyed
     left join of the degree table against the per-node counts.
     """
-    simple = _simple_graph(edges, src, dst)
+    simple = _simple_graph(edges)
     deg = _degrees(simple)
-    t = triangle_counts(edges, src, dst, max_id=max_id)
+    t = triangle_counts(edges)
     return (
         deg.filter(F.col("d") >= 2)
         .join(t, "node", "left")

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+N_SALTS = 16  # salts per (zone, band) key in two_stage_zonal
+
 
 def zonal_stats(pip_pairs: DataFrame, pixel_stats: DataFrame) -> DataFrame:
     """(media_ref, zone_id) pairs ⋈ per-tile stats → per-(zone, band) stats.
@@ -54,16 +56,14 @@ def zonal_stats(pip_pairs: DataFrame, pixel_stats: DataFrame) -> DataFrame:
     )
 
 
-def two_stage_zonal(
-    pip_pairs: DataFrame, pixel_stats: DataFrame, n_salts: int = 16
-) -> DataFrame:
+def two_stage_zonal(pip_pairs: DataFrame, pixel_stats: DataFrame) -> DataFrame:
     """Explicitly salted variant for hot zones: partial agg on
-    (zone_id, band, salt), final on (zone_id, band). Identical results —
-    integer partials commute exactly."""
+    (zone_id, band, salt) over :data:`N_SALTS` salts, final on
+    (zone_id, band). Identical results — integer partials commute exactly."""
     joined = (
         pip_pairs.select("media_ref", "zone_id")
         .join(pixel_stats, "media_ref")
-        .withColumn("_salt", (F.xxhash64("media_ref") % n_salts + n_salts) % n_salts)
+        .withColumn("_salt", (F.xxhash64("media_ref") % N_SALTS + N_SALTS) % N_SALTS)
     )
     partial = joined.groupBy("zone_id", "band", "_salt").agg(
         F.count("*").alias("n_tiles"),

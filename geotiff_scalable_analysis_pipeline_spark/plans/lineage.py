@@ -14,7 +14,6 @@ backpressure, and one key's commit and stage tail overlap the next key.
 
 from __future__ import annotations
 
-import json
 import os
 import queue
 import uuid
@@ -62,10 +61,10 @@ class LineageLog:
         keys = (_marker_key(p.name[: -len(".done")]) for p in self.dir.glob("*.done"))
         return sorted(keys, key=lambda k: (k is not None, k or ""))
 
-    def commit_key(self, key: str | None, meta: dict | None = None) -> None:
+    def commit_key(self, key: str | None) -> None:
         p = self._marker(key)
         tmp = p.with_suffix(f".tmp-{uuid.uuid4().hex}")
-        tmp.write_text(json.dumps(meta or {}))
+        tmp.write_text("{}")
         os.replace(tmp, p)
 
 

@@ -17,31 +17,30 @@ it to the session they start); the engine's operators never read it.
 
 from __future__ import annotations
 
-_DEFAULT_TASK_BUDGET = 512 * 1024 * 1024  # conservative cluster default
+TASK_BUDGET_BYTES = 512 * 1024 * 1024  # conservative cluster default
+# payload copies alive per row: raw batch + decoded numpy + result (the
+# Spark analog of the reference's queue-depth multipliers)
+PAYLOAD_COPIES = 3.0
 
 
-def arrow_rows_for_payload(payload_bytes: int, budget_bytes: int | None = None, copies: float = 3.0) -> int:
-    """Rows per Arrow batch so ``rows × payload × copies`` fits the budget.
-
-    ``copies`` ≈ raw batch + decoded numpy + result (the Spark analog of the
-    reference's queue-depth multipliers). Clamped to [1, 8192]: narrow rows
-    cap at the engine's large-batch default, fat blobs drop to a few rows.
+def arrow_rows_for_payload(payload_bytes: int) -> int:
+    """Rows per Arrow batch so ``rows × payload × PAYLOAD_COPIES`` fits the
+    task budget. Clamped to [1, 8192]: narrow rows cap at the engine's
+    large-batch default, fat blobs drop to a few rows.
     """
-    budget = budget_bytes if budget_bytes is not None else _DEFAULT_TASK_BUDGET
     if payload_bytes <= 0:
         return 8192
-    return max(1, min(8192, int(budget / (payload_bytes * copies))))
+    return max(1, min(8192, int(TASK_BUDGET_BYTES / (payload_bytes * PAYLOAD_COPIES))))
 
 
-def scan_partition_bytes(payload_bytes: int, budget_bytes: int | None = None) -> int:
+def scan_partition_bytes(payload_bytes: int) -> int:
     """``spark.sql.files.maxPartitionBytes`` so one scan task's payloads fit
     the budget (≥1 row group, ≤ budget/4 to keep 4 batches in flight)."""
-    budget = budget_bytes if budget_bytes is not None else _DEFAULT_TASK_BUDGET
     lo, hi = 4 * 1024 * 1024, 128 * 1024 * 1024
-    return max(lo, min(hi, max(payload_bytes, budget // 4)))
+    return max(lo, min(hi, max(payload_bytes, TASK_BUDGET_BYTES // 4)))
 
 
-def autotune_conf(payload_bytes: int, budget_bytes: int | None = None) -> dict[str, str]:
+def autotune_conf(payload_bytes: int) -> dict[str, str]:
     """Spark conf overrides for a table whose rows carry ~payload_bytes blobs.
 
     Pass to ``session.get_spark(extra_conf=...)`` — replaces the hard-coded
@@ -50,9 +49,9 @@ def autotune_conf(payload_bytes: int, budget_bytes: int | None = None) -> dict[s
     """
     return {
         "spark.sql.execution.arrow.maxRecordsPerBatch": str(
-            arrow_rows_for_payload(payload_bytes, budget_bytes)
+            arrow_rows_for_payload(payload_bytes)
         ),
         "spark.sql.files.maxPartitionBytes": str(
-            scan_partition_bytes(payload_bytes, budget_bytes)
+            scan_partition_bytes(payload_bytes)
         ),
     }

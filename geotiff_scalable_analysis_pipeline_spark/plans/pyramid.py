@@ -17,24 +17,21 @@ from ..operators.raster import tile_footprints
 from .catalog import TableCatalog
 
 ANCHOR_LEVEL = 2  # 16 coarse partitions over the frame
+FINEST_LEVEL, COARSEST_LEVEL = 7, 4  # the pyramid's level range
+PYRAMID_TABLE = "tile_pyramid"
 
 
-def build_pyramid(
-    catalog: TableCatalog,
-    tiles: DataFrame,
-    finest: int = 8,
-    coarsest: int = 4,
-    table: str = "tile_pyramid",
-) -> int:
-    """Materialize levels finest..coarsest; returns the snapshot id."""
-    base = tile_footprints(tiles, finest).select("media_ref", "cell")
+def build_pyramid(catalog: TableCatalog, tiles: DataFrame) -> int:
+    """Materialize levels FINEST_LEVEL..COARSEST_LEVEL into
+    :data:`PYRAMID_TABLE`; returns the snapshot id."""
+    base = tile_footprints(tiles, FINEST_LEVEL).select("media_ref", "cell")
     levels = []
     cur = base
-    lv = finest
+    lv = FINEST_LEVEL
     while True:
         agg = cur.groupBy("cell").agg(F.count("*").alias("n_tiles"))
         levels.append(agg.withColumn("level", F.lit(lv)))
-        if lv == coarsest:
+        if lv == COARSEST_LEVEL:
             break
         cur = cur.select("media_ref", parent_col(F.col("cell")).alias("cell")).distinct()
         lv -= 1
@@ -50,7 +47,9 @@ def build_pyramid(
             f" (level - {ANCHOR_LEVEL}) * 2), 5) + {ANCHOR_LEVEL}"
         ),
     )
-    return catalog.commit(out, table, partition_by=["level", "cell_anchor"], mode="overwrite")
+    return catalog.commit(
+        out, PYRAMID_TABLE, partition_by=["level", "cell_anchor"], mode="overwrite"
+    )
 
 
 def read_viewport(
@@ -58,13 +57,12 @@ def read_viewport(
     spark: SparkSession,
     level: int,
     anchor_cells: set[int],
-    table: str = "tile_pyramid",
 ) -> DataFrame:
     """Manifest-pruned read: only partitions of ``level`` whose anchor is in
     the viewport's anchor-cell set are scanned."""
     return catalog.read(
         spark,
-        table,
+        PYRAMID_TABLE,
         partition_filter=lambda p: int(p.get("level", -1)) == level
         and int(p.get("cell_anchor", -1)) in anchor_cells,
     )

@@ -4,11 +4,10 @@ AQE's skew-join splitting only helps *shuffle joins*; a skewed ``groupBy``
 key or a hot broadcast-probe cell still lands on one task. This module makes
 the salting decision data-driven, the way the driver would on a real cluster:
 
-1. :func:`key_histogram` — (key, count) table, optionally from a seeded
-   sample;
+1. :func:`key_histogram` — (key, count) table;
 2. :func:`salt_plan` — keys whose count exceeds ``threshold`` × the mean,
    each with a salt factor sized so each salted partition holds ≈ the mean
-   key load;
+   key load (at most :data:`MAX_SALTS`);
 3. :func:`apply_salts` — deterministic salt column (hash of a stable row
    attribute, never rand() — resume semantics require reproducible salts)
    joined from the (tiny, broadcast) salt plan; follow with two-stage
@@ -25,16 +24,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def key_histogram(df: DataFrame, key: str, sample_fraction: float | None = None) -> DataFrame:
-    """(key, cnt) — optionally from a deterministic sample (seeded)."""
-    d = df.sample(fraction=sample_fraction, seed=42) if sample_fraction else df
-    return d.groupBy(key).agg(F.count("*").alias("cnt"))
+MAX_SALTS = 64  # cap on one hot key's salt factor
 
 
-def salt_plan(hist: DataFrame, key: str, threshold: float = 4.0, max_salts: int = 64) -> DataFrame:
+def key_histogram(df: DataFrame, key: str) -> DataFrame:
+    """(key, cnt) over every row of ``df``."""
+    return df.groupBy(key).agg(F.count("*").alias("cnt"))
+
+
+def salt_plan(hist: DataFrame, key: str, threshold: float = 4.0) -> DataFrame:
     """Keys hotter than ``threshold``× the mean get ``ceil(cnt/mean)`` salts
-    (capped). Returns (key, n_salts) — empty if the distribution is flat.
+    (at most :data:`MAX_SALTS`). Returns (key, n_salts) — empty if the
+    distribution is flat.
 
     Lazy by construction (round 6): the mean rides along as a broadcast
     1-row aggregate instead of a driver ``first()`` — callers that
@@ -48,7 +49,7 @@ def salt_plan(hist: DataFrame, key: str, threshold: float = 4.0, max_salts: int 
         .select(
             key,
             F.least(
-                F.lit(max_salts), F.ceil(F.col("cnt") / F.col("_mean_cnt")).cast("int")
+                F.lit(MAX_SALTS), F.ceil(F.col("cnt") / F.col("_mean_cnt")).cast("int")
             ).alias("n_salts"),
         )
     )

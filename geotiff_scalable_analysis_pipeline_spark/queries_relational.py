@@ -217,7 +217,7 @@ def q_events_sessions_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``end_us`` is the native window end = last event + gap."""
     from .streaming.ingest import session_windows
 
-    return session_windows(_t(spark, sf_dir, "events"), "30 minutes")
+    return session_windows(_t(spark, sf_dir, "events"))
 
 
 def q_streaming_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -717,14 +717,14 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return graph_bfs.bfs_hops(edges, sources, max_hops=_BFS_HOPS)
 
 
-def _sql_bfs(n_nodes: int = _PR_NODES, hops: int = _BFS_HOPS) -> str:
+def _sql_bfs() -> str:
     from . import datagen as dg
 
     ctes = [
-        dg.graph_edges_sql(n_nodes).strip(),
-        f"d0 AS (SELECT n AS node, CAST(0 AS BIGINT) AS dist FROM range(0, {n_nodes}) t(n) WHERE n % 37 = 0)",
+        dg.graph_edges_sql(_PR_NODES).strip(),
+        f"d0 AS (SELECT n AS node, CAST(0 AS BIGINT) AS dist FROM range(0, {_PR_NODES}) t(n) WHERE n % 37 = 0)",
     ]
-    for i in range(hops):
+    for i in range(_BFS_HOPS):
         ctes.append(f"""d{i + 1} AS (
   SELECT node, MIN(dist) AS dist FROM (
     SELECT node, dist FROM d{i}
@@ -732,7 +732,7 @@ def _sql_bfs(n_nodes: int = _PR_NODES, hops: int = _BFS_HOPS) -> str:
     SELECT e.dst AS node, d.dist + 1 AS dist
     FROM gedges e JOIN d{i} d ON d.node = e.src) GROUP BY node)""")
     joined = ",\n".join(ctes)
-    return f"WITH {joined}\nSELECT node, dist FROM d{hops}"
+    return f"WITH {joined}\nSELECT node, dist FROM d{_BFS_HOPS}"
 
 
 # --- data-quality profiling + constraint checks (Deequ-style) --------------
@@ -919,27 +919,29 @@ def q_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _t(spark, sf_dir, "part").select(
         cents.alias("price_cents"), F.col("p_size").cast("long").alias("size")
     )
-    return skyline_2d(src, "price_cents", "size", count_alias="n_parts")
+    return skyline_2d(src, "price_cents", "size")
 
 
-def skyline_2d(
-    src: DataFrame, x: str, y: str, count_alias: str = "n", bwidth: int = 1 << 10
-) -> DataFrame:
+SKYLINE_BUCKET = 1 << 10  # x-axis bucket width of the skyline prefix scan
+
+
+def skyline_2d(src: DataFrame, x: str, y: str) -> DataFrame:
     """Core of :func:`q_skyline_parts`: minimize (x, y) over any frame;
-    returns the non-dominated distinct points with their multiplicity."""
+    returns the non-dominated distinct points with their multiplicity
+    ``n_parts``. The x axis is bucketed :data:`SKYLINE_BUCKET` wide."""
     # One parameterized spark.sql parse (round 6 — the Window-spec Column
     # chain cost ~490 py4j round-trips per construction). The deliberate
     # single-partition window keeps its constant `bkt & 0` partition key (a
     # bare literal 0 would be constant-folded out of the spec, reintroducing
     # the WindowExec no-partition warning); its input is the bucket-min
-    # table, whose cardinality is price-range/bwidth — a constant, not
+    # table, whose cardinality is price-range/SKYLINE_BUCKET — a constant, not
     # data-sized. The broadcast hint replicates the F.broadcast(bprev) of
     # the Column form.
-    pts = src.groupBy(x, y).agg(F.count("*").alias(count_alias))
+    pts = src.groupBy(x, y).agg(F.count("*").alias("n_parts"))
     return src.sparkSession.sql(
         f"""
 WITH perx AS (
-  SELECT {x}, min({y}) AS min_size, {x} div {bwidth} AS bkt
+  SELECT {x}, min({y}) AS min_size, {x} div {SKYLINE_BUCKET} AS bkt
   FROM {{pts}} GROUP BY {x}),
 bprev AS (
   SELECT bkt, min(bmin) OVER (PARTITION BY bkt & 0 ORDER BY bkt
@@ -953,7 +955,7 @@ frontier AS (
              AS prev_min
     FROM perx JOIN bprev USING (bkt))
   WHERE prev_min IS NULL OR min_size < prev_min)
-SELECT {x}, {y}, CAST({count_alias} AS BIGINT) AS {count_alias}
+SELECT {x}, {y}, CAST(n_parts AS BIGINT) AS n_parts
 FROM frontier JOIN {{pts}} USING ({x}, {y})""",
         pts=pts,
     )
@@ -1067,15 +1069,15 @@ def q_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return graph_bfs.sssp_weighted(edges, sources, iters=_SSSP_ITERS)
 
 
-def _sql_sssp(n_nodes: int = _PR_NODES, iters: int = _SSSP_ITERS) -> str:
+def _sql_sssp() -> str:
     from . import datagen as dg
 
     ctes = [
-        dg.weighted_graph_edges_sql(n_nodes).strip(),
+        dg.weighted_graph_edges_sql(_PR_NODES).strip(),
         f"s0 AS (SELECT n AS node, CAST(0 AS BIGINT) AS dist "
-        f"FROM range(0, {n_nodes}) t(n) WHERE n % 37 = 0)",
+        f"FROM range(0, {_PR_NODES}) t(n) WHERE n % 37 = 0)",
     ]
-    for i in range(iters):
+    for i in range(_SSSP_ITERS):
         ctes.append(f"""s{i + 1} AS (
   SELECT node, MIN(dist) AS dist FROM (
     SELECT node, dist FROM s{i}
@@ -1083,7 +1085,7 @@ def _sql_sssp(n_nodes: int = _PR_NODES, iters: int = _SSSP_ITERS) -> str:
     SELECT e.dst AS node, d.dist + e.w AS dist
     FROM wedges e JOIN s{i} d ON d.node = e.src) GROUP BY node)""")
     joined = ",\n".join(ctes)
-    return f"WITH {joined}\nSELECT node, dist FROM s{iters}"
+    return f"WITH {joined}\nSELECT node, dist FROM s{_SSSP_ITERS}"
 
 
 # --- triangle counting (degree-ordered wedge join) -------------------------
@@ -1099,12 +1101,12 @@ def q_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangles.triangle_counts(dg.graph_edges_df(spark, _PR_NODES))
 
 
-def _sql_triangles(n_nodes: int = _PR_NODES) -> str:
+def _sql_triangles() -> str:
     from . import datagen as dg
     from .operators import triangles
 
     return triangles.triangle_counts_sql(
-        dg.graph_edges_sql(n_nodes).strip(), "gedges"
+        dg.graph_edges_sql(_PR_NODES).strip(), "gedges"
     )
 
 
@@ -1118,12 +1120,12 @@ def q_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangles.clustering_coefficient(dg.graph_edges_df(spark, _PR_NODES))
 
 
-def _sql_clustering(n_nodes: int = _PR_NODES) -> str:
+def _sql_clustering() -> str:
     from . import datagen as dg
     from .operators import triangles
 
     return triangles.clustering_coefficient_sql(
-        dg.graph_edges_sql(n_nodes).strip(), "gedges"
+        dg.graph_edges_sql(_PR_NODES).strip(), "gedges"
     )
 
 
@@ -1137,7 +1139,7 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import datagen as dg
     from .operators.triangles import _degrees, _simple_graph
 
-    simple = _simple_graph(dg.graph_edges_df(spark, _PR_NODES), "src", "dst")
+    simple = _simple_graph(dg.graph_edges_df(spark, _PR_NODES))
     deg = _degrees(simple)
     du = deg.withColumnRenamed("node", "u").withColumnRenamed("d", "du")
     dv = deg.withColumnRenamed("node", "v").withColumnRenamed("d", "dv")
@@ -1183,10 +1185,10 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_assortativity(n_nodes: int = _PR_NODES) -> str:
+def _sql_assortativity() -> str:
     from . import datagen as dg
 
-    return f"""WITH {dg.graph_edges_sql(n_nodes).strip()},
+    return f"""WITH {dg.graph_edges_sql(_PR_NODES).strip()},
 simple AS (
   SELECT least(src, dst) AS u, greatest(src, dst) AS v
   FROM gedges WHERE src <> dst GROUP BY 1, 2),
@@ -1241,12 +1243,12 @@ def q_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kcore.k_core(dg.graph_edges_df(spark, _PR_NODES), k=_KCORE_K)
 
 
-def _sql_kcore(n_nodes: int = _PR_NODES) -> str:
+def _sql_kcore() -> str:
     from . import datagen as dg
     from .operators import kcore
 
     return kcore.k_core_sql(
-        dg.graph_edges_sql(n_nodes).strip(), "gedges", k=_KCORE_K, rounds=_KCORE_UNROLL
+        dg.graph_edges_sql(_PR_NODES).strip(), "gedges", k=_KCORE_K, rounds=_KCORE_UNROLL
     )
 
 
@@ -1265,18 +1267,13 @@ def q_copurchase_butterflies(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("u"), F.col("l_partkey").alias("v")
     )
-    return butterflies.butterfly_counts(e, wedge_over="left")
+    return butterflies.butterfly_counts(e)
 
 
 def _sql_butterflies() -> str:
     from .operators import butterflies
 
-    return butterflies.butterfly_counts_sql(
-        "SELECT l_orderkey AS u, l_partkey AS v FROM lineitem",
-        "u",
-        "v",
-        wedge_over="left",
-    )
+    return butterflies.butterfly_counts_sql("SELECT l_orderkey AS u, l_partkey AS v FROM lineitem")
 
 
 # --- grouped Pearson correlation, exact components -------------------------
@@ -1494,18 +1491,18 @@ def q_pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_pagerank(n_nodes: int = _PR_NODES, iters: int = _PR_ITERS,
-                  scale: int = 1_000_000, num: int = 85, den: int = 100) -> str:
+def _sql_pagerank() -> str:
     from . import datagen as dg
+    from .operators.pagerank import DAMPING_DEN as den, DAMPING_NUM as num, SCALE
 
-    base = (den - num) * scale // den
+    base = (den - num) * SCALE // den
     ctes = [
-        dg.graph_edges_sql(n_nodes).strip().rstrip(),
-        f"nodes AS (SELECT n AS node FROM range(0, {n_nodes}) t(n))",
+        dg.graph_edges_sql(_PR_NODES).strip().rstrip(),
+        f"nodes AS (SELECT n AS node FROM range(0, {_PR_NODES}) t(n))",
         "outdeg AS (SELECT src, count(*) AS odeg FROM gedges GROUP BY src)",
-        f"rk0 AS (SELECT node, CAST({scale} AS BIGINT) AS rank FROM nodes)",
+        f"rk0 AS (SELECT node, CAST({SCALE} AS BIGINT) AS rank FROM nodes)",
     ]
-    for i in range(iters):
+    for i in range(_PR_ITERS):
         ctes.append(f"""rk{i + 1} AS (
   SELECT n.node, {base} + ({num} * COALESCE(inc.s, 0)) // {den} AS rank
   FROM nodes n LEFT JOIN (
@@ -1513,7 +1510,7 @@ def _sql_pagerank(n_nodes: int = _PR_NODES, iters: int = _PR_ITERS,
     FROM gedges e JOIN outdeg o ON o.src = e.src JOIN rk{i} r ON r.node = e.src
     GROUP BY e.dst) inc ON inc.node = n.node)""")
     joined = ",\n".join(ctes)
-    return f"WITH {joined}\nSELECT node, CAST(rank AS BIGINT) AS rank FROM rk{iters}"
+    return f"WITH {joined}\nSELECT node, CAST(rank AS BIGINT) AS rank FROM rk{_PR_ITERS}"
 
 
 QUERIES = {

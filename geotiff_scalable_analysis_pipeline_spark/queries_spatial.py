@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from . import datagen as dg
 from .functions.cells import cell_id_sql, cell_res
 from .operators import chunking, knn, pip_join, raster, spans, warp, zonal
+from .operators.temporal import CUSUM_H, CUSUM_SLACK, EWMA_DEN, EWMA_NUM, EWMA_SCALE
 
 # fixed correctness-scale corpus (driver runs these at sf0.01)
 CFG = dg.GoldenConfig(n_tiles=2000, n_points=500, n_docs=5000, n_media_tiles=200)
@@ -100,7 +101,7 @@ FROM rzones a JOIN bzones b
 def q_tile_overviews(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-tile average-pooled overview pyramid (levels 1-2), iterative
     integer floor-mean — map-only, operators/raster.py."""
-    return raster.tile_overview_stats(dg.media_df(spark, CFG), levels=2)
+    return raster.tile_overview_stats(dg.media_df(spark, CFG))
 
 
 def _sql_tile_overviews() -> str:
@@ -585,7 +586,7 @@ def q_tile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_TILE_HISTOGRAM = f"""WITH {dg.tiles_sql(CFG)}, {_PX_CTE}
 SELECT media_ref, CAST(band AS INTEGER) AS band,
-       CAST((dn * {raster.HIST_BINS}) // 10001 AS INTEGER) AS bin, count(*) AS cnt
+       CAST((dn * {raster.HIST_BINS}) // {raster.DN_MAX + 1} AS INTEGER) AS bin, count(*) AS cnt
 FROM px GROUP BY media_ref, band, bin"""
 
 
@@ -712,7 +713,7 @@ def q_span_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = dg.documents_df(spark, CFG)
     flat = spans.explode_spans(docs)
     rebuilt = spans.reassemble_spans(flat)  # full explode→shuffle→rebuild cycle
-    return rebuilt.select("doc_id", spans.span_fingerprint("spans").alias("fp"))
+    return rebuilt.select("doc_id", spans.span_fingerprint().alias("fp"))
 
 
 SQL_SPAN_FINGERPRINTS = f"""WITH {dg.spans_flat_sql(CFG)}
@@ -901,15 +902,7 @@ def q_range_join_campaigns(spark: SparkSession, sf_dir: str) -> DataFrame:
     acq = dg.tiles_df(spark, CFG).select(
         "media_ref", F.col("tile_k").cast("long").alias("ts_h")
     )
-    out = range_join.range_join_point_interval(
-        acq,
-        dg.campaigns_df(spark, CFG),
-        v="ts_h",
-        lo="lo_h",
-        hi="hi_h",
-        bucket_width=201,  # max campaign length by construction (datagen):
-        # explicit domain knowledge, so no eager max-length pre-job runs
-    )
+    out = range_join.range_join_point_interval(acq, dg.campaigns_df(spark, CFG))
     return out.select("campaign_id", "media_ref", "ts_h")
 
 
@@ -1080,7 +1073,7 @@ def q_campaign_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = dg.campaigns_df(spark, CFG).withColumn(
         "instrument", F.col("campaign_id") % 10
     )
-    return temporal.interval_coverage(c, keys=("instrument",), lo="lo_h", hi="hi_h")
+    return temporal.interval_coverage(c, keys=("instrument",))
 
 
 SQL_CAMPAIGN_COVERAGE = f"""WITH {dg.campaigns_sql(CFG)},
@@ -1098,7 +1091,6 @@ SELECT instrument,
 FROM ticks GROUP BY instrument"""
 
 
-EWMA_NUM, EWMA_DEN, EWMA_SCALE = 2, 10, 1000
 EWMA_VSEED = 41
 
 
@@ -1114,13 +1106,10 @@ def q_ewma_series(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=("cell",),
         ts="ts_h",
         value="v",
-        num=EWMA_NUM,
-        den=EWMA_DEN,
-        scale=EWMA_SCALE,
     )
 
 
-CUSUM_TARGET, CUSUM_SLACK, CUSUM_H = 5000, 500, 3000
+CUSUM_TARGET = 5000
 
 
 def q_cusum_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1138,8 +1127,6 @@ def q_cusum_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts="ts_h",
         value="v",
         target=CUSUM_TARGET,
-        slack=CUSUM_SLACK,
-        threshold=CUSUM_H,
     )
 
 
@@ -1834,7 +1821,7 @@ def q_temporal_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats.join(t.select("media_ref", F.col("tile_k").cast("long").alias("ts_h")), "media_ref")
         .join(cells, "media_ref")
     )
-    out = temporal.temporal_stack(acq, N_FRAMES, keys=("cell", "band"))
+    out = temporal.temporal_stack(acq, N_FRAMES)
     return out.select(
         "cell", F.col("band").cast("int").alias("band"), "n_acq", "t", "v"
     )
@@ -1869,7 +1856,7 @@ def q_focal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import focal
 
     media = dg.media_df(spark, CFG)
-    out = focal.focal_stats(media, FOCAL_GC, FOCAL_GR, CFG.tile_px, radius=1)
+    out = focal.focal_stats(media, FOCAL_GC, FOCAL_GR, CFG.tile_px)
     return out.orderBy("media_ref", "band")
 
 
@@ -1912,7 +1899,7 @@ def q_focal_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import focal
 
     media = dg.media_df(spark, CFG)
-    return focal.focal_median_stats(media, FOCAL_GC, FOCAL_GR, CFG.tile_px, radius=1)
+    return focal.focal_median_stats(media, FOCAL_GC, FOCAL_GR, CFG.tile_px)
 
 
 def _sql_focal_median() -> str:
@@ -1950,7 +1937,7 @@ def q_tile_percentile_stretch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-tile contrast-stretch anchors (P-family): exact nearest-rank
     p2/p98 DN percentiles + clip counts, map-only (operators/raster.py)."""
     media = dg.media_df(spark, CFG)
-    return raster.tile_percentile_stretch(media, p_lo=2, p_hi=98)
+    return raster.tile_percentile_stretch(media)
 
 
 SQL_PERCENTILE_STRETCH = f"""WITH {dg.tiles_sql(CFG)}, {_PX_CTE},
@@ -1961,8 +1948,8 @@ rk AS (
   FROM px),
 anch AS (
   SELECT media_ref, band,
-         max(CASE WHEN rnk = (2 * n + 99) // 100 THEN dn END) AS p_lo_dn,
-         max(CASE WHEN rnk = (98 * n + 99) // 100 THEN dn END) AS p_hi_dn
+         max(CASE WHEN rnk = ({raster.STRETCH_P_LO} * n + 99) // 100 THEN dn END) AS p_lo_dn,
+         max(CASE WHEN rnk = ({raster.STRETCH_P_HI} * n + 99) // 100 THEN dn END) AS p_hi_dn
   FROM rk GROUP BY media_ref, band)
 SELECT a.media_ref, CAST(a.band AS INTEGER) AS band,
        CAST(a.p_lo_dn AS INTEGER) AS p_lo_dn,

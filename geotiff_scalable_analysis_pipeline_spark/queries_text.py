@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .operators.similarity import QSCALE, TOPK
 from .session import read_parquet, read_parquet_dense
 
 P31 = 2147483647  # Mersenne prime 2^31-1 for minhash
@@ -329,7 +330,7 @@ FROM s"""
 HMUL = 1000003  # shingle-combine multiplier (fits int64: 2^31 * 1e6 < 2^62)
 
 
-def _tid_expr(expr: str = "token") -> str:
+def _tid_expr(expr: str) -> str:
     """Spark-SQL text of the portable string hash (see :func:`_tid_col`)."""
     return (
         f"aggregate(filter(split({expr}, ''), c -> c != ''), CAST(0 AS BIGINT), "
@@ -634,9 +635,6 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3"""
 # similarity search over embeddings (ANN baseline: exact cosine top-k)
 # ---------------------------------------------------------------------------
 
-TOPK = 10
-QSCALE = 1_000_000
-
 
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_parquet_dense(spark, f"{sf_dir}/embeddings.parquet")
@@ -657,7 +655,7 @@ def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = read_parquet_dense(spark, f"{sf_dir}/embeddings.parquet")
     qv = similarity.quantize(e)
-    return similarity.cosine_topk(qv, qv, k=TOPK)
+    return similarity.cosine_topk(qv, qv)
 
 
 def q_embedding_topk_columnar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -744,7 +742,7 @@ def q_embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import similarity
 
     e = read_parquet_dense(spark, f"{sf_dir}/embeddings.parquet")
-    return similarity.lsh_topk(e, k=TOPK)
+    return similarity.lsh_topk(e)
 
 
 def _sql_ann_lsh() -> str:
@@ -806,7 +804,7 @@ def q_embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import similarity
 
     e = read_parquet_dense(spark, f"{sf_dir}/embeddings.parquet")
-    return similarity.ivf_topk(e, k=TOPK)
+    return similarity.ivf_topk(e)
 
 
 def _sql_ann_ivf() -> str:
@@ -1789,7 +1787,7 @@ WHERE rank <= {KEYWORDS_TOP_K}"""
 FASTSS_MAX_LEN = 20
 
 
-def fastss_pairs(vocab: DataFrame, col: str = "tok") -> DataFrame:
+def fastss_pairs(vocab: DataFrame) -> DataFrame:
     """All DISTINCT token pairs at Levenshtein distance ≤ 1 — the typo /
     variant-spelling candidate pass of a vocabulary-normalization pipeline
     (FastSS, Bocek et al. 2007). NO all-pairs comparison: two strings
@@ -1804,7 +1802,7 @@ def fastss_pairs(vocab: DataFrame, col: str = "tok") -> DataFrame:
     Scale shape: the join key is the variant string (vocabulary-bounded,
     like every dedup candidate generator in this engine); dedup of
     multi-variant matches is one distinct on the canonical (a < b) pair."""
-    v = vocab.select(F.col(col).alias("tok")).filter(
+    v = vocab.select("tok").filter(
         (F.col("tok") != "") & (F.char_length("tok") <= FASTSS_MAX_LEN)
     ).distinct()
     variants = v.select(
@@ -1884,12 +1882,7 @@ def q_cm_sketch_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cm_sketch_frame(_docs(spark, sf_dir), CM_PROBES)
 
 
-def cm_sketch_frame(
-    docs: DataFrame,
-    probes,
-    depth: int = CM_DEPTH,
-    width: int = CM_WIDTH,
-) -> DataFrame:
+def cm_sketch_frame(docs: DataFrame, probes) -> DataFrame:
     """Core of :func:`q_cm_sketch_estimates` over any ``text``-column frame."""
     from . import datagen as dg
 
@@ -1899,8 +1892,8 @@ def cm_sketch_frame(
     # one parsed expression for the DEPTH register coordinates (round 6:
     # the Column-form listcomp cost ~1,100 py4j round-trips per build)
     rc_arr = ", ".join(
-        f"struct({r} AS r, ({dg.ihash_expr('tid', CM_SALT + r)}) % {width} AS c)"
-        for r in range(depth)
+        f"struct({r} AS r, ({dg.ihash_expr('tid', CM_SALT + r)}) % {CM_WIDTH} AS c)"
+        for r in range(CM_DEPTH)
     )
 
     def cells(frame):
@@ -1996,10 +1989,10 @@ def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins key on the vocabulary (cardinality-bounded — ~10⁸ however big
     the corpus, and Zipf-concentrated so AQE broadcast usually fires);
     T is a one-row aggregate broadcast via a 1×N cross join."""
-    return bigram_pmi_frame(_docs(spark, sf_dir, dense=False), min_pair=PMI_MIN_PAIR)
+    return bigram_pmi_frame(_docs(spark, sf_dir, dense=False))
 
 
-def bigram_pmi_frame(docs: DataFrame, min_pair: int = PMI_MIN_PAIR) -> DataFrame:
+def bigram_pmi_frame(docs: DataFrame) -> DataFrame:
     """Core of :func:`q_bigram_pmi` over any frame with a ``text`` column."""
     # one parameterized spark.sql parse (round 6 — the Column form cost
     # ~460 py4j round-trips per construction); identical tree: pair
@@ -2016,7 +2009,7 @@ WITH big AS (
                i -> struct(element_at(_arr, i) AS w1,
                            element_at(_arr, i + 1) AS w2))) AS p
       FROM (SELECT {_TOKS_EXPR} AS _arr FROM {{docs}}) WHERE size(_arr) >= 2))
-  GROUP BY w1, w2 HAVING count(*) >= {min_pair}),
+  GROUP BY w1, w2 HAVING count(*) >= {PMI_MIN_PAIR}),
 uni AS (
   SELECT token, count(*) AS cnt
   FROM (SELECT explode({_TOKS_EXPR}) AS token FROM {{docs}}) GROUP BY token),

@@ -77,12 +77,11 @@ def read_parquet_dense(spark: SparkSession, path: str):
     return df
 
 
-def default_driver_memory(mem_total_bytes: int | None = None) -> str:
+def default_driver_memory() -> str:
     """``spark.driver.memory`` when ``SPARK_DRIVER_MEM`` is unset: half the
     host's physical memory, capped at 24g and never below the 4g default
     initial heap (``-Xms`` above ``-Xmx`` stops the JVM from starting)."""
-    if mem_total_bytes is None:
-        mem_total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mem_total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     return f"{min(24 * 1024, max(4 * 1024, mem_total_bytes // 2**21))}m"
 
 
@@ -100,14 +99,14 @@ def workers_can_import_package(master: str) -> bool:
 def get_spark(
     app_name: str = "gsap-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
     Parallelism comes from ``master`` (default ``local[$SPARK_GRAFT_CPUS]``);
-    shuffle partitions default to the core count so local runs don't pay for
-    200 tiny shuffle files. Operators whose heavy stages would then run as
+    shuffle partitions and the default parallelism are both the core count
+    (``$SPARK_GRAFT_CPUS``), so local runs don't pay for 200 tiny shuffle
+    files. Operators whose heavy stages would then run as
     exactly ONE task wave (wall clock = slowest task — a measured ~10%
     straggler tax at high parallelism) scope a data-sized partition count
     around their own execution instead; see ``operators/knn.py`` for the
@@ -134,13 +133,12 @@ def get_spark(
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
-    n_shuffle = shuffle_partitions or cpus
 
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(n_shuffle))
-        .config("spark.default.parallelism", str(n_shuffle))
+        .config("spark.sql.shuffle.partitions", str(cpus))
+        .config("spark.default.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

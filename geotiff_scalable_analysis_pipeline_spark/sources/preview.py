@@ -59,6 +59,8 @@ _ANCHORS: dict[str, np.ndarray] = {
 
 # Metric → (colormap, vmin, vmax rule), exactly as the reference wires them.
 _METRIC_CMAP = {"maxprob": "viridis", "entropy": "magma", "gap": "plasma"}
+DOWNSCALE = 10  # the reference's preview_downscale_factor default
+COLORBAR_HEIGHT = 16  # rows of a colorbar strip
 
 
 def colormap_lut(name: str) -> np.ndarray:
@@ -71,29 +73,26 @@ def colormap_lut(name: str) -> np.ndarray:
     return np.floor(a[i0] * (1.0 - f) + a[i0 + 1] * f + 0.5).astype(np.uint8)
 
 
-def render_class_preview(cls: np.ndarray, colors: np.ndarray, downscale: int = 10) -> np.ndarray:
+def render_class_preview(cls: np.ndarray, colors: np.ndarray) -> np.ndarray:
     """Class-id raster → downsampled RGB array (utils.py:65-115). Order-0
-    decimation (every ``downscale``-th pixel, anchored at the origin so a
-    corner pixel survives exactly); ids outside [0, len(colors)) render as
+    decimation (every :data:`DOWNSCALE`-th pixel, anchored at the origin so
+    a corner pixel survives exactly); ids outside [0, len(colors)) render as
     the gray fallback."""
     lut = np.asarray(colors, dtype=np.uint8)
-    small = np.asarray(cls)[:: max(1, int(downscale)), :: max(1, int(downscale))]
+    small = np.asarray(cls)[::DOWNSCALE, ::DOWNSCALE]
     oob = (small < 0) | (small >= len(lut))
     rgb = lut[np.clip(small.astype(np.int64), 0, len(lut) - 1)]
     rgb[oob] = _GRAY
     return rgb
 
 
-def render_float_preview(
-    arr: np.ndarray, cmap: str, downscale: int = 10,
-    vmin: float | None = None, vmax: float | None = None,
-) -> np.ndarray:
+def render_float_preview(arr: np.ndarray, cmap: str, vmax: float) -> np.ndarray:
     """Continuous metric raster → downsampled colormapped RGB array
-    (utils.py:117-160): order-1 decimation (bilinear sample at each output
-    block's center), (x−vmin)/(vmax−vmin) normalization with constant data
-    → 0, then 256-bin LUT lookup — every output pixel is a LUT row."""
+    (utils.py:117-160): order-1 decimation by :data:`DOWNSCALE` (bilinear
+    sample at each output block's center), x/vmax normalization (vmin is
+    0), then 256-bin LUT lookup — every output pixel is a LUT row."""
     a = np.asarray(arr, dtype=np.float64)
-    d = max(1, int(downscale))
+    d = DOWNSCALE
     if d > 1:
         h, w = a.shape
         oh, ow = -(-h // d), -(-w // d)
@@ -108,18 +107,17 @@ def render_float_preview(
         top = a[r0][:, c0] * (1 - fx) + a[r0][:, c1] * fx
         bot = a[r1][:, c0] * (1 - fx) + a[r1][:, c1] * fx
         a = top * (1 - fy[:, None]) + bot * fy[:, None]
-    lo = float(np.min(a)) if vmin is None else float(vmin)
-    hi = float(np.max(a)) if vmax is None else float(vmax)
-    norm = np.zeros_like(a) if hi == lo else np.clip((a - lo) / (hi - lo), 0.0, 1.0)
+    norm = np.clip(a / float(vmax), 0.0, 1.0)
     bins = np.minimum((norm * 256.0).astype(np.int64), 255)
     return colormap_lut(cmap)[bins]
 
 
-def render_colorbar(cmap: str, height: int = 16) -> np.ndarray:
-    """Horizontal colorbar strip (vmin left → vmax right): ``height``
-    repeats of the full 256-entry LUT — the engine's stand-in for the
-    reference's matplotlib colorbar figure (utils.py:163-180)."""
-    return np.tile(colormap_lut(cmap)[None, :, :], (height, 1, 1))
+def render_colorbar(cmap: str) -> np.ndarray:
+    """Horizontal colorbar strip (vmin left → vmax right):
+    :data:`COLORBAR_HEIGHT` repeats of the full 256-entry LUT — the engine's
+    stand-in for the reference's matplotlib colorbar figure
+    (utils.py:163-180)."""
+    return np.tile(colormap_lut(cmap)[None, :, :], (COLORBAR_HEIGHT, 1, 1))
 
 
 def export_tile_previews(
@@ -127,9 +125,8 @@ def export_tile_previews(
     tile_name: str,
     class_arr: np.ndarray | None,
     colors: np.ndarray | None,
-    metrics: dict[str, np.ndarray] | None = None,
-    n_classes: int | None = None,
-    downscale: int = 10,
+    metrics: dict[str, np.ndarray],
+    n_classes: int | None,
 ) -> dict[str, str]:
     """PreviewReporter.on_finish re-created (preview.py:21-139): write
     ``preview_class.png`` (when ``class_arr`` is given) and, per float
@@ -145,10 +142,10 @@ def export_tile_previews(
 
     if class_arr is not None:
         p = d / "preview_class.png"
-        p.write_bytes(png.encode(render_class_preview(class_arr, colors, downscale)))
+        p.write_bytes(png.encode(render_class_preview(class_arr, colors)))
         written["class"] = str(p)
 
-    for m, arr in (metrics or {}).items():
+    for m, arr in metrics.items():
         cmap = _METRIC_CMAP.get(m)
         if cmap is None:
             raise ValueError(f"unknown preview metric {m!r} (expected one of {sorted(_METRIC_CMAP)})")
@@ -157,7 +154,7 @@ def export_tile_previews(
         else:
             vmax = 1.0
         p = d / f"preview_{m}.png"
-        p.write_bytes(png.encode(render_float_preview(arr, cmap, downscale, 0.0, vmax)))
+        p.write_bytes(png.encode(render_float_preview(arr, cmap, vmax)))
         written[m] = str(p)
         cb = d / f"preview_{m}_colorbar.png"
         cb.write_bytes(png.encode(render_colorbar(cmap)))
@@ -170,16 +167,15 @@ def export_previews_from_rasters(
     tile_name: str,
     colors: np.ndarray,
     n_classes: int,
-    downscale: int = 10,
-    preview_dir: str | Path | None = None,
+    preview_dir: str | Path,
 ) -> dict[str, str]:
     """The reference reporter's exact read-back flow: decode whichever of
     ``{tile}_class.tif`` / ``{tile}_{maxprob,entropy,gap}.tif`` exist in
-    ``tile_dir`` (written by the K1/K2 sinks) and preview them; missing
-    rasters are skipped, as the reference logs-and-continues. Preview PNG
-    names are fixed (``preview_class.png``, …) as in the reference, so
-    multi-tile exports into one flat directory must pass a per-tile
-    ``preview_dir`` (the reference keeps one directory per tile)."""
+    ``tile_dir`` (written by the K1/K2 sinks) and preview them into
+    ``preview_dir``; missing rasters are skipped, as the reference
+    logs-and-continues. Preview PNG names are fixed (``preview_class.png``,
+    …) as in the reference, so multi-tile exports take one ``preview_dir``
+    per tile (the reference keeps one directory per tile)."""
     from ..formats import tiff
 
     d = Path(tile_dir)
@@ -192,10 +188,7 @@ def export_previews_from_rasters(
         p = d / f"{tile_name}_{m}.tif"
         if p.exists():
             metrics[m] = tiff.decode(p.read_bytes())[0][0]
-    return export_tile_previews(
-        preview_dir if preview_dir is not None else d,
-        tile_name, cls, colors, metrics, n_classes, downscale,
-    )
+    return export_tile_previews(preview_dir, tile_name, cls, colors, metrics, n_classes)
 
 
 def _esc(v) -> str:
@@ -210,8 +203,8 @@ def _img(path: str) -> str:
 def generate_viewer_html(
     output_dir: str | Path,
     tiles: dict[str, dict[str, str]],
-    title: str = "Analysis dashboard",
-    metadata: dict | None = None,
+    title: str,
+    metadata: dict,
 ) -> str:
     """K6: one self-contained dashboard (reference generate_viewer.py:6-178
     writes an index page + per-tile report pages with relative <img> links;

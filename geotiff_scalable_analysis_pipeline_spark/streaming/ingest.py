@@ -8,9 +8,7 @@ first-class surface, because the training-data-pipeline brief (and any
 continuously-ingesting corpus at 100 TB) needs it:
 
 * :func:`stream_events` — file-source ``readStream`` over the events table
-  (schema pinned from the batch reader; ``maxFilesPerTrigger`` bounds
-  micro-batch size, which is the streaming analogue of the memory-model
-  batch sizing in plans/memory_model.py);
+  (schema pinned from the batch reader);
 * :func:`hourly_event_stats_streaming` — event-time tumbling-window
   aggregation with a watermark, run to completion with the ``availableNow``
   trigger. The aggregate is BOUNDED (hour × event_type), so a complete-mode
@@ -39,14 +37,12 @@ from pyspark.sql import DataFrame, SparkSession
 from ..plans.skew import materialize_plan
 
 _D = "decimal(30, 10)"  # matches queries_relational._D (exact event sums)
+SESSION_GAP = "30 minutes"  # the batch events_sessions query's gap
+ATTRIBUTION_HORIZON = "1 hour"
+ATTRIBUTION_WATERMARK = "10 minutes"
 
 
-def _stream_table(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str,
-    max_files_per_trigger: int | None,
-) -> DataFrame:
+def _stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """File-source ``readStream`` over one parquet table.
 
     The file source needs an explicit schema; pin it from the batch reader
@@ -54,28 +50,16 @@ def _stream_table(
     also requires a directory (or glob) — a bare file path is rejected as
     basePath — so glob-wrap the last character: the parent directory
     becomes the base and exactly this table matches."""
-    schema = spark.read.parquet(f"{sf_dir}/{glob}").schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    path = f"{sf_dir}/{glob}"
-    if "*" not in glob and "[" not in glob:
-        path = f"{sf_dir}/{glob[:-1]}[{glob[-1]}]"
-    return reader.parquet(path)
+    schema = spark.read.parquet(f"{sf_dir}/{table}").schema
+    return spark.readStream.schema(schema).parquet(f"{sf_dir}/{table[:-1]}[{table[-1]}]")
 
 
-def stream_events(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source ``readStream`` over the events table."""
-    return _stream_table(spark, sf_dir, glob, max_files_per_trigger)
+    return _stream_table(spark, sf_dir, "events.parquet")
 
 
-def hourly_windowed_stats(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def hourly_windowed_stats(events: DataFrame, watermark: str) -> DataFrame:
     """Event-time tumbling 1-hour windows per event_type over a STREAMING
     frame: watermark → window() → exact decimal sum. Late rows beyond the
     watermark are dropped once the watermark passes them (update/append
@@ -101,14 +85,7 @@ def hourly_windowed_stats(events: DataFrame, watermark: str = "1 hour") -> DataF
     )
 
 
-def hourly_event_stats_streaming(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    query_name: str = "streaming_events_hourly",
-    watermark: str = "1 hour",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def hourly_event_stats_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the hourly windowed aggregation as a real streaming query to
     completion (``availableNow``) and return the final aggregate.
 
@@ -116,19 +93,13 @@ def hourly_event_stats_streaming(
     the bounded (hour × event_type) aggregate — identical row count to the
     batch ``events_hourly_windows`` query, so the batch oracle SQL verifies
     this query verbatim."""
-    ev = stream_events(
-        spark, sf_dir, max_files_per_trigger=max_files_per_trigger
+    ev = stream_events(spark, sf_dir)
+    return _run_complete_to_memory(
+        hourly_windowed_stats(ev, "1 hour"), "streaming_events_hourly"
     )
-    return _run_complete_to_memory(hourly_windowed_stats(ev, watermark), query_name)
 
 
-def stream_static_enrichment(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    query_name: str = "streaming_events_enriched",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-STATIC join: streaming events enriched with the static
     customer dimension, then an exact-decimal rollup per (market segment,
     event type).
@@ -140,7 +111,7 @@ def stream_static_enrichment(
     complete-mode aggregate is micro-batch-boundary independent (count +
     exact decimal sum), so the batch SQL oracle verifies the streaming
     path verbatim."""
-    ev = stream_events(spark, sf_dir, max_files_per_trigger=max_files_per_trigger)
+    ev = stream_events(spark, sf_dir)
     dim = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
         "c_custkey", "c_mktsegment"
     )
@@ -149,7 +120,7 @@ def stream_static_enrichment(
         F.count("*").alias("n_events"),
         F.sum(F.col("value").cast(_D)).cast("double").alias("sum_value"),
     )
-    return _run_complete_to_memory(agg, query_name)
+    return _run_complete_to_memory(agg, "streaming_events_enriched")
 
 
 def _run_complete_to_memory(
@@ -171,25 +142,7 @@ def _run_complete_to_memory(
     return materialize_plan(spark.table(query_name))
 
 
-def stream_documents(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    glob: str = "documents.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """File-source ``readStream`` over the documents table."""
-    return _stream_table(spark, sf_dir, glob, max_files_per_trigger)
-
-
-def streaming_dedup_exact(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    glob: str = "documents.parquet",
-    query_name: str = "streaming_dedup_exact",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup: state-store ``dropDuplicates`` over the content
     fingerprint — each distinct ``md5(text)`` is emitted exactly ONCE, in the
     micro-batch where it is first seen; later copies (including copies in
@@ -207,16 +160,12 @@ def streaming_dedup_exact(
     with ``dropDuplicatesWithinWatermark`` (dedup within the late-data
     horizon) or compact the state to a bloom/LSH sketch; the bounded-corpus
     correctness harness wants the exact form."""
-    d = stream_documents(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
+    d = _stream_table(spark, sf_dir, "documents.parquet")
     uniq = d.select(F.md5("text").alias("text_md5")).dropDuplicates(["text_md5"])
-    return _run_complete_to_memory(uniq, query_name, output_mode="append")
+    return _run_complete_to_memory(uniq, "streaming_dedup_exact", output_mode="append")
 
 
-def dedup_within_watermark(
-    events: DataFrame, keys: list[str], horizon: str = "1 hour"
-) -> DataFrame:
+def dedup_within_watermark(events: DataFrame, keys: list[str], horizon: str) -> DataFrame:
     """BOUNDED-state streaming dedup — the production continuous-ingest form
     of :func:`streaming_dedup_exact` (whose exact global seen-set grows
     without bound): ``dropDuplicatesWithinWatermark`` keeps a key's state
@@ -236,22 +185,16 @@ def dedup_within_watermark(
     return ev.dropDuplicatesWithinWatermark(keys)
 
 
-def interval_attribution_join(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    key: str = "user_id",
-    horizon: str = "1 hour",
-    watermark: str = "10 minutes",
-) -> DataFrame:
+def interval_attribution_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """Watermarked STREAM-STREAM inner join with an event-time interval
     condition — the attribution/funnel shape (for each left event, every
-    right event by the same ``key`` within ``[l_ts, l_ts + horizon]``).
+    right event by the same ``user_id`` within ``[l_ts, l_ts + horizon]``,
+    ``horizon`` = :data:`ATTRIBUTION_HORIZON`).
 
     Both sides are buffered in the state store; the interval condition is
     what lets Spark bound that state: a left row is provably dead once the
-    global watermark (min across BOTH sources, minus ``watermark``) passes
-    ``l_ts + horizon``. Measured eviction timing (pinned by
+    global watermark (min across BOTH sources, minus
+    :data:`ATTRIBUTION_WATERMARK`) passes ``l_ts + horizon``. Measured eviction timing (pinned by
     tests/test_streaming.py::test_stream_stream_interval_join_semantics):
     the watermark incorporates batch N's event times only at the END of
     batch N and state cleanup runs at batch end, so a right row arriving in
@@ -269,34 +212,28 @@ def interval_attribution_join(
     """
     l = left.select(
         F.col("event_id").alias("left_id"),
-        F.col(key).alias("l_key"),
+        F.col("user_id").alias("l_key"),
         F.col("ts").cast("timestamp").alias("l_ts"),
-    ).withWatermark("l_ts", watermark)
+    ).withWatermark("l_ts", ATTRIBUTION_WATERMARK)
     r = right.select(
         F.col("event_id").alias("right_id"),
-        F.col(key).alias("r_key"),
+        F.col("user_id").alias("r_key"),
         F.col("ts").cast("timestamp").alias("r_ts"),
-    ).withWatermark("r_ts", watermark)
+    ).withWatermark("r_ts", ATTRIBUTION_WATERMARK)
     cond = (
         (F.col("l_key") == F.col("r_key"))
         & (F.col("r_ts") >= F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {horizon}"))
+        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {ATTRIBUTION_HORIZON}"))
     )
     return l.join(r, cond, "inner").select(
         "left_id",
         "right_id",
-        F.col("l_key").alias(key),
+        F.col("l_key").alias("user_id"),
         (F.unix_micros("r_ts") - F.unix_micros("l_ts")).alias("lag_us"),
     )
 
 
-def click_attribution_streaming(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    horizon: str = "1 hour",
-    query_name: str = "streaming_click_attribution",
-) -> DataFrame:
+def click_attribution_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Click→purchase attribution as a REAL stream-stream join: two
     file-source readStreams over the events table (clicks side, purchases
     side), watermarked interval join, run to completion under
@@ -306,25 +243,23 @@ def click_attribution_streaming(
     state-eviction semantics are pinned by the pytest instead."""
     clicks = stream_events(spark, sf_dir).filter(F.col("event_type") == "click")
     purchases = stream_events(spark, sf_dir).filter(F.col("event_type") == "purchase")
-    j = interval_attribution_join(clicks, purchases, horizon=horizon).select(
+    j = interval_attribution_join(clicks, purchases).select(
         F.col("left_id").alias("click_id"),
         F.col("right_id").alias("purchase_id"),
         "user_id",
         "lag_us",
     )
-    return _run_complete_to_memory(j, query_name, output_mode="append")
+    return _run_complete_to_memory(j, "streaming_click_attribution", output_mode="append")
 
 
-def session_windows(
-    events: DataFrame, gap: str = "30 minutes", watermark: str | None = None
-) -> DataFrame:
+def session_windows(events: DataFrame, watermark: str | None = None) -> DataFrame:
     """Native session windows per user over a streaming OR batch frame:
-    ``F.session_window`` merges events whose gap is ≤ the threshold
-    (boundary measured empirically: two events exactly ``gap`` apart MERGE,
+    ``F.session_window`` merges events whose gap is ≤ :data:`SESSION_GAP`
+    (boundary measured empirically: two events exactly the gap apart MERGE,
     so a new session starts only when the gap is strictly greater — the
     identical rule to the lag()-based batch ``events_sessions`` query, which
     is what lets both share one gaps-and-islands oracle). ``window.end`` is
-    ``last_ts + gap``.
+    ``last_ts + SESSION_GAP``.
 
     Works unchanged on batch frames (Spark supports session_window in batch
     groupBy) and on streaming frames (state-store merge across
@@ -335,7 +270,7 @@ def session_windows(
     if watermark is not None:
         events = events.withWatermark("ts", watermark)
     return (
-        events.groupBy("user_id", F.session_window("ts", gap).alias("w"))
+        events.groupBy("user_id", F.session_window("ts", SESSION_GAP).alias("w"))
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast(_D)).cast("double").alias("sum_value"),
@@ -350,15 +285,7 @@ def session_windows(
     )
 
 
-def user_sessions_streaming(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    gap: str = "30 minutes",
-    query_name: str = "streaming_events_sessions",
-    watermark: str = "1 hour",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def user_sessions_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session windows as a real streaming query run to completion.
 
     Complete-mode memory sink so EVERY session (open or closed) reaches the
@@ -368,5 +295,7 @@ def user_sessions_streaming(
     continuously-running shape is append mode + watermark (closed sessions
     emit incrementally, state evicted — semantics pinned by
     tests/test_streaming.py::test_streaming_sessions_append_emits_closed)."""
-    ev = stream_events(spark, sf_dir, max_files_per_trigger=max_files_per_trigger)
-    return _run_complete_to_memory(session_windows(ev, gap, watermark=watermark), query_name)
+    ev = stream_events(spark, sf_dir)
+    return _run_complete_to_memory(
+        session_windows(ev, watermark="1 hour"), "streaming_events_sessions"
+    )

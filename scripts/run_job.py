@@ -65,14 +65,12 @@ def report(spark: SparkSession, out, n_tiles: int) -> dict:
         f"{out}/classmap.json",
     )
     tile_arts = {
-        ref: preview.export_previews_from_rasters(
-            out, ref, colors, n_classes=nc, preview_dir=f"{out}/{ref}",
-        )
+        ref: preview.export_previews_from_rasters(out, ref, colors, nc, f"{out}/{ref}")
         for ref in written
     }
     html = preview.generate_viewer_html(
-        out, tile_arts, title="GSAP-Spark analysis report",
-        metadata={"tiles": len(written), "n_classes": nc, "snapshot": snap},
+        out, tile_arts, "GSAP-Spark analysis report",
+        {"tiles": len(written), "n_classes": nc, "snapshot": snap},
     )
     return {"job": "report", "snapshot": snap, "tiles": len(written), "viewer": html}
 
@@ -123,7 +121,7 @@ def main():
         out = knn.knn_join(dg.points_df(spark, cfg), tiles, k=cfg.knn_k)
         snap = cat.commit(out, "knn", mode="overwrite")
     else:
-        snap = build_pyramid(cat, tiles, finest=7, coarsest=4)
+        snap = build_pyramid(cat, tiles)
 
     rows = cat.read(spark, {"pip": "pip_pairs", "zonal": "zonal_stats", "knn": "knn",
                             "pyramid": "tile_pyramid"}[args.job]).count()

@@ -9,6 +9,7 @@ from collections import Counter
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from geotiff_scalable_analysis_pipeline_spark import queries_text
 from geotiff_scalable_analysis_pipeline_spark.queries_text import bigram_pmi_frame
 
 
@@ -28,8 +29,15 @@ def _brute(texts: list[str], min_pair: int):
 
 
 def _run(spark, texts: list[str], min_pair: int):
+    # plain try/finally instead of the monkeypatch fixture: Hypothesis
+    # rejects function-scoped fixtures inside @given
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = bigram_pmi_frame(df, min_pair=min_pair).collect()
+    saved = queries_text.PMI_MIN_PAIR
+    try:
+        queries_text.PMI_MIN_PAIR = min_pair
+        rows = bigram_pmi_frame(df).collect()
+    finally:
+        queries_text.PMI_MIN_PAIR = saved
     return {(r["w1"], r["w2"]): (r["pair_cnt"], r["lift"]) for r in rows}
 
 

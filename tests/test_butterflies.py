@@ -5,7 +5,6 @@ from __future__ import annotations
 
 from itertools import combinations
 
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -27,8 +26,12 @@ def _brute(edges, count_side="right"):
 
 
 def _run(spark, edges, wedge_over):
+    """Wedge over the ``wedge_over`` side: the engine wedges over its left
+    column, so the right side is wedged by swapping the columns."""
+    if wedge_over == "right":
+        edges = [(v, u) for u, v in edges]
     df = spark.createDataFrame(edges, "u long, v long")
-    rows = butterflies.butterfly_counts(df, wedge_over=wedge_over).collect()
+    rows = butterflies.butterfly_counts(df).collect()
     return {r["node"]: r["n_butterflies"] for r in rows}
 
 
@@ -62,16 +65,17 @@ def test_duplicate_edges_inert_and_auto_side(spark):
     base = [(0, 0), (0, 1), (1, 0), (1, 1), (2, 5)]
     noisy = base + base[:3]
     df = spark.createDataFrame(noisy, "u long, v long")
-    rows = butterflies.butterfly_counts(df, wedge_over="auto").collect()
+    rows = butterflies.butterfly_counts(df).collect()
     got = {r["node"]: r["n_butterflies"] for r in rows}
-    # auto picks a side; K(2,2) gives count 1 per vertex on either side
+    # the left side wedges; K(2,2) gives count 1 per right vertex
     assert set(got.values()) == {1} and len(got) == 2
 
 
 def test_invalid_side_rejected(spark):
-    df = spark.createDataFrame([(0, 1)], "u long, v long")
-    with pytest.raises(ValueError):
-        butterflies.butterfly_counts(df, wedge_over="middle")
+    # one side only: the wedges run over u, so only v vertices are counted
+    df = spark.createDataFrame([(u, v) for u in (10, 11) for v in (0, 1)], "u long, v long")
+    got = {r["node"] for r in butterflies.butterfly_counts(df).collect()}
+    assert got == {0, 1}
 
 
 def test_no_cartesian_in_plan(spark):
@@ -81,10 +85,12 @@ def test_no_cartesian_in_plan(spark):
         (F.col("id") % 20).alias("u"), (F.col("id") * 7 % 15).alias("v")
     )
     plan = (
-        butterflies.butterfly_counts(df, wedge_over="left", max_id=14)
+        butterflies.butterfly_counts(df)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan  # max_id elides the kdim tag
+    # the one nested-loop join is the broadcast 1-row pair-key base (kdim)
+    assert plan.count("BroadcastNestedLoopJoin") == 1
+    assert "BroadcastNestedLoopJoin BuildRight, Cross" in plan

@@ -9,6 +9,7 @@ from collections import Counter
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from geotiff_scalable_analysis_pipeline_spark import queries_text
 from geotiff_scalable_analysis_pipeline_spark.datagen import ihash_np
 from geotiff_scalable_analysis_pipeline_spark.queries_text import (
     CM_SALT,
@@ -44,8 +45,15 @@ def _brute(texts, probes, depth, width):
 
 
 def _run(spark, texts, probes, depth, width):
+    # plain try/finally instead of the monkeypatch fixture: Hypothesis
+    # rejects function-scoped fixtures inside @given
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = cm_sketch_frame(df, probes, depth=depth, width=width).collect()
+    saved = queries_text.CM_DEPTH, queries_text.CM_WIDTH
+    try:
+        queries_text.CM_DEPTH, queries_text.CM_WIDTH = depth, width
+        rows = cm_sketch_frame(df, probes).collect()
+    finally:
+        queries_text.CM_DEPTH, queries_text.CM_WIDTH = saved
     return {r["token"]: (r["est"], r["exact_cnt"]) for r in rows}
 
 

@@ -37,10 +37,10 @@ def _brute(points, segments, radius):
     return out
 
 
-def _run(spark, points, segments, radius, **kw):
+def _run(spark, points, segments, radius):
     p = spark.createDataFrame(points, "q_id long, qx long, qy long")
     s = spark.createDataFrame(segments, "seg_id long, x1 long, y1 long, x2 long, y2 long")
-    rows = corridor.segment_distance_join(p, s, radius=radius, **kw).collect()
+    rows = corridor.segment_distance_join(p, s, radius=radius).collect()
     return {(r["q_id"], r["seg_id"], r["nearest"], r["dist_sq"]) for r in rows}
 
 
@@ -96,8 +96,13 @@ def test_corridor_endpoint_vs_interior_cases(spark):
 def test_corridor_long_segment_guard_raises(spark):
     pts = [(0, 10, 10)]
     segs = [(1, 0, 0, 30000, 30000)]
-    with pytest.raises(SparkRuntimeException, match="max_cover_cells"):
-        _run(spark, pts, segs, radius=100, max_cover_cells=4)
+    saved = corridor.MAX_COVER_CELLS
+    try:
+        corridor.MAX_COVER_CELLS = 4
+        with pytest.raises(SparkRuntimeException, match="max_cover_cells"):
+            _run(spark, pts, segs, radius=100)
+    finally:
+        corridor.MAX_COVER_CELLS = saved
 
 
 def test_corridor_plan_has_no_cartesian(spark):

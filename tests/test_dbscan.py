@@ -51,12 +51,12 @@ def _brute_dbscan(ids, xs, ys, eps, min_pts):
     return lab
 
 
-def _run(spark, ids, xs, ys, eps, min_pts, **kw):
+def _run(spark, ids, xs, ys, eps, min_pts):
     df = spark.createDataFrame(
         list(zip(map(int, ids), map(int, xs), map(int, ys))),
         "q_id long, qx long, qy long",
     )
-    out = dbscan.dbscan(df, eps=eps, min_pts=min_pts, **kw)
+    out = dbscan.dbscan(df, eps=eps, min_pts=min_pts)
     return {r["q_id"]: (r["role"], r["cluster_id"]) for r in out.collect()}
 
 
@@ -136,11 +136,16 @@ def test_dbscan_tiny_eps_fallback_path(spark):
 
 
 def test_dbscan_distributed_cc_fallback_matches_driver_uf(spark):
-    # max_driver_cells=0 forces the distributed star-contraction path;
+    # MAX_DRIVER_CELLS=0 forces the distributed star-contraction path;
     # results must be identical to the default driver union-find path
     p = dg.points_np(dg.GoldenConfig(n_points=250))
     ids, xs, ys = p["q_id"], p["qx"], p["qy"]
-    got_dist = _run(spark, ids, xs, ys, eps=6000, min_pts=5, max_driver_cells=0)
+    saved = dbscan.MAX_DRIVER_CELLS
+    try:
+        dbscan.MAX_DRIVER_CELLS = 0
+        got_dist = _run(spark, ids, xs, ys, eps=6000, min_pts=5)
+    finally:
+        dbscan.MAX_DRIVER_CELLS = saved
     got_uf = _run(spark, ids, xs, ys, eps=6000, min_pts=5)
     want = _brute_dbscan(ids, xs, ys, 6000, 5)
     assert got_uf == want

@@ -7,6 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from geotiff_scalable_analysis_pipeline_spark.operators import dedup_cc
 from geotiff_scalable_analysis_pipeline_spark.operators.dedup_cc import connected_components
 
 
@@ -113,5 +114,10 @@ def test_cc_string_ids_and_self_loops(spark):
 
 def test_cc_unconverged_raises(spark):
     edf = spark.createDataFrame([(i, i + 1) for i in range(16)], "u long, v long")
-    with pytest.raises(RuntimeError, match="converge"):
-        connected_components(edf, max_rounds=1)
+    saved = dedup_cc.MAX_ROUNDS
+    try:
+        dedup_cc.MAX_ROUNDS = 1
+        with pytest.raises(RuntimeError, match="converge"):
+            connected_components(edf)
+    finally:
+        dedup_cc.MAX_ROUNDS = saved

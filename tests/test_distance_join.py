@@ -20,7 +20,7 @@ def _brute(ax, ay, bx, by, r):
 
 
 @pytest.mark.parametrize("level", [None, 3, 4])
-def test_distance_join_matches_brute_force(spark, level):
+def test_distance_join_matches_brute_force(spark, level, monkeypatch):
     rng = np.random.RandomState(11)
     ax, ay = rng.randint(0, 100001, 200), rng.randint(0, 100001, 200)
     bx, by = rng.randint(0, 100001, 300), rng.randint(0, 100001, 300)
@@ -32,7 +32,9 @@ def test_distance_join_matches_brute_force(spark, level):
         [(j, int(x), int(y)) for j, (x, y) in enumerate(zip(bx, by))],
         "b_id long, cx long, cy long",
     )
-    out = dj.distance_join(a, b, radius=8000, level=level)
+    if level is not None:  # a coarser lattice than the radius's own
+        monkeypatch.setattr(dj, "level_for_radius", lambda radius: level)
+    out = dj.distance_join(a, b, radius=8000)
     got = {(r["a_id"], r["b_id"]): r["dist_sq"] for r in out.collect()}
     assert got == _brute(ax, ay, bx, by, 8000)
     assert out.count() == len(got)  # exactly-once
@@ -52,11 +54,13 @@ def test_distance_join_level_guard_and_default(spark):
     assert dj.level_for_radius(1.0) == 16  # capped at MAX_LEVEL
     with pytest.raises(ValueError):
         dj.level_for_radius(0)
-    # a lattice finer than the radius is rejected (silently-missed pairs)
-    a = spark.createDataFrame([(0, 0, 0)], "a_id long, qx long, qy long")
-    b = spark.createDataFrame([(0, 1, 1)], "b_id long, cx long, cy long")
-    with pytest.raises(ValueError):
-        dj.distance_join(a, b, radius=8000, level=6)
+    # the join runs on the radius's own lattice, whose one-neighbour reach
+    # covers the radius: a pair one cell step apart is found
+    assert dj.level_for_radius(8000) == 4  # cell edge 8192
+    a = spark.createDataFrame([(0, 8191, 0)], "a_id long, qx long, qy long")
+    b = spark.createDataFrame([(0, 8192, 0)], "b_id long, cx long, cy long")
+    got = [(r["a_id"], r["b_id"], r["dist_sq"]) for r in dj.distance_join(a, b, radius=8000).collect()]
+    assert got == [(0, 0, 1)]
 
 
 def test_distance_join_plan_no_cartesian(spark):

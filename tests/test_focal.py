@@ -53,12 +53,17 @@ def _run(spark, tile_ks, grid_cols, grid_rows, px, radius):
     media = dg.media_df(spark, cfg).filter(
         dg.F.col("tile_k").isin([int(k) for k in tile_ks])
     )
-    got = (
-        focal.focal_stats(media, grid_cols, grid_rows, px, radius=radius)
-        .toPandas()
-        .sort_values(["media_ref", "band"])
-        .reset_index(drop=True)
-    )
+    saved = focal.RADIUS
+    try:
+        focal.RADIUS = radius
+        got = (
+            focal.focal_stats(media, grid_cols, grid_rows, px)
+            .toPandas()
+            .sort_values(["media_ref", "band"])
+            .reset_index(drop=True)
+        )
+    finally:
+        focal.RADIUS = saved
     want = (
         _brute_force(tile_ks, grid_cols, grid_rows, px, cfg.n_bands, radius)
         .sort_values(["media_ref", "band"])
@@ -102,11 +107,12 @@ def test_focal_plan_has_single_exchange(spark):
 
 
 def test_focal_rejects_bad_radius(spark):
+    # the radius is fixed; a tile no wider than it is rejected
     cfg = dg.GoldenConfig(n_tiles=1, tile_px=8, n_media_tiles=1)
     with pytest.raises(ValueError, match="radius"):
-        focal.focal_stats(dg.media_df(spark, cfg), 1, 1, 8, radius=0)
+        focal.focal_stats(dg.media_df(spark, cfg), 1, 1, focal.RADIUS)
     with pytest.raises(ValueError, match="radius"):
-        focal.focal_stats(dg.media_df(spark, cfg), 1, 1, 8, radius=8)
+        focal.focal_median_stats(dg.media_df(spark, cfg), 1, 1, focal.RADIUS)
 
 
 def test_focal_rejects_out_of_mosaic_and_duplicate_tiles(spark):
@@ -117,11 +123,11 @@ def test_focal_rejects_out_of_mosaic_and_duplicate_tiles(spark):
     media = dg.media_df(spark, cfg)
     # 2×2 mosaic declared, but tile_k ∈ {0..5} includes 4, 5 — out of range
     with pytest.raises(Exception, match="outside the declared"):
-        focal.focal_stats(media, 2, 2, 8, radius=1).collect()
+        focal.focal_stats(media, 2, 2, 8).collect()
     ok = media.filter(dg.F.col("tile_k") < 4)
     dup = ok.unionByName(ok.filter(dg.F.col("tile_k") == 1))
     with pytest.raises(Exception, match="duplicate tile_k"):
-        focal.focal_stats(dup, 2, 2, 8, radius=1).collect()
+        focal.focal_stats(dup, 2, 2, 8).collect()
 
 
 # ---------------------------------------------------------------------------
@@ -247,14 +253,15 @@ def _brute_median(tile_ks, grid_cols, grid_rows, px, nb, radius):
         (list(range(4)), 2, 2, 2),          # 5×5 window (even counts exercised)
     ],
 )
-def test_focal_median_vs_brute_force(spark, tile_ks, gc, gr, radius):
+def test_focal_median_vs_brute_force(spark, tile_ks, gc, gr, radius, monkeypatch):
     px = 8
     cfg = dg.GoldenConfig(n_tiles=max(tile_ks) + 1, tile_px=px, n_media_tiles=max(tile_ks) + 1)
     media = dg.media_df(spark, cfg).filter(
         dg.F.col("tile_k").isin([int(k) for k in tile_ks])
     )
+    monkeypatch.setattr(focal, "RADIUS", radius)
     got = (
-        focal.focal_median_stats(media, gc, gr, px, radius=radius)
+        focal.focal_median_stats(media, gc, gr, px)
         .toPandas()
         .sort_values(["media_ref", "band"])
         .reset_index(drop=True)

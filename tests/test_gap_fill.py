@@ -52,16 +52,15 @@ def test_gap_fill_rejects_bad_step(spark):
         temporal.gap_fill_locf(df, start=0, stop=10, step=0)
 
 
-def test_gap_fill_multiple_carried_columns(spark):
+def test_gap_fill_multiple_carried_columns(spark, monkeypatch):
     df = spark.createDataFrame(
         [(1, 3, "a", 30), (1, 17, "b", 70)],
         "cell long, ts_h long, media_ref string, v long",
     )
+    monkeypatch.setattr(temporal, "GAP_FILL_CARRIED", ("media_ref", "v"))
     got = {
         (r["cell"], r["ts_h"]): (r["media_ref"], r["v"], r["gap"])
-        for r in temporal.gap_fill_locf(
-            df, start=0, stop=20, step=10, carried=("media_ref", "v")
-        ).collect()
+        for r in temporal.gap_fill_locf(df, start=0, stop=20, step=10).collect()
     }
     assert got == {
         (1, 0): (None, None, None),

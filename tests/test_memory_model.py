@@ -86,16 +86,17 @@ def test_zor_always_valid(h, w, zor, halo):
 
 def test_arrow_rows_fat_vs_narrow():
     # 128 KiB media payloads: a 512 MB budget admits ~hundreds of rows
-    fat = mm.arrow_rows_for_payload(128 * 1024, budget_bytes=512 << 20)
+    assert mm.TASK_BUDGET_BYTES == 512 << 20
+    fat = mm.arrow_rows_for_payload(128 * 1024)
     assert 1 <= fat < 8192
     # narrow rows cap at the engine's large-batch default
-    assert mm.arrow_rows_for_payload(64, budget_bytes=512 << 20) == 8192
+    assert mm.arrow_rows_for_payload(64) == 8192
     # an enormous blob still gets at least one row
-    assert mm.arrow_rows_for_payload(16 << 30, budget_bytes=512 << 20) == 1
+    assert mm.arrow_rows_for_payload(16 << 30) == 1
 
 
 def test_autotune_conf_keys_and_bounds():
-    conf = mm.autotune_conf(128 * 1024, budget_bytes=512 << 20)
+    conf = mm.autotune_conf(128 * 1024)
     rows = int(conf["spark.sql.execution.arrow.maxRecordsPerBatch"])
     part = int(conf["spark.sql.files.maxPartitionBytes"])
     assert rows * 128 * 1024 * 3 <= 512 << 20

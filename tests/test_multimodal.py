@@ -63,11 +63,17 @@ def test_resize_nearest_exact():
     """The product's nearest-neighbour resize is the class preview's
     order-0 decimation (reference utils.py:82, order-0 zoom for class maps):
     every ``downscale``-th pixel, anchored at the origin."""
+    from geotiff_scalable_analysis_pipeline_spark.sources import preview
     from geotiff_scalable_analysis_pipeline_spark.sources.preview import render_class_preview
 
     cls = (np.arange(12 * 8, dtype=np.int64).reshape(12, 8) % 5).astype(np.uint8)
     colors = (np.arange(5 * 3, dtype=np.int64).reshape(5, 3) * 17).astype(np.uint8)
-    small = render_class_preview(cls, colors, downscale=2)
+    saved = preview.DOWNSCALE
+    try:
+        preview.DOWNSCALE = 2
+        small = render_class_preview(cls, colors)
+    finally:
+        preview.DOWNSCALE = saved
     assert small.shape == (6, 4, 3)
     assert np.array_equal(small[0, 0], colors[cls[0, 0]])
     assert np.array_equal(small[5, 3], colors[cls[10, 6]])

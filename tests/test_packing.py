@@ -31,10 +31,15 @@ def test_prefix_offsets_matches_global_window(spark, n_parts):
     want = sorted(
         (r.k, r.n, r.start_off) for r in _naive_offsets(df, "k", "n").collect()
     )
-    got = sorted(
-        (r.k, r.n, r.start_off)
-        for r in prefix_offsets(df.repartition(5), "k", "n", n_partitions=n_parts).collect()
-    )
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+        got = sorted(
+            (r.k, r.n, r.start_off)
+            for r in prefix_offsets(df.repartition(5), "k", "n").collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
     assert got == want
 
 
@@ -77,9 +82,15 @@ def test_prefix_offsets_non_bigint_order_col(spark):
         F.format_string("doc-%04d", F.col("id")).alias("doc_id"),
         (F.pmod(F.col("id") * 13, F.lit(9))).alias("n_tokens"),
     )
-    got = prefix_offsets(df, "doc_id", "n_tokens", n_partitions=4)
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        got = prefix_offsets(df, "doc_id", "n_tokens")
+        rows = sorted(map(tuple, got.collect()))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
     exp = _naive_offsets(df, "doc_id", "n_tokens")
     assert got.schema["doc_id"].dataType.simpleString() == "string"
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, exp.collect()))
+    assert rows == sorted(map(tuple, exp.collect()))
     packed = pack_sequences(df, "doc_id", "n_tokens", 64)
     assert packed.count() == 200

@@ -277,10 +277,11 @@ def test_metrics_instrumentation(spark, tmp_path):
     assert summ["n_partitions"] == 4
 
 
-def test_pyramid_build_and_viewport_pruning(spark, tmp_path):
+def test_pyramid_build_and_viewport_pruning(spark, tmp_path, monkeypatch):
     cfg = dg.GoldenConfig(n_tiles=300)
     cat = TableCatalog(tmp_path)
-    pyramid.build_pyramid(cat, dg.tiles_df(spark, cfg), finest=7, coarsest=5)
+    monkeypatch.setattr(pyramid, "COARSEST_LEVEL", 5)
+    pyramid.build_pyramid(cat, dg.tiles_df(spark, cfg))
     full = cat.read(spark, "tile_pyramid")
     assert full.filter(F.col("level") == 7).count() > 0
     # viewport over hotspot 0 (20000, 20000): anchor cell at level 2

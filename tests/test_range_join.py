@@ -19,19 +19,21 @@ def _brute(pv, ilo, ihi):
 
 
 @pytest.mark.parametrize("bucket_width", [None, 1, 7, 100000])
-def test_range_join_matches_brute_force(spark, bucket_width):
+def test_range_join_matches_brute_force(spark, bucket_width, monkeypatch):
     rng = np.random.RandomState(7)
     pv = rng.randint(0, 5000, 300)
     ilo = rng.randint(0, 5000, 60)
     ihi = ilo + rng.randint(0, 800, 60)  # includes zero-length (point) intervals
     pts = spark.createDataFrame(
-        [(int(i), int(v)) for i, v in enumerate(pv)], "p_id long, v long"
+        [(int(i), int(v)) for i, v in enumerate(pv)], "p_id long, ts_h long"
     )
     ivs = spark.createDataFrame(
         [(int(i), int(a), int(b)) for i, (a, b) in enumerate(zip(ilo, ihi))],
-        "i_id long, lo long, hi long",
+        "i_id long, lo_h long, hi_h long",
     )
-    out = range_join.range_join_point_interval(pts, ivs, bucket_width=bucket_width)
+    if bucket_width is not None:  # None: the module's own width
+        monkeypatch.setattr(range_join, "BUCKET_WIDTH", bucket_width)
+    out = range_join.range_join_point_interval(pts, ivs)
     got = {(r["p_id"], r["i_id"]) for r in out.collect()}
     assert got == _brute(pv, ilo, ihi)
     # exactly-once: no pair can be emitted twice (point side has one bucket)
@@ -39,8 +41,8 @@ def test_range_join_matches_brute_force(spark, bucket_width):
 
 
 def test_range_join_closed_interval_endpoints(spark):
-    pts = spark.createDataFrame([(0, 10), (1, 20), (2, 9), (3, 21)], "p_id long, v long")
-    ivs = spark.createDataFrame([(0, 10, 20)], "i_id long, lo long, hi long")
+    pts = spark.createDataFrame([(0, 10), (1, 20), (2, 9), (3, 21)], "p_id long, ts_h long")
+    ivs = spark.createDataFrame([(0, 10, 20)], "i_id long, lo_h long, hi_h long")
     got = sorted(
         r["p_id"]
         for r in range_join.range_join_point_interval(pts, ivs).collect()
@@ -52,9 +54,7 @@ def test_range_join_plan_no_nested_loop(spark):
     acq = dg.tiles_df(spark, dg.GoldenConfig(n_tiles=500)).selectExpr(
         "media_ref", "CAST(tile_k AS LONG) AS ts_h"
     )
-    out = range_join.range_join_point_interval(
-        acq, dg.campaigns_df(spark), v="ts_h", lo="lo_h", hi="hi_h"
-    )
+    out = range_join.range_join_point_interval(acq, dg.campaigns_df(spark))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

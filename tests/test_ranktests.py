@@ -124,14 +124,16 @@ def test_split_partition_invariance(spark):
     b = [rng.uniform(20, 120) for _ in range(35)] + [5.0] * 4
     rows = [("a", v) for v in a] + [("b", v) for v in b]
     df = spark.createDataFrame(rows, "grp string, val double")
-    outs = [
-        tuple(
-            ranktests.rank_tests_2sample(
-                df, "grp", "val", "a", "b", split_partitions=p
-            ).collect()[0]
-        )
-        for p in (1, 3, 16)
-    ]
+    outs = []
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for p in (1, 3, 16):
+            spark.conf.set("spark.sql.shuffle.partitions", str(p))
+            outs.append(
+                tuple(ranktests.rank_tests_2sample(df, "grp", "val", "a", "b").collect()[0])
+            )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
     assert outs[0] == outs[1] == outs[2]
     na, nb, u2a, u2b, ks = _ref(a, b)
     assert outs[0][:5] == (na, nb, u2a, u2b, ks)

@@ -20,13 +20,12 @@ def _orders(spark, n=2000):
     )
 
 
-def test_rate_sample_matches_duckdb_hash_exactly(spark):
-    kept = sampling.stratified_rate_sample(
-        _orders(spark), "k", "s", {}, default_ppm=200_000, salt=11
-    )
+def test_rate_sample_matches_duckdb_hash_exactly(spark, monkeypatch):
+    monkeypatch.setattr(sampling, "SALT", 11)
+    kept = sampling.stratified_rate_sample(_orders(spark), "k", "s", {}, default_ppm=200_000)
     got = sorted(r["k"] for r in kept.collect())
     sql = sampling.stratified_rate_sample_sql(
-        "SELECT k, s FROM rows", "k", "s", {}, default_ppm=200_000, salt=11
+        "SELECT k, s FROM rows", "k", "s", {}, default_ppm=200_000
     ).replace("(SELECT k, s FROM rows)", "rows")
     con = duckdb.connect()
     con.execute(
@@ -73,6 +72,6 @@ def test_invalid_args_rejected(spark):
     with pytest.raises(ValueError):
         sampling.stratified_rate_sample(df, "k", "s", {}, default_ppm=-1)
     with pytest.raises(ValueError):
-        sampling.stratified_rate_sample(df, "k", "s", {"O": -1})
+        sampling.stratified_rate_sample(df, "k", "s", {"O": -1}, default_ppm=0)
     with pytest.raises(ValueError):
         sampling.stratified_fixed_sample(df, "k", "s", 0)

@@ -49,12 +49,18 @@ def test_workers_can_import_package_rule(monkeypatch, tmp_path):
     assert session.workers_can_import_package("local[*]")
 
 
-def test_default_driver_memory_rule():
+def test_default_driver_memory_rule(monkeypatch):
     gib = 2**30
-    assert session.default_driver_memory(15 * gib) == "7680m"
-    assert session.default_driver_memory(6 * gib) == "4096m"
-    assert session.default_driver_memory(48 * gib) == "24576m"
-    assert session.default_driver_memory(128 * gib) == "24576m"
-    assert session.default_driver_memory() == session.default_driver_memory(
-        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    )
+    host = session.default_driver_memory()
+    real = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+    def at(mem_total_bytes):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": mem_total_bytes // 4096}
+        monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+        return session.default_driver_memory()
+
+    assert at(15 * gib) == "7680m"
+    assert at(6 * gib) == "4096m"
+    assert at(48 * gib) == "24576m"
+    assert at(128 * gib) == "24576m"
+    assert host == at(real)

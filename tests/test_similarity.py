@@ -13,6 +13,16 @@ def _emb(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
 
+def _cosine_topk(qv, k):
+    """``cosine_topk`` at top-``k`` instead of the engine's TOPK."""
+    saved = sim.TOPK
+    try:
+        sim.TOPK = k
+        return sim.cosine_topk(qv, qv).toPandas()
+    finally:
+        sim.TOPK = saved
+
+
 def test_matmul_kernel_equals_columnar(spark):
     from geotiff_scalable_analysis_pipeline_spark import queries_text as qt
 
@@ -24,13 +34,8 @@ def test_matmul_kernel_equals_columnar(spark):
 
 def test_lsh_recall_and_exact_scores(spark):
     e = _emb(spark)
-    exact = (
-        sim.cosine_topk(sim.quantize(e), sim.quantize(e), k=10)
-        .toPandas()
-        .groupby("vec_id")
-        .other_id.apply(set)
-    )
-    approx_df = sim.lsh_topk(e, k=10).toPandas()
+    exact = _cosine_topk(sim.quantize(e), 10).groupby("vec_id").other_id.apply(set)
+    approx_df = sim.lsh_topk(e).toPandas()
     approx = approx_df.groupby("vec_id").other_id.apply(set)
     recalls = [
         len(exact[v] & approx.get(v, set())) / len(exact[v]) for v in exact.index
@@ -38,7 +43,7 @@ def test_lsh_recall_and_exact_scores(spark):
     r = float(np.mean(recalls))
     assert r >= 0.15, f"LSH recall collapsed: {r}"
     # every returned score is the exact cosine (only coverage is approximate)
-    ex_all = sim.cosine_topk(sim.quantize(e), sim.quantize(e), k=500).toPandas()
+    ex_all = _cosine_topk(sim.quantize(e), 500)
     exact_cos = {(a, b): c for a, b, c in zip(ex_all.vec_id, ex_all.other_id, ex_all.cos)}
     sample = approx_df.head(200)
     for a, b, c in zip(sample.vec_id, sample.other_id, sample.cos):
@@ -70,13 +75,15 @@ def test_cosine_topk_refuses_corpus_sized_target_side(spark):
 
     e = _emb(spark)
     qv = sim.quantize(e)
-    with pytest.raises(ValueError, match="lsh_topk"):
-        sim.cosine_topk(qv, qv, k=2, max_targets=10)
-    assert sim.cosine_topk.__defaults__ is not None
-    # pin the tightened default so it can't silently drift back up
-    import inspect
-
-    assert inspect.signature(sim.cosine_topk).parameters["max_targets"].default == 100_000
+    saved = sim.MAX_TARGETS
+    try:
+        sim.MAX_TARGETS = 10
+        with pytest.raises(ValueError, match="lsh_topk"):
+            sim.cosine_topk(qv, qv)
+    finally:
+        sim.MAX_TARGETS = saved
+    # pin the tightened bound so it can't silently drift back up
+    assert sim.MAX_TARGETS == 100_000
 
 
 def test_ivf_recall_exact_scores_and_single_occurrence(spark):
@@ -86,20 +93,15 @@ def test_ivf_recall_exact_scores_and_single_occurrence(spark):
     materializes at most once because a target lives in exactly one home
     cell and query probes are distinct cells."""
     e = _emb(spark)
-    exact = (
-        sim.cosine_topk(sim.quantize(e), sim.quantize(e), k=10)
-        .toPandas()
-        .groupby("vec_id")
-        .other_id.apply(set)
-    )
-    approx_df = sim.ivf_topk(e, k=10).toPandas()
+    exact = _cosine_topk(sim.quantize(e), 10).groupby("vec_id").other_id.apply(set)
+    approx_df = sim.ivf_topk(e).toPandas()
     approx = approx_df.groupby("vec_id").other_id.apply(set)
     recalls = [
         len(exact[v] & approx.get(v, set())) / len(exact[v]) for v in exact.index
     ]
     r = float(np.mean(recalls))
     assert r >= 0.1, f"IVF recall collapsed: {r}"
-    ex_all = sim.cosine_topk(sim.quantize(e), sim.quantize(e), k=500).toPandas()
+    ex_all = _cosine_topk(sim.quantize(e), 500)
     exact_cos = {(a, b): c for a, b, c in zip(ex_all.vec_id, ex_all.other_id, ex_all.cos)}
     for a, b, c in zip(
         approx_df.head(200).vec_id, approx_df.head(200).other_id, approx_df.head(200).cos

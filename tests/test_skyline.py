@@ -10,6 +10,7 @@ from collections import Counter
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from geotiff_scalable_analysis_pipeline_spark import queries_relational
 from geotiff_scalable_analysis_pipeline_spark.queries_relational import skyline_2d
 
 
@@ -27,9 +28,16 @@ def _brute(points):
 
 
 def _run(spark, points, bwidth=1 << 10):
+    # plain try/finally instead of the monkeypatch fixture: Hypothesis
+    # rejects function-scoped fixtures inside @given
     df = spark.createDataFrame(points, "x long, y long")
-    rows = skyline_2d(df, "x", "y", bwidth=bwidth).collect()
-    return {(r["x"], r["y"]): r["n"] for r in rows}
+    saved = queries_relational.SKYLINE_BUCKET
+    try:
+        queries_relational.SKYLINE_BUCKET = bwidth
+        rows = skyline_2d(df, "x", "y").collect()
+    finally:
+        queries_relational.SKYLINE_BUCKET = saved
+    return {(r["x"], r["y"]): r["n_parts"] for r in rows}
 
 
 points_st = st.lists(

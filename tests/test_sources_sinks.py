@@ -99,7 +99,7 @@ def test_probability_sink_round_trip(spark, tmp_path):
         assert (arr == want).all()  # bit-for-bit float32
 
 
-def test_metric_geotiffs_round_trip(spark, tmp_path):
+def test_metric_geotiffs_round_trip(spark, tmp_path, monkeypatch):
     """K1 per-pixel metric rasters: chunked prob payloads → distributed
     per-chunk metrics (mapInPandas) → reassembled class/maxprob/entropy/gap
     GeoTIFFs, bit-identical to the single-process numpy oracle — and the
@@ -143,13 +143,14 @@ def test_metric_geotiffs_round_trip(spark, tmp_path):
     # reference read-back flow: previews straight from the written rasters
     ref0 = str(tiles["media_ref"][0])
     colors = np.arange(nc * 3, dtype=np.uint8).reshape(nc, 3) * 7
-    out = pv.export_previews_from_rasters(tmp_path, ref0, colors, n_classes=nc, downscale=8)
+    monkeypatch.setattr(pv, "DOWNSCALE", 8)
+    out = pv.export_previews_from_rasters(tmp_path, ref0, colors, nc, tmp_path)
     assert set(out) == {"class", "maxprob", "maxprob_colorbar",
                         "entropy", "entropy_colorbar", "gap", "gap_colorbar"}
     cls_tif, _ = tiff.decode(open(written[ref0]["class"], "rb").read())
     assert np.array_equal(
         png.decode((tmp_path / "preview_class.png").read_bytes()),
-        pv.render_class_preview(cls_tif[0], colors, downscale=8),
+        pv.render_class_preview(cls_tif[0], colors),
     )
 
 
@@ -169,13 +170,14 @@ def test_class_preview_exact_lut(tmp_path):
     cls[20:, :] = 1
     cls[:, 15:] += 1  # quadrant 3 has class 2
     cls[0, 0] = 9  # out-of-range -> gray fallback
-    rgb = pv.render_class_preview(cls, colors, downscale=10)
+    assert pv.DOWNSCALE == 10
+    rgb = pv.render_class_preview(cls, colors)
     assert rgb.shape == (4, 3, 3)
     assert tuple(rgb[0, 0]) == (128, 128, 128)  # fallback pixel survives downscale
     assert tuple(rgb[3, 0]) == (0, 255, 0)
     assert tuple(rgb[3, 2]) == (0, 0, 255)
     # round-trips through the codec
-    out = pv.export_tile_previews(tmp_path, "t0", cls, colors, downscale=10)
+    out = pv.export_tile_previews(tmp_path, "t0", cls, colors, {}, None)
     dec = png.decode((tmp_path / "preview_class.png").read_bytes())
     assert np.array_equal(dec, rgb)
     assert set(out) == {"class"}
@@ -212,11 +214,11 @@ def test_float_previews_and_colorbars(tmp_path):
         tmp_path, "t1", None, None, metrics={"gap": grad}, n_classes=4
     )
     assert (tmp_path / "preview_gap.png").read_bytes() == png.encode(
-        pv.render_float_preview(grad, "plasma", 10, 0.0, 1.0)
+        pv.render_float_preview(grad, "plasma", 1.0)
     )
 
 
-def test_viewer_html_self_contained(tmp_path):
+def test_viewer_html_self_contained(tmp_path, monkeypatch):
     import numpy as np
 
     from geotiff_scalable_analysis_pipeline_spark.sources import preview as pv
@@ -226,11 +228,12 @@ def test_viewer_html_self_contained(tmp_path):
     for t in ("tileA", "tileB"):
         d = tmp_path / t
         cls = (np.arange(100).reshape(10, 10) % 2).astype(np.int64)
+        monkeypatch.setattr(pv, "DOWNSCALE", 2)
         tiles[t] = pv.export_tile_previews(
-            d, t, cls, colors, metrics={"gap": cls.astype(float)}, downscale=2
+            d, t, cls, colors, metrics={"gap": cls.astype(float)}, n_classes=None
         )
     html_path = pv.generate_viewer_html(
-        tmp_path, tiles, metadata={"n_classes": 2, "labels": ["a", "b"]}
+        tmp_path, tiles, "Analysis dashboard", metadata={"n_classes": 2, "labels": ["a", "b"]}
     )
     html = (tmp_path / "index.html").read_text()
     assert html_path.endswith("index.html")
@@ -248,7 +251,7 @@ def test_viewer_html_escapes_names(tmp_path):
     colors = np.array([[1, 2, 3], [4, 5, 6]], dtype=np.uint8)
     cls = np.zeros((4, 4), dtype=np.int64)
     hostile = 'a<b>&"q'
-    tiles = {hostile: pv.export_tile_previews(tmp_path / "t", "t", cls, colors)}
+    tiles = {hostile: pv.export_tile_previews(tmp_path / "t", "t", cls, colors, {}, None)}
     pv.generate_viewer_html(
         tmp_path, tiles, title="<script>x</script>", metadata={"k<i>": "v&w"}
     )

@@ -11,7 +11,7 @@ CFG = dg.GoldenConfig(n_docs=400, n_tiles=100)
 
 def _fingerprints(df):
     return (
-        df.select("doc_id", sp.span_fingerprint("spans").alias("fp"))
+        df.select("doc_id", sp.span_fingerprint().alias("fp"))
         .orderBy("doc_id")
         .toPandas()
     )

@@ -234,15 +234,16 @@ def test_zonal_stats_exact(spark, duck, corpus):
     assert np.array_equal(got["mean_refl"].to_numpy(), oracle["mean_refl"].to_numpy())
 
 
-def test_salted_zonal_identical(spark, corpus):
+def test_salted_zonal_identical(spark, corpus, monkeypatch):
     media = dg.media_df(spark, CFG)
     stats = raster.tile_pixel_stats(media)
     pairs = pip_join.pip_join_rect(
         corpus["tiles"].select("media_ref", "cx", "cy"), corpus["rects"], x="cx", y="cy"
     )
     a = zonal.zonal_stats(pairs, stats).toPandas().sort_values(["zone_id", "band"]).reset_index(drop=True)
+    monkeypatch.setattr(zonal, "N_SALTS", 8)
     b = (
-        zonal.two_stage_zonal(pairs, stats, n_salts=8)
+        zonal.two_stage_zonal(pairs, stats)
         .toPandas()
         .sort_values(["zone_id", "band"])
         .reset_index(drop=True)

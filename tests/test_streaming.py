@@ -12,6 +12,7 @@ import pyspark.sql.functions as F
 
 from geotiff_scalable_analysis_pipeline_spark.plans.catalog import TableCatalog
 from geotiff_scalable_analysis_pipeline_spark.plans.lineage import LineageLog, run_resumable
+from geotiff_scalable_analysis_pipeline_spark.streaming import ingest
 from geotiff_scalable_analysis_pipeline_spark.streaming.ingest import (
     hourly_event_stats_streaming,
     hourly_windowed_stats,
@@ -23,6 +24,19 @@ SF = "/root/testdata/sf0.001"
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _one_file_batches(monkeypatch) -> None:
+    """Open every file-source stream with ``maxFilesPerTrigger=1``, so each
+    source file is its own micro-batch (the engine's streams set no limit)."""
+    from pyspark.sql.streaming import DataStreamReader
+
+    parquet = DataStreamReader.parquet
+    monkeypatch.setattr(
+        DataStreamReader,
+        "parquet",
+        lambda self, *a, **k: parquet(self.option("maxFilesPerTrigger", 1), *a, **k),
+    )
 
 
 def _file_sink_pass(stream, sink: str, checkpoint: str) -> None:
@@ -40,14 +54,13 @@ def _file_sink_pass(stream, sink: str, checkpoint: str) -> None:
     q.awaitTermination()
 
 
-def test_streaming_hourly_equals_batch(spark):
+def test_streaming_hourly_equals_batch(spark, monkeypatch):
     """The windowed streaming aggregate equals the batch events_hourly query
     even when forced through one-file micro-batches."""
     from geotiff_scalable_analysis_pipeline_spark.queries_relational import q_events_hourly
 
-    got = hourly_event_stats_streaming(
-        spark, SF, query_name="t_stream_hourly", max_files_per_trigger=1
-    )
+    _one_file_batches(monkeypatch)
+    got = hourly_event_stats_streaming(spark, SF)
     assert _rows(got) == _rows(q_events_hourly(spark, SF))
 
 
@@ -109,7 +122,7 @@ def test_watermark_drops_late_rows_across_restart(spark, tmp_path):
     assert got2 == {(10, 2), (12, 1)}
 
 
-def test_stateful_running_user_stats_across_batches(spark, tmp_path):
+def test_stateful_running_user_stats_across_batches(spark, tmp_path, monkeypatch):
     """Per-user running state carried across micro-batches in the state
     store: with a gap longer than the corpus span each user has ONE session,
     i.e. a running (count, exact sum) per user, built from three forced
@@ -125,8 +138,9 @@ def test_stateful_running_user_stats_across_batches(spark, tmp_path):
     )
     name = "t_stateful_user_stats"
     spark.catalog.dropTempView(name)
+    monkeypatch.setattr(ingest, "SESSION_GAP", "3650 days")
     q = (
-        session_windows(stream, gap="3650 days")
+        session_windows(stream)
         .writeStream.trigger(availableNow=True)
         .outputMode("complete")
         .format("memory")
@@ -144,7 +158,7 @@ def test_stateful_running_user_stats_across_batches(spark, tmp_path):
     assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 3
 
 
-def test_streaming_sessions_complete_equals_batch(spark):
+def test_streaming_sessions_complete_equals_batch(spark, monkeypatch):
     """session_window merges across forced one-file micro-batches in the
     state store: the complete-mode streaming result equals the batch
     session_window aggregate AND the lag()-based gaps-and-islands form."""
@@ -155,9 +169,8 @@ def test_streaming_sessions_complete_equals_batch(spark):
         user_sessions_streaming,
     )
 
-    got = user_sessions_streaming(
-        spark, SF, query_name="t_stream_sessions", max_files_per_trigger=1
-    )
+    _one_file_batches(monkeypatch)
+    got = user_sessions_streaming(spark, SF)
     assert _rows(got) == _rows(q_events_sessions_native(spark, SF))
 
 
@@ -178,7 +191,7 @@ def test_streaming_sessions_append_emits_closed(spark, tmp_path):
     def run():
         schema = spark.read.parquet(src).schema
         stream = spark.readStream.schema(schema).parquet(src)
-        agg = session_windows(stream, "30 minutes", watermark="10 minutes")
+        agg = session_windows(stream, watermark="10 minutes")
         _file_sink_pass(agg, sink, ckpt)
 
     # user 1: events at 10:00, 10:10 (one session, ends 10:40);
@@ -196,7 +209,7 @@ def test_streaming_sessions_append_emits_closed(spark, tmp_path):
     assert got2 == {(1, 2), (2, 1)}
 
 
-def test_streaming_dedup_state_spans_microbatches(spark, tmp_path):
+def test_streaming_dedup_state_spans_microbatches(spark, tmp_path, monkeypatch):
     """streaming_dedup_exact's seen-set lives in the state store: a
     duplicate arriving in a LATER micro-batch (maxFilesPerTrigger=1, one
     file per batch) is dropped, and each distinct fingerprint is emitted
@@ -206,21 +219,17 @@ def test_streaming_dedup_state_spans_microbatches(spark, tmp_path):
     )
 
     src = tmp_path / "docs"
+    docs = str(src / "documents.parquet")
     a = spark.createDataFrame(
         [("d1", "alpha"), ("d2", "beta"), ("d3", "alpha")], "doc_id string, text string"
     )
     b = spark.createDataFrame(
         [("d4", "alpha"), ("d5", "gamma"), ("d6", "beta")], "doc_id string, text string"
     )
-    a.coalesce(1).write.parquet(str(src / "f1.parquet"))
-    b.coalesce(1).write.parquet(str(src / "f2.parquet"))
-    out = streaming_dedup_exact(
-        spark,
-        str(src),
-        glob="*.parquet/*.parquet",
-        query_name="t_stream_dedup",
-        max_files_per_trigger=1,
-    )
+    a.coalesce(1).write.parquet(docs)
+    b.coalesce(1).write.parquet(docs, mode="append")
+    _one_file_batches(monkeypatch)
+    out = streaming_dedup_exact(spark, str(src))
     got = sorted(r["text_md5"] for r in out.collect())
     import hashlib
 
@@ -327,9 +336,7 @@ def test_stream_stream_interval_join_semantics(spark, tmp_path):
             .parquet(f"{d}/*.parquet/*.parquet")
         )
 
-    out = interval_attribution_join(
-        rd(cdir), rd(pdir), horizon="1 hour", watermark="10 minutes"
-    )
+    out = interval_attribution_join(rd(cdir), rd(pdir))
     q = (
         out.writeStream.trigger(availableNow=True)
         .outputMode("append")
@@ -491,7 +498,7 @@ def test_two_pipelines_one_table_need_distinct_stream_ids(spark, tmp_path):
     assert cat.read(spark, "ev").select("event_id").distinct().count() == base.count()
 
 
-def test_stream_static_join_spans_microbatches(spark, tmp_path):
+def test_stream_static_join_spans_microbatches(spark, tmp_path, monkeypatch):
     """Stream-static enrichment: the broadcast dim joins correctly in EVERY
     micro-batch (events split across two one-file batches), and the final
     aggregate equals the batch join."""
@@ -510,9 +517,8 @@ def test_stream_static_join_spans_microbatches(spark, tmp_path):
     dim = spark.read.parquet(f"{SF}/customer.parquet")
     dim.coalesce(1).write.parquet(f"{base}/customer.parquet")
 
-    got = stream_static_enrichment(
-        spark, base, query_name="t_ss_enrich", max_files_per_trigger=1
-    )
+    _one_file_batches(monkeypatch)
+    got = stream_static_enrichment(spark, base)
     want = (
         ev.join(dim, ev.user_id == dim.c_custkey)
         .groupBy("c_mktsegment", "event_type")

@@ -74,11 +74,18 @@ def _ewma_simulate(rows, num, den, scale):
 
 
 def _ewma_run(spark, rows, num=2, den=10, scale=1000):
-    from geotiff_scalable_analysis_pipeline_spark.operators.temporal import ewma
+    # plain try/finally instead of the monkeypatch fixture: Hypothesis
+    # rejects function-scoped fixtures inside @given
+    from geotiff_scalable_analysis_pipeline_spark.operators import temporal
 
     df = spark.createDataFrame(rows, "cell long, ts_h long, v long")
-    got = ewma(df, keys=("cell",), ts="ts_h", value="v", num=num, den=den, scale=scale)
-    return {(r["cell"], r["ts_h"], r["v"]): r["ewma_q"] for r in got.collect()}
+    saved = temporal.EWMA_NUM, temporal.EWMA_DEN, temporal.EWMA_SCALE
+    try:
+        temporal.EWMA_NUM, temporal.EWMA_DEN, temporal.EWMA_SCALE = num, den, scale
+        got = temporal.ewma(df, keys=("cell",), ts="ts_h", value="v").collect()
+    finally:
+        temporal.EWMA_NUM, temporal.EWMA_DEN, temporal.EWMA_SCALE = saved
+    return {(r["cell"], r["ts_h"], r["v"]): r["ewma_q"] for r in got}
 
 
 rows_st = st.lists(
@@ -110,14 +117,13 @@ def test_ewma_hand_computed_chain(spark):
 
 
 def test_ewma_rejects_bad_alpha(spark):
-    import pytest
-    from geotiff_scalable_analysis_pipeline_spark.operators.temporal import ewma
+    # alpha is fixed: the engine's EWMA_NUM/EWMA_DEN must lie in (0, 1]
+    from geotiff_scalable_analysis_pipeline_spark.operators import temporal
 
-    df = spark.createDataFrame([(0, 0, 1)], "cell long, ts_h long, v long")
-    with pytest.raises(ValueError):
-        ewma(df, keys=("cell",), ts="ts_h", value="v", num=0, den=10)
-    with pytest.raises(ValueError):
-        ewma(df, keys=("cell",), ts="ts_h", value="v", num=11, den=10)
+    assert 0 < temporal.EWMA_NUM <= temporal.EWMA_DEN
+    assert _ewma_run(spark, [(0, 0, 1)], temporal.EWMA_NUM, temporal.EWMA_DEN) == {
+        (0, 0, 1): temporal.EWMA_SCALE
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -142,8 +148,8 @@ def _coverage_run(spark, rows):
         interval_coverage,
     )
 
-    df = spark.createDataFrame(rows, "k long, lo long, hi long")
-    got = interval_coverage(df, keys=("k",), lo="lo", hi="hi")
+    df = spark.createDataFrame(rows, "k long, lo_h long, hi_h long")
+    got = interval_coverage(df, keys=("k",))
     return {
         r["k"]: (r["covered"], r["n_intervals"], r["span_lo"], r["span_hi"])
         for r in got.collect()
@@ -292,17 +298,26 @@ def _cusum_simulate(rows, target, slack, h):
     return sorted(out)
 
 
+def _cusum_rows(df, target, slack, threshold):
+    """``cusum`` rows at the given slack and alarm threshold (plain
+    try/finally: Hypothesis rejects function-scoped fixtures)."""
+    from geotiff_scalable_analysis_pipeline_spark.operators import temporal
+
+    saved = temporal.CUSUM_SLACK, temporal.CUSUM_H
+    try:
+        temporal.CUSUM_SLACK, temporal.CUSUM_H = slack, threshold
+        return temporal.cusum(df, ("cell",), "ts_h", "v", target).collect()
+    finally:
+        temporal.CUSUM_SLACK, temporal.CUSUM_H = saved
+
+
 @settings(max_examples=10, deadline=None)
 @given(rows=mk_rows_st)
 def test_cusum_matches_simulator(spark, rows):
-    from geotiff_scalable_analysis_pipeline_spark.operators.temporal import cusum
-
     df = spark.createDataFrame(rows, "cell long, ts_h long, v long")
     got = sorted(
         (r["cell"], r["ts_h"], r["v"], r["cusum_hi"], r["cusum_lo"], r["alarm"])
-        for r in cusum(
-            df, ("cell",), "ts_h", "v", target=10, slack=2, threshold=15
-        ).collect()
+        for r in _cusum_rows(df, 10, 2, 15)
     )
     assert got == _cusum_simulate(rows, 10, 2, 15)
 
@@ -316,11 +331,11 @@ def test_cusum_known_alarm_and_reset(spark):
     df = spark.createDataFrame(rows, "cell long, ts_h long, v long")
     r = {
         x["ts_h"]: (x["cusum_hi"], x["cusum_lo"], x["alarm"])
-        for x in cusum(df, ("cell",), "ts_h", "v", 10, 3, 6).collect()
+        for x in _cusum_rows(df, 10, 3, 6)
     }
     assert r[2] == (0, 0, False)           # in-control
     assert r[3] == (2, 0, False) and r[5] == (6, 0, True)  # drift accumulates
     assert r[7] == (10, 0, True)
-    # no threshold → no alarm column
+    # the alarm column is always emitted, at the engine's threshold
     cols = cusum(df, ("cell",), "ts_h", "v", 10).columns
-    assert "alarm" not in cols
+    assert "alarm" in cols
